@@ -1,9 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Local cores when `SPARK_GRAFT_CPUS` is unset — shared by every
+    * runnable main so a probe measures the program the bench runs. */
+  val DefaultCpus = "4"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
     // optional arg: comma-separated query-name filter (iteration aid;
     // the driver passes no args and benches everything)
     val only: Option[Set[String]] = args.headOption.map(_.split(',').toSet)

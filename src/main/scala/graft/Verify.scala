@@ -9,7 +9,7 @@ object Verify {
     // optional trailing names: dump only those queries (local
     // pre-gate iteration); the driver's 2-arg call dumps everything
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.DefaultCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

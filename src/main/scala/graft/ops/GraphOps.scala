@@ -267,14 +267,20 @@ object GraphOps {
     // nothing. Shuffle mode keeps the per-iteration checkpoint: it is
     // what preserves the stored hash partitioning (the one-exchange-
     // per-iteration ScaleSpec lock) and keeps lineage constant-depth.
-    def carry(df: DataFrame): DataFrame =
-      if (useBroadcast) df else df.localCheckpoint(eager = false)
+    // Broadcast mode still cuts the chain with a lazy checkpoint after
+    // every 8th iteration (never the last): the plan otherwise grows
+    // one broadcast-join layer per iteration, and analysis and planning
+    // of the nested plan with it. Runs of <= 8 iterations are untouched.
+    def carry(df: DataFrame, iter: Int): DataFrame =
+      if (!useBroadcast || (iter % 8 == 0 && iter > 0 && iter < iters))
+        df.localCheckpoint(eager = false)
+      else df
     var r = carry(nodes
       .select(col("id"),
         ExactRound.ratioRoundScaled(lit(1L), lit(nNodes), 12)
-          .cast(org.apache.spark.sql.types.LongType).as("r12")))
+          .cast(org.apache.spark.sql.types.LongType).as("r12")), 0)
     graft.functions.FixedPoint.register(edgesIn.sparkSession)
-    for (_ <- 1 to iters) {
+    for (iter <- 1 to iters) {
       // per-edge: q = HALF_UP(r12/deg) in longs; the 12-dp double
       // q/1e12 feeds sum_fixed12's exact long fold (bit-identical to
       // the old decimal ratioRound output)
@@ -304,7 +310,7 @@ object GraphOps {
       // reads the shuffle-mode plan).
       if (!useBroadcast)
         lastIterPlan = rNext.queryExecution.executedPlan.toString
-      r = carry(rNext)
+      r = carry(rNext, iter)
     }
     // HALF_UP to 8 dp on the unscaled longs (round at -4), one double
     // division at the end — same value as round(DECIMAL r, 8).cast

@@ -25,28 +25,25 @@ import org.apache.spark.sql.types._
   * Scale posture: the store is |types × users × active days| rows of
   * three narrow columns — EVENT-VOLUME-INDEPENDENT (a thousand same-
   * type events by one user on one day collapse map-side to one row).
-  * Each micro-batch dedups itself map-side before the key-partitioned
-  * merge-distinct (storage-engine MERGE INTO … WHEN NOT MATCHED
-  * INSERT); eager local checkpoint keeps lineage constant-depth. The
-  * read-side pair expansion stays per-(user, day) over ≤ |types|
-  * memberships — never set × set. */
+  * Each micro-batch dedups itself map-side before the [[MergeStore]]
+  * merge-distinct. The read-side pair expansion stays per-(user, day)
+  * over ≤ |types| memberships — never set × set. */
 object AudienceStream {
 
   /** Standing distinct (t, user_id, d) membership store; `snapshot()`
     * derives the q420 matrix via the batch op's own code path. */
-  final class AudienceStore(spark: SparkSession) {
-    @volatile private[AudienceStream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+  final class AudienceStore(spark: SparkSession)
+      extends MergeStore(spark,
         StructType(Seq(
           StructField("t", StringType),
           StructField("user_id", LongType),
-          StructField("d", DateType))))
+          StructField("d", DateType))),
+        MergeStore.distinctUnion) {
 
     /** The current overlap matrix, equal to
       * `EventAnalytics.audienceOverlap` over everything ingested. */
     def snapshot(): DataFrame =
-      graft.ops.EventAnalytics.overlapFromMemberships(df)
+      graft.ops.EventAnalytics.overlapFromMemberships(frame)
   }
 
   def newStore(spark: SparkSession): AudienceStore =
@@ -54,17 +51,7 @@ object AudienceStream {
 
   /** Start the refresh: every micro-batch reduces to its own distinct
     * (type, user, day) memberships (map-side combine), then
-    * set-unions them into the standing store — idempotent on replays
-    * because distinct-union is. */
-  def start(events: DataFrame, store: AudienceStore): StreamingQuery = {
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = graft.ops.EventAnalytics.typeDayMemberships(batch)
-        store.df = store.df.unionByName(delta)
-          .distinct()
-          .localCheckpoint(eager = true)
-      }
-      .start()
-  }
+    * set-unions them into the standing store. */
+  def start(events: DataFrame, store: AudienceStore): StreamingQuery =
+    store.start(events)(graft.ops.EventAnalytics.typeDayMemberships)
 }

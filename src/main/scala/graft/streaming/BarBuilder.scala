@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Structured-Streaming extension of the reference's batch pipeline
@@ -188,17 +187,15 @@ object BarBuilder {
       z_score: Option[Double])
 
   /** Ring buffer of the trailing spreads for one pair. */
-  case class ZState(values: Vector[Double], lastTs: Long)
+  case class ZState(values: Vector[Double])
 
   /** Trailing 60-row z-score maintained across micro-batches with
     * `flatMapGroupsWithState` — the streaming twin of
     * `PairAnalytics.rollingZScore` (same warm-up gate and
     * NULL-on-degenerate-stddev semantics, `transform_data.py:145-154`).
-    *
-    * Rows inside a micro-batch are sorted by event time before folding
-    * into the state; rows older than the last applied timestamp are
-    * ignored (upstream watermark + bar aggregation already serialize
-    * normal flow — this guards replays).
+    * Spreads fold through [[OrderedFold]] in bar-time order (upstream
+    * watermark + bar aggregation already serialize normal flow — the
+    * fold's guard covers replays).
     */
   def rollingZScore(
       spreads: Dataset[SpreadPoint],
@@ -206,33 +203,19 @@ object BarBuilder {
       minWindow: Int = 30): Dataset[ZPoint] = {
     val spark = spreads.sparkSession
     import spark.implicits._
-    spreads
-      .groupByKey(_.pair_name)
-      .flatMapGroupsWithState[ZState, ZPoint](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (pair, rows, state: GroupState[ZState]) =>
-          val st0 = state.getOption.getOrElse(ZState(Vector.empty, Long.MinValue))
-          val ordered = rows.toSeq.sortBy(_.bar_ts.getTime)
-          var st = st0
-          val out = Vector.newBuilder[ZPoint]
-          ordered.foreach { p =>
-            if (p.bar_ts.getTime > st.lastTs) {
-              val values = (st.values :+ p.spread).takeRight(windowRows)
-              st = ZState(values, p.bar_ts.getTime)
-              val n = values.length
-              val z =
-                if (n < minWindow) None
-                else {
-                  val mean = values.sum / n
-                  val varS = values.map(v => (v - mean) * (v - mean)).sum / (n - 1)
-                  val sd = math.sqrt(varS)
-                  if (sd == 0.0 || sd.isNaN) None else Some((p.spread - mean) / sd)
-                }
-              out += ZPoint(pair, p.bar_ts, p.spread, n, z)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(spreads.groupByKey(_.pair_name), ZState(Vector.empty),
+      OrderedFold.byTime[SpreadPoint](_.bar_ts)) { (pair, st, p) =>
+      val values = (st.values :+ p.spread).takeRight(windowRows)
+      val n = values.length
+      val z =
+        if (n < minWindow) None
+        else {
+          val mean = values.sum / n
+          val varS = values.map(v => (v - mean) * (v - mean)).sum / (n - 1)
+          val sd = math.sqrt(varS)
+          if (sd == 0.0 || sd.isNaN) None else Some((p.spread - mean) / sd)
+        }
+      (ZState(values), Some(ZPoint(pair, p.bar_ts, p.spread, n, z)))
+    }
   }
 }

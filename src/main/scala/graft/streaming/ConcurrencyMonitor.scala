@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 import graft.ops.ScalableRank
 
@@ -31,16 +31,14 @@ import graft.ops.ScalableRank
   * runs the same two-pass cumSum escape the batch op uses. */
 object ConcurrencyMonitor {
 
-  /** Closed-session interval store (append-only, lineage truncated
-    * per batch). */
-  final class IntervalStore(spark: SparkSession) {
-    @volatile private[ConcurrencyMonitor] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id", LongType),
-          org.apache.spark.sql.types.StructField("s_us", LongType),
-          org.apache.spark.sql.types.StructField("e_us", LongType))))
+  /** Closed-session interval store (append-only). */
+  final class IntervalStore(spark: SparkSession)
+      extends MergeStore(spark,
+        StructType(Seq(
+          StructField("user_id", LongType),
+          StructField("s_us", LongType),
+          StructField("e_us", LongType))),
+        _.unionByName(_)) {
 
     /** The batch q398 sweep over the accumulated closed sessions:
       * per-user session index (the batch `sid` numbering — sessions
@@ -50,7 +48,7 @@ object ConcurrencyMonitor {
       val dec = DecimalType(38, 0)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("s_us"), col("e_us"))
-      val intervals = df
+      val intervals = frame
         .withColumn("sid", row_number().over(w).cast(LongType))
         // batch-op convention: singleton sessions end +1µs so they
         // occupy the instant they exist (EventAnalytics scaladoc)
@@ -88,18 +86,13 @@ object ConcurrencyMonitor {
       userCol: String = "user_id",
       tsCol: String = "ts",
       gap: String = "30 minutes",
-      watermark: String = "1 hour"): StreamingQuery = {
-    Sessionizer.userSessions(events, userCol, tsCol, gap, Some(watermark))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val closed = batch.select(
-          col("user_id").cast(LongType).as("user_id"),
-          unix_micros(col("start_ts")).as("s_us"),
-          unix_micros(col("end_ts")).as("e_us"))
-        store.df = store.df.unionByName(closed)
-          .localCheckpoint(eager = true)
-      }
-      .start()
-  }
+      watermark: String = "1 hour"): StreamingQuery =
+    store.start(
+      Sessionizer.userSessions(events, userCol, tsCol, gap, Some(watermark)),
+      outputMode = "append") { batch =>
+      batch.select(
+        col("user_id").cast(LongType).as("user_id"),
+        unix_micros(col("start_ts")).as("s_us"),
+        unix_micros(col("end_ts")).as("e_us"))
+    }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import OrderedFold.micros
 
 /** CEP-style streaming funnel conversion — the live twin of
   * `ops/EventAnalytics.conversionLatency` (q176): "first `fromType`
@@ -12,17 +13,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * This is the A-followed-by-B pattern primitive every product/alert
   * pipeline needs (signup→purchase, quote→trade, error→recovery).
   *
-  * State per user is three longs + two flags (first-A microsecond,
-  * converted, replay guard) — constant memory, keyed by a growing
-  * id, the PageCusumMonitor class. Rows fold in event-time order at
-  * full microsecond precision with an event-type tie-break; rows at
-  * or before the last applied microsecond are dropped (replay guard).
-  *
-  * Ordered-delivery contract (shared with the other monitors): a
-  * signup arriving LATER in processing time but EARLIER in event time
-  * than the recorded first-A is ignored by the guard, where the batch
-  * recomputation would adopt it; within watermark-ordered delivery —
-  * what the StreamingSpec feeds — stream and batch agree exactly.
+  * State per user is the first-A timestamp and a converted flag —
+  * constant memory, keyed by a growing id, the PageCusumMonitor class.
+  * Events fold through [[OrderedFold]] with the event type as
+  * tiebreak. Under its in-order ingestion contract a signup arriving
+  * LATER in processing time but EARLIER in event time than the
+  * recorded first-A is ignored, where the batch recomputation would
+  * adopt it; within watermark-ordered delivery — what the
+  * StreamingSpec feeds — stream and batch agree exactly.
   */
 object ConversionMonitor {
 
@@ -31,16 +29,8 @@ object ConversionMonitor {
   case class Conversion(
       user_id: Long, a_ts: Timestamp, b_ts: Timestamp, lat_us: Long)
 
-  case class St(aMicros: Long, hasA: Boolean, converted: Boolean, lastTs: Long)
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-
-  private def toTs(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000L))
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
+  /** `aTs` is null until the user's first `fromType` event. */
+  case class St(aTs: Timestamp, converted: Boolean)
 
   def conversions(
       events: Dataset[Ev],
@@ -48,29 +38,15 @@ object ConversionMonitor {
       toType: String): Dataset[Conversion] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Conversion](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(
-            St(0L, hasA = false, converted = false, Long.MinValue))
-          val out = Vector.newBuilder[Conversion]
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_type)).foreach { e =>
-            val t = micros(e.ts)
-            if (t > st.lastTs) {
-              if (e.event_type == fromType && !st.hasA)
-                st = st.copy(aMicros = t, hasA = true)
-              else if (e.event_type == toType && st.hasA && !st.converted &&
-                  t > st.aMicros) {
-                out += Conversion(uid, toTs(st.aMicros), e.ts, t - st.aMicros)
-                st = st.copy(converted = true)
-              }
-              st = st.copy(lastTs = t)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(events.groupByKey(_.user_id), St(null, converted = false),
+      (e: Ev) => (micros(e.ts), e.event_type)) { (uid, st, e) =>
+      if (e.event_type == fromType && st.aTs == null)
+        (St(e.ts, converted = false), None)
+      else if (e.event_type == toType && st.aTs != null && !st.converted &&
+          micros(e.ts) > micros(st.aTs))
+        (st.copy(converted = true),
+          Some(Conversion(uid, st.aTs, e.ts, micros(e.ts) - micros(st.aTs))))
+      else (st, None)
+    }
   }
 }

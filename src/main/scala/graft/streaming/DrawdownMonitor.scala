@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming drawdown monitor — the live twin of the batch
   * running-peak drawdown (`ops/EventAnalytics.drawdown`, q83). Batch
@@ -11,13 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (peak, drawdown) path tick by tick so a risk alarm can fire
   * mid-session.
   *
-  * State per key is TWO numbers (running peak + last applied event
-  * time) — constant memory regardless of history length, which is why
-  * a running extremum is the cheapest stateful operator a stream can
-  * carry (contrast the z-score monitor's window buffer,
-  * [[BarBuilder.rollingZScore]]). Same replay guard as the z-score:
-  * rows inside a micro-batch fold in event-time order, rows at or
-  * before the last applied timestamp are dropped.
+  * State per key is the running peak — constant memory regardless of
+  * history length, which is why a running extremum is the cheapest
+  * stateful operator a stream can carry (contrast the z-score
+  * monitor's window buffer, [[BarBuilder.rollingZScore]]). Ticks fold
+  * through [[OrderedFold]] in microsecond order.
   */
 object DrawdownMonitor {
 
@@ -30,28 +27,15 @@ object DrawdownMonitor {
       peak: Double,
       drawdown: Double)
 
-  case class DdState(peak: Double, lastTs: Long)
+  case class DdState(peak: Double)
 
   def drawdowns(ticks: Dataset[Tick]): Dataset[DdPoint] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    ticks
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[DdState, DdPoint](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (series, rows, state: GroupState[DdState]) =>
-          var st = state.getOption
-            .getOrElse(DdState(Double.NegativeInfinity, Long.MinValue))
-          val out = Vector.newBuilder[DdPoint]
-          rows.toSeq.sortBy(_.ts.getTime).foreach { t =>
-            if (t.ts.getTime > st.lastTs) {
-              val peak = math.max(st.peak, t.value)
-              st = DdState(peak, t.ts.getTime)
-              out += DdPoint(series, t.ts, t.value, peak, t.value - peak)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(ticks.groupByKey(_.series), DdState(Double.NegativeInfinity),
+      OrderedFold.byTime[Tick](_.ts)) { (series, st, t) =>
+      val peak = math.max(st.peak, t.value)
+      (DdState(peak), Some(DdPoint(series, t.ts, t.value, peak, t.value - peak)))
+    }
   }
 }

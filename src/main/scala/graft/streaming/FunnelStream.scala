@@ -26,11 +26,9 @@ import org.apache.spark.sql.types._
   * sliver).
   *
   * Scale posture: each micro-batch pre-filters to the step types and
-  * contributes only its own distinct rows; the merge is a union +
-  * key-partitioned distinct (MERGE INTO upsert on the natural key);
-  * the standing log is eagerly local-checkpointed so lineage stays
-  * constant-depth across batches. The read-side funnel is the batch
-  * op's min() chain over the log. */
+  * contributes only its own distinct rows; the [[MergeStore]] merge is
+  * a union + key-partitioned distinct. The read-side funnel is the
+  * batch op's min() chain over the log. */
 object FunnelStream {
 
   /** Standing distinct step-event log; `snapshot()` derives the q416
@@ -38,19 +36,18 @@ object FunnelStream {
   final class FunnelStore(
       spark: SparkSession,
       val steps: Seq[String],
-      val windowSec: Long) {
-    @volatile private[FunnelStream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+      val windowSec: Long)
+      extends MergeStore(spark,
         StructType(Seq(
           StructField("user_id", LongType),
           StructField("ts", TimestampType),
-          StructField("event_type", StringType))))
+          StructField("event_type", StringType))),
+        MergeStore.distinctUnion) {
 
     /** The current per-step funnel rollup, equal to
       * `EventAnalytics.windowFunnel` over everything ingested. */
     def snapshot(): DataFrame =
-      graft.ops.EventAnalytics.windowFunnel(df, steps, windowSec)
+      graft.ops.EventAnalytics.windowFunnel(frame, steps, windowSec)
   }
 
   def newStore(spark: SparkSession, steps: Seq[String],
@@ -58,19 +55,13 @@ object FunnelStream {
     new FunnelStore(spark, steps, windowSec)
 
   /** Start the refresh: every micro-batch MERGEs its distinct
-    * step-type rows into the standing log (idempotent on replays —
-    * the union re-distincts). */
+    * step-type rows into the standing log. */
   def start(events: DataFrame, store: FunnelStore): StreamingQuery = {
     val stepSet = store.steps
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch
-          .filter(col("event_type").isin(stepSet: _*))
-          .select(col("user_id"), col("ts"), col("event_type"))
-        val merged = store.df.unionByName(delta).distinct()
-        store.df = merged.localCheckpoint(eager = true)
-      }
-      .start()
+    store.start(events) { batch =>
+      batch
+        .filter(col("event_type").isin(stepSet: _*))
+        .select(col("user_id"), col("ts"), col("event_type"))
+    }
   }
 }

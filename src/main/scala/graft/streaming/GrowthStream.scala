@@ -33,26 +33,23 @@ import org.apache.spark.sql.types._
   * narrow columns — EVENT-VOLUME-INDEPENDENT (a billion purchase
   * events by one user on one day collapse map-side to one row), the
   * same reduction the batch op's first `distinct` performs. Each
-  * micro-batch dedups itself map-side before the key-partitioned
-  * merge-distinct against the store (a storage-engine MERGE INTO …
-  * WHEN NOT MATCHED INSERT); the store is eagerly local-checkpointed
-  * so lineage stays constant-depth across batches. */
+  * micro-batch dedups itself map-side before the [[MergeStore]]
+  * merge-distinct against the store. */
 object GrowthStream {
 
   /** Standing distinct (user_id, w) membership store; `snapshot()`
     * derives the q418 ledger via the batch op's own code path. */
-  final class GrowthStore(spark: SparkSession, val periodDays: Int) {
-    @volatile private[GrowthStream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+  final class GrowthStore(spark: SparkSession, val periodDays: Int)
+      extends MergeStore(spark,
         StructType(Seq(
           StructField("user_id", LongType),
-          StructField("w", DateType))))
+          StructField("w", DateType))),
+        MergeStore.distinctUnion) {
 
     /** The current ledger, equal to `EventAnalytics.growthAccounting`
       * over everything ingested. */
     def snapshot(): DataFrame =
-      graft.ops.EventAnalytics.growthLedger(df, periodDays)
+      graft.ops.EventAnalytics.growthLedger(frame, periodDays)
   }
 
   def newStore(spark: SparkSession, periodDays: Int = 1): GrowthStore =
@@ -60,21 +57,13 @@ object GrowthStream {
 
   /** Start the refresh: every micro-batch reduces to its own distinct
     * (user, period) memberships (map-side combine), then set-unions
-    * them into the standing store — idempotent on replays because
-    * distinct-union is. */
+    * them into the standing store. */
   def start(
       events: DataFrame,
       store: GrowthStore,
-      activityType: String = "purchase"): StreamingQuery = {
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = graft.ops.EventAnalytics.activityPeriods(
-          batch, activityType, store.periodDays)
-        store.df = store.df.unionByName(delta)
-          .distinct()
-          .localCheckpoint(eager = true)
-      }
-      .start()
-  }
+      activityType: String = "purchase"): StreamingQuery =
+    store.start(events) { batch =>
+      graft.ops.EventAnalytics.activityPeriods(
+        batch, activityType, store.periodDays)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types._
 
 /** Streaming twin of the warehouse incremental-aggregate refresh
   * (`ops/WarehouseOps.incrementalDailyAgg`, q195): a foreachBatch
@@ -25,13 +25,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * source; the stream never needs the raw history at all.
   *
   * Scale posture: each micro-batch shuffles only its own rows into
-  * (d, key) partials (map-side combined); the merge is a full-outer
-  * join keyed by the same (d, key) — at warehouse scale that is the
-  * storage engine's MERGE INTO (Delta/Iceberg upsert on the
-  * partition key); here the standing table lives as an eagerly
-  * local-checkpointed DataFrame so lineage stays constant-depth
-  * across arbitrarily many batches. Store size is |days|·|keys| —
-  * aggregate-sized, not event-sized. */
+  * (d, key) partials (map-side combined); the [[MergeStore]] merge is
+  * a full-outer join keyed by the same (d, key). Store size is
+  * |days|·|keys| — aggregate-sized, not event-sized. */
 object IncrementalAggStream {
 
   private val acc = DecimalType(28, 6) // sum(DECIMAL(18,6)) fold type
@@ -40,24 +36,32 @@ object IncrementalAggStream {
     * `snapshot()` emits exactly `WarehouseOps.dailyAgg`'s schema —
     * the rounded double forms ONCE at read time from the exact
     * accumulator, so repeated refreshes never re-round. */
-  final class AggStore(spark: SparkSession, keyCol: String) {
-    @volatile private[IncrementalAggStream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("d",
-            org.apache.spark.sql.types.DateType),
-          org.apache.spark.sql.types.StructField(keyCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_events",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sum_acc", acc))))
+  final class AggStore(spark: SparkSession, keyCol: String)
+      extends MergeStore(spark,
+        StructType(Seq(StructField("d", DateType),
+          StructField(keyCol, StringType),
+          StructField("n_events", LongType),
+          StructField("sum_acc", acc))),
+        merge(keyCol)) {
 
     def snapshot(): DataFrame =
-      df.select(col("d"), col(keyCol), col("n_events"),
-        round(col("sum_acc"), 6).cast(
-          org.apache.spark.sql.types.DoubleType).as("sum_value"))
+      frame.select(col("d"), col(keyCol), col("n_events"),
+        round(col("sum_acc"), 6).cast(DoubleType).as("sum_value"))
   }
+
+  /** Additive merge of (d, key) partials into the store. */
+  private def merge(keyCol: String)(store: DataFrame, delta: DataFrame): DataFrame =
+    store.as("s")
+      .join(delta.as("x"),
+        store("d") === delta("d") && store(keyCol) === delta(keyCol), "full_outer")
+      .select(
+        coalesce(col("s.d"), col("x.d")).as("d"),
+        coalesce(col(s"s.$keyCol"), col(s"x.$keyCol")).as(keyCol),
+        (coalesce(col("s.n_events"), lit(0L)) +
+          coalesce(col("x.dn"), lit(0L))).as("n_events"),
+        (coalesce(col("s.sum_acc"), lit(0).cast(acc)) +
+          coalesce(col("x.ds"), lit(0).cast(acc))).cast(acc)
+          .as("sum_acc"))
 
   def newStore(spark: SparkSession, keyCol: String = "event_type"): AggStore =
     new AggStore(spark, keyCol)
@@ -70,30 +74,11 @@ object IncrementalAggStream {
       store: AggStore,
       keyCol: String = "event_type",
       tsCol: String = "ts",
-      valCol: String = "value"): StreamingQuery = {
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch
-          .groupBy(to_date(col(tsCol)).as("d"), col(keyCol))
-          .agg(count(lit(1)).as("dn"),
-            sum(col(valCol).cast(DecimalType(18, 6))).as("ds"))
-        val merged = store.df.as("s")
-          .join(delta.as("x"),
-            store.df("d") === delta("d") &&
-              store.df(keyCol) === delta(keyCol), "full_outer")
-          .select(
-            coalesce(col(s"s.d"), col("x.d")).as("d"),
-            coalesce(col(s"s.$keyCol"), col(s"x.$keyCol")).as(keyCol),
-            (coalesce(col("s.n_events"), lit(0L)) +
-              coalesce(col("x.dn"), lit(0L))).as("n_events"),
-            (coalesce(col("s.sum_acc"), lit(0).cast(acc)) +
-              coalesce(col("x.ds"), lit(0).cast(acc))).cast(acc)
-              .as("sum_acc"))
-        // eager checkpoint: constant lineage depth across batches,
-        // and the store must not lazily re-read a batch that is gone
-        store.df = merged.localCheckpoint(eager = true)
-      }
-      .start()
-  }
+      valCol: String = "value"): StreamingQuery =
+    store.start(events) { batch =>
+      batch
+        .groupBy(to_date(col(tsCol)).as("d"), col(keyCol))
+        .agg(count(lit(1)).as("dn"),
+          sum(col(valCol).cast(DecimalType(18, 6))).as("ds"))
+    }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import OrderedFold.utcDay
 
 /** Stateful streaming return-term builder — the live twin of the batch
   * bipower-variation chain in `ops/MarketBars.bipowerJump` (q181).
@@ -24,10 +25,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Rounding parity: Spark's `round(double, n)` is
   * `BigDecimal.valueOf(x).setScale(n, HALF_UP)`; the state fold calls
   * the same JVM API, so the emitted terms are the batch values, not
-  * approximations. State per (series, UTC day): previous close,
-  * previous surviving return, replay-guard microsecond — constant
-  * memory, day-keyed so one hot series spreads across state entries
-  * (the TickFlowMonitor class).
+  * approximations. State per (series, UTC day): previous close and
+  * previous surviving return — constant memory, day-keyed so one hot
+  * series spreads across state entries (the TickFlowMonitor class);
+  * bars fold through [[OrderedFold]].
   */
 object JumpMonitor {
 
@@ -39,14 +40,7 @@ object JumpMonitor {
 
   case class St(
       lastClose: Double, hasClose: Boolean,
-      lastR: Double, hasR: Boolean, lastTs: Long)
-
-  private def utcDay(ts: Timestamp): String =
-    java.time.Instant.ofEpochMilli(ts.getTime)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+      lastR: Double, hasR: Boolean)
 
   /** Spark `round(x, n)` bit-for-bit, emitted as the 1e-n scaled
     * integer (what the batch DECIMAL(28,12) sum carries per term). */
@@ -62,35 +56,20 @@ object JumpMonitor {
   def terms(bars: Dataset[Bar]): Dataset[Term] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    bars
-      .groupByKey(b => (b.series, utcDay(b.ts)))
-      .flatMapGroupsWithState[St, Term](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((series, day), rows, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(
-            St(0.0, hasClose = false, 0.0, hasR = false, Long.MinValue))
-          val out = Vector.newBuilder[Term]
-          rows.toSeq.sortBy(b => micros(b.ts)).foreach { b =>
-            val t = micros(b.ts)
-            if (t > st.lastTs) {
-              val survives = st.hasClose && st.lastClose > 0 && b.close > 0
-              if (survives) {
-                val r = round8(math.log(b.close / st.lastClose))
-                val bv = if (st.hasR)
-                  Some(scaled(math.abs(r) * math.abs(st.lastR), 12))
-                else None
-                out += Term(series, Date.valueOf(day), b.ts,
-                  r, scaled(r * r, 12), bv)
-                st = St(b.close, hasClose = true, r, hasR = true, t)
-              } else {
-                // the bad (or first) close still becomes the next bar's
-                // prev_c — only the return chain skips it
-                st = st.copy(lastClose = b.close, hasClose = true, lastTs = t)
-              }
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(bars.groupByKey(b => (b.series, utcDay(b.ts))),
+      St(0.0, hasClose = false, 0.0, hasR = false),
+      OrderedFold.byTime[Bar](_.ts)) {
+      case ((series, day), st, b) =>
+        if (st.hasClose && st.lastClose > 0 && b.close > 0) {
+          val r = round8(math.log(b.close / st.lastClose))
+          val bv = Option.when(st.hasR)(scaled(math.abs(r) * math.abs(st.lastR), 12))
+          (St(b.close, hasClose = true, r, hasR = true),
+            Some(Term(series, Date.valueOf(day), b.ts, r, scaled(r * r, 12), bv)))
+        } else {
+          // the bad (or first) close still becomes the next bar's
+          // prev_c — only the return chain skips it
+          (st.copy(lastClose = b.close, hasClose = true), None)
+        }
+    }
   }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import OrderedFold.utcDay
 
 /** Stateful streaming on-balance volume — the live twin of the batch
   * accumulation in `ops/MarketBars.obv` (q388). OBV IS a sequential
@@ -14,23 +15,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (StreamingSpec rolls the emitted per-bar flows up to the batch
   * day rows).
   *
-  * State per series is three longs (last 1e6-long close, running
-  * obv6, replay guard) — constant memory, the TickFlowMonitor class.
-  * Keyed by series ALONE (the level never resets, so there is no day
-  * key — per-series state is one tiny entry regardless of history
-  * length); micro-batch rows fold in full-microsecond event-time
-  * order, rows at or before the last applied microsecond drop (the
-  * replay guard). The series' FIRST bar seeds the close and emits
-  * nothing — exactly the batch chain's null-lag exclusion.
-  *
-  * IN-ORDER INGESTION ASSUMPTION (shared with TickFlowMonitor): the
-  * replay guard also drops a bar that arrives in a LATER micro-batch
-  * than a successor — batch obv WOULD include that row, so stream ==
-  * batch bit-equality holds only for feeds that are non-decreasing in
-  * event time across micro-batches (within a batch any order is fine
-  * — rows sort before folding). A reordering feed diverges silently;
-  * front it with a watermarked sort (BarBuilder) when arrival order
-  * is not guaranteed.
+  * State per series is two longs (last 1e6-long close, running obv6)
+  * — constant memory, the TickFlowMonitor class. Keyed by series
+  * ALONE (the level never resets, so there is no day key — per-series
+  * state is one tiny entry regardless of history length); bars fold
+  * through [[OrderedFold]], whose in-order ingestion contract is what
+  * stream == batch needs here. The series' FIRST bar seeds the close
+  * and emits nothing — exactly the batch chain's null-lag exclusion.
   */
 object ObvMonitor {
 
@@ -39,47 +30,25 @@ object ObvMonitor {
   case class Flow(
       series: String, d: Date, ts: Timestamp, flow6: Long, obv6: Long)
 
-  case class St(lastC6: Long, obv6: Long, lastTs: Long)
-
-  private def utcDay(ts: Timestamp): String =
-    java.time.Instant.ofEpochMilli(ts.getTime)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+  case class St(lastC6: Long, obv6: Long)
 
   def flows(bars: Dataset[Bar]): Dataset[Flow] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    bars
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[St, Flow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (series, rows, state: GroupState[St]) =>
-          var st = state.getOption
-            .getOrElse(St(Long.MinValue, 0L, Long.MinValue))
-          val out = Vector.newBuilder[Flow]
-          rows.toSeq.sortBy(b => micros(b.ts)).foreach { b =>
-            val t = micros(b.ts)
-            if (t > st.lastTs) {
-              val c6 = math.floor(b.close * 1e6 + 0.5).toLong
-              if (st.lastC6 != Long.MinValue) {
-                val v6 = math.floor(b.volume * 1e6 + 0.5).toLong
-                val sign =
-                  if (c6 > st.lastC6) 1L
-                  else if (c6 < st.lastC6) -1L
-                  else 0L
-                val f = sign * v6
-                st = St(c6, st.obv6 + f, t)
-                out += Flow(series, Date.valueOf(utcDay(b.ts)), b.ts,
-                  f, st.obv6)
-              } else {
-                st = St(c6, st.obv6, t)
-              }
-            }
-          }
-          state.update(st)
-          out.result().iterator
+    OrderedFold(bars.groupByKey(_.series), St(Long.MinValue, 0L),
+      OrderedFold.byTime[Bar](_.ts)) { (series, st, b) =>
+      val c6 = math.floor(b.close * 1e6 + 0.5).toLong
+      if (st.lastC6 == Long.MinValue) (St(c6, st.obv6), None)
+      else {
+        val v6 = math.floor(b.volume * 1e6 + 0.5).toLong
+        val sign =
+          if (c6 > st.lastC6) 1L
+          else if (c6 < st.lastC6) -1L
+          else 0L
+        val f = sign * v6
+        (St(c6, st.obv6 + f),
+          Some(Flow(series, Date.valueOf(utcDay(b.ts)), b.ts, f, st.obv6 + f)))
       }
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming Page-CUSUM drift monitor — the live twin of the
   * batch path (`ops/MarketBars.pageCusumPath`, q146). Page's test IS
@@ -13,11 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exact long in 1e-6 units, so stream == batch bit-for-bit
   * (StreamingSpec asserts set equality on alarm bars).
   *
-  * State per series is TWO longs (S and the last applied event time)
-  * — constant memory, the DrawdownMonitor class. Rows inside a
-  * micro-batch fold in event-time order; rows at or before the last
-  * applied timestamp are dropped (replay guard). Series without a
-  * baseline entry are ignored.
+  * State per series is one long (S) — constant memory, the
+  * DrawdownMonitor class; bars fold through [[OrderedFold]]. Series
+  * without a baseline entry are ignored.
   */
 object PageCusumMonitor {
 
@@ -25,7 +22,7 @@ object PageCusumMonitor {
 
   case class Alarm(series: String, ts: Timestamp, s6: Long)
 
-  case class St(s6: Long, lastTs: Long)
+  case class St(s6: Long)
 
   def alarms(
       bars: Dataset[Bar],
@@ -37,28 +34,11 @@ object PageCusumMonitor {
     val k6 = math.floor(slack * 1e6 + 0.5).toLong
     val h6 = math.floor(h * 1e6 + 0.5).toLong
     val m6 = mu0.map { case (s, v) => s -> math.floor(v * 1e6 + 0.5).toLong }
-    bars
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[St, Alarm](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (series, rows, state: GroupState[St]) =>
-          m6.get(series) match {
-            case None => Iterator.empty
-            case Some(mu6) =>
-              var st = state.getOption.getOrElse(St(0L, Long.MinValue))
-              val out = Vector.newBuilder[Alarm]
-              rows.toSeq.sortBy(_.ts.getTime).foreach { b =>
-                val t = b.ts.getTime
-                if (t > st.lastTs) {
-                  val x6 = math.floor(b.close * 1e6 + 0.5).toLong
-                  val s = math.max(0L, st.s6 + (x6 - mu6 - k6))
-                  st = St(s, t)
-                  if (s > h6) out += Alarm(series, b.ts, s)
-                }
-              }
-              state.update(st)
-              out.result().iterator
-          }
-      }
+    OrderedFold(bars.filter(b => m6.contains(b.series)).groupByKey(_.series),
+      St(0L), OrderedFold.byTime[Bar](_.ts)) { (series, st, b) =>
+      val x6 = math.floor(b.close * 1e6 + 0.5).toLong
+      val s = math.max(0L, st.s6 + (x6 - m6(series) - k6))
+      (St(s), Option.when(s > h6)(Alarm(series, b.ts, s)))
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming PSI drift monitor — the live twin of the batch
   * population-stability index (`ops/EventAnalytics.psiDrift`, q279).
@@ -14,9 +13,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * emitting the running PSI per event so a drift alarm can fire the
   * moment the live distribution walks away from the baseline.
   *
-  * State per key is the nBins live-bin count array plus the last
-  * applied (µs, event id) — O(nBins) memory regardless of history
-  * (the two-number drawdown class, not the window-buffer class).
+  * State per key is the nBins live-bin count array — O(nBins) memory
+  * regardless of history (the two-number drawdown class, not the
+  * window-buffer class). Events fold through [[OrderedFold]] with the
+  * event id as tiebreak, which keeps same-timestamp events countable
+  * (counts, not values, are the state here).
   *
   * The math is the batch op's verbatim: the shared equal-width bin
   * formula over the supplied [mn, mx] edges, Laplace (+1) smoothing
@@ -29,11 +30,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * value outside the reference range clamps into the edge bins
   * (greatest(0, least(nBins−1, ·)) — the batch side never sees one
   * by construction, so the clamp is stream-only robustness).
-  *
-  * Replay discipline: rows in a micro-batch fold in (event-time,
-  * event-id) order; rows at or before the last applied (µs, id) pair
-  * drop — the id tie-break keeps same-timestamp events countable,
-  * unlike the ts-only rule (counts, not values, are the state here).
   */
 object PsiMonitor {
 
@@ -50,10 +46,7 @@ object PsiMonitor {
       psi: Double,
       drifted: Boolean)
 
-  case class CountState(counts: Vector[Long], lastUs: Long, lastId: Long)
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
+  case class CountState(counts: Vector[Long])
 
   def monitor(
       events: Dataset[Event],
@@ -64,52 +57,35 @@ object PsiMonitor {
     val spark = events.sparkSession
     import spark.implicits._
     val bRef = spark.sparkContext.broadcast(ref)
-    events
-      .groupByKey(_.eventType)
-      .flatMapGroupsWithState[CountState, PsiAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (eventType, rows, state: GroupState[CountState]) =>
-          bRef.value.get(eventType) match {
-            case None => Iterator.empty // no baseline — nothing to score
-            case Some(r) =>
-              var st = state.getOption.getOrElse(
-                CountState(Vector.fill(nBins)(0L), Long.MinValue, Long.MinValue))
-              val out = Vector.newBuilder[PsiAlert]
-              rows.toSeq
-                .sortBy(e => (micros(e.ts), e.eventId))
-                .foreach { e =>
-                  val us = micros(e.ts)
-                  if (us > st.lastUs || (us == st.lastUs && e.eventId > st.lastId)) {
-                    val bin =
-                      if (r.mx > r.mn)
-                        math.max(0, math.min(nBins - 1,
-                          math.floor((e.value - r.mn) * nBins.toDouble /
-                            (r.mx - r.mn)).toInt))
-                      else 0
-                    val counts = st.counts.updated(bin, st.counts(bin) + 1L)
-                    st = CountState(counts, us, e.eventId)
-                    val nbLive = counts.sum
-                    // the batch term fold, verbatim: 12dp-rounded terms
-                    // summed exactly, PSI rounded at 6
-                    var acc = BigDecimal(0)
-                    var b = 0
-                    while (b < nBins) {
-                      val pa = (r.bins.getOrElse(b, 0L).toDouble + 1.0) /
-                        (r.na.toDouble + nBins.toDouble)
-                      val pb = (counts(b).toDouble + 1.0) /
-                        (nbLive.toDouble + nBins.toDouble)
-                      acc += BigDecimal((pa - pb) * math.log(pa / pb))
-                        .setScale(12, BigDecimal.RoundingMode.HALF_UP)
-                      b += 1
-                    }
-                    val psi = BigDecimal(acc.toDouble)
-                      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-                    out += PsiAlert(eventType, e.ts, nbLive, psi, psi > threshold)
-                  }
-                }
-              state.update(st)
-              out.result().iterator
-          }
+    // keys without a baseline have nothing to score
+    OrderedFold(
+      events.filter(e => bRef.value.contains(e.eventType)).groupByKey(_.eventType),
+      CountState(Vector.fill(nBins)(0L)),
+      (e: Event) => (OrderedFold.micros(e.ts), e.eventId)) { (eventType, st, e) =>
+      val r = bRef.value(eventType)
+      val bin =
+        if (r.mx > r.mn)
+          math.max(0, math.min(nBins - 1,
+            math.floor((e.value - r.mn) * nBins.toDouble / (r.mx - r.mn)).toInt))
+        else 0
+      val counts = st.counts.updated(bin, st.counts(bin) + 1L)
+      val nbLive = counts.sum
+      // the batch term fold, verbatim: 12dp-rounded terms summed
+      // exactly, PSI rounded at 6
+      var acc = BigDecimal(0)
+      var b = 0
+      while (b < nBins) {
+        val pa = (r.bins.getOrElse(b, 0L).toDouble + 1.0) /
+          (r.na.toDouble + nBins.toDouble)
+        val pb = (counts(b).toDouble + 1.0) /
+          (nbLive.toDouble + nBins.toDouble)
+        acc += BigDecimal((pa - pb) * math.log(pa / pb))
+          .setScale(12, BigDecimal.RoundingMode.HALF_UP)
+        b += 1
       }
+      val psi = BigDecimal(acc.toDouble)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      (CountState(counts), Some(PsiAlert(eventType, e.ts, nbLive, psi, psi > threshold)))
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 /** Streaming twin of the SCD Type-2 dimension build
   * (`ops/WarehouseOps.scd2`, q138): a foreachBatch MERGE that
@@ -31,57 +32,45 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * out-of-order sliver).
   *
   * Scale posture: each micro-batch contributes only its own distinct
-  * rows; the merge is a union + key-partitioned distinct (MERGE INTO
-  * upsert); the standing log is eagerly local-checkpointed so
-  * lineage stays constant-depth across batches. The read-side scd2
-  * chain is one key-partitioned window pass over the log. */
+  * rows; the [[MergeStore]] merge is a union + key-partitioned
+  * distinct. The read-side scd2 chain is one key-partitioned window
+  * pass over the log. */
 object Scd2Stream {
 
   /** Standing distinct snapshot log; `snapshot()` derives the
     * effective-dated dimension via the batch op. */
-  final class Scd2Store(spark: SparkSession) {
-    import org.apache.spark.sql.types._
-    @volatile private[Scd2Stream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+  final class Scd2Store(spark: SparkSession)
+      extends MergeStore(spark,
         StructType(Seq(
           StructField("custkey", LongType),
           StructField("snap_d", DateType),
           StructField("tie", LongType),
-          StructField("status", StringType))))
+          StructField("status", StringType))),
+        MergeStore.distinctUnion) {
 
     /** The current SCD2 dimension — the batch q138 chain over the
       * accumulated log (version numbers and effective_to re-derive on
       * read; they are positional and can shift under late data, so
       * they are never stored). */
     def snapshot(): DataFrame =
-      graft.ops.WarehouseOps.scd2(df, "custkey", "snap_d", "tie", "status")
+      graft.ops.WarehouseOps.scd2(frame, "custkey", "snap_d", "tie", "status")
   }
 
   def newStore(spark: SparkSession): Scd2Store = new Scd2Store(spark)
 
   /** Start the refresh: every micro-batch MERGEs its distinct
-    * snapshot rows into the standing log (idempotent on replays —
-    * the union re-distincts). The store is the sink; readers take
-    * `store.snapshot()`. */
+    * snapshot rows into the standing log. The store is the sink;
+    * readers take `store.snapshot()`. */
   def start(
       snapshots: DataFrame,
       store: Scd2Store,
       keyCol: String = "custkey",
       tsCol: String = "snap_d",
       tieCol: String = "tie",
-      attrCol: String = "status"): StreamingQuery = {
-    snapshots.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch.select(
-          col(keyCol).as("custkey"), col(tsCol).as("snap_d"),
-          col(tieCol).as("tie"), col(attrCol).as("status"))
-        val merged = store.df.unionByName(delta).distinct()
-        // eager checkpoint: constant lineage depth, and the store
-        // must not lazily re-read a micro-batch that is gone
-        store.df = merged.localCheckpoint(eager = true)
-      }
-      .start()
-  }
+      attrCol: String = "status"): StreamingQuery =
+    store.start(snapshots) { batch =>
+      batch.select(
+        col(keyCol).as("custkey"), col(tsCol).as("snap_d"),
+        col(tieCol).as("tie"), col(attrCol).as("status"))
+    }
 }

@@ -3,26 +3,24 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+
+import OrderedFold.micros
 
 /** Live per-user session-depth statistics — the streaming twin of
   * `ops/EventAnalytics.sessionStats` (q180): how deep and how long a
   * user's sessions run, updated the moment new activity arrives
   * instead of in a nightly batch.
   *
-  * State per user is eight longs (replay guard, open-session bounds,
-  * closed-session totals) — constant memory keyed by a growing id,
-  * the ConversionMonitor class. Sessions split on the SAME strict
-  * `gap >= 30 min` epoch-µs rule as the batch op and its DuckDB
-  * oracle; the open session is folded into the emitted totals so the
-  * row always equals the batch recomputation over the events seen so
-  * far (StreamingSpec locks this across a mid-session micro-batch
-  * split).
-  *
-  * Ordered-delivery contract (shared with the other monitors): rows
-  * at or before the last applied (µs, event_id) are dropped by the
-  * replay guard; within watermark-ordered delivery — what the spec
-  * feeds — stream and batch agree exactly.
+  * State per user is seven longs (open-session bounds, closed-session
+  * totals) — constant memory keyed by a growing id, the
+  * ConversionMonitor class. Events fold through [[OrderedFold]] in
+  * (µs, event_id) order; the row emits once per micro-batch, after
+  * the fold. Sessions split on the SAME strict `gap >= 30 min` epoch-µs
+  * rule as the batch op and its DuckDB oracle; the open session is
+  * folded into the emitted totals so the row always equals the batch
+  * recomputation over the events seen so far (StreamingSpec locks this
+  * across a mid-session micro-batch split).
   */
 object SessionStatsMonitor {
 
@@ -37,13 +35,9 @@ object SessionStatsMonitor {
       mean_dur_s: Double)
 
   case class St(
-      lastUs: Long, lastId: Long,
       closedSessions: Long, closedEvents: Long,
       closedDurUs: Long, closedMaxDepth: Long,
       curStartUs: Long, curLastUs: Long, curDepth: Long)
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
   def stats(
       events: Dataset[Ev],
@@ -53,31 +47,26 @@ object SessionStatsMonitor {
     val gapUs = gapMinutes * 60L * 1000000L
     events
       .groupByKey(_.user_id)
-      .mapGroupsWithState[St, Stats](GroupStateTimeout.NoTimeout) {
-        case (uid, rows, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(
-            St(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+      .mapGroupsWithState[OrderedFold.Slot[St, Long], Stats](GroupStateTimeout.NoTimeout) {
+        case (uid, rows, state: GroupState[OrderedFold.Slot[St, Long]]) =>
+          val st = OrderedFold.fold(state, rows, St(0L, 0L, 0L, 0L, 0L, 0L, 0L),
+            (e: Ev) => (micros(e.ts), e.event_id)) { (st, e) =>
             val t = micros(e.ts)
-            if (t > st.lastUs || (t == st.lastUs && e.event_id > st.lastId)) {
-              if (st.curDepth == 0L) {
-                // very first event: open the first session
-                st = st.copy(curStartUs = t, curLastUs = t, curDepth = 1L)
-              } else if (t - st.curLastUs >= gapUs) {
-                // strict gap rule (q56): close the open session
-                st = st.copy(
-                  closedSessions = st.closedSessions + 1L,
-                  closedEvents = st.closedEvents + st.curDepth,
-                  closedDurUs = st.closedDurUs + (st.curLastUs - st.curStartUs),
-                  closedMaxDepth = math.max(st.closedMaxDepth, st.curDepth),
-                  curStartUs = t, curLastUs = t, curDepth = 1L)
-              } else {
-                st = st.copy(curLastUs = t, curDepth = st.curDepth + 1L)
-              }
-              st = st.copy(lastUs = t, lastId = e.event_id)
+            if (st.curDepth == 0L) {
+              // very first event: open the first session
+              st.copy(curStartUs = t, curLastUs = t, curDepth = 1L)
+            } else if (t - st.curLastUs >= gapUs) {
+              // strict gap rule (q56): close the open session
+              St(
+                closedSessions = st.closedSessions + 1L,
+                closedEvents = st.closedEvents + st.curDepth,
+                closedDurUs = st.closedDurUs + (st.curLastUs - st.curStartUs),
+                closedMaxDepth = math.max(st.closedMaxDepth, st.curDepth),
+                curStartUs = t, curLastUs = t, curDepth = 1L)
+            } else {
+              st.copy(curLastUs = t, curDepth = st.curDepth + 1L)
             }
           }
-          state.update(st)
           // fold the OPEN session in, matching the batch rollup over
           // everything seen so far; the floor-form means are the exact
           // q180 double op order

@@ -23,11 +23,10 @@ import org.apache.spark.sql.types._
   * a late out-of-order sliver, including users' argmax rows).
   *
   * Scale posture: each micro-batch pre-aggregates map-side to one row
-  * per touched user before the merge; the merge is a key-partitioned
-  * max-agg against the standing store (a storage-engine MERGE INTO
-  * with a GREATEST update clause); the store is eagerly
-  * local-checkpointed so lineage stays constant-depth across batches.
-  * The read-side rollup is |states|² rows. Users whose events all sit
+  * per touched user before the merge; the [[MergeStore]] merge is a
+  * key-partitioned max-agg against the standing store (a MERGE INTO
+  * with a GREATEST update clause). The read-side rollup is |states|²
+  * rows. Users whose events all sit
   * at/after the second cutoff carry two null structs and are filtered
   * on read — the batch op never sees them either. */
 object SnapshotDiffStream {
@@ -39,19 +38,20 @@ object SnapshotDiffStream {
 
   /** Standing per-user (latest-below-cutoff1, latest-below-cutoff2)
     * store; `snapshot()` derives the q174 transition matrix. */
-  final class DiffStore(spark: SparkSession) {
-    @volatile private[SnapshotDiffStream] var df: DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
+  final class DiffStore(spark: SparkSession)
+      extends MergeStore(spark,
         StructType(Seq(
           StructField("user_id", LongType),
           StructField("s1", stateStruct),
-          StructField("s2", stateStruct))))
+          StructField("s2", stateStruct))),
+        (store, delta) => store.unionByName(delta)
+          .groupBy(col("user_id"))
+          .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"))) {
 
     /** The current (old_state, new_state) → n_users matrix, equal to
       * `EventAnalytics.snapshotDiff` over everything ingested. */
     def snapshot(): DataFrame =
-      df.filter(col("s1").isNotNull || col("s2").isNotNull)
+      frame.filter(col("s1").isNotNull || col("s2").isNotNull)
         .select(
           coalesce(col("s1").getField("event_type"), lit("(absent)"))
             .as("old_state"),
@@ -65,25 +65,17 @@ object SnapshotDiffStream {
 
   /** Start the refresh: every micro-batch folds its own per-user
     * argmax structs (map-side combine), then max-merges them into the
-    * standing store — idempotent on replays because max is. */
+    * standing store. */
   def start(
       events: DataFrame,
       store: DiffStore,
       cutoff1: Column,
-      cutoff2: Column): StreamingQuery = {
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val st = struct(col("ts"), col("event_id"), col("event_type"))
-        val delta = batch.groupBy(col("user_id"))
-          .agg(
-            max(when(col("ts") < cutoff1, st)).as("s1"),
-            max(when(col("ts") < cutoff2, st)).as("s2"))
-        store.df = store.df.unionByName(delta)
-          .groupBy(col("user_id"))
-          .agg(max(col("s1")).as("s1"), max(col("s2")).as("s2"))
-          .localCheckpoint(eager = true)
-      }
-      .start()
-  }
+      cutoff2: Column): StreamingQuery =
+    store.start(events) { batch =>
+      val st = struct(col("ts"), col("event_id"), col("event_type"))
+      batch.groupBy(col("user_id"))
+        .agg(
+          max(when(col("ts") < cutoff1, st)).as("s1"),
+          max(when(col("ts") < cutoff2, st)).as("s2"))
+    }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming stale-price monitor — the live twin of the batch
   * gaps-and-islands run profile (`ops/MarketBars.staleRuns`, q136).
@@ -11,14 +10,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * emits each completed run THE MOMENT a differing close breaks it, so
   * a stuck-feed alarm can fire while the feed is still stuck.
   *
-  * State per key is one open run — (close, start, end, length) plus
-  * the last applied event time — constant memory regardless of
-  * history. The trailing run stays open in state by design (its length
-  * is unknown until something breaks it); batch parity therefore holds
-  * over COMPLETED runs, which is exactly what StreamingSpec asserts.
-  * Same replay guard as the other monitors: rows inside a micro-batch
-  * fold in event-time order, rows at or before the last applied
-  * timestamp are dropped.
+  * State per key is one open run — (close, start, end, length) —
+  * constant memory regardless of history; bars fold through
+  * [[OrderedFold]]. The trailing run stays open in state by design
+  * (its length is unknown until something breaks it); batch parity
+  * therefore holds over COMPLETED runs, which is exactly what
+  * StreamingSpec asserts.
   */
 object StaleRunMonitor {
 
@@ -31,39 +28,24 @@ object StaleRunMonitor {
       close: Double,
       run_len: Long)
 
+  /** The open run; `runLen` 0 before the series' first bar. */
   case class RunState(
       close: Double,
-      startTs: Long,
-      endTs: Long,
-      runLen: Long,
-      lastTs: Long)
+      startTs: Timestamp,
+      endTs: Timestamp,
+      runLen: Long)
 
   def completedRuns(bars: Dataset[Bar]): Dataset[Run] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    bars
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[RunState, Run](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (series, rows, state: GroupState[RunState]) =>
-          var st = state.getOption.orNull
-          val out = Vector.newBuilder[Run]
-          rows.toSeq.sortBy(_.ts.getTime).foreach { b =>
-            val t = b.ts.getTime
-            if (st == null) {
-              st = RunState(b.close, t, t, 1L, t)
-            } else if (t > st.lastTs) {
-              if (b.close == st.close) {
-                st = st.copy(endTs = t, runLen = st.runLen + 1, lastTs = t)
-              } else {
-                out += Run(series, new Timestamp(st.startTs),
-                  new Timestamp(st.endTs), st.close, st.runLen)
-                st = RunState(b.close, t, t, 1L, t)
-              }
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(bars.groupByKey(_.series), RunState(0.0, null, null, 0L),
+      OrderedFold.byTime[Bar](_.ts)) { (series, st, b) =>
+      if (st.runLen > 0L && b.close == st.close)
+        (st.copy(endTs = b.ts, runLen = st.runLen + 1), None)
+      else
+        (RunState(b.close, b.ts, b.ts, 1L),
+          Option.when(st.runLen > 0L)(
+            Run(series, st.startTs, st.endTs, st.close, st.runLen)))
+    }
   }
 }

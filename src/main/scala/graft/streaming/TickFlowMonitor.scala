@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import OrderedFold.utcDay
 
 /** Stateful streaming tick-rule signer — the live twin of the batch
   * sign chain inside `ops/MarketBars.tickRuleFlow`/`kyleLambda`
@@ -15,13 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * bit-for-bit (StreamingSpec aggregates the emitted signs to the
   * batch daily flow rows).
   *
-  * State per (series, UTC day) is three longs (last close, last sign,
-  * replay guard) — constant memory, the PageCusumMonitor class. Rows
-  * inside a micro-batch fold in event-time order at FULL microsecond
-  * precision (the same `micros` key TickBarMonitor uses — `getTime`
-  * alone is millisecond-truncated and would misorder or drop equal-ms
-  * bars); rows at or before the last applied microsecond are dropped
-  * (replay guard). Keying by (series, day) gives the day-boundary
+  * State per (series, UTC day) is the last close and the last sign —
+  * constant memory, the PageCusumMonitor class; bars fold through
+  * [[OrderedFold]]. Keying by (series, day) gives the day-boundary
   * reset for free AND keeps one hot series spread across day-keyed
   * state entries at scale.
   */
@@ -32,40 +29,21 @@ object TickFlowMonitor {
   case class Signed(
       series: String, d: Date, ts: Timestamp, tickSign: Int, nTicks: Long)
 
-  case class St(lastC6: Long, lastSign: Int, lastTs: Long)
-
-  private def utcDay(ts: Timestamp): String =
-    java.time.Instant.ofEpochMilli(ts.getTime)
-      .atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+  case class St(lastC6: Long, lastSign: Int)
 
   def signs(bars: Dataset[Bar]): Dataset[Signed] = {
     val spark = bars.sparkSession
     import spark.implicits._
-    bars
-      .groupByKey(b => (b.series, utcDay(b.ts)))
-      .flatMapGroupsWithState[St, Signed](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((series, day), rows, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(Long.MinValue, 0, Long.MinValue))
-          val out = Vector.newBuilder[Signed]
-          rows.toSeq.sortBy(b => micros(b.ts)).foreach { b =>
-            val t = micros(b.ts)
-            if (t > st.lastTs) {
-              val c6 = math.floor(b.close * 1e6 + 0.5).toLong
-              val sign =
-                if (st.lastC6 == Long.MinValue) 0 // day's first bar: no Δ
-                else if (c6 > st.lastC6) 1
-                else if (c6 < st.lastC6) -1
-                else st.lastSign // flat: carry last non-zero
-              st = St(c6, sign, t)
-              out += Signed(series, Date.valueOf(day), b.ts, sign, b.nTicks)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(bars.groupByKey(b => (b.series, utcDay(b.ts))),
+      St(Long.MinValue, 0), OrderedFold.byTime[Bar](_.ts)) {
+      case ((series, day), st, b) =>
+        val c6 = math.floor(b.close * 1e6 + 0.5).toLong
+        val sign =
+          if (st.lastC6 == Long.MinValue) 0 // day's first bar: no Δ
+          else if (c6 > st.lastC6) 1
+          else if (c6 < st.lastC6) -1
+          else st.lastSign // flat: carry last non-zero
+        (St(c6, sign), Some(Signed(series, Date.valueOf(day), b.ts, sign, b.nTicks)))
+    }
   }
 }

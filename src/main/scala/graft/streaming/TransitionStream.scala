@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming transition extractor — the live twin of the
   * batch first-order Markov matrix (`ops/EventAnalytics.transitions`,
@@ -12,12 +11,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arrives, so a downstream aggregation (or alerting rule on a
   * never-seen transition) is always current.
   *
-  * State per user is the LAST event only — (type, ts, event_id) —
-  * constant memory regardless of history length, the same
-  * cheapest-stateful-operator class as the drawdown monitor's running
-  * peak. Rows inside a micro-batch fold in (ts, event_id) order —
-  * the batch lag's exact tie-break — and rows at or before the last
-  * applied (ts, event_id) are dropped (replay guard).
+  * State per user is the LAST event's type — constant memory
+  * regardless of history length, the same cheapest-stateful-operator
+  * class as the drawdown monitor's running peak. Events fold through
+  * [[OrderedFold]] in (µs, event_id) order — the batch lag's exact
+  * order.
   */
 object TransitionStream {
 
@@ -35,29 +33,16 @@ object TransitionStream {
       next_type: String,
       value: Double)
 
-  case class TState(lastType: String, lastTs: Long, lastId: Long)
+  /** `lastType` is null before the user's first event. */
+  case class TState(lastType: String)
 
   def transitions(events: Dataset[Ev]): Dataset[Edge] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TState, Edge](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user, rows, state: GroupState[TState]) =>
-          var st = state.getOption.getOrElse(TState(null, Long.MinValue, Long.MinValue))
-          val out = Vector.newBuilder[Edge]
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val newer = e.ts.getTime > st.lastTs ||
-              (e.ts.getTime == st.lastTs && e.event_id > st.lastId)
-            if (newer) {
-              if (st.lastType != null)
-                out += Edge(user, e.ts, st.lastType, e.event_type, e.value)
-              st = TState(e.event_type, e.ts.getTime, e.event_id)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold(events.groupByKey(_.user_id), TState(null),
+      (e: Ev) => (OrderedFold.micros(e.ts), e.event_id)) { (user, st, e) =>
+      (TState(e.event_type),
+        Option(st.lastType).map(Edge(user, e.ts, _, e.event_type, e.value)))
+    }
   }
 }

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import OrderedFold.micros
+
 /** Stateful streaming twin of the batch trigger-lift pair relation
   * (`ops/EventAnalytics.triggerLift`, q400): per user, every event is
   * an ANCHOR for `windowSeconds`; when a later event of type b lands
@@ -25,7 +27,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * passes their final window — the store is bounded by ACTIVE users,
   * not ever-seen users (the r11 ADVICE.md item).
   *
-  * IN-ORDER INGESTION ASSUMPTION (the ObvMonitor class): rows sort by
+  * IN-ORDER INGESTION ASSUMPTION (the [[OrderedFold]] contract): rows sort by
   * event time WITHIN a micro-batch, but an event arriving in a later
   * micro-batch than a successor is applied after it — its own anchor
   * window then opens late and already-pruned anchors cannot gain the
@@ -40,9 +42,6 @@ object TriggerLiftMonitor {
   case class Anchor(us: Long, id: Long, tpe: String, emitted: Set[String])
 
   case class St(anchors: List[Anchor])
-
-  private def micros(ts: Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
   def hits(events: Dataset[Ev], windowSeconds: Int = 60): Dataset[Hit] = {
     val wUs = windowSeconds * 1000000L

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ReproRunner {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.DefaultCpus)
     val only = args.headOption.map(_.split(',').toSet)
       .getOrElse(sys.error("pass a comma-separated query list"))
     val spark = SparkSession.builder()

@@ -288,9 +288,13 @@ class ScaleSpec extends AnyFunSuite {
     // information bars need one sequential step (the per-series row
     // index); it must stay a partition-local window sort — a global
     // sort would serialize the whole tick store on one core
-    val plan = graft.ops.MarketBars.tickBars(Tables.events(spark, sf),
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val qe = graft.ops.MarketBars.tickBars(Tables.events(spark, sf),
         "event_type", "ts", "value", "event_id", ticksPerBar = 50)
-      .queryExecution.executedPlan.toString
+      .queryExecution
+    val plan = qe.executedPlan.toString
     assert("], true, 0".r.findAllIn(plan).isEmpty,
       s"global sort found in tick-bars plan:\n${plan.take(3000)}")
     // exactly one corpus-side window (the per-(series, day) row index);
@@ -299,8 +303,25 @@ class ScaleSpec extends AnyFunSuite {
     // checkpoint — it used to hide behind a Scan ExistingRDD)
     assert("row_number\\(\\) windowspecdefinition\\(".r.findAllIn(plan).size === 1,
       s"expected exactly one row-index Window:\n${plan.take(3000)}")
-    assert("Window \\[".r.findAllIn(plan).size <= 2,
-      s"unexpected extra Window operators:\n${plan.take(3000)}")
+    val windows = qe.sparkPlan.collect { case w: WindowExec => w }
+    val dayMap = windows.filterNot(_.windowExpression.exists(
+      _.toString.contains("row_number")))
+    assert(windows.size === 2 && dayMap.size === 1,
+      s"expected the row index plus one day-map Window:\n${qe.sparkPlan}")
+    // the day-map pass partitions by the series key ALONE and reads the
+    // (series, day) aggregate — keys×days rows, never the tick corpus
+    def source(p: SparkPlan): SparkPlan = p match {
+      case pr: ProjectExec => source(pr.child)
+      case other => other
+    }
+    assert(dayMap.head.partitionSpec.flatMap(_.references.map(_.name)) ===
+      Seq("series"), s"day-map partition spec:\n${dayMap.head}")
+    source(dayMap.head.child) match {
+      case agg: BaseAggregateExec =>
+        assert(agg.output.map(_.name) === Seq("series", "__day", "__n"),
+          s"day-map input:\n$agg")
+      case other => fail(s"day-map Window is not over the aggregate:\n$other")
+    }
   }
 
   test("q146 page-cusum plan: the whole alarm path is ONE window pass") {
@@ -564,6 +585,28 @@ class ScaleSpec extends AnyFunSuite {
     // both modes produce identical ranks
     assert(auto.orderBy("id").collect().toSeq ===
       shuffled.orderBy("id").collect().toSeq)
+  }
+
+  test("pageRank broadcast mode: 40 iterations plan no deeper than 8") {
+    // the broadcast chain is cut by a lazy checkpoint every 8th
+    // iteration, so analysis and planning of a long run see at most 8
+    // nested iterations instead of one more layer per iteration
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    val edges = Seq(
+      (1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L), (2L, 4L)
+    ).toDF("src", "dst")
+    def ranked(iters: Int, bc: Boolean) = graft.ops.GraphOps.pageRank(
+      edges, iters = iters, broadcastRanks = Some(bc))
+    def depth(p: LogicalPlan): Int = 1 + (p.children.map(depth) :+ 0).max
+    val long = ranked(40, bc = true)
+    val d40 = depth(long.queryExecution.analyzed)
+    val d8 = depth(ranked(8, bc = true).queryExecution.analyzed)
+    assert(d40 <= d8, s"40-iteration plan depth $d40 > 8-iteration depth $d8")
+    assert(long.queryExecution.executedPlan.toString.nonEmpty)
+    // the cut changes no value: both modes still agree
+    assert(long.orderBy("id").collect().toSeq ===
+      ranked(40, bc = false).orderBy("id").collect().toSeq)
   }
 
   test("no forced broadcast hint targets an SF-scaling relation") {

@@ -1236,4 +1236,87 @@ class StreamingSpec extends AnyFunSuite {
       assert(batch.except(streamed).count() === 0)
     } finally q.stop()
   }
+
+  /** `base` plus `us` microseconds. */
+  private def atMicros(base: String, us: Int): Timestamp = {
+    val t = Timestamp.valueOf(base)
+    t.setNanos(us * 1000)
+    t
+  }
+
+  test("drawdown applies a second tick in the same millisecond (µs replay guard)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // t1 and t2 share a millisecond but not a microsecond; t2 arrives
+    // in the next micro-batch, so only a µs guard lets it through
+    val t1 = atMicros("2024-01-02 14:30:00", 100)
+    val t2 = atMicros("2024-01-02 14:30:00", 200)
+    val t3 = atMicros("2024-01-02 14:30:01", 0)
+    val stream = MemoryStream[DrawdownMonitor.Tick]
+    val q = DrawdownMonitor.drawdowns(stream.toDS())
+      .writeStream.format("memory").queryName("dd_us_out")
+      .outputMode("append").start()
+    try {
+      stream.addData(DrawdownMonitor.Tick("A", t1, 10.0)); q.processAllAvailable()
+      stream.addData(DrawdownMonitor.Tick("A", t3, 11.0),
+        DrawdownMonitor.Tick("A", t2, 12.0)); q.processAllAvailable()
+      val got = spark.table("dd_us_out").as[DrawdownMonitor.DdPoint]
+        .collect().sortBy(p => (p.ts.getTime, p.ts.getNanos)).toSeq
+      assert(got === Seq(
+        DrawdownMonitor.DdPoint("A", t1, 10.0, 10.0, 0.0),
+        DrawdownMonitor.DdPoint("A", t2, 12.0, 12.0, 0.0),
+        DrawdownMonitor.DdPoint("A", t3, 11.0, 12.0, -1.0)))
+    } finally q.stop()
+  }
+
+  test("transitions order same-millisecond events by time, not by event_id") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // x and y share a millisecond; their ids run against time order
+    val rows = Seq(
+      TransitionStream.Ev(1L, atMicros("2024-01-02 14:29:59", 0), 1L, "p", 1.0),
+      TransitionStream.Ev(1L, atMicros("2024-01-02 14:30:00", 100), 20L, "x", 2.0),
+      TransitionStream.Ev(1L, atMicros("2024-01-02 14:30:00", 500), 10L, "y", 3.0))
+    val batch = graft.ops.EventAnalytics.transitions(rows.toDF())
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+      .toMap
+    assert(batch === Map(("p", "x") -> 1L, ("x", "y") -> 1L))
+    val stream = MemoryStream[TransitionStream.Ev]
+    val q = TransitionStream.transitions(stream.toDS())
+      .writeStream.format("memory").queryName("tr_us_out")
+      .outputMode("append").start()
+    try {
+      stream.addData(rows.reverse); q.processAllAvailable()
+      val streamed = spark.table("tr_us_out")
+        .groupBy(col("prev_type"), col("next_type")).count()
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+        .toMap
+      assert(streamed === batch)
+    } finally q.stop()
+  }
+
+  test("merge store lineage stays one checkpointed relation over 30 micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val data = ticksFromEvents(900)
+    val stream = MemoryStream[Tick]
+    val store = graft.streaming.IncrementalAggStream.newStore(spark)
+    val q = graft.streaming.IncrementalAggStream.start(stream.toDF(), store)
+    def depth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      1 + (p.children.map(depth) :+ 0).max
+    try {
+      data.grouped(30).zipWithIndex.foreach { case (chunk, i) =>
+        stream.addData(chunk); q.processAllAvailable()
+        val plan = store.frame.queryExecution.logical
+        assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] &&
+          depth(plan) === 1, s"store plan after batch $i:\n$plan")
+      }
+      val streamed = store.snapshot()
+      val batch = graft.ops.WarehouseOps.dailyAgg(
+        data.toDF("event_type", "ts", "value"))
+      assert(streamed.count() === batch.count())
+      assert(streamed.except(batch).count() === 0)
+      assert(batch.except(streamed).count() === 0)
+    } finally q.stop()
+  }
 }
