@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{PairAnalytics, QualityReport}
 import graft.sources.{AlpacaSource, Sinks}
@@ -13,9 +14,12 @@ import graft.sources.{AlpacaSource, Sinks}
   * (`/root/reference/dags/quant_pipeline_dag.py:66`) minus Airflow,
   * with one structural improvement: the per-pair Python loop
   * (`project/transform_data.py:187-192`) serialized three independent
-  * Spark DAGs; here all pairs live in ONE plan — the scan is shared,
-  * the pair join is a single self-join driven by a broadcast pair
-  * spec, and Catalyst sees the whole workload at once.
+  * Spark DAGs; here all pairs live in ONE plan and Catalyst sees the
+  * whole workload at once. The pair join is a single leg1×leg2 join
+  * driven by a broadcast pair spec (each leg scans the payload); both
+  * symbol legs come out of one projection over the z-scores, so the
+  * join and the window run once. One [[run]] evaluates that plan
+  * once: the sink's empty guard and its write share it.
   */
 object Pipeline {
 
@@ -34,7 +38,8 @@ object Pipeline {
       AlpacaSource.cleanBars(AlpacaSource.readRaw(spark, rawPath)))
 
   /** All pairs in one plan: broadcast the pair spec against each leg,
-    * join leg1×leg2 on (pair, timestamp), then window per pair. */
+    * join leg1×leg2 on (pair, timestamp), window per pair, then emit
+    * both symbol legs per z-score row ([[PairAnalytics.legReshape]]). */
   def pairZScores(
       bars: DataFrame,
       pairs: Seq[(String, String)] = DefaultPairs,
@@ -70,17 +75,12 @@ object Pipeline {
     // leg reshape with the sign flip (transform_data.py:156-180), for
     // every pair at once
     val symSpec = spec.select(col("pair_name"), col("sym1"), col("sym2"))
-    val withSyms = z.join(broadcast(symSpec), Seq("pair_name"))
-    val common = Seq(col("pair_name"), col("bar_ts"), col("window_size"))
-    val l1 = withSyms.select(col("sym1").as("symbol") +: common :+
-      col("close1").as("close") :+ col("spread") :+ col("z_score"): _*)
-    val l2 = withSyms.select(col("sym2").as("symbol") +: common :+
-      col("close2").as("close") :+ (-col("spread")).as("spread") :+
-      (-col("z_score")).as("z_score"): _*)
-    l1.unionByName(l2)
+    PairAnalytics.legReshape(z.join(broadcast(symSpec), Seq("pair_name")),
+      col("sym1"), col("sym2"))
   }
 
-  /** Full run: returns (final frame row count, run summary row).
+  /** Full run: returns (rows written, run summary row); the row count
+    * is the sink's own, taken in the same pass as the write.
     * With `strict` (the default, mirroring the reference DAG), an
     * overall FAIL badge raises [[ValidationFailedException]] AFTER the
     * sink write — the data lands for inspection, the run is marked
@@ -113,38 +113,46 @@ object Pipeline {
     val bars = prepare(spark, rawPath)
     val result = pairZScores(bars, pairs)
     // size-targeted refresh write: empty guard + ~128 MB output files
-    // whatever the upstream task count (Sinks.writeSized contract)
-    Sinks.overwriteSized(result, outPath)
-    val written = spark.read.parquet(outPath)
-    val latestDay = written.agg(max(to_date(col("bar_ts"))).cast("string")).head().getString(0)
-    if (fullCloseDates.contains(latestDay)) {
-      import spark.implicits._
-      val summary = Seq((runId, 0L, 0L, 0L, 0L, 0L, "OK",
-        s"Holiday full close (skipped validation): $latestDay"))
-        .toDF("run_id", "symbols_total", "symbols_ok", "symbols_warn",
-          "symbols_fail", "max_missing", "overall_status", "notes")
-        .withColumn("run_ts_utc", current_timestamp())
-      return (written.count(), summary)
-    }
-    val counts = QualityReport.symbolDayCounts(written, "symbol", "bar_ts")
-    val detail = QualityReport.classify(counts)
-      .withColumn("run_id", lit(runId))
-      .withColumn("run_ts_utc", current_timestamp())
-    Sinks.appendDeduped(detail, s"${outPath}_dq/intraday_quality_report",
-      keyCols = Seq("run_id", "trading_date", "symbol"), partitionBy = Nil)
-    val summary = QualityReport.runSummary(detail)
-      .withColumn("run_id", lit(runId))
-      .withColumn("run_ts_utc", current_timestamp())
-    Sinks.appendDeduped(summary, s"${outPath}_dq/intraday_quality_run_summary",
-      keyCols = Seq("run_id"), partitionBy = Nil)
-    if (strict) {
-      val s = summary.head()
-      if (s.getAs[String]("overall_status") == "FAIL")
-        throw new ValidationFailedException(
-          s"validation FAIL: ${s.getAs[Long]("symbols_fail")} of " +
-            s"${s.getAs[Long]("symbols_total")} symbol-days failed " +
-            s"(max ${s.getAs[Long]("max_missing")} missing bars)")
-    }
-    (written.count(), summary)
+    // whatever the upstream task count (Sinks.writeSized contract); the
+    // guard and the write share one evaluation of `result`
+    val rows = Sinks.overwriteSized(result, outPath)
+    // one run timestamp, fixed on the driver: every DQ row and the
+    // returned summary carry the same value, however often they are read
+    val runTs = lit(java.sql.Timestamp.from(java.time.Instant.now()))
+    // the DQ reads the landed lake back (it validates what landed) once:
+    // latest day, detail and summary all derive from these counts
+    val counts = QualityReport.symbolDayCounts(spark.read.parquet(outPath), "symbol", "bar_ts")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val latestDay = counts.agg(max(col("trading_date")).cast("string")).head().getString(0)
+      if (fullCloseDates.contains(latestDay)) {
+        import spark.implicits._
+        val summary = Seq((runId, 0L, 0L, 0L, 0L, 0L, "OK",
+          s"Holiday full close (skipped validation): $latestDay"))
+          .toDF("run_id", "symbols_total", "symbols_ok", "symbols_warn",
+            "symbols_fail", "max_missing", "overall_status", "notes")
+          .withColumn("run_ts_utc", runTs)
+        return (rows, summary)
+      }
+      val detail = QualityReport.classify(counts)
+        .withColumn("run_id", lit(runId))
+        .withColumn("run_ts_utc", runTs)
+      Sinks.appendDeduped(detail, s"${outPath}_dq/intraday_quality_report",
+        keyCols = Seq("run_id", "trading_date", "symbol"), partitionBy = Nil)
+      val summary = QualityReport.runSummary(detail)
+        .withColumn("run_id", lit(runId))
+        .withColumn("run_ts_utc", runTs)
+      Sinks.appendDeduped(summary, s"${outPath}_dq/intraday_quality_run_summary",
+        keyCols = Seq("run_id"), partitionBy = Nil)
+      if (strict) {
+        val s = summary.head()
+        if (s.getAs[String]("overall_status") == "FAIL")
+          throw new ValidationFailedException(
+            s"validation FAIL: ${s.getAs[Long]("symbols_fail")} of " +
+              s"${s.getAs[Long]("symbols_total")} symbol-days failed " +
+              s"(max ${s.getAs[Long]("max_missing")} missing bars)")
+      }
+      (rows, summary)
+    } finally counts.unpersist()
   }
 }

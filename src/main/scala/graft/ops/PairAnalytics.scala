@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -250,19 +250,23 @@ object PairAnalytics {
   /** Reshape the pair frame into one row per symbol; leg 2 carries the
     * negated spread/z-score so each symbol has its directional signal
     * (`transform_data.py:176-177`). */
-  def legReshape(pair: DataFrame, sym1: String, sym2: String): DataFrame = {
-    val common = Seq(col("pair_name"), col("bar_ts"), col("window_size"))
-    val leg1 = pair.select(
-      lit(sym1).as("symbol") +: common :+
-        col("close1").as("close") :+
-        col("spread").as("spread") :+
-        col("z_score").as("z_score"): _*)
-    val leg2 = pair.select(
-      lit(sym2).as("symbol") +: common :+
-        col("close2").as("close") :+
-        (-col("spread")).as("spread") :+
-        (-col("z_score")).as("z_score"): _*)
-    leg1.unionByName(leg2)
+  def legReshape(pair: DataFrame, sym1: String, sym2: String): DataFrame =
+    legReshape(pair, lit(sym1), lit(sym2))
+
+  /** [[legReshape]] with the leg symbols as columns (per-row symbols,
+    * e.g. from a joined pair spec). Both legs come out of ONE
+    * projection over `pair` — each row explodes into its two legs —
+    * so the plan under `pair` (join, window) runs once; a union of two
+    * leg projections would run it once per leg, since the branches
+    * keep different columns and cannot be reused for each other. */
+  def legReshape(pair: DataFrame, sym1: Column, sym2: Column): DataFrame = {
+    def leg(sym: Column, close: String, spread: Column, z: Column): Column =
+      struct(sym.as("symbol"), col("pair_name"), col("bar_ts"), col("window_size"),
+        col(close).as("close"), spread.as("spread"), z.as("z_score"))
+    pair.select(explode(array(
+        leg(sym1, "close1", col("spread"), col("z_score")),
+        leg(sym2, "close2", -col("spread"), -col("z_score")))).as("leg"))
+      .select("leg.*")
   }
 
   /** Trailing-frame rolling Pearson correlation between the two legs

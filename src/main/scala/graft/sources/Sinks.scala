@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.storage.StorageLevel
 
 /** Output sinks with the reference's safety rule: never overwrite the
   * serving table with an empty frame
@@ -17,15 +18,12 @@ object Sinks {
 
   class EmptyResultException(msg: String) extends RuntimeException(msg)
 
-  /** Overwrite `path`, aborting on an empty frame. The emptiness probe
-    * is `isEmpty` (limit-1 scan), not a full count. */
-  def overwriteParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    if (df.isEmpty)
-      throw new EmptyResultException(
-        s"refusing to overwrite $path with an empty result (transform_data.py:196-197 rule)")
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
+  /** Overwrite `path`, aborting on an empty frame (see [[guarded]]). */
+  def overwriteParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit =
+    guarded(df, emptyRefusal(path)) { cached =>
+      val w = cached.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+    }
 
   /** Row-oriented JSON sink (S7 — the reference writes one raw JSON
     * payload per symbol, `project/ingest_data.py:104-106`; the
@@ -72,16 +70,19 @@ object Sinks {
     * contract in one sink — the product pipeline's serving write
     * (`Pipeline.run`) routes here so the refresh output lands as
     * ~`targetBytes` files regardless of upstream parallelism, instead
-    * of one file per task. */
+    * of one file per task.
+    *
+    * Evaluates `df` once (see [[guarded]]) and returns the number of
+    * rows written. The file count is decided on a new plan over the
+    * cache, whose size estimate is the measured in-memory size of the
+    * counted rows: a join-derived `df` estimates at its children's
+    * product, past the stat-less sentinel, and would otherwise fall
+    * back to the cached plan's task count. */
   def overwriteSized(
       df: DataFrame,
       path: String,
-      targetBytes: Long = 128L << 20): Unit = {
-    if (df.isEmpty)
-      throw new EmptyResultException(
-        s"refusing to overwrite $path with an empty result (transform_data.py:196-197 rule)")
-    writeSized(df, path, targetBytes)
-  }
+      targetBytes: Long = 128L << 20): Long =
+    guarded(df, emptyRefusal(path))(cached => writeSized(cached.select("*"), path, targetBytes))
 
   /** JDBC full-refresh sink with the same empty-guard rule (S3 —
     * `transform_data.py:200-209`; overwrite drops and recreates the
@@ -89,11 +90,29 @@ object Sinks {
     * refresh, and guard semantics are covered by JdbcSpec against
     * embedded Derby. */
   def overwriteJdbc(df: DataFrame, url: String, table: String,
-      props: java.util.Properties = new java.util.Properties): Unit = {
-    if (df.isEmpty)
-      throw new EmptyResultException(
-        s"refusing to overwrite $table with an empty result")
-    df.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
+      props: java.util.Properties = new java.util.Properties): Unit =
+    guarded(df, s"refusing to overwrite $table with an empty result") {
+      _.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
+    }
+
+  private def emptyRefusal(path: String): String =
+    s"refusing to overwrite $path with an empty result (transform_data.py:196-197 rule)"
+
+  /** The destructive sinks' empty guard with ONE evaluation of `df`:
+    * persist it, count it, refuse an empty frame (the target is left
+    * untouched), else hand the persisted frame to `write`, so the
+    * write reads the cache instead of recomputing the plan the guard
+    * already ran. Returns the row count. A frame the caller already
+    * cached is used as is and left cached. */
+  private def guarded(df: DataFrame, refusal: String)(write: DataFrame => Unit): Long = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    val cached = if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    try {
+      val n = cached.count()
+      if (n == 0) throw new EmptyResultException(refusal)
+      write(cached)
+      n
+    } finally if (owned) cached.unpersist()
   }
 
   /** Z-order-clustered parquet write: compute the Morton key over two

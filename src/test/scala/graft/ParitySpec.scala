@@ -180,6 +180,47 @@ class ParitySpec extends AnyFunSuite {
     assert(all.select("run_id").distinct().count() === 2)
   }
 
+  test("one run timestamp per run: DQ detail, persisted and returned summary agree") {
+    val out = Files.createTempDirectory("pipeline_ts").toString + "/result"
+    val runId = "test-run-ts"
+    val (_, summary) = Pipeline.run(spark, fixtureDir, out, Seq(("MSFT", "AAPL")),
+      strict = false, runId = runId)
+    def stamps(table: String) = spark.read.parquet(s"${out}_dq/$table")
+      .filter(col("run_id") === runId).select("run_ts_utc").distinct()
+      .collect().map(_.getTimestamp(0)).toSet
+    val detail = stamps("intraday_quality_report")
+    assert(detail.size === 1)
+    assert(stamps("intraday_quality_run_summary") === detail)
+    // the returned frame is lazy: every read must show the same stamp
+    val reads = Seq.fill(2)(summary.head().getAs[java.sql.Timestamp]("run_ts_utc"))
+    assert(reads.toSet === detail)
+  }
+
+  test("overwriteSized: input evaluated once, row count returned, empty input refused") {
+    val calls = spark.sparkContext.longAccumulator("overwriteSized_udf_calls")
+    val keep = udf { (_: Long) => calls.add(1); true }
+    val df = spark.range(0, 1000, 1, 4).filter(keep(col("id"))).toDF().repartition(3)
+    val out = Files.createTempDirectory("sized_once").toString + "/t"
+    val written = Sinks.overwriteSized(df, out)
+    assert(calls.value === 1000L, "the guard and the write must share one evaluation")
+    assert(written === 1000L)
+    assert(spark.read.parquet(out).count() === 1000L)
+    // an empty frame is refused and the written target stays byte-identical
+    val root = java.nio.file.Paths.get(out)
+    def snapshot(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val files = Files.walk(root)
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally files.close()
+    }
+    val before = snapshot()
+    intercept[Sinks.EmptyResultException] {
+      Sinks.overwriteSized(spark.range(0, 10).toDF().filter(lit(false)), out)
+    }
+    assert(snapshot() === before)
+  }
+
   test("pipeline end-to-end: one unioned plan, sign-flip invariant, guarded sink") {
     val out = Files.createTempDirectory("pipeline_out").toString + "/result"
     // non-strict: the fixture plants FAIL-grade gaps on purpose

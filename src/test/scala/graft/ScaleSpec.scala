@@ -284,6 +284,34 @@ class ScaleSpec extends AnyFunSuite {
       s"day-scoped window expected in plan:\n${plan.take(3000)}")
   }
 
+  test("flagship z-score runs its window once: one WindowExec on both routes") {
+    // both symbol legs come out of one projection over the z-scores, so
+    // the executed (post-AQE) plan holds exactly one window operator,
+    // on the small-input route and on the always-scoped route
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    import graft.ops.ScalableWindow.{LocalBytesDefault, LocalBytesKey}
+    val bars = (for {
+      day <- Seq("2024-01-02", "2024-01-03")
+      m <- 0 until 12
+      (sym, base) <- Seq(("MSFT", 10.0), ("AAPL", 20.0))
+    } yield (sym, java.sql.Timestamp.valueOf(f"$day 14:${30 + m}%02d:00"), base + m % 5))
+      .toDF("symbol", "timestamp", "close")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val prev = spark.conf.getOption(LocalBytesKey)
+    try {
+      for (bytes <- Seq(LocalBytesDefault, 0L)) {
+        spark.conf.set(LocalBytesKey, bytes.toString)
+        val z = Pipeline.pairZScores(bars, Seq(("MSFT", "AAPL")), windowRows = 6, minWindow = 3)
+        assert(z.collect().length === 2 * 24)
+        val windows = helper.collect(z.queryExecution.executedPlan) { case w: WindowExec => w }
+        assert(windows.size === 1,
+          s"$LocalBytesKey=$bytes: ${windows.size} windows\n${z.queryExecution.executedPlan}")
+      }
+    } finally prev.fold(spark.conf.unset(LocalBytesKey))(spark.conf.set(LocalBytesKey, _))
+  }
+
   test("q158 tick-bars plan: per-series row index, never a global sort") {
     // information bars need one sequential step (the per-series row
     // index); it must stay a partition-local window sort — a global
