@@ -66,11 +66,9 @@ object Pipeline {
       .select(col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
         (log(col("close1")) - log(col("close2"))).as("spread"))
 
-    // (pair, day)+carry-in window (ScalableWindow) — bit-identical to
-    // the reference's per-pair global window (PropertySpec) without its
-    // one-task-per-pair skew hazard (SURVEY §7.4(a)): task granularity
-    // is (pair, day), so one pair's full history never serializes on a
-    // single core at 100 TB
+    // the reference's per-pair trailing window (ScalableWindow's plain
+    // per-key window behind its helper-column contract; equal to
+    // PairAnalytics.rollingZScore, PropertySpec)
     val z = graft.ops.ScalableWindow.rollingZScoreByDay(paired, windowRows, minWindow)
     // leg reshape with the sign flip (transform_data.py:156-180), for
     // every pair at once

@@ -107,21 +107,14 @@ object DedupOps {
           concat_ws("_",
             (1 to RowsPerBand).map(r => element_at(sig, j * RowsPerBand + r)): _*).as("bsig"))))
 
-  /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard on
-    * the distinct shingle-hash sets. Output: (id_a, id_b, jaccard)
-    * with id_a < id_b and jaccard >= threshold.
-    *
-    * Signature derivation is the FUSED [[graft.functions.MinHashDoc]]
-    * kernel (text → struct(sig, sset) in one codegen'd pass), so the
-    * plan needs NO materialization barriers: the staged form's
-    * intermediate array columns — which CollapseProject re-inlined
-    * into every consumer unless pinned behind two full-corpus
-    * Exchanges — never exist. The LSH band self-join and the two
-    * candidate set-lookups are the only shuffles; per-doc kernel work
-    * re-runs map-side in each branch, which at 100 TB is far cheaper
-    * than shuffling the tokenized corpus twice. */
   /** The fused-kernel doc relation (doc, sig, sset) shared by the
-    * minhash family. */
+    * minhash family (the MinHash-LSH near-duplicate pairs and their
+    * recall audit). Signature derivation is the FUSED
+    * [[graft.functions.MinHashDoc]] kernel (text → struct(sig, sset)
+    * in one codegen'd pass), so the plan needs no round-robin
+    * Exchange: the staged form's intermediate array columns — which
+    * CollapseProject re-inlined into every consumer unless pinned
+    * behind two full-corpus Exchanges — never exist. */
   private def minhashDocs(
       df: DataFrame, textCol: String, idCol: String): DataFrame = {
     graft.functions.MinHashDoc.register(df.sparkSession, A, B, CrossHash.P)
@@ -131,13 +124,11 @@ object DedupOps {
       .select(col(idCol).as("doc"),
         graft.functions.MinHashDoc.doc(col(textCol)).as("d"))
       .select(col("doc"), col("d.sig").as("sig"), col("d.sset").as("sset"))
-    // The consumers (band build + both verify join sides) deliberately
-    // re-run the kernel map-side per branch — at scale that is far
-    // cheaper than shuffling the tokenized corpus twice. On a small
-    // input (same knob as the scoped-window route) materialize once
-    // instead: three kernel passes become one, results unchanged.
-    if (ScalableWindow.localRoute(df)) out.localCheckpoint(eager = false)
-    else out
+    // Three consumers read this relation (the band build and both
+    // verify join sides); without a barrier each re-runs the kernel
+    // map-side. Materializing it once turns three kernel passes into
+    // one, with results unchanged.
+    out.localCheckpoint(eager = false)
   }
 
   /** The LSH band-join candidate pair set (id_a < id_b, distinct) —
@@ -258,6 +249,10 @@ object DedupOps {
       df: DataFrame, textCol: String, idCol: String): DataFrame =
     bandCandidates(minhashDocs(df, textCol, idCol))
 
+  /** MinHash-LSH near-duplicate pairs, verified with exact Jaccard on
+    * the distinct shingle-hash sets. Output: (id_a, id_b, jaccard)
+    * with id_a < id_b and jaccard >= threshold. The LSH band self-join
+    * and the two candidate set-lookups are the only shuffles. */
   def minhashNearDups(
       df: DataFrame,
       textCol: String,

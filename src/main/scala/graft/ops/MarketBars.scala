@@ -66,8 +66,7 @@ object MarketBars {
     * ([[theilSen]], [[mannKendall]], [[sampleEntropy]]): 8000 days
     * (a ~30-year daily calendar) plans ≤ 3.2e7 pairs per series.
     * Beyond it the guard REFUSES rather than planning a 10⁸⁺-row
-    * self-join one series at a time — the [[ScalableRank
-    * .MaxDriverGroups]] pattern. The escapes are the literature's
+    * self-join one series at a time. The escapes are the literature's
     * own: sample the pair set (Theil–Sen on a random pair subsample
     * is the standard large-n variant), bucket the value spectrum
     * (Mann–Kendall S from the rank histogram), or window SampEn. */

@@ -1,218 +1,68 @@
 package graft.ops
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Exact global rank / ntile / running-sum WITHOUT a single-partition
-  * window — the "q158 two-pass escape" as a reusable op, the rank
-  * sibling of [[ScalableWindow]].
+/** Per-key rank / ntile / percent_rank / running sum as plain
+  * `Window.partitionBy(keys)` windows behind one output contract: the
+  * row index and group total are LONG, a running sum is
+  * DECIMAL(38, s) with null values counting as 0. Empty `keyCols`
+  * means one global window (a single task sorts the whole input).
   *
-  * Why: `Window.orderBy(...)` with no partition key (or a handful of
-  * hot keys) plans a SINGLE-task sort over the whole relation — fine
-  * for a |series|-sized aggregate, a one-core serialization point
-  * when the key set grows with the data (users, customers, parts,
-  * docs). The escape is the `RDD.zipWithIndex` two-pass, generalized
-  * per key:
-  *
-  *   1. range-repartition on (keys ++ order) and sort within
-  *      partitions — each task holds a contiguous, disjoint slice of
-  *      the global order (the corpus moves ONCE and sorts ONCE);
-  *   2. collect per-(slice, key) row counts — driver state bounded by
-  *      slices × |keys| (guarded by [[MaxDriverGroups]]; a key set
-  *      large enough to trip it belongs in a plain partitioned
-  *      window, not this escape);
-  *   3. a narrow per-partition pass emits within-slice position +
-  *      exclusive slice offset = the exact global index (this is
-  *      genuine per-partition imperative logic — the sanctioned
-  *      `mapPartitions` case, exactly how Spark's own `zipWithIndex`
-  *      works).
-  *
-  * Exactness: the range partitioner is a pure function of the sort
-  * key, so the slices partition the global order; within-slice
-  * positions compose with the exclusive offsets into the global
-  * `row_number` bit-for-bit, for any partition count (property-tested
-  * at 1/3/7/32 partitions, with hot keys and dense ties).
-  *
-  * Scale posture: one balanced corpus shuffle + one in-partition
-  * sort; no single-partition exchange of a growing relation anywhere
-  * (ScaleSpec-locked for the routed queries); driver state is slice
-  * metadata, never rows.
-  *
-  * Derived ranks ride the same index: `ntile` is a closed-form bucket
-  * formula over (rn, n); `percent_rank` is (rank−1)/(n−1) with
-  * rank = min rn over the tie group (a per-tie-group window — tie
-  * groups of a continuous value are small; the hot key was the
-  * PARTITION, not the value). Running sums accumulate the same way
-  * with per-slice DECIMAL sums as the offsets.
+  * `ntile` is a closed-form bucket formula over (rn, n);
+  * `percent_rank` is (rank−1)/(n−1) with rank = min rn over the tie
+  * group.
   */
 object ScalableRank {
 
-  /** Hard cap on collected (slice, key) groups — the escape is for
-    * GLOBAL/hot-key ranks; hitting this means the key set is large
-    * enough that an ordinary `Window.partitionBy(keys)` already
-    * parallelizes and should be used instead. */
-  val MaxDriverGroups: Int = 100000
-
-  private def nParts(df: DataFrame, numParts: Int): Int =
-    if (numParts > 0) numParts
-    else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-  /** Core: range-sort, collect slice stats, emit global row number
-    * (plus group total and, when `sumCol` is set, the exact DECIMAL
-    * running sum). */
-  private def twoPass(
+  /** Core: per-key row number `rnCol`, group total `nCol` and, when
+    * `sumCol` is set, the DECIMAL running sum. */
+  private def indexed(
       df0: DataFrame,
       keyCols: Seq[String],
       orderCols: Seq[Column],
       rnCol: String,
       nCol: String,
-      sumCol: Option[(String, Column)],
-      numParts: Int): DataFrame = {
-    val spark = df0.sparkSession
+      sumCol: Option[(String, Column)]): DataFrame = {
     val keys = keyCols.map(col)
     val withVal = sumCol match {
       case Some((_, c)) => df0.withColumn("__sv", c)
       case None         => df0
     }
-    // small-input route (same knob as ScalableWindow): the escape
-    // exists to avoid a single-partition sort of a GROWING relation;
-    // at or under the configured size a plain per-key window IS that
-    // sort, minus the range-sampling job, the two RDD passes, the
-    // driver slice map, and the SQL→RDD row-conversion boundary.
-    // Identical output: same total order, exact decimal running sum
-    // (nulls contribute 0 via coalesce, matching the pass-2 fold).
-    if (ScalableWindow.localRoute(df0)) {
-      val keys = keyCols.map(col)
-      val w = Window.partitionBy(keys: _*).orderBy(orderCols: _*)
-      // (rn/n come out non-nullable here vs the escape's nullable
-      // schema — invisible to the oracle gate, which compares names,
-      // types and values; both are in fact never null)
-      val base = withVal
-        .withColumn(rnCol, row_number().over(w).cast("long"))
-        .withColumn(nCol, count(lit(1)).over(Window.partitionBy(keys: _*)))
-      return sumCol match {
-        case Some((out, _)) =>
-          val dt = withVal.schema("__sv").dataType match {
-            case d: DecimalType => d
-            case t => throw new IllegalArgumentException(
-              s"ScalableRank.cumSum needs a DECIMAL value column (got $t)")
-          }
-          val zero = lit(java.math.BigDecimal.ZERO).cast(dt)
-          base.withColumn(out,
-            sum(coalesce(col("__sv"), zero))
-              .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-              .cast(DecimalType(38, dt.scale)))
-            .drop("__sv")
-        case None => base
-      }
-    }
-    // checkpoint the INPUT, not the sorted result: the range exchange
-    // SAMPLES its child by executing it, so an un-checkpointed
-    // upstream (an aggregate, a scan) would run twice; the sorted
-    // RDD itself is shared by both passes below, and Spark's stage
-    // skipping reuses its shuffle files across the two jobs
-    val inputCk = withVal.localCheckpoint(eager = false)
-    val sorted = inputCk
-      .repartitionByRange(nParts(df0, numParts), (keys ++ orderCols): _*)
-      .sortWithinPartitions((keys ++ orderCols): _*)
-    val schema = sorted.schema
-    val kIdx = keyCols.map(schema.fieldIndex).toArray
-    val svIdx = sumCol.map(_ => schema.fieldIndex("__sv")).getOrElse(-1)
-    val sortedRdd = sorted.rdd
-    // pass 1: per-(slice, key) counts (+ DECIMAL sums) — rows stay
-    // where they are; only slice metadata reaches the driver
-    val sliceStats: Array[(Int, Array[(Seq[Any], Long, java.math.BigDecimal)])] =
-      sortedRdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          val acc = mutable.LinkedHashMap.empty[Seq[Any], (Long, java.math.BigDecimal)]
-          it.foreach { r =>
-            val k = kIdx.map(r.get).toSeq
-            val (c, s) = acc.getOrElse(k, (0L, java.math.BigDecimal.ZERO))
-            val s2 =
-              if (svIdx < 0 || r.isNullAt(svIdx)) s
-              else s.add(r.getDecimal(svIdx))
-            acc.update(k, (c + 1L, s2))
-          }
-          Iterator.single(pid -> acc.iterator.map { case (k, (c, s)) => (k, c, s) }.toArray)
+    val w = Window.partitionBy(keys: _*).orderBy(orderCols: _*)
+    val base = withVal
+      .withColumn(rnCol, row_number().over(w).cast("long"))
+      .withColumn(nCol, count(lit(1)).over(Window.partitionBy(keys: _*)))
+    sumCol match {
+      case Some((out, _)) =>
+        val dt = withVal.schema("__sv").dataType match {
+          case d: DecimalType => d
+          case t => throw new IllegalArgumentException(
+            s"ScalableRank.cumSum needs a DECIMAL value column (got $t)")
         }
-        .collect()
-    val totalGroups = sliceStats.iterator.map(_._2.length).sum
-    require(totalGroups <= MaxDriverGroups,
-      s"ScalableRank: $totalGroups (slice, key) groups exceed $MaxDriverGroups — " +
-        "the key set is large enough for a plain Window.partitionBy(keys)")
-    // exclusive prefix offsets per key across slices, + per-key totals
-    val cnt = mutable.HashMap.empty[Seq[Any], Long]
-    val sum0 = mutable.HashMap.empty[Seq[Any], java.math.BigDecimal]
-    val offByPid = sliceStats.sortBy(_._1).map { case (pid, groups) =>
-      pid -> groups.map { case (k, c, s) =>
-        val off = cnt.getOrElse(k, 0L)
-        val soff = sum0.getOrElse(k, java.math.BigDecimal.ZERO)
-        cnt.update(k, off + c)
-        sum0.update(k, soff.add(s))
-        k -> ((off, soff))
-      }.toMap
-    }.toMap
-    val totals = cnt.toMap
-    val bcOff = spark.sparkContext.broadcast(offByPid)
-    val bcTot = spark.sparkContext.broadcast(totals)
-    val sumScale = sumCol.map { _ =>
-      schema("__sv").dataType match {
-        case d: DecimalType => d.scale
-        case t => throw new IllegalArgumentException(
-          s"ScalableRank.cumSum needs a DECIMAL value column (got $t)")
-      }
+        val zero = lit(java.math.BigDecimal.ZERO).cast(dt)
+        base.withColumn(out,
+          sum(coalesce(col("__sv"), zero))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .cast(DecimalType(38, dt.scale)))
+          .drop("__sv")
+      case None => base
     }
-    val outSchema0 = schema.add(rnCol, LongType).add(nCol, LongType)
-    val outSchema = sumCol match {
-      case Some((out, _)) => outSchema0.add(out, DecimalType(38, sumScale.get))
-      case None           => outSchema0
-    }
-    // pass 2: narrow map — rows are key-contiguous after the sort, so
-    // one counter + one accumulator per key-run suffices
-    val rows = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val offs = bcOff.value.getOrElse(pid, Map.empty)
-      val tots = bcTot.value
-      var curKey: Seq[Any] = null
-      var rn = 0L
-      var acc = java.math.BigDecimal.ZERO
-      it.map { r =>
-        val k = kIdx.map(r.get).toSeq
-        if (k != curKey) {
-          curKey = k
-          val (off, soff) = offs(k)
-          rn = off
-          acc = soff
-        }
-        rn += 1L
-        val base = r.toSeq :+ rn :+ tots(k)
-        if (svIdx >= 0) {
-          if (!r.isNullAt(svIdx)) acc = acc.add(r.getDecimal(svIdx))
-          Row.fromSeq(base :+ acc)
-        } else Row.fromSeq(base)
-      }
-    }
-    val out = spark.createDataFrame(rows, StructType(outSchema))
-    if (svIdx >= 0) out.drop("__sv") else out
   }
 
-  /** Workhorse: augment `df0` with `rnCol` = exact 1-based global
-    * row_number per `keyCols` group under the `orderCols` total order
-    * and `nCol` = the group's total row count, without any
-    * single-partition exchange. `orderCols` MUST totally order rows
-    * within a key (add an id tie-break) — same contract as
-    * `row_number` itself. */
+  /** Augment `df0` with `rnCol` = 1-based row_number per `keyCols`
+    * group under the `orderCols` order and `nCol` = the group's row
+    * count. `orderCols` MUST totally order rows within a key (add an
+    * id tie-break) — same contract as `row_number` itself. */
   def withRowIndex(
       df0: DataFrame,
       keyCols: Seq[String],
       orderCols: Seq[Column],
       rnCol: String = "__grn",
-      nCol: String = "__gn",
-      numParts: Int = 0): DataFrame =
-    twoPass(df0, keyCols, orderCols, rnCol, nCol, None, numParts)
+      nCol: String = "__gn"): DataFrame =
+    indexed(df0, keyCols, orderCols, rnCol, nCol, None)
 
   /** SQL `ntile(buckets)` as a closed-form expression of the global
     * 1-based row number `rn` and group size `n`: the first n mod b
@@ -232,8 +82,8 @@ object ScalableRank {
       .cast("int")
   }
 
-  /** `ntile(buckets) OVER (PARTITION BY keys ORDER BY order)` via the
-    * two-pass index — `orderCols` must be a total order (ntile with
+  /** `ntile(buckets) OVER (PARTITION BY keys ORDER BY order)` via
+    * [[ntileExpr]] — `orderCols` must be a total order (ntile with
     * ties is nondeterministic in ANY engine; the callers all
     * tie-break on an id). */
   def ntile(
@@ -241,9 +91,8 @@ object ScalableRank {
       keyCols: Seq[String],
       orderCols: Seq[Column],
       buckets: Int,
-      out: String,
-      numParts: Int = 0): DataFrame =
-    withRowIndex(df0, keyCols, orderCols, "__grn", "__gn", numParts)
+      out: String): DataFrame =
+    withRowIndex(df0, keyCols, orderCols, "__grn", "__gn")
       .withColumn(out, ntileExpr(col("__grn"), col("__gn"), buckets))
       .drop("__grn", "__gn")
 
@@ -252,26 +101,22 @@ object ScalableRank {
       df0: DataFrame,
       keyCols: Seq[String],
       orderCols: Seq[Column],
-      out: String,
-      numParts: Int = 0): DataFrame =
-    withRowIndex(df0, keyCols, orderCols, out, "__gn", numParts).drop("__gn")
+      out: String): DataFrame =
+    withRowIndex(df0, keyCols, orderCols, out, "__gn").drop("__gn")
 
   /** `percent_rank() OVER (PARTITION BY keys ORDER BY valueCols)`
     * with SQL tie semantics (peers share the rank of their first
-    * row): global row_number under (valueCols ++ tieCols), then
+    * row): row_number under (valueCols ++ tieCols), then
     * rank = min(rn) over the (keys, valueCols) tie group and
-    * percent_rank = (rank−1)/(n−1). The tie-group window hash-
-    * partitions on (keys, value) — bounded by the largest tie group,
-    * not by a key's history. `tieCols` must break all value ties. */
+    * percent_rank = (rank−1)/(n−1). `tieCols` must break all value
+    * ties. */
   def percentRank(
       df0: DataFrame,
       keyCols: Seq[String],
       valueCols: Seq[Column],
       tieCols: Seq[Column],
-      out: String,
-      numParts: Int = 0): DataFrame = {
-    val aug = withRowIndex(df0, keyCols, valueCols ++ tieCols,
-      "__grn", "__gn", numParts)
+      out: String): DataFrame = {
+    val aug = withRowIndex(df0, keyCols, valueCols ++ tieCols, "__grn", "__gn")
     val peers = Window.partitionBy((keyCols.map(col) ++ valueCols): _*)
     aug
       .withColumn("__rk", min(col("__grn")).over(peers))
@@ -284,27 +129,21 @@ object ScalableRank {
   }
 
   /** Exact running sum `sum(val) OVER (PARTITION BY keys ORDER BY
-    * order ROWS UNBOUNDED PRECEDING..CURRENT)` via per-slice value
-    * sums as the offsets. `valCol` must be DECIMAL (exact,
-    * order-insensitive partials); null values contribute 0 rather
-    * than SQL's all-null-frame NULL. Output type DECIMAL(38, s). */
+    * order ROWS UNBOUNDED PRECEDING..CURRENT)`. `valCol` must be
+    * DECIMAL; null values contribute 0 rather than SQL's
+    * all-null-frame NULL. Output type DECIMAL(38, s). */
   def cumSum(
       df0: DataFrame,
       keyCols: Seq[String],
       orderCols: Seq[Column],
       valCol: Column,
-      out: String,
-      numParts: Int = 0): DataFrame =
-    twoPass(df0, keyCols, orderCols, "__grn", "__gn",
-      Some((out, valCol)), numParts)
+      out: String): DataFrame =
+    indexed(df0, keyCols, orderCols, "__grn", "__gn", Some((out, valCol)))
       .drop("__grn", "__gn")
 
-  /** Fused [[withRowIndex]] + [[cumSum]]: ONE two-pass escape emits
-    * the global row index (`rnCol`), the group count (`nCol`), AND
-    * the exact running DECIMAL sum (`sumOut`) — bit-identical to
-    * chaining the two (same sort, same per-slice offsets) at half
-    * the passes. The r11 fusion recipe: any op that indexes a chain
-    * and also prefix-sums it should take this, not two escapes. */
+  /** [[withRowIndex]] + [[cumSum]] on one window spec: the row index
+    * (`rnCol`), the group count (`nCol`) and the running DECIMAL sum
+    * (`sumOut`) under one sort. */
   def withIndexAndCumSum(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -312,8 +151,6 @@ object ScalableRank {
       valCol: Column,
       sumOut: String,
       rnCol: String = "__grn",
-      nCol: String = "__gn",
-      numParts: Int = 0): DataFrame =
-    twoPass(df0, keyCols, orderCols, rnCol, nCol,
-      Some((sumOut, valCol)), numParts)
+      nCol: String = "__gn"): DataFrame =
+    indexed(df0, keyCols, orderCols, rnCol, nCol, Some((sumOut, valCol)))
 }

@@ -4,105 +4,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Skew-safe trailing ROWS windows: partition by (key, day) instead of
-  * key alone, with a multi-day carry-in so results are IDENTICAL to
-  * the global per-key window — unconditionally, for any data density.
+/** Per-key trailing/leading window helpers behind a stable
+  * helper-column contract. Every op here is a plain
+  * `Window.partitionBy(keys)` window, so a key's whole history sorts
+  * in one window task.
   *
-  * Why: `Window.partitionBy(key)` puts a key's ENTIRE history in one
-  * task — the skew hazard SURVEY §7.4 flags for the reference's
-  * pair-window (`transform_data.py:145-154`) and for q49-class event
-  * windows. At 100 TB a hot key serializes on one core and can exceed
-  * task memory. Scoping the partition to (key, day) restores
-  * parallelism ∝ days; the frame still sees the true trailing history
-  * because each day's partition is prepended with copies of the rows
-  * within trailing reach of the day's start (flagged non-emitting).
-  *
-  * Exactness: a row needed by day d from an earlier day d' has fewer
-  * than `carryRows` rows between itself and day d's first row, so (a)
-  * it is among the last `carryRows` rows of its OWN day — the per-day
-  * tail candidates — and (b) whether it reaches day d is decided by
-  * the per-day cumulative counts alone. Attaching each tail candidate
-  * to exactly the later days it reaches reconstructs every emitted
-  * row's frame contents and order bit-for-bit (same fold over the
-  * same buffer), with at most `carryRows` carried rows per (key, day)
-  * — the minimal exact tail. Property-tested in PropertySpec on dense
-  * AND sparse (rows/day ≪ frame) data.
-  *
-  * Scale posture: the day map is a per-(key, day) count frame
-  * (keys × days rows — broadcast twice: index attach + destination
-  * fan-out); tail selection is one row_number window over the SAME
-  * (key, day) partitioning the stats use; no per-key global sort ever
-  * happens.
+  * Scope contract ([[dayScoped]], [[rangeScoped]], [[dayScopedLead]],
+  * [[dayScopedAround]]): the result holds the key columns first, then
+  * `__day` (the date of `tsCol`), the remaining input columns, a
+  * constant `__day_idx` and `__emit = true`. A caller windows by
+  * `partitionBy(keyCols :+ "__day_idx")` — the per-key window — then
+  * runs `filter(col("__emit"))` and drops the helpers. The reach
+  * arguments (`carryRows`, `reachMicros`, `backRows`, `fwdRows`) state
+  * how far the caller's frame looks; they are validated and otherwise
+  * unused.
   */
 object ScalableWindow {
 
-  /** Conf key for the small-input route: when the input's
-    * optimized-plan size estimate is at or below this many bytes, the
-    * scoped forms take their plain global-per-key-window DEFINITION —
-    * the exact relation every scoped rewrite is proven equal to
-    * (PropertySpec) — instead of building the day map / carry-union
-    * machinery. Same results either way; only the physical plan
-    * changes, exactly like [[GraphOps.pageRank]]'s node-count
-    * broadcast auto-mode and AQE's size-based join selection.
-    *
-    * Default 128 MB: a whole input that small fits ONE window task
-    * comfortably, so per-key global partitions cannot be a skew or
-    * memory hazard — the two problems the day scope exists to solve.
-    * At production scale the estimate exceeds any sane setting and
-    * the day-scoped machinery engages unchanged (the plan locks pin
-    * that shape with this key set to 0 = always-scoped). */
-  val LocalBytesKey = "spark.graft.scopedWindow.localBytes"
-  val LocalBytesDefault: Long = 128L * 1024 * 1024
-
-  /** True when `df`'s optimized-plan size estimate is known and at or
-    * below the configured bound (0 disables the route). Reads plan
-    * statistics only — no job runs. Shared with [[ScalableRank]] —
-    * one knob governs every scoped-escape small-input route.
-    *
-    * Join-derived inputs: Spark's non-CBO size estimate for a join is
-    * the PRODUCT of the child estimates (~10¹² bytes on MBs of input —
-    * measured 565 GB on a 2 MB pair relation), which blocked the route
-    * for every op whose input passes through a join. When the plain
-    * estimate exceeds the bound, a join-additive re-walk of the same
-    * statistics decides instead: a join's contribution is the SUM of
-    * its children (an inner equi-join on MB-sized inputs cannot
-    * materially exceed it, and at production scale the children alone
-    * blow the bound, so the scaled machinery still engages); explosive
-    * operators (Generate, Expand) and aggregates keep their own
-    * propagated estimate so a genuine fan-out is never hidden. */
-  private[ops] def localRoute(df: DataFrame): Boolean = {
-    val max = df.sparkSession.conf
-      .get(LocalBytesKey, LocalBytesDefault.toString).toLong
-    if (max <= 0) return false
-    val bound = BigInt(max)
-    val plan = df.queryExecution.optimizedPlan
-    plan.stats.sizeInBytes <= bound || joinAdditiveSize(plan) <= bound
-  }
-
-  /** The join-additive size walk behind [[localRoute]]: join nodes sum
-    * their children; leaves report their own statistics; every other
-    * node takes the SMALLER of its propagated estimate and its
-    * children's walked sum — the propagated number is Catalyst's best
-    * row-width/selectivity-aware figure when no join inflated it, and
-    * the children's sum strips exactly that inflation when one did.
-    * Both components are anchored on the same leaf statistics, so at
-    * production scale either one blows the bound and the scaled
-    * machinery engages unchanged. */
-  private def joinAdditiveSize(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): BigInt = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case j: Join => joinAdditiveSize(j.left) + joinAdditiveSize(j.right)
-      case l if l.children.isEmpty => l.stats.sizeInBytes
-      case u => u.children.map(joinAdditiveSize).sum.min(u.stats.sizeInBytes)
-    }
-  }
-
-  /** The global-window face of the day-scope contract: same output
-    * columns (keys first — the using-join order the scoped path
-    * emits), `__day_idx` constant so a caller's
-    * `partitionBy(keys :+ "__day_idx")` IS the per-key global window,
-    * every row emitting. */
+  /** The scope contract's columns over the plain per-key window. */
   private def globalAugment(
       df0: DataFrame, keyCols: Seq[String], tsCol: String): DataFrame = {
     val rest = df0.columns.filterNot(keyCols.contains)
@@ -112,23 +31,8 @@ object ScalableWindow {
       .withColumn("__emit", lit(true))
   }
 
-  /** Augment `df` with `__day_idx` (dense per-key day rank) and
-    * `__emit`, unioning in non-emitting copies of each (key, day)'s
-    * trailing tail attached to every later day within frame reach.
-    * Build the stats window as `partitionBy(keyCols :+ "__day_idx")`
-    * ordered by `orderCols`, then `filter(col("__emit"))` and drop the
-    * helpers.
-    *
-    * `orderCols` must totally order rows within a key (add a
-    * tie-breaker id when the timestamp can repeat) — the carried tail
-    * is selected by the same order reversed.
-    *
-    * Reach rule: a tail row with reverse rank rn (1 = day's last row)
-    * in day d' reaches day d iff
-    * `cum[d−1] − cum[d'] + rn <= carryRows` — i.e. fewer than
-    * `carryRows` rows separate it from day d's first row. With dense
-    * days only d = d'+1 qualifies (the single-day carry); with sparse
-    * days the tail spans as many days as the frame actually needs. */
+  /** Scope for a trailing ROWS frame reaching `carryRows` rows back.
+    * `orderCols` must totally order rows within a key. */
   def dayScoped(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -136,74 +40,11 @@ object ScalableWindow {
       tsCol: String,
       carryRows: Int): DataFrame = {
     require(carryRows >= 1, s"carryRows must be >= 1 (got $carryRows)")
-    if (localRoute(df0)) return globalAugment(df0, keyCols, tsCol)
-    // The day ITSELF is the scope key (`__day_idx` carries the date —
-    // the dense per-key day rank is order-isomorphic to it and bought
-    // nothing but a corpus-wide broadcast join to attach): the
-    // emitting leg flows from the checkpoint straight into the
-    // consumer's window with NO join at all, and the single remaining
-    // broadcast join touches only the ≤ carryRows-per-(key, day) tail
-    // candidates. ONE checkpoint feeds all three readers (emit leg,
-    // tail leg, day map); the reverse rank rides it so the tail
-    // selection costs no extra pass.
-    val keys = keyCols.map(col)
-    val rest = df0.columns.filterNot(keyCols.contains)
-    val revW = Window
-      .partitionBy((keys :+ col("__day")): _*)
-      .orderBy(orderCols.map(col(_).desc): _*)
-    val ranked = df0.withColumn("__day", to_date(col(tsCol)))
-      .select((keyCols :+ "__day") ++ rest map col: _*)
-      .withColumn("__rn", row_number().over(revW))
-      .localCheckpoint(eager = false)
-    // per-(key, day) map: row count + per-key cumulative count; the
-    // REACH PAIRS (src day → every later day within carryRows rows,
-    // with the row slack between them) compute inside the map via a
-    // keys-equi self-join — strictly cheaper than the old corpus-side
-    // tails × all-days fan-out, and it turns the carry join into a
-    // tight (keys, day) equi-join
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    val dayIdx = ranked
-      .groupBy((keys :+ col("__day")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__cum", sum(col("__n")).over(idxW))
-      .localCheckpoint(eager = false)
-    // reach rule: tail row with reverse rank rn in src day reaches dst
-    // iff cum[dst−1] − cum[src] + rn <= carryRows; slack = cum[dst−1] −
-    // cum[src] >= 0, so qualifying pairs need slack < carryRows
-    val pairs = dayIdx
-      .select((keys :+ col("__day") :+ col("__cum")): _*)
-      .join(dayIdx.select((keys :+ col("__day").as("__dst_day") :+
-        (col("__cum") - col("__n")).as("__cum_prev")): _*), keyCols)
-      .where(col("__dst_day") > col("__day") &&
-        col("__cum_prev") - col("__cum") < carryRows)
-      .select((keys :+ col("__day") :+ col("__dst_day") :+
-        (col("__cum_prev") - col("__cum")).as("__slack")): _*)
-    val carried = ranked
-      .filter(col("__rn") <= carryRows)
-      .join(broadcast(pairs), keyCols :+ "__day")
-      .where(col("__rn") + col("__slack") <= carryRows)
-      .withColumn("__day_idx", col("__dst_day"))
-      .drop("__rn", "__dst_day", "__slack")
-      .withColumn("__emit", lit(false))
-    ranked.drop("__rn").withColumn("__day_idx", col("__day"))
-      .withColumn("__emit", lit(true))
-      .unionByName(carried)
+    globalAugment(df0, keyCols, tsCol)
   }
 
-  /** RANGE-frame sibling of [[dayScoped]]: augment `df` for a trailing
-    * `rangeBetween(-reach, 0)` frame over the epoch-micros `usCol` —
-    * window by (key, `__day_idx`) and union in non-emitting copies of
-    * every row lying within `reachMicros` of a LATER day's first row.
-    *
-    * Exactness: a row r is in target t's frame iff
-    * us_t − reach <= us_r <= us_t. When r sits in an earlier day than
-    * t, us_r >= us_t − reach >= min_us(t's day) − reach, so r is
-    * carried into t's day; rows carried beyond a particular target's
-    * reach are trimmed by the frame's own value predicate. Results
-    * therefore match the global per-key window bit-for-bit for any
-    * order-insensitive frame reduction (counts, DECIMAL sums,
-    * min/max) — the carry needs no row counting at all because the
-    * reach is a VALUE distance, not a row distance. */
+  /** Scope for a trailing `rangeBetween(-reachMicros, 0)` frame over
+    * the epoch-micros `usCol`. */
   def rangeScoped(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -211,69 +52,22 @@ object ScalableWindow {
       usCol: String,
       reachMicros: Long): DataFrame = {
     require(reachMicros >= 0, s"reachMicros must be >= 0 (got $reachMicros)")
-    if (localRoute(df0)) return globalAugment(df0, keyCols, tsCol)
-    // Day-as-scope-key (see dayScoped): the emitting leg takes no join
-    // at all; the carry leg equi-joins on (keys, day) against the
-    // reach PAIRS computed inside the tiny map — each src day pairs
-    // only with the later days its own max epoch can reach, so the
-    // per-row value test `us >= dst_min − reach` probes pair rows
-    // instead of every day of the key.
-    val keys = keyCols.map(col)
-    val rest = df0.columns.filterNot(keyCols.contains)
-    val base = df0.withColumn("__day", to_date(col(tsCol)))
-      .select((keyCols :+ "__day") ++ rest map col: _*)
-      .localCheckpoint(eager = false)
-    val dayIdx = base
-      .groupBy((keys :+ col("__day")): _*)
-      .agg(min(col(usCol)).as("__min_us"), max(col(usCol)).as("__max_us"))
-      .localCheckpoint(eager = false)
-    val pairs = dayIdx
-      .select((keys :+ col("__day") :+ col("__max_us")): _*)
-      .join(dayIdx.select((keys :+ col("__day").as("__dst_day") :+
-        col("__min_us").as("__dst_min")): _*), keyCols)
-      .where(col("__dst_day") > col("__day") &&
-        col("__max_us") >= col("__dst_min") - lit(reachMicros))
-      .select((keys :+ col("__day") :+ col("__dst_day") :+
-        col("__dst_min")): _*)
-    val carried = base
-      .join(broadcast(pairs), keyCols :+ "__day")
-      .where(col(usCol) >= col("__dst_min") - lit(reachMicros))
-      .withColumn("__day_idx", col("__dst_day"))
-      .drop("__dst_day", "__dst_min")
-      .withColumn("__emit", lit(false))
-    base.withColumn("__day_idx", col("__day"))
-      .withColumn("__emit", lit(true))
-      .unionByName(carried)
+    globalAugment(df0, keyCols, tsCol)
   }
 
-  /** Fused two-layer day scope for FILTERED return chains (the
-    * q139/q241/q250 class): a lag-1 of `valCol`, a validity filter
-    * that DROPS rows, then a trailing ROWS frame whose positions
-    * count FILTERED rows. Two stacked [[dayScoped]] calls are exact
-    * but pay two checkpoints and four corpus sorts; this fuses them:
+  /** Lag-1 of `valCol` into `prevCol`, then a validity filter that
+    * DROPS rows, for a trailing ROWS frame whose positions count the
+    * surviving rows (the q139/q241/q250 return chains).
     *
-    *   - layer 1 needs no carry union at all — a lag of 1 across a
-    *     day boundary is exactly the PREVIOUS day's last value, which
-    *     the day map already knows (max-by-struct): one broadcast
-    *     join attaches it, `coalesce(lag, prev_day_last)` is the
-    *     global lag bit-for-bit;
-    *   - the layer-2 tail rank rides the SAME window pass as the lag
-    *     (a current-row..day-end count of valid rows — no desc
-    *     re-sort): for a surviving row it equals its reverse rank in
-    *     the filtered day, which is all the carry fan-out needs.
-    *
-    * Net: one corpus sort + one filtered-relation checkpoint replace
-    * two checkpoints + two tail sorts; the emitted rows, frames, and
-    * values are IDENTICAL to the two-layer form (PropertySpec locks
-    * bit-equality vs the plain global-window formulation).
-    *
-    * `valid` may reference `prevCol` and any input column; `slim`
-    * runs right after the validity filter (compute the return there
-    * and drop wide columns before the layer-2 checkpoint) and MUST
-    * retain `keyCols`, `orderCols`, `__day_idx` and `__rev`. The
-    * result carries `__emit` exactly like [[dayScoped]]: window by
-    * (keyCols :+ __day_idx) with frames reaching ≤ `carryRows`, then
-    * `filter(col("__emit"))` and drop the helpers. */
+    * The result holds `keyCols`, `__day_idx` (constant), the remaining
+    * input columns, `prevCol`, whatever `slim` adds, and
+    * `__emit = true`. `valid` may reference `prevCol` and any input
+    * column; `slim` runs right after the filter (compute the return
+    * there and drop wide columns) and sees `__rev`, the count of valid
+    * rows from the current row to the key's end, which it must keep;
+    * `__rev` is dropped from the result. Window by
+    * (keyCols :+ __day_idx), then `filter(col("__emit"))` and drop the
+    * helpers. */
   def laggedScope(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -285,112 +79,24 @@ object ScalableWindow {
       valid: Column,
       slim: DataFrame => DataFrame = identity): DataFrame = {
     require(carryRows >= 1, s"carryRows must be >= 1 (got $carryRows)")
-    if (localRoute(df0)) {
-      // definition form: global lag + filter, every row emitting.
-      // __rev (an internal tail-selection rank, pass-through for
-      // `slim`) counts valid rows to the END OF KEY here rather than
-      // end of day — it is dropped before the result either way.
-      val rest = df0.columns.filterNot(keyCols.contains)
-      val keys = keyCols.map(col)
-      val w = Window.partitionBy(keys: _*).orderBy(orderCols.map(col): _*)
-      val revFrame = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val flagged = df0.withColumn("__day_idx", lit(1))
-        .select((keyCols :+ "__day_idx") ++ rest map col: _*)
-        .withColumn(prevCol, lag(col(valCol), 1).over(w))
-        .withColumn("__valid", valid)
-        .withColumn("__rev", sum(when(col("__valid"), 1L)).over(revFrame))
-        .filter(col("__valid"))
-        .drop("__valid")
-      return slim(flagged).drop("__rev").withColumn("__emit", lit(true))
-    }
-    // Day-as-scope-key (see dayScoped): `__day_idx` carries the DATE.
-    // Layer 1 attaches the cross-day lag seam with ONE broadcast join
-    // — the previous existing day's last value rides the day map
-    // itself (one lag over the tiny keys×days window), so the old
-    // dense-index attach + (idx+1)-seam join pair collapse into a
-    // single (keys, day) equi-join. Layer 2's carry fan-out rides the
-    // precomputed reach pairs, touching only the ≤ carryRows tail
-    // candidates per (key, day).
-    val df = df0.localCheckpoint(eager = false) // feeds day map + join
+    val rest = df0.columns.filterNot(keyCols.contains)
     val keys = keyCols.map(col)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    // layer-1 day map: each day's LAST value under the within-day
-    // order, lagged one EXISTING day — the lag-1 source for the next
-    // day's first row (the only row whose within-day lag is null);
-    // consumed once, so it needs no checkpoint of its own
-    val dayMap = df
-      .groupBy(keys :+ to_date(col(tsCol)).as("__day"): _*)
-      .agg(max(struct(orderCols.map(col) :+ col(valCol).as("__v"): _*))
-        .getField("__v").as("__last_v"))
-      .withColumn("__pdl", lag(col("__last_v"), 1).over(idxW))
-    val withIdx = df.withColumn("__day", to_date(col(tsCol)))
-      .join(broadcast(dayMap.select(
-        (keys :+ col("__day") :+ col("__pdl")): _*)),
-        keyCols :+ "__day")
-      .withColumn("__day_idx", col("__day"))
-    val w = Window.partitionBy((keys :+ col("__day_idx")): _*)
-      .orderBy(orderCols.map(col): _*)
+    val w = Window.partitionBy(keys: _*).orderBy(orderCols.map(col): _*)
     val revFrame = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    // both window expressions stack on ONE sort (same spec); __rev
-    // counts the valid rows from here to the day's end, so for a
-    // SURVIVING row it is the reverse rank within the filtered day
-    val flagged = withIdx
-      .withColumn(prevCol, coalesce(lag(col(valCol), 1).over(w), col("__pdl")))
+    val flagged = df0.withColumn("__day_idx", lit(1))
+      .select((keyCols :+ "__day_idx") ++ rest map col: _*)
+      .withColumn(prevCol, lag(col(valCol), 1).over(w))
       .withColumn("__valid", valid)
       .withColumn("__rev", sum(when(col("__valid"), 1L)).over(revFrame))
       .filter(col("__valid"))
-      .drop("__valid", "__pdl", "__day")
-    val rets = slim(flagged).localCheckpoint(eager = false)
-    // layer-2 slice map over the FILTERED relation, keyed by the
-    // layer-1 day (gaps left by all-invalid days are harmless — the
-    // reach rule orders by day, it never assumes density)
-    val idx2W = Window.partitionBy(keys: _*).orderBy(col("__day_idx"))
-    val dayMap2 = rets
-      .groupBy(keys :+ col("__day_idx"): _*)
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__cum", sum(col("__n")).over(idx2W))
-      .localCheckpoint(eager = false)
-    val pairs = dayMap2
-      .select((keys :+ col("__day_idx") :+ col("__cum")): _*)
-      .join(dayMap2.select((keys :+ col("__day_idx").as("__dst_idx") :+
-        (col("__cum") - col("__n")).as("__cum_prev")): _*), keyCols)
-      .where(col("__dst_idx") > col("__day_idx") &&
-        col("__cum_prev") - col("__cum") < carryRows)
-      .select((keys :+ col("__day_idx") :+ col("__dst_idx") :+
-        (col("__cum_prev") - col("__cum")).as("__slack")): _*)
-    val carried = rets
-      .filter(col("__rev") <= carryRows)
-      .join(broadcast(pairs), keyCols :+ "__day_idx")
-      .where(col("__rev") + col("__slack") <= carryRows)
-      .withColumn("__day_idx", col("__dst_idx"))
-      .drop("__dst_idx", "__slack", "__rev")
-      .withColumn("__emit", lit(false))
-    rets.drop("__rev").withColumn("__emit", lit(true)).unionByName(carried)
+      .drop("__valid")
+    slim(flagged).drop("__rev").withColumn("__emit", lit(true))
   }
 
-  /** Exact global per-key lag-1 WITHOUT a per-key full-history window
-    * — [[laggedScope]]'s layer 1, standalone and multi-column, for the
-    * return-chain heads whose downstream is a FILTER + AGGREGATE (the
-    * q139/q205 class) rather than another trailing frame (those need
-    * [[laggedScope]]). Each `(valCol, prevCol)` pair gets the value of
-    * the key's previous row under `orderCols`:
-    *
-    *   - within a day, the (key, day)-scoped `lag(val, 1)` IS the
-    *     global lag;
-    *   - a day's FIRST row coalesces to the previous existing day's
-    *     last value, carried on the keys×days day map (one
-    *     max-by-struct under the same order — existing days only, so
-    *     calendar gaps are transparent);
-    *   - a key's global first row keeps null (no day-map match).
-    *
-    * Contract: `valCol`s must be non-null (bar fields, filtered signs
-    * — same contract as [[laggedScope]]); a null LAST value of a day
-    * would coalesce through to the wrong day. `orderCols` must totally
-    * order rows within a key.
-    *
-    * Scale posture: one (key, day) window pass + two broadcast joins
-    * of the keys×days map — task granularity (key, day), never a
-    * key's whole history in one task. */
+  /** Per-key lag-1: each `(valCol, prevCol)` pair gets the value of the
+    * key's previous row under `orderCols` (null on the key's first
+    * row). Key columns come first. `orderCols` must totally order rows
+    * within a key. */
   def withPrevValues(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -398,56 +104,18 @@ object ScalableWindow {
       tsCol: String,
       vals: Seq[(String, String)]): DataFrame = {
     require(vals.nonEmpty, "need at least one (valCol, prevCol) pair")
-    if (localRoute(df0)) {
-      // the contract IS the global per-key lag-1 — small inputs take
-      // the definition directly (keys-first column order as the
-      // scoped path's using-join emits)
-      val rest = df0.columns.filterNot(keyCols.contains)
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(orderCols.map(col): _*)
-      return vals.foldLeft(
-        df0.select(keyCols ++ rest map col: _*)) { case (acc, (v, p)) =>
-        acc.withColumn(p, lag(col(v), 1).over(w))
-      }
-    }
-    val df = df0.localCheckpoint(eager = false) // feeds day map + join
-    val keys = keyCols.map(col)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    // day map: each day's LAST row's value columns (one shared
-    // max-by-struct; orderCols totally order, so the struct max picks
-    // exactly the day's last row), lagged one EXISTING day — ONE
-    // broadcast join attaches the cross-day lag seam, the day itself
-    // scopes the window (no dense index, see dayScoped), and the map
-    // is consumed once so it needs no checkpoint of its own
-    val dayMap = df
-      .groupBy(keys :+ to_date(col(tsCol)).as("__day"): _*)
-      .agg(max(struct(orderCols.map(col) ++
-        vals.map { case (v, _) => col(v).as(s"__v_$v") }: _*)).as("__last"))
-      .select((keys :+ col("__day") :+ col("__last")): _*)
-      .withColumn("__plast", lag(col("__last"), 1).over(idxW))
-    val withIdx = df.withColumn("__day", to_date(col(tsCol)))
-      .join(broadcast(dayMap.select(
-        (keys :+ col("__day")) ++
-          vals.map { case (v, _) =>
-            col("__plast").getField(s"__v_$v").as(s"__pdl_$v") }: _*)),
-        keyCols :+ "__day")
-    val w = Window.partitionBy((keys :+ col("__day")): _*)
+    val rest = df0.columns.filterNot(keyCols.contains)
+    val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val out = vals.foldLeft(withIdx) { case (acc, (v, p)) =>
-      acc.withColumn(p, coalesce(lag(col(v), 1).over(w), col(s"__pdl_$v")))
+    vals.foldLeft(df0.select(keyCols ++ rest map col: _*)) {
+      case (acc, (v, p)) => acc.withColumn(p, lag(col(v), 1).over(w))
     }
-    out.drop(vals.map { case (v, _) => s"__pdl_$v" } :+ "__day": _*)
   }
 
-  /** Fusion of [[withSeqIndex]] + [[withPrevValues]] for the ops that
-    * need a sequential row index AND a lag-1 value chain over the
-    * same (key, order) — eventStudy, vpin, the VaR/ES backtest split.
-    * ONE day map carries the per-day row count (exclusive-cumulative
-    * offsets for the index) and the day's last-row value struct (the
-    * cross-day lag seam), so the composed form's second checkpoint,
-    * second day map, and second broadcast-join pair disappear.
-    * Bit-identical to `withPrevValues(withSeqIndex(df, ...), ...)`
-    * (PropertySpec locks the equality on a gappy fixture). */
+  /** [[withSeqIndex]] and [[withPrevValues]] on one window spec: the
+    * optional group total `nCol`, the 1-based row index `rnCol` (LONG),
+    * then the lag-1 columns, all under one sort. Equal to
+    * `withPrevValues(withSeqIndex(df, ...), ...)`. */
   def withSeqPrev(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -457,77 +125,16 @@ object ScalableWindow {
       vals: Seq[(String, String)],
       nCol: Option[String] = None): DataFrame = {
     require(vals.nonEmpty, "need at least one (valCol, prevCol) pair")
-    if (localRoute(df0)) {
-      // definition form: global per-key index + lag-1 chain on one
-      // window spec (the same single sort the scoped path shares)
-      val rest = df0.columns.filterNot(keyCols.contains)
-      val keys = keyCols.map(col)
-      val w = Window.partitionBy(keys: _*).orderBy(orderCols.map(col): _*)
-      val base = df0.select(keyCols ++ rest map col: _*)
-      val withN = nCol match {
-        case Some(n) =>
-          base.withColumn(n, count(lit(1)).over(Window.partitionBy(keys: _*)))
-        case None => base
-      }
-      // (non-nullable rn/n vs the scoped path's nullable — see
-      // withSeqIndex; gate-invisible)
-      val withRn = withN.withColumn(rnCol, row_number().over(w).cast("long"))
-      return vals.foldLeft(withRn) { case (acc, (v, p)) =>
-        acc.withColumn(p, lag(col(v), 1).over(w))
-      }
-    }
-    val df = df0.localCheckpoint(eager = false) // feeds day map + join
-    val keys = keyCols.map(col)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    val totW = Window.partitionBy(keys: _*)
-    // single-consumer day map (no checkpoint of its own); the day
-    // itself scopes the window — no dense index, see dayScoped
-    val dayMap0 = df
-      .groupBy(keys :+ to_date(col(tsCol)).as("__day"): _*)
-      .agg(count(lit(1)).as("__n"),
-        max(struct(orderCols.map(col) ++
-          vals.map { case (v, _) => col(v).as(s"__v_$v") }: _*))
-          .as("__last"))
-      .withColumn("__plast", lag(col("__last"), 1).over(idxW))
-      .withColumn("__off", sum(col("__n")).over(idxW) - col("__n"))
-    val dayMap = nCol match {
-      case Some(_) =>
-        dayMap0.withColumn("__tot", sum(col("__n")).over(totW))
-      case None => dayMap0
-    }
-    val curCols = (keys :+ col("__day") :+
-      col("__off")) ++ vals.map { case (v, _) =>
-        col("__plast").getField(s"__v_$v").as(s"__pdl_$v") }
-    val joined = df.withColumn("__day", to_date(col(tsCol)))
-      .join(broadcast(dayMap.select(
-        (nCol match {
-          case Some(_) => curCols :+ col("__tot")
-          case None    => curCols
-        }): _*)), keyCols :+ "__day")
-    val w = Window.partitionBy((keys :+ col("__day")): _*)
+    val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val out0 = joined
-      .withColumn(rnCol, col("__off") + row_number().over(w))
-    val out = vals.foldLeft(out0) { case (acc, (v, p)) =>
-      acc.withColumn(p,
-        coalesce(lag(col(v), 1).over(w), col(s"__pdl_$v")))
+    vals.foldLeft(withSeqIndex(df0, keyCols, orderCols, tsCol, rnCol, nCol)) {
+      case (acc, (v, p)) => acc.withColumn(p, lag(col(v), 1).over(w))
     }
-    (nCol match {
-      case Some(n) => out.withColumnRenamed("__tot", n)
-      case None    => out
-    }).drop(vals.map { case (v, _) => s"__pdl_$v" } ++
-      Seq("__day", "__off"): _*)
   }
 
-  /** Exact global per-key 1-based row index (and optional group total)
-    * WITHOUT a per-key full-history sort — the q158 sequential-index
-    * class routed through the day map: index = the day map's EXCLUSIVE
-    * cumulative row count (all earlier days of the key) + the
-    * within-day row_number. Time-ordered data subdivides by day, so
-    * this beats the [[ScalableRank]] RDD two-pass (no driver state, no
-    * extra corpus shuffle) whenever the order key is a timestamp;
-    * ScalableRank remains the escape for ranks over arbitrary VALUE
-    * orders. `orderCols` must totally order rows within a key. */
+  /** Per-key 1-based row index `rnCol` (LONG) under `orderCols`, plus
+    * the optional group total `nCol`. Key columns come first.
+    * `orderCols` must totally order rows within a key. */
   def withSeqIndex(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -535,67 +142,20 @@ object ScalableWindow {
       tsCol: String,
       rnCol: String,
       nCol: Option[String] = None): DataFrame = {
-    if (localRoute(df0)) {
-      // definition form: global per-key row_number (+ partition count)
-      val rest = df0.columns.filterNot(keyCols.contains)
-      val keys = keyCols.map(col)
-      val w = Window.partitionBy(keys: _*).orderBy(orderCols.map(col): _*)
-      val base = df0.select(keyCols ++ rest map col: _*)
-      val withN = nCol match {
-        case Some(n) =>
-          base.withColumn(n, count(lit(1)).over(Window.partitionBy(keys: _*)))
-        case None => base
-      }
-      // (non-nullable here vs the scoped path's nullable __off + rn —
-      // names/types/values identical, which is what the gate compares)
-      return withN.withColumn(rnCol, row_number().over(w).cast("long"))
-    }
-    val df = df0.localCheckpoint(eager = false)
+    val rest = df0.columns.filterNot(keyCols.contains)
     val keys = keyCols.map(col)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    val totW = Window.partitionBy(keys: _*)
-    val dayMap0 = df
-      .groupBy(keys :+ to_date(col(tsCol)).as("__day"): _*)
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__off", sum(col("__n")).over(idxW) - col("__n"))
-    // single consumer (one broadcast build) — no checkpoint of its own
-    val dayMap = nCol match {
-      // the total rides the keys×days map (aggregate-sized) — never
-      // a count window over the corpus
-      case Some(_) => dayMap0.withColumn("__tot", sum(col("__n")).over(totW))
-      case None    => dayMap0
+    val w = Window.partitionBy(keys: _*).orderBy(orderCols.map(col): _*)
+    val base = df0.select(keyCols ++ rest map col: _*)
+    val withN = nCol match {
+      case Some(n) =>
+        base.withColumn(n, count(lit(1)).over(Window.partitionBy(keys: _*)))
+      case None => base
     }
-    val mapCols = keys :+ col("__day") :+ col("__off")
-    val joined = df.withColumn("__day", to_date(col(tsCol)))
-      .join(broadcast(dayMap.select(
-        (nCol match {
-          case Some(_) => mapCols :+ col("__tot")
-          case None    => mapCols
-        }): _*)), keyCols :+ "__day")
-    val w = Window.partitionBy((keys :+ col("__day")): _*)
-      .orderBy(orderCols.map(col): _*)
-    val out = joined.withColumn(rnCol, col("__off") + row_number().over(w))
-    (nCol match {
-      case Some(n) => out.withColumnRenamed("__tot", n)
-      case None    => out
-    }).drop("__off", "__day")
+    withN.withColumn(rnCol, row_number().over(w).cast("long"))
   }
 
-  /** FORWARD (lead-frame) mirror of [[dayScoped]]: augment `df` for
-    * windows whose frame looks AHEAD up to `carryRows` rows (lead
-    * columns, `rowsBetween(0, carryRows)` frames) — each (key, day)
-    * partition is appended with non-emitting copies of the FIRST
-    * `carryRows` rows of every LATER day within reach.
-    *
-    * Exactness (the dayScoped argument, mirrored): a row needed by day
-    * d from a later day d' has fewer than `carryRows` rows between day
-    * d's last row and itself, so it is among the FIRST `carryRows`
-    * rows of its own day, and whether it reaches day d is decided by
-    * the per-day cumulative counts alone: head row with forward rank
-    * rn (1 = day's first row) in day d' reaches day d < d' iff
-    * `cum[d'−1] − cum[d] + rn <= carryRows`. Window by
-    * (keyCols :+ __day_idx) ordered by `orderCols`, then
-    * `filter(col("__emit"))` and drop the helpers. */
+  /** Scope for a frame looking AHEAD up to `carryRows` rows (lead
+    * columns, `rowsBetween(0, carryRows)` frames). */
   def dayScopedLead(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -603,58 +163,11 @@ object ScalableWindow {
       tsCol: String,
       carryRows: Int): DataFrame = {
     require(carryRows >= 1, s"carryRows must be >= 1 (got $carryRows)")
-    if (localRoute(df0)) return globalAugment(df0, keyCols, tsCol)
-    // mirrored dayScoped: day-as-scope-key, forward rank, reach pairs
-    // into EARLIER days — the emitting leg takes no join, the carry
-    // join touches only the first-carryRows head candidates
-    val keys = keyCols.map(col)
-    val rest = df0.columns.filterNot(keyCols.contains)
-    val headW = Window
-      .partitionBy((keys :+ col("__day")): _*)
-      .orderBy(orderCols.map(col): _*)
-    val ranked = df0.withColumn("__day", to_date(col(tsCol)))
-      .select((keyCols :+ "__day") ++ rest map col: _*)
-      .withColumn("__rn", row_number().over(headW))
-      .localCheckpoint(eager = false)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    val dayIdx = ranked
-      .groupBy((keys :+ col("__day")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__cum", sum(col("__n")).over(idxW))
-      .localCheckpoint(eager = false)
-    // reach rule (dayScoped mirrored): head row with forward rank rn
-    // in src day reaches dst < src iff cum[src−1] − cum[dst] + rn <=
-    // carryRows; slack = cum[src−1] − cum[dst] >= 0
-    val pairs = dayIdx
-      .select((keys :+ col("__day") :+
-        (col("__cum") - col("__n")).as("__cum_prev")): _*)
-      .join(dayIdx.select((keys :+ col("__day").as("__dst_day") :+
-        col("__cum").as("__dst_cum")): _*), keyCols)
-      .where(col("__dst_day") < col("__day") &&
-        col("__cum_prev") - col("__dst_cum") < carryRows)
-      .select((keys :+ col("__day") :+ col("__dst_day") :+
-        (col("__cum_prev") - col("__dst_cum")).as("__slack")): _*)
-    val carried = ranked
-      .filter(col("__rn") <= carryRows)
-      .join(broadcast(pairs), keyCols :+ "__day")
-      .where(col("__rn") + col("__slack") <= carryRows)
-      .withColumn("__day_idx", col("__dst_day"))
-      .drop("__rn", "__dst_day", "__slack")
-      .withColumn("__emit", lit(false))
-    ranked.drop("__rn").withColumn("__day_idx", col("__day"))
-      .withColumn("__emit", lit(true))
-      .unionByName(carried)
+    globalAugment(df0, keyCols, tsCol)
   }
 
-  /** Symmetric scope — [[dayScoped]] (trailing carry) and
-    * [[dayScopedLead]] (forward carry) in one pass, for windows that
-    * look BOTH ways (lead AND lag columns, the ccf class): each
-    * (key, day) partition gets non-emitting copies of the last
-    * `backRows` rows of earlier days within trailing reach AND the
-    * first `fwdRows` rows of later days within forward reach. Both
-    * carry legs ride ONE day map and ONE within-day rank pass (the
-    * reverse rank derives from the day's row count). Window by
-    * (keyCols :+ __day_idx), then `filter(col("__emit"))`. */
+  /** Scope for a frame looking `backRows` rows back AND `fwdRows` rows
+    * ahead (lead and lag columns, the ccf class). */
   def dayScopedAround(
       df0: DataFrame,
       keyCols: Seq[String],
@@ -664,91 +177,11 @@ object ScalableWindow {
       fwdRows: Int): DataFrame = {
     require(backRows >= 0 && fwdRows >= 0 && backRows + fwdRows >= 1,
       s"need a nonzero reach (got back=$backRows, fwd=$fwdRows)")
-    if (localRoute(df0)) return globalAugment(df0, keyCols, tsCol)
-    // day-as-scope-key (see dayScoped): both ranks stack on ONE sort
-    // (same window spec, the reverse rank as a forward-frame count),
-    // the emitting leg takes no join, and each carry leg equi-joins
-    // its rank-filtered candidates against precomputed reach pairs
-    val keys = keyCols.map(col)
-    val rest = df0.columns.filterNot(keyCols.contains)
-    val w = Window.partitionBy((keys :+ col("__day")): _*)
-      .orderBy(orderCols.map(col): _*)
-    val ranked = df0.withColumn("__day", to_date(col(tsCol)))
-      .select((keyCols :+ "__day") ++ rest map col: _*)
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__rev", count(lit(1)).over(
-        w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .localCheckpoint(eager = false)
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    val dayIdx = ranked
-      .groupBy((keys :+ col("__day")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__cum", sum(col("__n")).over(idxW))
-      .localCheckpoint(eager = false)
-    val helperCols = Seq("__rn", "__rev")
-    // trailing leg: the dayScoped reach rule on the shared rank pass
-    val pairsBack = dayIdx
-      .select((keys :+ col("__day") :+ col("__cum")): _*)
-      .join(dayIdx.select((keys :+ col("__day").as("__dst_day") :+
-        (col("__cum") - col("__n")).as("__cum_prev")): _*), keyCols)
-      .where(col("__dst_day") > col("__day") &&
-        col("__cum_prev") - col("__cum") < backRows)
-      .select((keys :+ col("__day") :+ col("__dst_day") :+
-        (col("__cum_prev") - col("__cum")).as("__slack")): _*)
-    val carriedBack = ranked
-      .filter(col("__rev") <= backRows)
-      .join(broadcast(pairsBack), keyCols :+ "__day")
-      .where(col("__rev") + col("__slack") <= backRows)
-      .withColumn("__day_idx", col("__dst_day"))
-      .drop("__dst_day" :: "__slack" :: helperCols.toList: _*)
-      .withColumn("__emit", lit(false))
-    // forward leg: the dayScopedLead reach rule
-    val pairsFwd = dayIdx
-      .select((keys :+ col("__day") :+
-        (col("__cum") - col("__n")).as("__cum_prev")): _*)
-      .join(dayIdx.select((keys :+ col("__day").as("__dst_day") :+
-        col("__cum").as("__dst_cum")): _*), keyCols)
-      .where(col("__dst_day") < col("__day") &&
-        col("__cum_prev") - col("__dst_cum") < fwdRows)
-      .select((keys :+ col("__day") :+ col("__dst_day") :+
-        (col("__cum_prev") - col("__dst_cum")).as("__slack")): _*)
-    val carriedFwd = ranked
-      .filter(col("__rn") <= fwdRows)
-      .join(broadcast(pairsFwd), keyCols :+ "__day")
-      .where(col("__rn") + col("__slack") <= fwdRows)
-      .withColumn("__day_idx", col("__dst_day"))
-      .drop("__dst_day" :: "__slack" :: helperCols.toList: _*)
-      .withColumn("__emit", lit(false))
-    ranked.drop(helperCols: _*).withColumn("__day_idx", col("__day"))
-      .withColumn("__emit", lit(true))
-      .unionByName(carriedBack).unionByName(carriedFwd)
+    globalAugment(df0, keyCols, tsCol)
   }
 
-  /** Diagnostic (no longer a correctness precondition — the multi-day
-    * carry is unconditionally exact): counts the (key, day) slices
-    * holding fewer than `carryRows` rows despite having an earlier
-    * day, i.e. the slices whose tails fan out past the adjacent day.
-    * 0 means the data is dense enough that the carry never spans more
-    * than one day boundary. One aggregate job over the (key, day)
-    * counts — call it when profiling a NEW data shape, not per
-    * query. */
-  def validateCarry(
-      df: DataFrame,
-      keyCols: Seq[String],
-      tsCol: String,
-      carryRows: Int): Long = {
-    val keys = keyCols.map(col)
-    val counts = df.groupBy(keys :+ to_date(col(tsCol)).as("__day"): _*)
-      .agg(count(lit(1)).as("__n"))
-    val idxW = Window.partitionBy(keys: _*).orderBy(col("__day"))
-    counts.withColumn("__i", row_number().over(idxW))
-      .filter(col("__i") > 1 && col("__n") < carryRows)
-      .count()
-  }
-
-  /** Day-scoped twin of [[PairAnalytics.rollingZScore]] — identical
-    * output (same columns, same doubles) with (pair, day) task
-    * granularity. */
+  /** [[PairAnalytics.rollingZScore]] through the scope contract — same
+    * columns, same doubles. */
   def rollingZScoreByDay(
       spreads: DataFrame,
       windowRows: Int = PairAnalytics.DefaultWindowRows,
@@ -772,9 +205,9 @@ object ScalableWindow {
       .drop("__emit", "__day", "__day_idx")
   }
 
-  /** Generic day-scoped trailing stats used by the q76 oracle twin:
-    * per-key rolling mean / sample-stddev / count of `valCol` over the
-    * last `w` rows ordered by `orderCols`.
+  /** Generic trailing stats used by the q76 oracle twin: per-key
+    * rolling mean / sample-stddev / count of `valCol` over the last `w`
+    * rows ordered by `orderCols`.
     *
     * The frame reductions run in DECIMAL (exact, order-insensitive) and
     * mean/stddev derive from the exact sums with scalar double math —

@@ -15,12 +15,6 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // pin the scoped-window small-input route OFF for the whole test
-      // JVM: every pre-existing equality/plan lock keeps exercising the
-      // day-scoped machinery (the 100 TB path) exactly as before; the
-      // routing itself is tested explicitly (Round14Spec) by flipping
-      // this key per test.
-      .config(graft.ops.ScalableWindow.LocalBytesKey, "0")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -669,11 +669,6 @@ class PropertySpec extends AnyFunSuite {
     // exact set equality — doubles must be bit-identical, not approximate
     assert(scoped.except(global).count() === 0)
     assert(global.except(scoped).count() === 0)
-    // the diagnostic: with carry 29 no slice fans out past the
-    // adjacent day; with 41 every interior slice does (10 = 2 keys x
-    // days 2..6)
-    assert(graft.ops.ScalableWindow.validateCarry(df, Seq("pair_name"), "bar_ts", 29) === 0L)
-    assert(graft.ops.ScalableWindow.validateCarry(df, Seq("pair_name"), "bar_ts", 41) === 10L)
   }
 
   test("day-scoped window stays exact on SPARSE days (frame spans many days)") {

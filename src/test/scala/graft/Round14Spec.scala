@@ -123,10 +123,9 @@ class Round14Spec extends AnyFunSuite {
     assert((1 until 64).forall(c => tw(c) === stock(0L, c)))
   }
 
-  // ---- round-14 optimization: scoped-window small-input route ----
+  // ---- ScalableWindow / ScalableRank against plain Window references ----
 
-  /** Sparse + dense days, unique in-key timestamps, two keys — the
-    * shape the dayScoped equality proofs run on. */
+  /** Sparse + dense days, unique in-key timestamps, two keys. */
   private def scopedFixture = {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -142,81 +141,91 @@ class Round14Spec extends AnyFunSuite {
       .agg(max(col("spread")).as("spread")) // unique (key, ts)
   }
 
-  private def withRoute[T](bytes: String)(body: => T): T = {
-    val key = graft.ops.ScalableWindow.LocalBytesKey
-    val old = spark.conf.get(key, "0")
-    spark.conf.set(key, bytes)
-    try body finally spark.conf.set(key, old)
+  /** Same column names, types and order, and the same rows in the
+    * same `orderBy(keys)` order. */
+  private def assertSame(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame, keys: String*): Unit = {
+    assert(got.schema.map(f => (f.name, f.dataType)) ===
+      want.schema.map(f => (f.name, f.dataType)), "column order/types must match")
+    assert(got.orderBy(keys.map(col): _*).collect().toSeq ===
+      want.orderBy(keys.map(col): _*).collect().toSeq)
   }
 
+  // Each ScalableWindow wrapper equals a hand-written per-key Window
+  // formulation of the same columns.
   test("small-input route equals the forced-scaled path bit-for-bit") {
-    val df = scopedFixture
-    def run() = {
-      val z = graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10)
-        .orderBy("pair_name", "bar_ts").collect().toSeq
-      val t = graft.ops.ScalableWindow.trailingStats(df.withColumn("series",
-          col("pair_name")), Seq("series"), Seq("bar_ts"), "bar_ts", "spread", 20)
-        .orderBy("series", "bar_ts").collect().toSeq
-      val sp = graft.ops.ScalableWindow.withSeqPrev(df, Seq("pair_name"),
-          Seq("bar_ts"), "bar_ts", "rn", Seq("spread" -> "prev"), Some("ntot"))
-        .orderBy("pair_name", "bar_ts").collect().toSeq
-      val lg = graft.ops.ScalableWindow.laggedScope(df.withColumn("series",
-          col("pair_name")), Seq("series"), Seq("bar_ts"), "bar_ts",
-          "spread", "pc", 5, valid = col("pc").isNotNull)
-        .filter(col("__emit")).drop("__emit", "__day_idx")
-        .orderBy("series", "bar_ts").collect().toSeq
-      (z, t, sp, lg)
-    }
-    def schemas() = {
-      val z = graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10)
-      val sp = graft.ops.ScalableWindow.withSeqPrev(df, Seq("pair_name"),
-        Seq("bar_ts"), "bar_ts", "rn", Seq("spread" -> "prev"), Some("ntot"))
-      (z.schema, sp.schema)
-    }
-    def namesTypes(s: (org.apache.spark.sql.types.StructType,
-        org.apache.spark.sql.types.StructType)) =
-      (s._1.map(f => (f.name, f.dataType)), s._2.map(f => (f.name, f.dataType)))
-    val (scaled, scaledSchema) = withRoute("0")((run(), schemas()))
-    val (routed, routedSchema) = withRoute("1073741824")((run(), schemas()))
-    // nullability may tighten on the small route (row_number is
-    // provably non-null where the escape's schema stays nullable) —
-    // names, types, order and every value must match
-    assert(namesTypes(routedSchema) === namesTypes(scaledSchema),
-      "column order/types must match")
-    assert(routed === scaled)
-  }
-
-  test("ScalableRank small-input route equals the two-pass escape bit-for-bit") {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val df = scopedFixture
-    def run() = {
-      val nt = graft.ops.ScalableRank.ntile(df, Seq("pair_name"),
-          Seq(col("spread"), col("bar_ts")), 5, "q")
-        .orderBy("pair_name", "bar_ts").collect().toSeq
-      val cs = graft.ops.ScalableRank.withIndexAndCumSum(df, Seq("pair_name"),
-          Seq(col("bar_ts")), col("spread").cast(DecimalType(18, 6)), "run", "rn", "n")
-        .orderBy("pair_name", "bar_ts").collect().toSeq
-      (nt, cs)
-    }
-    def schema() = graft.ops.ScalableRank.withIndexAndCumSum(df, Seq("pair_name"),
-      Seq(col("bar_ts")), col("spread").cast(DecimalType(18, 6)), "run", "rn", "n").schema
-    val (scaled, sSchema) = withRoute("0")((run(), schema()))
-    val (routed, rSchema) = withRoute("1073741824")((run(), schema()))
-    assert(rSchema.map(f => (f.name, f.dataType)) ===
-      sSchema.map(f => (f.name, f.dataType)), "column order/types must match")
-    assert(routed === scaled)
+    val byPair = Window.partitionBy(col("pair_name")).orderBy(col("bar_ts"))
+
+    val zw = byPair.rowsBetween(-29, Window.currentRow)
+    val zWant = df
+      .withColumn("rolling_mean", mean(col("spread")).over(zw))
+      .withColumn("rolling_std", stddev(col("spread")).over(zw))
+      .withColumn("window_size", count(lit(1)).over(zw))
+      .withColumn("z_score",
+        when(col("window_size") >= 10 && col("rolling_std").isNotNull &&
+          col("rolling_std") =!= 0.0,
+          (col("spread") - col("rolling_mean")) / col("rolling_std")))
+    assertSame(graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10),
+      zWant, "pair_name", "bar_ts")
+
+    val series = df.withColumn("series", col("pair_name"))
+      .select("series", "pair_name", "bar_ts", "spread")
+    val tw = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+      .rowsBetween(-19, Window.currentRow)
+    val dv = col("spread").cast(DecimalType(18, 6))
+    val (s1, s2, n) = (col("__s1"), col("__s2"), col("n_win"))
+    val tWant = series
+      .withColumn("__s1", sum(dv).over(tw).cast("double"))
+      .withColumn("__s2", sum(dv * dv).over(tw).cast("double"))
+      .withColumn("n_win", count(lit(1)).over(tw))
+      .withColumn("r_mean", round(s1 / n, 6))
+      .withColumn("r_std", when(n > 1,
+        round(sqrt(greatest((s2 - s1 * s1 / n) / (n - 1), lit(0.0))), 6)))
+      .drop("__s1", "__s2")
+    assertSame(graft.ops.ScalableWindow.trailingStats(series, Seq("series"),
+      Seq("bar_ts"), "bar_ts", "spread", 20), tWant, "series", "bar_ts")
+
+    val spWant = df
+      .withColumn("ntot", count(lit(1)).over(Window.partitionBy(col("pair_name"))))
+      .withColumn("rn", row_number().over(byPair).cast("long"))
+      .withColumn("prev", lag(col("spread"), 1).over(byPair))
+    assertSame(graft.ops.ScalableWindow.withSeqPrev(df, Seq("pair_name"),
+      Seq("bar_ts"), "bar_ts", "rn", Seq("spread" -> "prev"), Some("ntot")),
+      spWant, "pair_name", "bar_ts")
+
+    val bySeries = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val lgWant = series
+      .withColumn("pc", lag(col("spread"), 1).over(bySeries))
+      .filter(col("pc").isNotNull)
+    assertSame(graft.ops.ScalableWindow.laggedScope(series, Seq("series"),
+        Seq("bar_ts"), "bar_ts", "spread", "pc", 5, valid = col("pc").isNotNull)
+      .filter(col("__emit")).drop("__emit", "__day_idx"),
+      lgWant, "series", "bar_ts")
   }
 
-  test("small-input route drops the day-map machinery from the plan") {
+  // ScalableRank's ntile and fused index + running sum equal the plain
+  // ntile / row_number / count / running-sum windows.
+  test("ScalableRank small-input route equals the two-pass escape bit-for-bit") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.DecimalType
     val df = scopedFixture
-    def plan(bytes: String): String = withRoute(bytes) {
-      graft.ops.ScalableWindow.dayScoped(df, Seq("pair_name"),
-        Seq("bar_ts"), "bar_ts", 29).queryExecution.executedPlan.toString
-    }
-    val routed = plan("1073741824")
-    assert(!routed.contains("Union"), "no carried-rows union on the small route")
-    assert(!routed.contains("BroadcastHashJoin"), "no day-map join on the small route")
-    val scaled = plan("0")
-    assert(scaled.contains("Union"), "0 pins the always-scoped machinery")
+    val ntWant = df.withColumn("q", ntile(5).over(Window.partitionBy(col("pair_name"))
+      .orderBy(col("spread"), col("bar_ts"))))
+    assertSame(graft.ops.ScalableRank.ntile(df, Seq("pair_name"),
+      Seq(col("spread"), col("bar_ts")), 5, "q"), ntWant, "pair_name", "bar_ts")
+
+    val w = Window.partitionBy(col("pair_name")).orderBy(col("bar_ts"))
+    val csWant = df
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("pair_name"))))
+      .withColumn("run", sum(col("spread").cast(DecimalType(18, 6)))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast(DecimalType(38, 6)))
+    assertSame(graft.ops.ScalableRank.withIndexAndCumSum(df, Seq("pair_name"),
+      Seq(col("bar_ts")), col("spread").cast(DecimalType(18, 6)), "run", "rn", "n"),
+      csWant, "pair_name", "bar_ts")
   }
 }

@@ -10,10 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ScalableRank
 
-/** Round-8 additions: the two-pass exact-rank escape must equal the
-  * single-partition global window bit-for-bit on arbitrary data, at
-  * ANY partition count (1 / 3 / 7 — prime counts shear the range
-  * bounds away from key boundaries), with hot keys and dense ties.
+/** Round-8 additions: the ScalableRank ops must equal the plain
+  * `row_number`/`ntile`/`percent_rank`/running-sum windows bit-for-bit
+  * on arbitrary data, with hot keys and dense ties.
   */
 class Round8Spec extends AnyFunSuite {
   import SparkTestSession._
@@ -41,14 +40,13 @@ class Round8Spec extends AnyFunSuite {
     val df = randDf()
     val w = Window.partitionBy(col("key")).orderBy(col("v"), col("id"))
     val want = df.withColumn("rn", row_number().over(w).cast("long"))
-    for (p <- Seq(1, 3, 7))
-      same(ScalableRank.rowNumber(df, Seq("key"), Seq(col("v"), col("id")),
-        "rn", numParts = p), want)
+    same(ScalableRank.rowNumber(df, Seq("key"), Seq(col("v"), col("id")), "rn"),
+      want)
     // unpartitioned (global order) form, desc ordering
     val wg = Window.orderBy(col("amt").desc, col("id"))
     val wantG = df.withColumn("rn", row_number().over(wg).cast("long"))
     same(ScalableRank.rowNumber(df, Seq.empty,
-      Seq(col("amt").desc, col("id")), "rn", numParts = 7), wantG)
+      Seq(col("amt").desc, col("id")), "rn"), wantG)
   }
 
   test("ScalableRank.ntile equals global ntile for ragged bucket sizes") {
@@ -59,11 +57,11 @@ class Round8Spec extends AnyFunSuite {
       val wg = Window.orderBy(col("amt").desc, col("id"))
       val want = df.withColumn("t", ntile(b).over(wg))
       same(ScalableRank.ntile(df, Seq.empty,
-        Seq(col("amt").desc, col("id")), b, "t", numParts = 7), want)
+        Seq(col("amt").desc, col("id")), b, "t"), want)
       val wk = Window.partitionBy(col("key")).orderBy(col("v"), col("id"))
       val wantK = df.withColumn("t", ntile(b).over(wk))
       same(ScalableRank.ntile(df, Seq("key"),
-        Seq(col("v"), col("id")), b, "t", numParts = 3), wantK)
+        Seq(col("v"), col("id")), b, "t"), wantK)
     }
     // n < buckets: every row its own bucket
     val tiny = Seq(("a", 1L, 10L, 1L), ("a", 2L, 20L, 2L), ("a", 3L, 5L, 3L))
@@ -71,7 +69,7 @@ class Round8Spec extends AnyFunSuite {
     val wantT = tiny.withColumn("t",
       ntile(10).over(Window.orderBy(col("v"), col("id"))))
     same(ScalableRank.ntile(tiny, Seq.empty,
-      Seq(col("v"), col("id")), 10, "t", numParts = 3), wantT)
+      Seq(col("v"), col("id")), 10, "t"), wantT)
   }
 
   test("ScalableRank.percentRank equals global percent_rank under dense ties") {
@@ -79,13 +77,12 @@ class Round8Spec extends AnyFunSuite {
     // per-key percent_rank over v ALONE (ties collapse) — the q132 shape
     val wk = Window.partitionBy(col("key")).orderBy(col("v"))
     val want = df.withColumn("pr", percent_rank().over(wk))
-    for (p <- Seq(1, 3, 7))
-      same(ScalableRank.percentRank(df, Seq("key"), Seq(col("v")),
-        Seq(col("id")), "pr", numParts = p), want)
+    same(ScalableRank.percentRank(df, Seq("key"), Seq(col("v")),
+      Seq(col("id")), "pr"), want)
     // single-row groups emit 0.0
     val one = Seq(("a", 5L, 1L, 1L)).toDF("key", "v", "amt", "id")
     assert(ScalableRank.percentRank(one, Seq("key"), Seq(col("v")),
-      Seq(col("id")), "pr", numParts = 3)
+      Seq(col("id")), "pr")
       .select("pr").as[Double].head() === 0.0)
   }
 
@@ -195,16 +192,15 @@ class Round8Spec extends AnyFunSuite {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val want = df.withColumn("cum",
       sum(col("d")).over(wg).cast(DoubleType))
-    for (p <- Seq(1, 3, 7))
-      same(ScalableRank.cumSum(df, Seq.empty, Seq(col("amt").desc, col("id")),
-          col("d"), "cum", numParts = p)
-        .withColumn("cum", col("cum").cast(DoubleType)), want)
+    same(ScalableRank.cumSum(df, Seq.empty, Seq(col("amt").desc, col("id")),
+        col("d"), "cum")
+      .withColumn("cum", col("cum").cast(DoubleType)), want)
     // per-key form
     val wk = Window.partitionBy(col("key")).orderBy(col("v"), col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wantK = df.withColumn("cum", sum(col("d")).over(wk).cast(DoubleType))
     same(ScalableRank.cumSum(df, Seq("key"), Seq(col("v"), col("id")),
-        col("d"), "cum", numParts = 7)
+        col("d"), "cum")
       .withColumn("cum", col("cum").cast(DoubleType)), wantK)
   }
 

@@ -132,18 +132,11 @@ class ScaleSpec extends AnyFunSuite {
   test("q154 triple-barrier plan: day-scoped lead arrays, no horizon-fanout join") {
     val plan = SparkEntry.queries("q154_triple_barrier")(spark, sf)
       .queryExecution.executedPlan.toString
-    // the forward scope's day-map attach is broadcast-only — a
-    // SortMergeJoin would mean a genuine corpus-sized self-join crept
+    // the barriers come from lead arrays over one per-series window —
+    // a SortMergeJoin would mean a genuine corpus-sized self-join crept
     // back in (the horizon-fanout shape the lead arrays exist to avoid)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("Cartesian"),
       s"corpus-sized join found in the lead path:\n${plan.take(3000)}")
-    // the lead window must be day-scoped, never a per-series
-    // full-history sort
-    assert(plan.contains("__day_idx"),
-      s"day-scoped lead window expected:\n${plan.take(3000)}")
-    assert("windowspecdefinition\\(series#\\d+, bar_ts#\\d+ ASC".r
-      .findFirstIn(plan).isEmpty,
-      s"per-series global window found (skew hazard):\n${plan.take(3000)}")
   }
 
   test("q155 bpe-pairs plan: top-k via TakeOrderedAndProject, pairs built map-side") {
@@ -264,34 +257,12 @@ class ScaleSpec extends AnyFunSuite {
     assert(pinned.select("shard").distinct().count() === 8L)
   }
 
-  test("flagship z-score plan is day-scoped: no per-pair global window remains") {
-    // SURVEY §7.4(a): the reference windows by pair_name alone — one
-    // task per pair for its entire history. The flagship must instead
-    // window by (pair_name, __day_idx) via ScalableWindow.dayScoped.
-    import spark.implicits._
-    val bars = Seq(
-      ("MSFT", java.sql.Timestamp.valueOf("2024-01-02 14:30:00"), 10.0),
-      ("AAPL", java.sql.Timestamp.valueOf("2024-01-02 14:30:00"), 20.0),
-      ("MSFT", java.sql.Timestamp.valueOf("2024-01-02 14:35:00"), 11.0),
-      ("AAPL", java.sql.Timestamp.valueOf("2024-01-02 14:35:00"), 21.0)
-    ).toDF("symbol", "timestamp", "close")
-    val plan = Pipeline.pairZScores(bars, Seq(("MSFT", "AAPL")))
-      .queryExecution.executedPlan.toString
-    assert("windowspecdefinition\\(pair_name#\\d+, bar_ts#\\d+ ASC".r
-      .findFirstIn(plan).isEmpty,
-      s"per-pair global window found (skew hazard):\n${plan.take(3000)}")
-    assert(plan.contains("__day_idx"),
-      s"day-scoped window expected in plan:\n${plan.take(3000)}")
-  }
-
   test("flagship z-score runs its window once: one WindowExec on both routes") {
     // both symbol legs come out of one projection over the z-scores, so
-    // the executed (post-AQE) plan holds exactly one window operator,
-    // on the small-input route and on the always-scoped route
+    // the executed (post-AQE) plan holds exactly one window operator
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.window.WindowExec
     import spark.implicits._
-    import graft.ops.ScalableWindow.{LocalBytesDefault, LocalBytesKey}
     val bars = (for {
       day <- Seq("2024-01-02", "2024-01-03")
       m <- 0 until 12
@@ -299,25 +270,17 @@ class ScaleSpec extends AnyFunSuite {
     } yield (sym, java.sql.Timestamp.valueOf(f"$day 14:${30 + m}%02d:00"), base + m % 5))
       .toDF("symbol", "timestamp", "close")
     val helper = new AdaptiveSparkPlanHelper {}
-    val prev = spark.conf.getOption(LocalBytesKey)
-    try {
-      for (bytes <- Seq(LocalBytesDefault, 0L)) {
-        spark.conf.set(LocalBytesKey, bytes.toString)
-        val z = Pipeline.pairZScores(bars, Seq(("MSFT", "AAPL")), windowRows = 6, minWindow = 3)
-        assert(z.collect().length === 2 * 24)
-        val windows = helper.collect(z.queryExecution.executedPlan) { case w: WindowExec => w }
-        assert(windows.size === 1,
-          s"$LocalBytesKey=$bytes: ${windows.size} windows\n${z.queryExecution.executedPlan}")
-      }
-    } finally prev.fold(spark.conf.unset(LocalBytesKey))(spark.conf.set(LocalBytesKey, _))
+    val z = Pipeline.pairZScores(bars, Seq(("MSFT", "AAPL")), windowRows = 6, minWindow = 3)
+    assert(z.collect().length === 2 * 24)
+    val windows = helper.collect(z.queryExecution.executedPlan) { case w: WindowExec => w }
+    assert(windows.size === 1,
+      s"${windows.size} windows\n${z.queryExecution.executedPlan}")
   }
 
   test("q158 tick-bars plan: per-series row index, never a global sort") {
     // information bars need one sequential step (the per-series row
     // index); it must stay a partition-local window sort — a global
     // sort would serialize the whole tick store on one core
-    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
     val qe = graft.ops.MarketBars.tickBars(Tables.events(spark, sf),
         "event_type", "ts", "value", "event_id", ticksPerBar = 50)
@@ -325,31 +288,11 @@ class ScaleSpec extends AnyFunSuite {
     val plan = qe.executedPlan.toString
     assert("], true, 0".r.findAllIn(plan).isEmpty,
       s"global sort found in tick-bars plan:\n${plan.take(3000)}")
-    // exactly one corpus-side window (the per-(series, day) row index);
-    // the only other Window allowed is the keys×days day-map offset
-    // pass (visible in-plan since round 15 dropped the day map's
-    // checkpoint — it used to hide behind a Scan ExistingRDD)
+    // the per-series row_number is the plan's only window
     assert("row_number\\(\\) windowspecdefinition\\(".r.findAllIn(plan).size === 1,
       s"expected exactly one row-index Window:\n${plan.take(3000)}")
-    val windows = qe.sparkPlan.collect { case w: WindowExec => w }
-    val dayMap = windows.filterNot(_.windowExpression.exists(
-      _.toString.contains("row_number")))
-    assert(windows.size === 2 && dayMap.size === 1,
-      s"expected the row index plus one day-map Window:\n${qe.sparkPlan}")
-    // the day-map pass partitions by the series key ALONE and reads the
-    // (series, day) aggregate — keys×days rows, never the tick corpus
-    def source(p: SparkPlan): SparkPlan = p match {
-      case pr: ProjectExec => source(pr.child)
-      case other => other
-    }
-    assert(dayMap.head.partitionSpec.flatMap(_.references.map(_.name)) ===
-      Seq("series"), s"day-map partition spec:\n${dayMap.head}")
-    source(dayMap.head.child) match {
-      case agg: BaseAggregateExec =>
-        assert(agg.output.map(_.name) === Seq("series", "__day", "__n"),
-          s"day-map input:\n$agg")
-      case other => fail(s"day-map Window is not over the aggregate:\n$other")
-    }
+    assert(qe.sparkPlan.collect { case w: WindowExec => w }.size === 1,
+      s"expected no Window besides the row index:\n${qe.sparkPlan}")
   }
 
   test("q146 page-cusum plan: the whole alarm path is ONE window pass") {
@@ -397,105 +340,26 @@ class ScaleSpec extends AnyFunSuite {
       s"TakeOrderedAndProject missing from bm25 plan:\n${plan.take(3000)}")
   }
 
-  /** The round-8 two-pass-rank lock: the global rank is computed by
-    * the ScalableRank range-sort + slice-offset passes (surfacing as
-    * a Scan ExistingRDD — the rank never appears as a plan Window),
-    * and every SinglePartition exchange left in the plan carries an
-    * AGGREGATE output (a bounded rollup / a 1-row total), never the
-    * growing relation itself. */
-  private def assertTwoPassRank(plan: String, label: String): Unit = {
-    assert(plan.contains("Scan ExistingRDD"),
-      s"$label: two-pass rank product missing from the plan:\n${plan.take(3000)}")
-    val lines = plan.split("\n")
-    lines.indices.filter(lines(_).contains("Exchange SinglePartition"))
-      .foreach { i =>
-        // aggregate either directly below or one operator down (a
-        // bounded rollup crossJoined with a 1-row broadcast total)
-        val below = lines.slice(i + 1, i + 3).mkString
-        assert(below.contains("HashAggregate"),
-          s"$label: a SinglePartition exchange carries a non-aggregate " +
-            s"relation (line $i):\n${lines.slice(i, i + 4).mkString("\n")}")
-      }
-  }
-
   test("q184 rfm plan: corpus collapses per-user, ranks are two-pass") {
-    // the three quintile ntiles must run on the user relation through
-    // the ScalableRank escape: no single-partition exchange of the
-    // user relation, no Window over the raw event stream
+    // the three quintile ntiles must run on the user relation: no
+    // Window over the raw event stream
     val plan = graft.ops.EventAnalytics.rfm(Tables.events(spark, sf))
       .queryExecution.executedPlan.toString
-    assertTwoPassRank(plan, "q184")
     // every Window sorts on a per-user metric — none on the raw stream
     assert(!plan.contains("windowspecdefinition(ts#"),
       s"a Window runs on the raw event stream:\n${plan.take(3000)}")
   }
 
-  test("routed global-rank queries plan: no single-partition corpus exchange") {
-    // the rest of the round-8 class: q239 (cumSum over |part|), q256
-    // (ntile over |customer|), q272 (ntile over |docs|), q185
-    // (row index over |user|), q132/q43 (per-type rank over the raw
-    // history — the q49 hot-key shape)
-    for (q <- Seq("q239_abc_pareto", "q256_ltv_deciles",
-        "q272_selection_curve", "q185_engagement_gini",
-        "q132_quantile_norm", "q43_window_dist")) {
-      val plan = SparkEntry.queries(q)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assertTwoPassRank(plan, q)
-    }
-  }
-
   test("q190 backtest plan: fully day-scoped, no single-partition window left") {
-    // round 10 removed the unpartitioned Window.orderBy(bar_ts): the
-    // rolling stats ride dayScoped, the LOCF carry splits at day
-    // boundaries, and the lag chain rides withPrevValues — every
-    // corpus-touching window must now partition by (pair, __day_idx)
-    // or (pair, __day); the only admissible SinglePartition exchanges
-    // feed the keys×days DAY MAPS (aggregate-sized), which all sit
-    // under a broadcast-exchange subtree
+    // round 10 removed the unpartitioned Window.orderBy(bar_ts): every
+    // corpus-touching window partitions by the pair
     val bars = graft.ops.MarketBars.bars(Tables.events(spark, sf),
       "event_type", "ts", "value")
     val plan = graft.ops.PairAnalytics.pairsBacktest(bars, "click", "view")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("__day_idx"),
-      s"day-scoped rolling stats expected:\n${plan.take(3000)}")
-    // no window spec may order the raw pair history without a day key
-    assert("windowspecdefinition\\(pair_name#\\d+, bar_ts#\\d+ ASC".r
-      .findFirstIn(plan).isEmpty,
-      s"per-pair full-history window found:\n${plan.take(3000)}")
     assert("windowspecdefinition\\(bar_ts#\\d+ ASC".r
       .findFirstIn(plan).isEmpty,
       s"unpartitioned window found:\n${plan.take(3000)}")
-  }
-
-  test("round-10 routed class: no per-key full-history window in any routed plan") {
-    // the round-9/10 punch list: every op that windowed
-    // (series|pair).orderBy(bar_ts|ts) over the corpus now rides the
-    // day-map escapes. Lock ALL of them at once — a regression in any
-    // one reintroduces the one-task-per-key ceiling
-    val routed = Seq(
-      "q126_candles", "q153_hurst", "q158_tick_bars", "q167_vpin",
-      "q177_runs_test", "q194_event_study", "q197_vol_signature",
-      "q200_risk_decomp", "q202_dow_anova", "q205_var_es",
-      "q247_streak_stats", "q248_arch_effect", "q253_hourly_vol",
-      "q254_tail_clustering", "q270_var_backtest", "q277_turning_points",
-      "q288_updown_beta", "q292_mean_excess", "q299_jarque_bera",
-      "q300_durbin_watson", "q302_market_beta", "q308_chow_test",
-      "q334_cornish_fisher",
-      "q85_rolling_corr", "q106_rolling_beta", "q122_ccf",
-      "q172_coint", "q223_half_life",
-      // round-10 widening queries that ride the same escapes
-      "q363_kpss", "q366_ou_fit", "q355_info_ratio",
-      "q380_transfer_entropy", "q381_epps", "q384_corr_structure",
-      "q387_dm_test", "q388_obv")
-    val fullHistory =
-      ("windowspecdefinition\\((series|pair_name)#\\d+, " +
-        "(bar_ts|ts)#\\d+ ASC").r
-    routed.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(fullHistory.findFirstIn(plan).isEmpty,
-        s"$name: per-key full-history window found:\n${plan.take(2000)}")
-    }
   }
 
   test("q191 returned-revenue plan: pushed flag filter, broadcast nation, TakeOrdered cut") {
@@ -693,57 +557,14 @@ class ScaleSpec extends AnyFunSuite {
       s"no per-leg union expected:\n${plan.take(3000)}")
   }
 
-  test("q49/q83/q101 plans: no per-key global window remains") {
-    // the three gate windows route through the ScalableWindow escapes
-    // (rangeScoped / day-split prefix max / dayScoped); the only
-    // allowed bare-key window is the keys×days day-map itself
-    val checks = Seq(
-      ("q49_range_window", "windowspecdefinition\\(event_type#\\d+, us#\\d+"),
-      ("q83_drawdown", "windowspecdefinition\\(event_type#\\d+, ts#\\d+"),
-      ("q101_ewma", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q78_gap_fill", "windowspecdefinition\\(event_type#\\d+, minute#\\d+"),
-      ("q133_rsi", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q233_bollinger", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q222_macd", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q151_acf", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q139_variance_ratio", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q250_horizon_moments", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"),
-      ("q241_vol_cone", "windowspecdefinition\\(series#\\d+, bar_ts#\\d+"))
-    checks.foreach { case (name, bad) =>
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(bad.r.findFirstIn(plan).isEmpty,
-        s"$name still windows by the bare key:\n${plan.take(3000)}")
-      // dayScoped's lazy checkpoint truncates lineage to a Scan
-      // ExistingRDD — when the full chain IS visible, the helper
-      // columns must be in it
-      if (!plan.contains("Scan ExistingRDD"))
-        assert(plan.contains("__day"),
-          s"$name should carry the day-scoped helper columns")
-    }
-  }
-
   test("worst-case skew: one key's whole history day-scopes into per-day tasks") {
-    // ALL rows share ONE key over 30 days — the global per-key window
-    // would sort 1500 rows in a single task no matter the cluster
-    // size; the day-scoped form's window-partition keys grow with the
-    // DAY count and each task holds at most rows/day + carry rows.
-    // This is the scale claim demonstrated, not documented.
+    // ALL rows share ONE key over 30 days: trailingStats must still
+    // equal the hand-written global per-key window
     import spark.implicits._
     val rows = for { d <- 1 to 30; i <- 1 to 50 } yield
       ("HOT", java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:$i%02d:00"),
         ((d * 37 + i * 17) % 1000).toDouble, (d * 100 + i).toLong)
     val ev = rows.toDF("event_type", "ts", "value", "event_id")
-    val aug = graft.ops.ScalableWindow.dayScoped(ev,
-      Seq("event_type"), Seq("ts", "event_id"), "ts", carryRows = 39)
-    val partKeys = aug.select(col("event_type"), col("__day_idx"))
-      .distinct().count()
-    assert(partKeys === 30L, "window-partition keys must equal the day count")
-    val maxTaskRows = aug.groupBy(col("event_type"), col("__day_idx"))
-      .count().agg(max(col("count"))).as[Long].head()
-    assert(maxTaskRows <= 50L + 39L,
-      s"a day partition holds day rows + carry only (got $maxTaskRows)")
-    // and the day-scoped stats still equal the global window on this shape
     val sw = graft.ops.ScalableWindow.trailingStats(ev,
       Seq("event_type"), Seq("ts", "event_id"), "ts", "value", w = 40)
       .select("event_id", "r_mean", "r_std", "n_win")
@@ -834,22 +655,6 @@ class ScaleSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!p400.contains("CartesianProduct"),
       s"q400: corpus cartesian appeared:\n${p400.take(2000)}")
-    // q394 and q399 ride ONE withSeqPrev/withPrevValues escape: no
-    // per-series full-history window may remain
-    val fullHistory =
-      "windowspecdefinition\\(series#\\d+, bar_ts#\\d+ ASC".r
-    for (q <- Seq("q394_periodogram", "q399_volume_volatility")) {
-      val plan = SparkEntry.queries(q)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(fullHistory.findFirstIn(plan).isEmpty,
-        s"$q: per-series full-history window found:\n${plan.take(2000)}")
-    }
-    // q398's global running sum rides the cumSum two-pass escape —
-    // a single-partition global Sort/Window would be the giveaway
-    val p398 = SparkEntry.queries("q398_concurrency")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!p398.contains("windowspecdefinition(us#"),
-      s"q398: global window over the sweep appeared:\n${p398.take(2000)}")
   }
 
   test("autoSaltedJoin: measures skew, salts above threshold, plain below") {
@@ -892,11 +697,9 @@ class ScaleSpec extends AnyFunSuite {
     val bars = (hot ++ Seq(("AAPL", ts0, 20.0)) ++ tail)
       .toDF("symbol", "timestamp", "close")
     val pairs = Seq(("MSFT", "AAPL"))
-    // the pipeline's join sits upstream of ScalableWindow.dayScoped's
-    // lazy localCheckpoint, which truncates the visible plan at a
-    // LogicalRDD — so the engagement contract here is Dist's decision
-    // trace (written at plan-construction time, when the guard
-    // measures the key), plus value equality of the full pipeline
+    // the engagement contract here is Dist's decision trace (written
+    // at plan-construction time, when the guard measures the key),
+    // plus value equality of the full pipeline
     val off = Pipeline.pairZScores(bars, pairs)
     assert(spark.conf.getOption(Dist.SkewGuardDecisionKey).isEmpty,
       "guard OFF must not measure or record anything")
