@@ -66,10 +66,8 @@ object Pipeline {
       .select(col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
         (log(col("close1")) - log(col("close2"))).as("spread"))
 
-    // the reference's per-pair trailing window (ScalableWindow's plain
-    // per-key window behind its helper-column contract; equal to
-    // PairAnalytics.rollingZScore, PropertySpec)
-    val z = graft.ops.ScalableWindow.rollingZScoreByDay(paired, windowRows, minWindow)
+    // the reference's per-pair trailing window
+    val z = PairAnalytics.rollingZScore(paired, windowRows, minWindow)
     // leg reshape with the sign flip (transform_data.py:156-180), for
     // every pair at once
     val symSpec = spec.select(col("pair_name"), col("sym1"), col("sym2"))

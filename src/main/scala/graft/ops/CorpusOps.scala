@@ -2160,11 +2160,10 @@ object CorpusOps {
     * rounds 12dp into DECIMAL moment folds; the rank runs through
     * [[graft.ops.ScalableRank]] on the (l12, doc_id) total order
     * (docs per source GROW with the corpus, so a per-source rank
-    * window would be a single-task pass — the value-order escape,
-    * not the day map, is the right route here); Φ is the shared A–S
+    * window would be a single-task pass); Φ is the shared A–S
     * erf polynomial; D and the 0.886/√n fence round 6dp.
     *
-    * Scale: one tokenize-count pass; the two-pass exact rank; one
+    * Scale: one tokenize-count pass; the exact rank window; one
     * moment aggregate; \|sources\| rows out. */
   def doclenLognormal(
       docs: DataFrame,

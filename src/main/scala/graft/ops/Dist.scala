@@ -103,8 +103,8 @@ object Dist {
     * (`plain:factor=…` / `salted:factor=…:buckets=…`) here each time
     * the guard is ON. This is the observable contract for pipeline
     * contexts where the salted join hides behind a lazy
-    * `localCheckpoint`'s LogicalRDD (ScalableWindow.dayScoped) and so
-    * never appears in a plan string. */
+    * `localCheckpoint`'s LogicalRDD and so never appears in a plan
+    * string. */
   val SkewGuardDecisionKey = "spark.graft.skewGuard.decision"
 
   /** The product-path face of [[autoSaltedJoin]]: a plain equi-join

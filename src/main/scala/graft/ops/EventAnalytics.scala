@@ -32,11 +32,8 @@ object EventAnalytics {
     *
     * Scale posture: the grid derives from a per-key 1-row aggregate
     * (map-side partial agg; grid explode is map-side); the per-minute
-    * aggregate is one hash shuffle on (key, minute); the LOCF window
-    * partitions by key only — the same hot-key hazard class as q49,
-    * with the same documented mitigation ([[ScalableWindow]]'s
-    * (key, day) + carry-in rewrite applies verbatim: last_value
-    * carries exactly one value across day boundaries).
+    * aggregate is one hash shuffle on (key, minute); the LOCF is one
+    * running last-non-null window per key.
     */
   def gapFillLocf(events: DataFrame): DataFrame = {
     val perMin = events
@@ -51,31 +48,12 @@ object EventAnalytics {
       .select(col("event_type"),
         explode(sequence(col("t0"), col("t1"),
           expr("INTERVAL 1 MINUTE"))).as("minute"))
-    // LOCF is a prefix fold that splits at day boundaries like the
-    // drawdown peak: the carry into day d is the last non-null value
-    // over ALL earlier days (a keys×days relation) and the within-day
-    // fill runs in (key, day) tasks — exact, because last-non-null is
-    // associative across the split; the bare-key window would put a
-    // type's whole minute grid in one task (the §7.4 hazard)
-    val filled = grid.join(perMin, Seq("event_type", "minute"), "left")
-      .withColumn("__day", to_date(col("minute")))
-      .localCheckpoint(eager = false)
-    val prevW = Window.partitionBy(col("event_type")).orderBy(col("__day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = filled.groupBy(col("event_type"), col("__day"))
-      .agg(max_by(col("v"), when(col("v").isNotNull, col("minute")))
-        .as("__dlast"))
-      .withColumn("__carry",
-        last(col("__dlast"), ignoreNulls = true).over(prevW))
-      .select(col("event_type"), col("__day"), col("__carry"))
-    val wDay = Window.partitionBy(col("event_type"), col("__day"))
-      .orderBy(col("minute"))
+    val run = Window.partitionBy(col("event_type")).orderBy(col("minute"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    filled.join(broadcast(carry), Seq("event_type", "__day"))
+    grid.join(perMin, Seq("event_type", "minute"), "left")
       .select(col("event_type"), col("minute"),
         coalesce(col("n_obs"), lit(0L)).as("n_obs"),
-        round(coalesce(last(col("v"), ignoreNulls = true).over(wDay),
-          col("__carry")), 4).as("value_locf"),
+        round(last(col("v"), ignoreNulls = true).over(run), 4).as("value_locf"),
         col("v").isNull.as("is_filled"))
   }
 
@@ -184,31 +162,13 @@ object EventAnalytics {
     *
     * Per-row `value - peak` is a single double subtraction (no
     * accumulation), so results are engine- and partitioning-exact
-    * before the final round. The window partitions by event_type only
-    * — same hot-key hazard class as q49/q78, with the same documented
-    * mitigation: running max carries exactly one value across day
-    * boundaries, so [[ScalableWindow]]'s (key, day) + carry-in rewrite
-    * applies verbatim at 100 TB. */
+    * before the final round. The running peak is one per-key window. */
   def drawdown(events: DataFrame): DataFrame = {
-    // The prefix max splits associatively across day boundaries:
-    // peak = greatest(max over all EARLIER days, within-day running
-    // max). The per-key unbounded window (whole history in one task —
-    // the SURVEY §7.4 hot-key hazard) becomes (key, day) tasks plus a
-    // keys×days carry relation, and every double is still the exact
-    // value the global window picks (max selects an actual element).
-    val ev = events.withColumn("__day", to_date(col("ts")))
-    val prevW = Window.partitionBy(col("event_type")).orderBy(col("__day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = ev.groupBy(col("event_type"), col("__day"))
-      .agg(max(col("value")).as("__dmax"))
-      .withColumn("__carry", max(col("__dmax")).over(prevW))
-      .select(col("event_type"), col("__day"), col("__carry"))
-    val wDay = Window.partitionBy(col("event_type"), col("__day"))
+    val run = Window.partitionBy(col("event_type"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev.join(broadcast(carry), Seq("event_type", "__day"))
-      .withColumn("peak",
-        greatest(max(col("value")).over(wDay), col("__carry")))
+    events
+      .withColumn("peak", max(col("value")).over(run))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         round(max(col("value")), 6).as("peak_value"),
@@ -687,8 +647,8 @@ object EventAnalytics {
     * 12 dp into DECIMAL(38,12); the correlation is the q248
     * shared-order double formula.
     *
-    * Scale: one type-keyed sort window (hot-key class, q39/q49
-    * escape applies) + one map-side-combined rollup. */
+    * Scale: one type-keyed sort window + one map-side-combined
+    * rollup. */
   def expFitPpcc(events: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec0 = DecimalType(38, 0)
@@ -779,10 +739,9 @@ object EventAnalytics {
     * Scale posture: the corpus collapses to ONE row per user first
     * (hash aggregate with map-side partials); every window after that
     * runs on the user relation. The three unpartitioned quintile
-    * ranks route through [[ScalableRank.ntile]] (two-pass exact
-    * offsets on range-partitioned slices) — at a billion users no
-    * single task ever sorts the user relation; the reference-of-day
-    * anchor is a 1-row broadcast, never a driver collect. */
+    * ranks route through [[ScalableRank.ntile]] (exact closed-form
+    * buckets); the reference-of-day anchor is a 1-row broadcast,
+    * never a driver collect. */
   def rfm(events: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val anchor = events.agg(max(to_date(col("ts"))).as("ref_d"))
@@ -835,9 +794,8 @@ object EventAnalytics {
     * partial-order-proof. Top-decile share counts the n÷10 (integer
     * division) heaviest users. Corpus collapses to one row per user
     * first; the ascending rank routes through
-    * [[ScalableRank.withRowIndex]] (two-pass exact offsets — no
-    * single-task sort of the user relation, and the total count rides
-    * the same tiny slice map); the final fold is 1 row. */
+    * [[ScalableRank.withRowIndex]] (row index and total count in one
+    * window pass); the final fold is 1 row. */
   def engagementGini(events: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
@@ -1186,11 +1144,10 @@ object EventAnalytics {
     * tests for). Significant NEGATIVE autocorrelation reads false —
     * check the sign of `gap_acf` itself for the two-sided question.
     *
-    * Scale: the gap chain and every stacked lag ride ONE
-    * [[ScalableWindow.dayScoped]] pass (carry maxLag + 1 — the
-    * acfBase chain-reach rule; gaps are null only at a series head,
-    * so filtered positions stay global); one map-side-combined
-    * (type, k) rollup; \|types\|·maxLag rows out. */
+    * Scale: the gap chain and every stacked lag ride ONE per-type
+    * window pass (gaps are null only at a series head, so filtered
+    * positions stay global); one map-side-combined (type, k) rollup;
+    * \|types\|·maxLag rows out. */
   def durationAcf(
       events: DataFrame,
       typeCol: String,
@@ -1202,17 +1159,15 @@ object EventAnalytics {
     val dec = DecimalType(38, 0)
     val base = events.select(col(typeCol).as("series"),
       col(tsCol).as("ts"), col(idCol).as("id"))
-    val aug = ScalableWindow.dayScoped(base, Seq("series"),
-      Seq("ts", "id"), "ts", maxLag + 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("ts"), col("id"))
     val gap = unix_micros(col("ts")) -
       lag(unix_micros(col("ts")), 1).over(w)
-    val withLags = aug
+    val withLags = base
       .withColumn("g", gap)
-      .select(col("series") +: col("g") +: col("__emit") +:
+      .select(col("series") +: col("g") +:
         (1 to maxLag).map(k => lag(col("g"), k).over(w).as(s"y$k")): _*)
-      .filter(col("__emit") && col("g").isNotNull)
+      .filter(col("g").isNotNull)
     val stacked = withLags
       .select(col("series"), col("g").as("x"),
         expr(s"stack($maxLag, " +
@@ -1434,8 +1389,8 @@ object EventAnalytics {
     *
     * Scale: the island build is the q180 per-user window (user-keyed,
     * bounded history per user); the sweep's GLOBAL running sum rides
-    * [[ScalableRank.cumSum]]'s two-pass escape (never a single-task
-    * sort); one day-keyed map-side rollup; |days| rows out. */
+    * [[ScalableRank.cumSum]] (one global window); one day-keyed
+    * map-side rollup; |days| rows out. */
   def sessionConcurrency(
       events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -1498,8 +1453,8 @@ object EventAnalytics {
     *
     * Scale: one [[ScalableWindow.withPrevValues]] pass for the gap
     * chain; the spectrum is a (type, gap) map-side-combined
-    * aggregate; the cumulative count rides [[ScalableRank.cumSum]]'s
-    * two-pass escape (no single-task sort); |types| rows out. */
+    * aggregate; the cumulative count rides [[ScalableRank.cumSum]];
+    * |types| rows out. */
   def weibullGaps(
       events: DataFrame,
       typeCol: String = "event_type",
@@ -1512,7 +1467,7 @@ object EventAnalytics {
         col(tsCol).as("ts"), col(idCol).as("id"))
       .withColumn("us", unix_micros(col("ts")))
     val gaps = ScalableWindow.withPrevValues(base, Seq("series"),
-        Seq("ts", "id"), "ts", Seq(("us", "pus")))
+        Seq("ts", "id"), Seq(("us", "pus")))
       .filter(col("pus").isNotNull)
       .select(col("series"), (col("us") - col("pus")).as("g"))
       .filter(col("g") > 0)

@@ -184,7 +184,7 @@ object MarketBars {
     val upper = col("high") - greatest(col("open"), col("close"))
     val lower = least(col("open"), col("close")) - col("low")
     ScalableWindow.withPrevValues(bars, Seq("series"), Seq("bar_ts"),
-        "bar_ts", Seq(("open", "prev_open"), ("close", "prev_close")))
+        Seq(("open", "prev_open"), ("close", "prev_close")))
       .select(col("series"), col("bar_ts"),
         col("open"), col("high"), col("low"), col("close"),
         when(col("prev_close").isNotNull &&
@@ -240,22 +240,14 @@ object MarketBars {
     * (oldest first) and fold it SEQUENTIALLY with the EWMA recurrence
     * `s' = s/2 + x` (Spark `aggregate`, DuckDB `list_reduce`) — the
     * identical op sequence on identical values, so numerator and
-    * denominator are bit-identical without decimal help. Per-series
-    * trailing frame = the q49/q83 hot-key class — the
-    * [[graft.ops.ScalableWindow]] (key, day) + carry-in rewrite
-    * applies unchanged when one series outgrows a partition. */
+    * denominator are bit-identical without decimal help. One
+    * per-series trailing frame. */
   def ewma(bars: DataFrame, window: Int = 20): DataFrame = {
     require(window >= 1, s"window must be >= 1 (got $window)")
-    // (series, day)-scoped frame with carry-in (ScalableWindow): the
-    // carry rebuilds each frame's exact contents AND order, so the
-    // sequential halving fold below is bit-identical to the global
-    // per-series window while a hot series parallelizes ∝ days
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", math.max(1, window - 1))
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
       .rowsBetween(-(window - 1), 0)
-    aug
+    bars
       .withColumn("cs", collect_list(col("close")).over(w))
       .withColumn("n", size(col("cs")))
       // fold oldest->newest: after the last step each element x at lag
@@ -264,7 +256,6 @@ object MarketBars {
         aggregate(col("cs"), lit(0.0), (s, x) => s / 2.0 + x))
       .withColumn("den",
         aggregate(col("cs"), lit(0.0), (s, _) => s / 2.0 + 1.0))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"), col("n"),
         round(col("num") / col("den"), 6).as("ewma"))
   }
@@ -282,21 +273,15 @@ object MarketBars {
     * floors at 6dp. Warm-up rows (< period observed changes) emit a
     * null RSI; a flat window (G+L = 0) emits the 50.0 midpoint.
     *
-    * Scale: per-series trailing frame = the q49/q83 hot-key class;
-    * the [[graft.ops.ScalableWindow]] (key, day) + carry-in rewrite
-    * applies unchanged when one series outgrows a partition. */
+    * Scale: one per-series trailing frame. */
   def rsi(bars: DataFrame, period: Int = 14): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped with a `period`-row carry (lag 1 + the
-    // period-1 frame): exact global semantics, day-parallel tasks
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
     val q = lit(100.0) * col("g").cast(DoubleType) /
       (col("g") + col("l")).cast(DoubleType)
-    aug
+    bars
       .withColumn("d6",
         floor((col("close") - lag(col("close"), 1).over(w)) * lit(1e6) +
           lit(0.5)).cast("long"))
@@ -306,7 +291,6 @@ object MarketBars {
         sum(when(col("d6") > 0, col("d6")).otherwise(0L)).over(frame))
       .withColumn("l",
         sum(when(col("d6") < 0, -col("d6")).otherwise(0L)).over(frame))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         when(col("nd") === period,
           when(col("g") + col("l") > 0,
@@ -329,32 +313,24 @@ object MarketBars {
     * DECIMAL-exact (n, Σx, Σx²) in ONE explicit double op order
     * shared with the oracle. The ratio rounds 6dp at the end.
     *
-    * Scale: one per-series window pass (the q49/q83 hot-key class,
-    * same ScalableWindow escape) feeding one map-side-combined
+    * Scale: one per-series window pass feeding one map-side-combined
     * per-series aggregate — output is |series| rows. */
   def varianceRatio(bars: DataFrame, k: Int = 4): DataFrame = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
-    // FUSED two-layer day scope (ScalableWindow.laggedScope): the
-    // validity filter between the lag and the k-frame DROPS rows, so
-    // frame positions must count FILTERED rows — the fused form keeps
-    // that exact (lag via the day map's prev-day last close; tail
-    // rank in the same window pass) with one corpus sort instead of
-    // the two-dayScoped four.
-    val aug2 = ScalableWindow.laggedScope(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", "close", "prev_c", math.max(1, k - 1),
-      valid = col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-      slim = _.select(col("series"), col("bar_ts"),
-        floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"),
-        col("__day_idx"), col("__rev")))
-    val wk = Window.partitionBy(col("series"), col("__day_idx"))
+    // the validity filter between the lag and the k-frame DROPS rows,
+    // so frame positions count FILTERED rows (ScalableWindow.laggedScope)
+    val wk = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts")).rowsBetween(-(k - 1), 0)
-    aug2
+    ScalableWindow.laggedScope(bars, Seq("series"), Seq("bar_ts"),
+        "close", "prev_c",
+        col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
+      .select(col("series"), col("bar_ts"),
+        floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
+          .cast("long").as("r8"))
       .withColumn("nk", count(lit(1)).over(wk))
       .withColumn("rk", sum(col("r8")).over(wk))
-      .filter(col("__emit"))
       .groupBy(col("series"))
       .agg(
         count(lit(1)).as("n_rets"),
@@ -388,39 +364,23 @@ object MarketBars {
     * once at emission (C'/n scaled back), floored 6dp. Ties on
     * |C'| break to the earliest bar — total order in both engines.
     *
-    * Scale: one per-series window pass (prefix sum + row_number +
-    * totals share the sort; q49 hot-key class, ScalableWindow escape
-    * applies) and a 1-row-per-series argmax filter. */
+    * Scale: one per-series window pass (prefix sum, row_number and
+    * totals) and a 1-row-per-series argmax aggregate. */
   def cusum(bars: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
-    // Day-split prefix machinery: the running index and running sum
-    // decompose as (exclusive prior-day offsets from the tiny day
-    // map) + (within-day prefix) — per-task rows bounded by day size,
-    // exact integers throughout. The argmax runs as max_by inside the
-    // per-series aggregate (the q188 argmax-in-aggregate rule), so no
-    // per-key rank sort remains either.
-    val x = bars
+    // The argmax runs as max_by inside the per-series aggregate (the
+    // q188 argmax-in-aggregate rule), so no per-key rank sort remains.
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val run = w.rowsBetween(Window.unboundedPreceding, 0)
+    val all = Window.partitionBy(col("series"))
+    bars
       .select(col("series"), col("bar_ts"),
         floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("x6"))
-      .withColumn("__day", to_date(col("bar_ts")))
-      .localCheckpoint(eager = false)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val dayMap = x.groupBy(col("series"), col("__day"))
-      .agg(count(lit(1)).as("__dn"), sum(col("x6")).as("__ds"))
-      .withColumn("__coff", sum(col("__dn")).over(idxW) - col("__dn"))
-      .withColumn("__soff", sum(col("__ds")).over(idxW) - col("__ds"))
-      .localCheckpoint(eager = false)
-    val tot = dayMap.groupBy(col("series").as("__ts"))
-      .agg(sum(col("__dn")).as("n"), sum(col("__ds")).as("s"))
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val wRunDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    x.join(broadcast(dayMap.select(col("series"), col("__day"),
-        col("__coff"), col("__soff"))), Seq("series", "__day"))
-      .join(broadcast(tot), col("series") === col("__ts"))
-      .withColumn("i", col("__coff") + row_number().over(wDay))
-      .withColumn("p", col("__soff") + sum(col("x6")).over(wRunDay))
+      .withColumn("i", row_number().over(w).cast("long"))
+      .withColumn("p", sum(col("x6")).over(run))
+      .withColumn("n", count(lit(1)).over(all))
+      .withColumn("s", sum(col("x6")).over(all))
       .withColumn("absc",
         abs(col("n").cast(dec) * col("p").cast(dec) -
           col("i").cast(dec) * col("s").cast(dec)))
@@ -451,42 +411,21 @@ object MarketBars {
     *
     * `baseline` carries (series, mu0); at scale it is a per-key
     * relation orders of magnitude below the bar store (broadcast).
-    * The path window is the q49 hot-key class (ScalableWindow escape
-    * applies). */
+    * The path is one per-series running window. */
   def pageCusumPath(
       bars: DataFrame, baseline: DataFrame, slack: Double): DataFrame = {
     val k6 = math.floor(slack * 1e6 + 0.5).toLong
-    // day-split prefixes (the q144 rule): the running sum decomposes
-    // as prior-day offset + within-day prefix, and the running min of
-    // the prefix as min(prior days' prefix-min, offset + within-day
-    // prefix-min) — exact integers, per-task rows bounded by day size
-    val x = bars.join(broadcast(baseline), "series")
+    // S_i = P_i − min(0, min_{j≤i} P_j): a running sum and a running
+    // min over it, both exact integers
+    val run = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    bars.join(broadcast(baseline), "series")
       .select(col("series"), col("bar_ts"),
         (floor(col("close") * lit(1e6) + lit(0.5)).cast("long") -
           floor(col("mu0") * lit(1e6) + lit(0.5)).cast("long") -
           lit(k6)).as("d6"))
-      .withColumn("__day", to_date(col("bar_ts")))
-      .localCheckpoint(eager = false)
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val wRunDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    // tiny day map: per-day sum + per-day min of the WITHIN-day prefix
-    val dayAgg = x
-      .withColumn("__wp", sum(col("d6")).over(wRunDay))
-      .groupBy(col("series"), col("__day"))
-      .agg(sum(col("d6")).as("__dsum"), min(col("__wp")).as("__dmin"))
-    val dayMap = dayAgg
-      .withColumn("__soff", sum(col("__dsum")).over(idxW) - col("__dsum"))
-      .withColumn("__moff",
-        min(col("__soff") + col("__dmin")).over(
-          idxW.rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("series"), col("__day"), col("__soff"), col("__moff"))
-    x.join(broadcast(dayMap), Seq("series", "__day"))
-      .withColumn("p", col("__soff") + sum(col("d6")).over(wRunDay))
-      .withColumn("m",
-        least(coalesce(col("__moff"), col("p")),
-          min(col("p")).over(wRunDay), lit(0L)))
+      .withColumn("p", sum(col("d6")).over(run))
+      .withColumn("m", least(min(col("p")).over(run), lit(0L)))
       .select(col("series"), col("bar_ts"), (col("p") - col("m")).as("s6"))
   }
 
@@ -584,9 +523,8 @@ object MarketBars {
     * folds DECIMAL-exact (n, Σx, Σy, Σxy, Σx², Σy²) finished in the
     * q122 double op order. Cells with a degenerate variance emit null.
     *
-    * Scale: one per-series window pass (q49 hot-key class,
-    * ScalableWindow escape applies) + one map-side-combined aggregate
-    * on (series, k) — output is |series|·maxLag rows. */
+    * Scale: one per-series window pass + one map-side-combined
+    * aggregate on (series, k) — output is |series|·maxLag rows. */
   def acf(bars: DataFrame, maxLag: Int = 5): DataFrame =
     acfBase(bars, maxLag, useAbs = false)
 
@@ -598,26 +536,22 @@ object MarketBars {
   private def acfBase(
       bars: DataFrame, maxLag: Int, useAbs: Boolean): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1 (got $maxLag)")
-    // (series, day)-scoped, carry = maxLag+1: the Δ lag needs 1 and
-    // the deepest stacked lag needs maxLag more. d6 is null ONLY at a
-    // partition head (no mid-stream drops), so the filtered relation
-    // keeps global row positions and every stacked lag is exact —
-    // same chain-reach rule as the indicator panel.
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", maxLag + 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    // d6 is null ONLY at a series head (no mid-stream drops), so the
+    // filtered relation keeps row positions and every stacked lag
+    // equals the lag over all bars
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
     val rawD6 = floor((col("close") - lag(col("close"), 1).over(w)) *
       lit(1e6) + lit(0.5)).cast("long")
-    val d = aug
+    val d = bars
       .withColumn("d6", if (useAbs) abs(rawD6) else rawD6)
       .filter(col("d6").isNotNull)
     val withLags = d.select(
-      col("series") +: col("bar_ts") +: col("d6") +: col("__emit") +:
+      col("series") +: col("bar_ts") +: col("d6") +:
         (1 to maxLag).map(k => lag(col("d6"), k).over(w).as(s"y$k")): _*)
-    val stacked = withLags.filter(col("__emit"))
+    val stacked = withLags
       .select(col("series"), col("d6").as("x"),
       expr(s"stack($maxLag, " +
         (1 to maxLag).map(k => s"$k, y$k").mkString(", ") + ") as (k, y)"))
@@ -653,8 +587,8 @@ object MarketBars {
     * runs in one shared double op order and rounds 6dp; degenerate
     * denominators (|r₁| = 1 chains) null the deeper lags.
     *
-    * Scale: acf's day-scoped machinery verbatim; the pivot and
-    * recursion live on |series| rows. */
+    * Scale: acf's window pass verbatim; the pivot and recursion live
+    * on |series| rows. */
   def pacf(bars: DataFrame): DataFrame = {
     val a = acf(bars, maxLag = 3)
     val piv = a.groupBy(col("series")).agg(
@@ -762,35 +696,32 @@ object MarketBars {
     * companion to q153's rescaled-range Hurst.
     *
     * Determinism: the profile is an EXACT integer cumsum (r8 longs)
-    * through the [[ScalableRank]] two-pass escape — never a
-    * single-task prefix; per-window RSS forms from DECIMAL integer
+    * through [[ScalableRank.withIndexAndCumSum]]; per-window RSS forms from DECIMAL integer
     * moments with the index-sum constants s(s−1)/2, s(s−1)(2s−1)/6
     * in one shared double op order, clamps at 0 (roundoff can land
     * −ε), rounds 6dp, DECIMAL-folds per scale; F(s) and the 3-point
     * log-log slope (12dp-rounded logs, DECIMAL sums — the zipfSlope
     * machinery) round 6dp.
     *
-    * Scale: one balanced two-pass index+prefix; the scale explode is
+    * Scale: one per-series index+prefix window; the scale explode is
     * a 3× map-side fan-out; everything after lives on
     * |series|·scales·windows aggregate rows. */
   def dfa(bars: DataFrame, scales: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 2)
-    val rr = aug
+    val rr = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
-      .filter(col("__emit") && col("r8").isNotNull)
+      .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
-    // r11 fusion: index + profile prefix-sum in ONE two-pass escape
-    // (was withRowIndex then cumSum — same sort twice)
+    // index + profile prefix-sum in ONE window pass (withRowIndex
+    // then cumSum would sort twice)
     val prof = ScalableRank.withIndexAndCumSum(rr, Seq("series"),
         Seq(col("bar_ts")), col("r8").cast(dec), "yd", "t", "nn")
       .withColumn("y", col("yd").cast("long"))
@@ -854,7 +785,7 @@ object MarketBars {
 
   /** Binned mutual information between series-pair returns: each
     * series' r8 returns quintile independently (exact global ntile
-    * through the [[ScalableRank]] escape, (r8, bar_ts) total order),
+    * through [[ScalableRank.ntile]], (r8, bar_ts) total order),
     * the aligned quintile pairs form a 5×5 joint histogram, and
     * MI = Σ p_ij·ln(p_ij/(p_i·p_j)) with NMI = MI/min(H_a, H_b) —
     * the NONLINEAR dependence read where q85/q259's Pearson sees
@@ -865,23 +796,21 @@ object MarketBars {
     * DECIMAL(38,12); MI, H, NMI finish in one shared double op order
     * and round 6dp.
     *
-    * Scale: one two-pass ntile per series family, one bar_ts-keyed
+    * Scale: one per-series ntile window, one bar_ts-keyed
     * pair join (|series| rows per key), joint cells bounded by
     * |series|²·buckets². */
   def returnMi(bars: DataFrame, buckets: Int = 5): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 2)
-    val rr = aug
+    val rr = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
-      .filter(col("__emit") && col("r8").isNotNull)
+      .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
     val binned = ScalableRank.ntile(rr, Seq("series"),
         Seq(col("r8"), col("bar_ts")), buckets, "qb")
@@ -947,8 +876,8 @@ object MarketBars {
     * cointegration.
     *
     * Determinism: the return chain is the q250-style pre-filtered r8
-    * with its lag, day-scoped (ScalableWindow, carry 3 — chain reach
-    * 2); the nine regression moments fold as DECIMAL(38,0) integer
+    * with its lag off one per-series window; the nine regression
+    * moments fold as DECIMAL(38,0) integer
     * products (the q332 machinery); both RSS forms and F run in one
     * shared double op order and round 6dp. Degenerate pairs (n < 4,
     * collinear lags, zero unrestricted residual) null out.
@@ -960,18 +889,16 @@ object MarketBars {
   def granger(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 3)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val rr = aug
+    val rr = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
       .withColumn("rl8", lag(col("r8"), 1).over(w))
-      .filter(col("__emit") && col("r8").isNotNull && col("rl8").isNotNull)
+      .filter(col("r8").isNotNull && col("rl8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"), col("rl8"))
       .localCheckpoint(eager = false) // effect leg + cause leg
     val y = rr.select(col("series").as("effect"), col("bar_ts"),
@@ -1034,31 +961,27 @@ object MarketBars {
     * before the DECIMAL moment and lag-correlation folds; outputs
     * round 6dp.
     *
-    * Scale: the (k+1)-deep lag chain runs day-scoped (carry k+2 —
-    * the acfBase rule), one moment aggregate after; |series| rows
-    * out. */
+    * Scale: the (k+1)-deep lag chain is one per-series window pass,
+    * one moment aggregate after; |series| rows out. */
   def fracDiff(bars: DataFrame, d: Double = 0.4, k: Int = 20): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec6 = DecimalType(28, 6)
     val dec12 = DecimalType(38, 12)
     val ws = fracDiffWeights(d, k)
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", k + 2)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val withP = aug
+    val withP = bars.filter(col("close") > 0)
       .withColumn("p8", floor(log(col("close")) * lit(1e8) + lit(0.5))
         .cast("long"))
     val lagged = withP.select(
-      col("series") +: col("__emit") +:
-        (0 to k + 1).map(j =>
-          (if (j == 0) col("p8") else lag(col("p8"), j).over(w))
+      col("series") +: (0 to k + 1).map(j =>
+        (if (j == 0) col("p8") else lag(col("p8"), j).over(w))
             .as(s"y$j")): _*)
     def conv(off: Int) = round(
       (0 to k).map(j => lit(ws(j)) * dbl(col(s"y${j + off}")))
         .reduceLeft(_ + _) / lit(1e8), 6)
     val x = lagged
-      .filter(col("__emit") && col(s"y$k").isNotNull)
+      .filter(col(s"y$k").isNotNull)
       .select(col("series"), conv(0).as("x"),
         when(col(s"y${k + 1}").isNotNull, conv(1)).as("xp"))
     val agg = x.groupBy(col("series"))
@@ -1225,24 +1148,20 @@ object MarketBars {
     * probabilities are integer ratios; entropy terms round 12dp and
     * fold as DECIMAL; outputs round 6dp.
     *
-    * Scale: one day-scoped lead chain (carry 3), one
-    * (series, pattern) aggregate — ≤ 6 cells per series. */
+    * Scale: one per-series lag chain, one (series, pattern)
+    * aggregate — ≤ 6 cells per series. */
   def permEntropy(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", 3)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    // LAG-anchored triples (c_{t−2}, c_{t−1}, c_t): the day-scope
-    // carry covers trailing rows only, so a lead() form would drop
-    // every day's last two triples — lags keep cross-day continuity
-    val tri = aug
+    // LAG-anchored triples (c_{t−2}, c_{t−1}, c_t)
+    val tri = bars
       .withColumn("c2", floor(col("close") * lit(1e6) + lit(0.5))
         .cast("long"))
       .withColumn("c1", lag(col("c2"), 1).over(w))
       .withColumn("c0", lag(col("c2"), 2).over(w))
-      .filter(col("__emit") && col("c0").isNotNull)
+      .filter(col("c0").isNotNull)
       // tie → earlier index counts as smaller: <= on (value) is
       // exactly the (value, index) lexicographic order
       .withColumn("pat",
@@ -1280,17 +1199,15 @@ object MarketBars {
   def gumbelBlockMaxima(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 2)
-    val blocks = aug
+    val blocks = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
-      .filter(col("__emit") && col("r8").isNotNull)
+      .filter(col("r8").isNotNull)
       .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
       .agg(max(abs(col("r8"))).as("m"))
     val agg = blocks.groupBy(col("series"))
@@ -1628,9 +1545,8 @@ object MarketBars {
     *
     * Scale: the per-series row index is the one inherently sequential
     * step (information bars are path-dependent by definition); it
-    * routes through [[ScalableWindow.withSeqIndex]] — day-map
-    * exclusive offsets + within-day rank, (series, day) tasks, never
-    * a single-task per-series sort. Everything after is a
+    * routes through [[ScalableWindow.withSeqIndex]], one per-series
+    * window. Everything after is a
     * map-side-combined hash aggregate on the growing (series, bar_id)
     * key. */
   def tickBars(
@@ -1643,8 +1559,7 @@ object MarketBars {
     require(ticksPerBar >= 1, s"ticksPerBar must be >= 1 (got $ticksPerBar)")
     val base = df.select(col(seriesCol).as("series"), col(tsCol).as("ts"),
       col(valueCol).as("v"), col(idCol).as("id"))
-    ScalableWindow.withSeqIndex(base, Seq("series"), Seq("ts", "id"),
-        "ts", "__grn")
+    ScalableWindow.withSeqIndex(base, Seq("series"), Seq("ts", "id"), "__grn")
       .withColumn("rn", (col("__grn") - 1).cast("long"))
       .drop("__grn")
       .withColumn("bar_id", (col("rn") / ticksPerBar).cast("long"))
@@ -1678,22 +1593,21 @@ object MarketBars {
     * usable cells emit null H.
     *
     * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * and the filtered row index through [[ScalableWindow.withSeqIndex]]
-    * ((series, day) tasks — no per-series full-history sort), then a
-    * 4× explode and one map-side-combined aggregate on (series, k,
+    * and the filtered row index through [[ScalableWindow.withSeqIndex]],
+    * then a 4× explode and one map-side-combined aggregate on (series, k,
     * block) — growing keys throughout; output is |series| rows. */
   def hurst(bars: DataFrame, ks: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1), s"ks must be >= 1 (got $ks)")
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
     val rets0 = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "prev_c")))
+        Seq("bar_ts"), Seq(("close", "prev_c")))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
       .select(col("series"), col("bar_ts"),
         floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
           .cast("long").as("r8"))
     val rets = ScalableWindow.withSeqIndex(rets0, Seq("series"),
-        Seq("bar_ts"), "bar_ts", "__grn")
+        Seq("bar_ts"), "__grn")
       .withColumn("rn", col("__grn") - 1)
       .drop("__grn")
     val cells = rets
@@ -1748,31 +1662,23 @@ object MarketBars {
     * factors passed as exact double literals shared with the oracle;
     * every comparison is on bit-identical doubles.
     *
-    * Scale: the lead arrays come out of a
-    * [[ScalableWindow.dayScopedLead]] forward scope — (series, day)
-    * tasks with the first `horizon` rows of later days carried in,
-    * never a series' whole history in one sort; everything after is
-    * map-side. */
+    * Scale: the lead arrays come out of one per-series window;
+    * everything after is map-side. */
   def tripleBarrier(
       bars: DataFrame,
       horizon: Int = 12,
       upFactor: Double = 1.005,
       dnFactor: Double = 0.995): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1 (got $horizon)")
-    val aug = ScalableWindow.dayScopedLead(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", horizon)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val hs = array((1 to horizon).map(j => lead(col("high"), j).over(w)): _*)
     val ls = array((1 to horizon).map(j => lead(col("low"), j).over(w)): _*)
     def hAt(i: Column) = element_at(col("hs"), i)
     def lAt(i: Column) = element_at(col("ls"), i)
-    aug
-      // lead arrays FIRST (over the carried partition), THEN the
-      // emit filter drops the non-emitting copies
+    bars
       .select(col("series"), col("bar_ts"), col("close"),
-        hs.as("hs"), ls.as("ls"), col("__emit"))
-      .filter(col("__emit")).drop("__emit")
+        hs.as("hs"), ls.as("ls"))
       .withColumn("up", col("close") * lit(upFactor))
       .withColumn("dn", col("close") * lit(dnFactor))
       .withColumn("touch",
@@ -1852,13 +1758,10 @@ object MarketBars {
     * imbalances floor to 1e-6 longs, and the trailing mean floors to
     * a whole micro from exact long sums.
     *
-    * Scale: fully day-scoped — the row index and Δ chain via ONE
-    * fused [[ScalableWindow.withSeqPrev]] pass, the zeros-inherit LOCF via
-    * the q78 day-split (within-day fill + prior-day last-sign carry
-    * on the keys×days map — last-non-null is associative across the
-    * split), then a growing (series, bucket) aggregate and the
-    * trailing bucket window through [[ScalableWindow.dayScoped]]
-    * keyed by each bucket's start timestamp. */
+    * Scale: the row index and Δ chain via ONE fused
+    * [[ScalableWindow.withSeqPrev]] pass, the zeros-inherit LOCF as a
+    * running last-non-null window, then a growing (series, bucket)
+    * aggregate and the trailing bucket window. */
   def vpin(
       df: DataFrame,
       seriesCol: String,
@@ -1873,51 +1776,29 @@ object MarketBars {
     val base = df.select(col(seriesCol).as("series"), col(tsCol).as("ts"),
       col(valueCol).as("v"), col(idCol).as("id"))
     val lagged = ScalableWindow.withSeqPrev(base, Seq("series"),
-        Seq("ts", "id"), "ts", "__grn", Seq(("v", "__pv")))
+        Seq("ts", "id"), "__grn", Seq(("v", "__pv")))
       .withColumn("rn", (col("__grn") - 1).cast("long"))
       .withColumn("d6",
         floor((col("v") - col("__pv")) * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("sgn", when(col("d6") > 0, 1).when(col("d6") < 0, -1))
-      .withColumn("__day", to_date(col("ts")))
-      .localCheckpoint(eager = false)
-    // zeros-inherit LOCF, day-split (the q78 rule): carry into a day =
-    // last non-null sign over ALL earlier days, off the keys×days map
-    val prevW = Window.partitionBy(col("series")).orderBy(col("__day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = lagged.groupBy(col("series"), col("__day"))
-      .agg(max_by(col("sgn"),
-        when(col("sgn").isNotNull, struct(col("ts"), col("id"))))
-        .as("__dlast"))
-      .withColumn("__carry",
-        last(col("__dlast"), ignoreNulls = true).over(prevW))
-      .select(col("series"), col("__day"), col("__carry"))
-    val runDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("ts"), col("id"))
+    val run = Window.partitionBy(col("series")).orderBy(col("ts"), col("id"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val signed = lagged.join(broadcast(carry), Seq("series", "__day"))
+    val buckets = lagged
       .withColumn("tick_sign",
-        coalesce(last(col("sgn"), ignoreNulls = true).over(runDay),
-          col("__carry"), lit(0)))
-    val buckets = signed
+        coalesce(last(col("sgn"), ignoreNulls = true).over(run), lit(0)))
       .groupBy(col("series"),
         (col("rn") / ticksPerBucket).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_ticks"),
-        min(col("ts")).as("__bts"),
         sum(when(col("tick_sign") === 1, 1L).otherwise(0L)).as("buys"),
         sum(when(col("tick_sign") === -1, 1L).otherwise(0L)).as("sells"))
       .withColumn("imb6",
         floor(abs(col("buys") - col("sells")).cast(DoubleType) /
           dbl(col("n_ticks")) * lit(1e6) + lit(0.5)).cast("long"))
-    // trailing bucket frame day-scoped by bucket START time (buckets
-    // are sequential, so bucket order == start-ts order within a key)
-    val aug = ScalableWindow.dayScoped(buckets, Seq("series"),
-      Seq("bucket"), "__bts", nBuckets - 1)
-    val bw = Window.partitionBy(col("series"), col("__day_idx"))
+    val bw = Window.partitionBy(col("series"))
       .orderBy(col("bucket")).rowsBetween(-(nBuckets - 1), 0)
-    aug
+    buckets
       .withColumn("nb", count(lit(1)).over(bw))
       .withColumn("s6", sum(col("imb6")).over(bw))
-      .filter(col("__emit"))
       .select(col("series"), col("bucket"), col("n_ticks"),
         col("buys"), col("sells"),
         (col("imb6") / lit(1e6)).as("imbalance"),
@@ -1938,56 +1819,18 @@ object MarketBars {
     * island ids stay aligned across engines by construction.
     *
     * Scale: one per-series window pass (running max + island id share
-    * the sort; q49 hot-key class, ScalableWindow escape), then two
-    * map-side-combined growing-key aggregates. */
+    * the sort), then two map-side-combined growing-key aggregates. */
   def underwater(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
-    // day-split islands: runmax = greatest(prior-day max, within-day
-    // running max) [the q83 rule]; each day-head's break compares
-    // against the PRIOR day's last flag (carried on the keys×days day
-    // map); grp = prior-day break-count offset + within-day prefix
-    // [the q144 rule] — island ids equal the global ones exactly, so
-    // the spells aggregate is unchanged
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val runDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val x = bars.withColumn("__day", to_date(col("bar_ts")))
-      .localCheckpoint(eager = false)
-    val dayMax = x.groupBy(col("series"), col("__day"))
-      .agg(max(col("close")).as("__dmax"))
-      .withColumn("__mcarry",
-        max(col("__dmax")).over(idxW.rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("series"), col("__day"), col("__mcarry"))
-    val flagged0 = x.join(broadcast(dayMax), Seq("series", "__day"))
-      .withColumn("runmax",
-        greatest(max(col("close")).over(runDay), col("__mcarry")))
-      .withColumn("under", (col("close") < col("runmax")).cast("int"))
-      .withColumn("__head", lag(col("under"), 1).over(wDay).isNull)
-      .withColumn("__ibrk",
-        when(!col("__head") &&
-          col("under") =!= lag(col("under"), 1).over(wDay), 1L)
-          .otherwise(0L))
-      .localCheckpoint(eager = false)
-    // keys×days break map: the head break needs the PRIOR day's last
-    // flag; offsets are exclusive prefix sums of per-day break counts
-    val dayBrk = flagged0.groupBy(col("series"), col("__day"))
-      .agg(max_by(col("under"), col("bar_ts")).as("__last_u"),
-        min_by(col("under"), col("bar_ts")).as("__first_u"),
-        sum(col("__ibrk")).as("__nbrk"))
-      .withColumn("__prev_last",
-        lag(col("__last_u"), 1).over(idxW))
-      .withColumn("__headbrk",
-        when(col("__prev_last").isNull ||
-          col("__first_u") =!= col("__prev_last"), 1L).otherwise(0L))
-      .withColumn("__goff",
-        sum(col("__nbrk") + col("__headbrk")).over(idxW) -
-          (col("__nbrk") + col("__headbrk")))
-      .select(col("series"), col("__day"), col("__headbrk"), col("__goff"))
-    val flagged = flagged0.join(broadcast(dayBrk), Seq("series", "__day"))
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val run = w.rowsBetween(Window.unboundedPreceding, 0)
+    val prevU = lag(col("under"), 1).over(w)
+    val flagged = bars
+      .withColumn("under",
+        (col("close") < max(col("close")).over(run)).cast("int"))
       .withColumn("brk",
-        when(col("__head"), col("__headbrk")).otherwise(col("__ibrk")))
-      .withColumn("grp", col("__goff") + sum(col("brk")).over(runDay))
+        when(prevU.isNull || col("under") =!= prevU, 1L).otherwise(0L))
+      .withColumn("grp", sum(col("brk")).over(run))
     val spells = flagged
       .groupBy(col("series"), col("grp"))
       .agg(max(col("under")).as("under"), count(lit(1)).as("len"))
@@ -2053,12 +1896,12 @@ object MarketBars {
     *
     * Scale: two chained [[ScalableWindow.withPrevValues]] passes —
     * the Δ chain over all bars, then the break flags over the
-    * FILTERED sign sequence — both (series, day) tasks; one
-    * map-side-combined rollup — output |series| rows. */
+    * FILTERED sign sequence; one map-side-combined rollup — output
+    * |series| rows. */
   def runsTest(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val signs = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "__pc")))
+        Seq("bar_ts"), Seq(("close", "__pc")))
       .withColumn("d6",
         floor((col("close") - col("__pc")) * lit(1e6) + lit(0.5))
           .cast("long"))
@@ -2066,10 +1909,9 @@ object MarketBars {
       .withColumn("sgn", when(col("d6") > 0, 1).otherwise(-1))
       .select(col("series"), col("bar_ts"), col("sgn"))
     // second lag over the FILTERED sign sequence (a run count is
-    // sum of sign-change flags — no prefix ids needed); zero-change
-    // days vanish from the day map, which the escape handles
+    // sum of sign-change flags — no prefix ids needed)
     val runs = ScalableWindow.withPrevValues(signs, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("sgn", "__psgn")))
+        Seq("bar_ts"), Seq(("sgn", "__psgn")))
       .withColumn("brk",
         when(col("__psgn").isNull ||
           col("sgn") =!= col("__psgn"), 1L).otherwise(0L))
@@ -2096,42 +1938,15 @@ object MarketBars {
     * All-integer arithmetic except the mean run length, which floors
     * at 6dp from an exact long/long quotient (no library round()).
     * Two shuffles on growing keys — (series, island) then series —
-    * both map-side-combined; the island-id window is the per-series
-    * frame class with the usual ScalableWindow escape hatch. */
+    * both map-side-combined, after one per-series island-id window. */
   def staleRuns(bars: DataFrame, staleLen: Int = 3): DataFrame = {
-    // day-split islands (the q168 rule): each day-head's new-run flag
-    // compares against the PRIOR day's last close carried on the
-    // keys×days map; island ids get exclusive prior-day break-count
-    // offsets, so they equal the global ids exactly
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val runDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val x = bars.withColumn("__day", to_date(col("bar_ts")))
-      .localCheckpoint(eager = false)
-    val flagged0 = x
-      .withColumn("__head", lag(col("close"), 1).over(wDay).isNull)
-      .withColumn("__ibrk",
-        when(!col("__head") &&
-          col("close") =!= lag(col("close"), 1).over(wDay), 1L)
-          .otherwise(0L))
-      .localCheckpoint(eager = false)
-    val dayBrk = flagged0.groupBy(col("series"), col("__day"))
-      .agg(max_by(col("close"), col("bar_ts")).as("__last_c"),
-        min_by(col("close"), col("bar_ts")).as("__first_c"),
-        sum(col("__ibrk")).as("__nbrk"))
-      .withColumn("__prev_last", lag(col("__last_c"), 1).over(idxW))
-      .withColumn("__headbrk",
-        when(col("__prev_last").isNull ||
-          col("__first_c") =!= col("__prev_last"), 1L).otherwise(0L))
-      .withColumn("__goff",
-        sum(col("__nbrk") + col("__headbrk")).over(idxW) -
-          (col("__nbrk") + col("__headbrk")))
-      .select(col("series"), col("__day"), col("__headbrk"), col("__goff"))
-    val runs = flagged0.join(broadcast(dayBrk), Seq("series", "__day"))
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val prevC = lag(col("close"), 1).over(w)
+    val runs = bars
       .withColumn("new_run",
-        when(col("__head"), col("__headbrk")).otherwise(col("__ibrk")))
-      .withColumn("grp", col("__goff") + sum(col("new_run")).over(runDay))
+        when(prevC.isNull || col("close") =!= prevC, 1L).otherwise(0L))
+      .withColumn("grp",
+        sum(col("new_run")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy(col("series"), col("grp"))
       .agg(count(lit(1)).as("run_len"))
     runs.groupBy(col("series"))
@@ -2347,7 +2162,7 @@ object MarketBars {
     val rets = ScalableWindow.withPrevValues(
         bars.filter(col("close") > 0 &&
           col("series").isin(seriesA, seriesB)),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r",
         when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
       .filter(col("r").isNotNull)
@@ -2402,7 +2217,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r",
         when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
       .filter(col("r").isNotNull)
@@ -2495,14 +2310,14 @@ object MarketBars {
     * identical cross-engine.
     *
     * The return chain attaches its lag via
-    * [[ScalableWindow.withPrevValues]] ((series, day) tasks) feeding
-    * two growing-key aggregates; the quantile broadcasts back per
+    * [[ScalableWindow.withPrevValues]] feeding two growing-key
+    * aggregates; the quantile broadcasts back per
     * series for the tail mean. */
   def varEs(bars: DataFrame, alpha: Double = 0.05): DataFrame = {
     require(alpha > 0 && alpha < 0.5, s"alpha in (0, 0.5) (got $alpha)")
     def dbl(c: Column) = c.cast(DoubleType)
     val rets = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "prev_c")))
+        Seq("bar_ts"), Seq(("close", "prev_c")))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 &&
         col("close") > 0)
       .select(col("series"),
@@ -2536,11 +2351,11 @@ object MarketBars {
     * double sum through a hash aggregate would be partial-order
     * nondeterministic. Two growing-key shuffles ((series, dow) then
     * series); output |series| rows. The lag routes through
-    * [[ScalableWindow.withPrevValues]] — (series, day) tasks. */
+    * [[ScalableWindow.withPrevValues]]. */
   def dowAnova(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val rets = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "prev_c")))
+        Seq("bar_ts"), Seq(("close", "prev_c")))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 &&
         col("close") > 0)
       .select(col("series"),
@@ -2597,9 +2412,9 @@ object MarketBars {
     val names = seriesNames.sorted
     def dbl(c: Column) = c.cast(DoubleType)
     val dec0 = DecimalType(38, 0)
-    // Δclose chain via the day-map lag escape — (series, day) tasks
+    // Δclose chain, one per-series lag
     val pivoted = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "__pc")))
+        Seq("bar_ts"), Seq(("close", "__pc")))
       .withColumn("d6",
         floor((col("close") - col("__pc")) * lit(1e6) + lit(0.5))
           .cast("long"))
@@ -2660,10 +2475,10 @@ object MarketBars {
     * several bar sampling scales (5m/15m/30m/1h) — flat when returns
     * are a clean martingale, rising at fine scales under
     * microstructure noise; the diagnostic that picks q92's sampling
-    * interval. All four scales run off ONE day-scoped window pass
-    * (see the in-body note: coarse closes are bucket-end fine closes,
-    * the previous coarse close is a bucket-end LOCF, and carry 1
-    * covers the day seam exactly) with q92's exact return recipe:
+    * interval. All four scales run off ONE per-series window pass
+    * (see the in-body note: coarse closes are bucket-end fine closes
+    * and the previous coarse close is a bucket-end LOCF) with q92's
+    * exact return recipe:
     * 8dp log returns, 12dp decimal r² sums, sqrt at emission. Output
     * one row per (series, scale), series absent from a scale it has
     * no returns at (the per-scale-leg contract). */
@@ -2674,20 +2489,15 @@ object MarketBars {
       ("15m", 15L, 15L * 60 * 1000 * 1000),
       ("30m", 30L, 30L * 60 * 1000 * 1000),
       ("60m", 60L, OneHourMicros))
-    // FUSED form (round 10): all four scales off ONE day-scoped window
-    // pass instead of four resample+day-map escapes. A coarse bar's
-    // close is the LAST fine close inside its bucket (bar buckets
-    // partition time, so resample's argmax composes exactly); the
-    // previous coarse close is a running LOCF over bucket-end rows;
-    // and carry 1 suffices for the cross-day seam because a day's
-    // last row is a bucket end at EVERY sub-day step — the carried
-    // row is precisely the previous day's final bucket end.
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    // FUSED form (round 10): all four scales off ONE window pass
+    // instead of four resample + lag passes. A coarse bar's close is
+    // the LAST fine close inside its bucket (bar buckets partition
+    // time, so resample's argmax composes exactly); the previous
+    // coarse close is a running LOCF over bucket-end rows.
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
-    val withNb = aug.withColumn("__nb", lead(col("bar_ts"), 1).over(w))
+    val withNb = bars.withColumn("__nb", lead(col("bar_ts"), 1).over(w))
     val rCols = scales.map { case (label, _, step) =>
       val isEnd = col("__nb").isNull ||
         timeBucket(col("__nb"), step) =!= timeBucket(col("bar_ts"), step)
@@ -2697,8 +2507,7 @@ object MarketBars {
         round(log(col("close") / pc), 8)).as(s"r_$label")
     }
     val rRows = withNb
-      .select(col("series") +: col("__emit") +: rCols: _*)
-      .filter(col("__emit"))
+      .select(col("series") +: rCols: _*)
     val aggExprs = scales.flatMap { case (label, _, _) =>
       Seq(count(col(s"r_$label")).as(s"n_$label"),
         sum((col(s"r_$label") * col(s"r_$label"))
@@ -2725,8 +2534,7 @@ object MarketBars {
     * equi-join on bar_ts).
     *
     * Scale: the row index AND the lag ride ONE fused
-    * [[ScalableWindow.withSeqPrev]] pass ((series, day) tasks — the
-    * q158 class with no sequential pass left); markers are a filtered
+    * [[ScalableWindow.withSeqPrev]] pass; markers are a filtered
     * sliver and BROADCAST into the offset join; the offset fan-out is
     * a bounded map-side explode (2·maxOffset+1); the (series, idx)
     * join back to returns is one hash join on a growing key; the AAR
@@ -2741,7 +2549,7 @@ object MarketBars {
     require(maxOffset >= 1, s"maxOffset must be >= 1 (got $maxOffset)")
     def dbl(c: Column) = c.cast(DoubleType)
     val rets = ScalableWindow.withSeqPrev(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", "idx", Seq(("close", "prev_c")))
+        Seq("bar_ts"), "idx", Seq(("close", "prev_c")))
       .withColumn("r8",
         when(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
           round(log(col("close") / col("prev_c")), 8)))
@@ -2804,9 +2612,8 @@ object MarketBars {
     * dust, guarded at emission; t is scale-free so the d6 units
     * cancel.
     *
-    * Mechanics ride the [[acf]] chain exactly: (series, day)-scoped
-    * carry = maxLag+1, exact scaled-long Δcloses, ALL lags off ONE
-    * window sort, and a k = 0..L stack whose k = 0 row doubles as the
+    * Mechanics ride the [[acf]] chain exactly: exact scaled-long
+    * Δcloses, ALL lags off ONE per-series window sort, and a k = 0..L stack whose k = 0 row doubles as the
     * full-sample Σx / Σx² — one map-side-combined (series, k)
     * aggregate feeds everything. γ̂_k assembles from the exact
     * DECIMAL pair sums in one shared double op order:
@@ -2818,21 +2625,19 @@ object MarketBars {
     * tasks + one (series, k) aggregate; output is |series| rows. */
   def neweyWest(bars: DataFrame, maxLag: Int = 5): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1 (got $maxLag)")
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", maxLag + 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
-    val d = aug
+    val d = bars
       .withColumn("d6",
         floor((col("close") - lag(col("close"), 1).over(w)) * lit(1e6) +
           lit(0.5)).cast("long"))
       .filter(col("d6").isNotNull)
     val withLags = d.select(
-      col("series") +: col("d6") +: col("__emit") +:
+      col("series") +: col("d6") +:
         (1 to maxLag).map(k => lag(col("d6"), k).over(w).as(s"y$k")): _*)
-    val stacked = withLags.filter(col("__emit"))
+    val stacked = withLags
       .select(col("series"), col("d6").as("x"),
         expr(s"stack(${maxLag + 1}, 0, d6, " +
           (1 to maxLag).map(k => s"$k, y$k").mkString(", ") +
@@ -3208,18 +3013,13 @@ object MarketBars {
     * arithmetic, and the final mean floors at 6dp. Rows before a full
     * `period` of TRs (the first bar has no prev_close) emit null.
     *
-    * Scale: one per-series trailing frame (the q49/q83 hot-key
-    * class; the [[ScalableWindow]] (key, day)+carry-in rewrite
-    * applies when one series outgrows a partition). */
+    * Scale: one per-series trailing frame. */
   def atr(bars: DataFrame, period: Int = 14): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped, carry = period (lag 1 + period-1 frame)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
-    aug
+    bars
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("tr6",
         when(col("pc").isNotNull,
@@ -3231,7 +3031,6 @@ object MarketBars {
       .withColumn("nt",
         sum(when(col("tr6").isNotNull, 1L).otherwise(0L)).over(frame))
       .withColumn("st", sum(col("tr6")).over(frame))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         when(col("nt") === period,
           floor(col("st").cast(DoubleType) / lit(period.toDouble) +
@@ -3251,19 +3050,14 @@ object MarketBars {
     * pins %K to the 50 midpoint (the q133 convention). Warm-up rows
     * (< period bars, or < 3 %K values for %D) emit nulls.
     *
-    * Scale: two nested per-series trailing frames, same q49/q83
-    * hot-key class and [[ScalableWindow]] escape as [[atr]]. */
+    * Scale: two nested per-series trailing frames. */
   def stochastic(bars: DataFrame, period: Int = 14): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped, carry = period+1 (the %K frame chains
-    // into the 3-row %D frame: total trailing reach period-1 + 2)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period + 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
     val d3 = w.rowsBetween(-2, 0)
-    aug
+    bars
       .withColumn("nb", count(lit(1)).over(frame))
       .withColumn("ll", min(col("low")).over(frame))
       .withColumn("hh", max(col("high")).over(frame))
@@ -3276,7 +3070,6 @@ object MarketBars {
       .withColumn("nk",
         sum(when(col("k6").isNotNull, 1L).otherwise(0L)).over(d3))
       .withColumn("sk", sum(col("k6")).over(d3))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         (col("k6").cast(DoubleType) / lit(1e6)).as("pct_k"),
         when(col("nk") === 3,
@@ -3344,23 +3137,16 @@ object MarketBars {
     * rule); bars-since is pure integer math and the final percentage
     * floors at 4dp from one identical double quotient.
     *
-    * Scale: one per-series window pass (q49/q83 hot-key class,
-    * [[ScalableWindow]] escape applies). */
+    * Scale: one per-series window pass. */
   def aroon(bars: DataFrame, period: Int = 14): DataFrame = {
     require(period >= 2, s"period must be >= 2 (got $period)")
-    // (series, day)-scoped, carry = period-1; the scoped row_number
-    // restarts per day but only seq DIFFERENCES are emitted and the
-    // carried tail keeps each partition a contiguous history slice,
-    // so every delta (and the struct-max tie order) is unchanged
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period - 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
     def pct(bs: Column) =
       floor(lit(100.0) * (lit(period.toDouble) - bs.cast(DoubleType)) /
         lit(period.toDouble) * lit(1e4) + lit(0.5)) / lit(1e4)
-    aug
+    bars
       .withColumn("h6", floor(col("high") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("l6", floor(col("low") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("seq", row_number().over(w))
@@ -3369,7 +3155,6 @@ object MarketBars {
         max(struct(col("h6").as("p"), col("seq").as("s"))).over(frame)("s"))
       .withColumn("lseq",
         min(struct(col("l6").as("p"), col("seq").as("s"))).over(frame)("s"))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         when(col("nb") === period, pct(col("seq") - col("hseq")))
           .as("aroon_up"),
@@ -3391,15 +3176,12 @@ object MarketBars {
     * observations) emits null. */
   def mfi(bars: DataFrame, period: Int = 14): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped, carry = period (tp lag 1 + period-1 frame)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
     val q = lit(100.0) * col("pf").cast(DoubleType) /
       (col("pf") + col("nf")).cast(DoubleType)
-    aug
+    bars
       .withColumn("tp", (col("high") + col("low") + col("close")) / lit(3.0))
       .withColumn("tp6", floor(col("tp") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("dtp", col("tp6") - lag(col("tp6"), 1).over(w))
@@ -3411,7 +3193,6 @@ object MarketBars {
         sum(when(col("dtp") > 0, col("flow4")).otherwise(0L)).over(frame))
       .withColumn("nf",
         sum(when(col("dtp") < 0, col("flow4")).otherwise(0L)).over(frame))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         when(col("nd") === period,
           when(col("pf") + col("nf") > 0,
@@ -3431,16 +3212,13 @@ object MarketBars {
     * arithmetic, one floor-form 6dp quotient. */
   def cmf(bars: DataFrame, period: Int = 20): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped, carry = period-1 (one trailing frame)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", math.max(1, period - 1))
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
     val mfm = when(col("high") > col("low"),
       ((col("close") - col("low")) - (col("high") - col("close"))) /
         (col("high") - col("low"))).otherwise(lit(0.0))
-    aug
+    bars
       .withColumn("mfv4",
         floor(mfm * col("volume") * lit(1e4) + lit(0.5)).cast("long"))
       .withColumn("vol4",
@@ -3448,7 +3226,6 @@ object MarketBars {
       .withColumn("nb", count(lit(1)).over(frame))
       .withColumn("smf", sum(col("mfv4")).over(frame))
       .withColumn("svol", sum(col("vol4")).over(frame))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         when(col("nb") === period && col("svol") > 0,
           floor(col("smf").cast(DoubleType) / col("svol").cast(DoubleType) *
@@ -3469,18 +3246,15 @@ object MarketBars {
     require(period >= 2, s"period must be >= 2 (got $period)")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    // (series, day)-scoped, carry = period-1 (one trailing frame)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period - 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(period - 1), 0)
-    aug
+    bars
       .withColumn("c6", floor(col("close") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("nb", count(lit(1)).over(frame))
       .withColumn("s1", sum(col("c6").cast(dec)).over(frame))
       .withColumn("s2", sum((col("c6") * col("c6")).cast(dec)).over(frame))
-      .filter(col("nb") === period && col("__emit"))
+      .filter(col("nb") === period)
       .withColumn("mid", dbl(col("s1")) / dbl(col("nb")) / lit(1e6))
       .withColumn("sd",
         sqrt((dbl(col("nb")) * dbl(col("s2")) - dbl(col("s1")) * dbl(col("s1"))) /
@@ -3519,20 +3293,17 @@ object MarketBars {
     require(horizons.nonEmpty && horizons.forall(_ >= 1), "horizons must be >= 1")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    // FUSED two-layer day scope (the q139 rule: the validity filter
-    // drops rows, so frame positions must count on the FILTERED
-    // relation); ONE layer-2 carry = max(h)−1 serves every horizon —
-    // extra carry is harmless for a position-relative ROWS frame
+    // the q139 rule: the validity filter drops rows, so frame
+    // positions count on the FILTERED relation; one checkpointed
+    // return relation feeds every horizon's frame
     val withR = ScalableWindow.laggedScope(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", "close", "pc",
-      math.max(1, horizons.max - 1),
-      valid = col("pc").isNotNull && col("pc") > 0,
-      slim = _.select(col("series"), col("bar_ts"),
+        Seq("series"), Seq("bar_ts"), "close", "pc",
+        col("pc").isNotNull && col("pc") > 0)
+      .select(col("series"), col("bar_ts"),
         floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"),
-        col("__day_idx"), col("__rev")))
+          .cast("long").as("r8"))
       .localCheckpoint(eager = false)
-    val w2 = Window.partitionBy(col("series"), col("__day_idx"))
+    val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     // NOTE (r11): a fused one-sort + struct-explode form was measured
     // at 2.92 s vs this union form's 2.66 s at sf0.1 — the explode
@@ -3543,7 +3314,7 @@ object MarketBars {
       withR
         .withColumn("nb", count(col("r8")).over(frame))
         .withColumn("rh8", sum(col("r8")).over(frame))
-        .filter(col("__emit") && col("nb") === h)
+        .filter(col("nb") === h)
         .select(col("series"), lit(h).as("horizon"), col("rh8"))
     }
     val xs = perH.reduce(_.unionByName(_)).localCheckpoint(eager = false)
@@ -3666,21 +3437,20 @@ object MarketBars {
     * and the LR evaluates ln() on identical doubles once per series
     * (x = 0 or x = n collapse the empirical entropy terms to 0).
     *
-    * Scale: the lag and the split index ride ONE fused
-    * [[ScalableWindow.withSeqPrev]] pass ((series, day) tasks; the
-    * group total rides the keys×days map; the return index is the
-    * bar index − 1 since close > 0 is pre-filtered);
+    * Scale: the lag, the split index and the group total ride ONE
+    * fused [[ScalableWindow.withSeqPrev]] pass (the return index is
+    * the bar index − 1 since close > 0 is pre-filtered);
     * the calibration quantile is an exact percentile on the
     * half-relation; |series| rows out. */
   def varBacktest(bars: DataFrame, alpha: Double = 0.05): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1) (got $alpha)")
     def dbl(c: Column) = c.cast(DoubleType)
-    // fused escape (round 10): with close > 0 pre-filtered, a return
-    // row is valid exactly when its bar is not the series' FIRST row,
-    // so the return index is the bar index minus one — one withSeqPrev
-    // pass replaces the lag escape + the second index escape
+    // with close > 0 pre-filtered, a return row is valid exactly when
+    // its bar is not the series' FIRST row, so the return index is
+    // the bar index minus one — one withSeqPrev pass replaces a lag
+    // pass + a second index pass
     val withR = ScalableWindow.withSeqPrev(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", "__brn",
+        Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
       .withColumn("r", when(col("pc") > 0,
         round(log(col("close") / col("pc")), 8)))
@@ -3740,12 +3510,12 @@ object MarketBars {
     require(alpha > 0 && alpha < 0.5, s"alpha in (0, 0.5) (got $alpha)")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(28, 12)
-    // fused escape (round 10): with close > 0 pre-filtered, a return
-    // row is valid exactly when its bar is not the series' FIRST row,
-    // so the return index is the bar index minus one — one withSeqPrev
-    // pass replaces the lag escape + the second index escape
+    // with close > 0 pre-filtered, a return row is valid exactly when
+    // its bar is not the series' FIRST row, so the return index is
+    // the bar index minus one — one withSeqPrev pass replaces a lag
+    // pass + a second index pass
     val withR = ScalableWindow.withSeqPrev(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", "__brn",
+        Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
       .withColumn("r", when(col("pc") > 0,
         round(log(col("close") / col("pc")), 8)))
@@ -3798,13 +3568,13 @@ object MarketBars {
     * q139 double op order, 8dp round at emission.
     *
     * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * ((series, day) tasks) then a map-side-combined (series, hour)
+    * then a map-side-combined (series, hour)
     * rollup — 24·|series| rows out. */
   def hourlyVolProfile(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -3831,24 +3601,21 @@ object MarketBars {
     * exceedance compare is |r8| > k·σ8 on one identical double, and
     * the run lengths are integer islands.
     *
-    * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * and the islands day-split (the q168 rule: day-head breaks against
-    * the prior day's last flag carried on the keys×days map, island
-    * ids = exclusive prior-day break offsets + within-day prefix) —
-    * (series, day) tasks throughout; σ broadcasts back; |series| rows
-    * out. */
+    * Scale: the lag routes through [[ScalableWindow.withPrevValues]],
+    * the island ids through one per-series window; σ broadcasts back;
+    * |series| rows out. */
   def tailClustering(bars: DataFrame, k: Double = 3.0): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
       .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // sigma leg + island leg
     val sigma = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n_rets"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -3858,36 +3625,14 @@ object MarketBars {
           dbl(col("s1")) * dbl(col("s1"))) /
           (dbl(col("n_rets")) * dbl(col("n_rets")))))
       .select(col("series"), col("n_rets"), col("sd8"))
-    // day-split islands over the is_tail flag (the q168 rule)
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val runDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val flagged0 = withR.join(broadcast(sigma), "series")
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val prevT = lag(col("is_tail"), 1).over(w)
+    val flagged = withR.join(broadcast(sigma), "series")
       .withColumn("is_tail", abs(dbl(col("r8"))) > lit(k) * col("sd8"))
-      .withColumn("__day", to_date(col("bar_ts")))
-      .withColumn("__head", lag(col("is_tail"), 1).over(wDay).isNull)
-      .withColumn("__ibrk",
-        when(!col("__head") &&
-          col("is_tail") =!= lag(col("is_tail"), 1).over(wDay), 1L)
-          .otherwise(0L))
-      .localCheckpoint(eager = false)
-    val dayBrk = flagged0.groupBy(col("series"), col("__day"))
-      .agg(max_by(col("is_tail"), col("bar_ts")).as("__last_f"),
-        min_by(col("is_tail"), col("bar_ts")).as("__first_f"),
-        sum(col("__ibrk")).as("__nbrk"))
-      .withColumn("__prev_last", lag(col("__last_f"), 1).over(idxW))
-      .withColumn("__headbrk",
-        when(col("__prev_last").isNull ||
-          col("__first_f") =!= col("__prev_last"), 1L).otherwise(0L))
-      .withColumn("__goff",
-        sum(col("__nbrk") + col("__headbrk")).over(idxW) -
-          (col("__nbrk") + col("__headbrk")))
-      .select(col("series"), col("__day"), col("__headbrk"), col("__goff"))
-    val flagged = flagged0.join(broadcast(dayBrk), Seq("series", "__day"))
       .withColumn("brk",
-        when(col("__head"), col("__headbrk")).otherwise(col("__ibrk")))
-      .withColumn("grp", col("__goff") + sum(col("brk")).over(runDay))
+        when(prevT.isNull || col("is_tail") =!= prevT, 1L).otherwise(0L))
+      .withColumn("grp",
+        sum(col("brk")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
     flagged
       .filter(col("is_tail"))
       .groupBy(col("series"), col("n_rets"), col("grp"))
@@ -3911,18 +3656,15 @@ object MarketBars {
     * from the exact (Σlen, n) pair.
     *
     * Scale: the Δ chain routes through
-    * [[ScalableWindow.withPrevValues]] and the island ids through the
-    * q168 day-split (prior-day last direction + exclusive break
-    * offsets on the keys×days map) — (series, day) tasks — then a
-    * map-side-combined (series, direction) rollup. */
+    * [[ScalableWindow.withPrevValues]] and the island ids through one
+    * per-series window, then a map-side-combined (series, direction)
+    * rollup. */
   def streakStats(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val runDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val dirs0 = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "__pc")))
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val prevD = lag(col("dir"), 1).over(w)
+    ScalableWindow.withPrevValues(bars, Seq("series"),
+        Seq("bar_ts"), Seq(("close", "__pc")))
       .withColumn("d6",
         floor((col("close") - col("__pc")) * lit(1e6) + lit(0.5))
           .cast("long"))
@@ -3930,30 +3672,10 @@ object MarketBars {
       .withColumn("dir",
         when(col("d6") > 0, "up").when(col("d6") < 0, "down")
           .otherwise("flat"))
-      .withColumn("__day", to_date(col("bar_ts")))
-      .withColumn("__head", lag(col("dir"), 1).over(wDay).isNull)
-      .withColumn("__ibrk",
-        when(!col("__head") &&
-          col("dir") =!= lag(col("dir"), 1).over(wDay), 1L).otherwise(0L))
-      .select(col("series"), col("bar_ts"), col("dir"), col("__day"),
-        col("__head"), col("__ibrk"))
-      .localCheckpoint(eager = false)
-    val dayBrk = dirs0.groupBy(col("series"), col("__day"))
-      .agg(max_by(col("dir"), col("bar_ts")).as("__last_d"),
-        min_by(col("dir"), col("bar_ts")).as("__first_d"),
-        sum(col("__ibrk")).as("__nbrk"))
-      .withColumn("__prev_last", lag(col("__last_d"), 1).over(idxW))
-      .withColumn("__headbrk",
-        when(col("__prev_last").isNull ||
-          col("__first_d") =!= col("__prev_last"), 1L).otherwise(0L))
-      .withColumn("__goff",
-        sum(col("__nbrk") + col("__headbrk")).over(idxW) -
-          (col("__nbrk") + col("__headbrk")))
-      .select(col("series"), col("__day"), col("__headbrk"), col("__goff"))
-    dirs0.join(broadcast(dayBrk), Seq("series", "__day"))
       .withColumn("brk",
-        when(col("__head"), col("__headbrk")).otherwise(col("__ibrk")))
-      .withColumn("grp", col("__goff") + sum(col("brk")).over(runDay))
+        when(prevD.isNull || col("dir") =!= prevD, 1L).otherwise(0L))
+      .withColumn("grp",
+        sum(col("brk")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy(col("series"), col("dir"), col("grp"))
       .agg(count(lit(1)).as("len"))
       .groupBy(col("series"), col("dir"))
@@ -3978,9 +3700,8 @@ object MarketBars {
     * order and rounds 6dp; the 1.96/√n significance fence compares
     * the ROUNDED r against one identically-computed threshold.
     *
-    * Scale: ONE fused [[ScalableWindow.dayScoped]] pass (carry
-    * maxLag + 1) carries the return lag AND every k-lag column —
-    * (series, day) tasks, one window sort — then a bounded stack to
+    * Scale: ONE per-series window pass carries the return lag AND
+    * every k-lag column — one window sort — then a bounded stack to
     * long form and a map-side-combined (series, k) rollup. With
     * close > 0 pre-filtered, sq8 is null only at each series' global
     * first bar, so lagging sq8 over BAR positions equals lagging it
@@ -3990,21 +3711,19 @@ object MarketBars {
     require(maxLag >= 1, s"maxLag must be >= 1 (got $maxLag)")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", maxLag + 1)
-    val wk = Window.partitionBy(col("series"), col("__day_idx"))
+    val wk = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val sq8 = {
       val pc = lag(col("close"), 1).over(wk)
       val r = when(pc.isNotNull && pc > 0, log(col("close") / pc))
       floor(r * r * lit(1e8) + lit(0.5)).cast("long")
     }
-    val withLags = aug
+    val withLags = bars.filter(col("close") > 0)
       .withColumn("sq8", sq8)
-      .select(col("series") +: col("__emit") +: col("sq8") +:
+      .select(col("series") +: col("sq8") +:
         (1 to maxLag).map(k =>
           lag(col("sq8"), k).over(wk).as(s"__y$k")): _*)
-      .filter(col("__emit") && col("sq8").isNotNull)
+      .filter(col("sq8").isNotNull)
       .localCheckpoint(eager = false) // one window pass feeds all k legs
     val lags = (1 to maxLag).map { k =>
       withLags.filter(col(s"__y$k").isNotNull)
@@ -4056,7 +3775,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4098,7 +3817,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4143,17 +3862,13 @@ object MarketBars {
     * at 6 dp. Series with N < 3 emit zero turning points and null z
     * only when Var ≤ 0 (never for N ≥ 3).
     *
-    * Scale: the lag/lead pair rides ONE symmetric
-    * [[ScalableWindow.dayScopedAround]] pass ((series, day) tasks,
-    * one row carried from each side) + one map-side-combined rollup,
-    * output |series| rows. */
+    * Scale: the lag/lead pair rides ONE per-series window pass + one
+    * map-side-combined rollup, output |series| rows. */
   def turningPoints(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
-    val aug = ScalableWindow.dayScopedAround(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", backRows = 1, fwdRows = 1)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    aug
+    bars
       .withColumn("x6",
         floor(col("close") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("pv", lag(col("x6"), 1).over(w))
@@ -4163,7 +3878,6 @@ object MarketBars {
           ((col("pv") < col("x6") && col("x6") > col("nx")) ||
             (col("pv") > col("x6") && col("x6") < col("nx"))), 1L)
           .otherwise(0L))
-      .filter(col("__emit"))
       .groupBy(col("series"))
       .agg(count(lit(1)).as("n_bars"), sum(col("tp")).as("n_turning"))
       .withColumn("mu",
@@ -4187,17 +3901,14 @@ object MarketBars {
     * Determinism: closes/highs/lows snap to scaled longs so every
     * compare is integer-exact; output is counts + max timestamps.
     *
-    * Scale: one per-series window pass (q49/q83 class) into a
+    * Scale: one per-series window pass into a
     * map-side-combined |series|-row rollup. */
   def donchianBreakouts(bars: DataFrame, period: Int = 20): DataFrame = {
     require(period >= 1, s"period must be >= 1 (got $period)")
-    // (series, day)-scoped, carry = period (the -period..-1 channel)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", period)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val prior = w.rowsBetween(-period, -1)
-    aug
+    bars
       .withColumn("c6", floor(col("close") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("h6", floor(col("high") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("l6", floor(col("low") * lit(1e6) + lit(0.5)).cast("long"))
@@ -4206,7 +3917,6 @@ object MarketBars {
       .withColumn("cl", min(col("l6")).over(prior))
       .withColumn("up", col("nb") === period && col("c6") > col("ch"))
       .withColumn("dn", col("nb") === period && col("c6") < col("cl"))
-      .filter(col("__emit"))
       .groupBy(col("series"))
       .agg(
         sum(when(col("up"), 1L).otherwise(0L)).as("n_up"),
@@ -4235,18 +3945,16 @@ object MarketBars {
     require(horizons.nonEmpty && horizons.forall(_ >= 2), "horizons must be >= 2")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    // the q139/q250 FUSED two-layer day scope (laggedScope); one
-    // layer-2 carry serves all horizon frames
+    // the q139/q250 rule (laggedScope): frames count filtered rows;
+    // one checkpointed return relation feeds every horizon's frame
     val withR = ScalableWindow.laggedScope(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", "close", "pc",
-      math.max(1, horizons.max - 1),
-      valid = col("pc").isNotNull && col("pc") > 0,
-      slim = _.select(col("series"), col("bar_ts"),
+        Seq("series"), Seq("bar_ts"), "close", "pc",
+        col("pc").isNotNull && col("pc") > 0)
+      .select(col("series"), col("bar_ts"),
         floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"),
-        col("__day_idx"), col("__rev")))
+          .cast("long").as("r8"))
       .localCheckpoint(eager = false)
-    val w2 = Window.partitionBy(col("series"), col("__day_idx"))
+    val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val perH = horizons.map { h =>
       val frame = w2.rowsBetween(-(h - 1), 0)
@@ -4254,7 +3962,7 @@ object MarketBars {
         .withColumn("nb", count(col("r8")).over(frame))
         .withColumn("s1", sum(col("r8").cast(dec)).over(frame))
         .withColumn("s2", sum((col("r8") * col("r8")).cast(dec)).over(frame))
-        .filter(col("__emit") && col("nb") === h)
+        .filter(col("nb") === h)
         .select(col("series"), lit(h).as("horizon"),
           round(sqrt((dbl(col("nb")) * dbl(col("s2")) -
             dbl(col("s1")) * dbl(col("s1"))) /
@@ -4288,16 +3996,11 @@ object MarketBars {
     * usable, not biased toward zero.
     *
     * Scale: two window passes per series (frame collect + signal
-    * collect) — the q49/q83 hot-key class, [[ScalableWindow]] escape
-    * unchanged. The frame list is bounded (`frameRows`), so state per
+    * collect). The frame list is bounded (`frameRows`), so state per
     * row is O(frame), never O(history). */
   def macd(bars: DataFrame, frameRows: Int = 26): DataFrame = {
     require(frameRows >= 2, s"frameRows must be >= 2 (got $frameRows)")
-    // (series, day)-scoped, carry = frameRows+7 (the EMA frame chains
-    // into the 9-row signal frame: total reach frameRows-1 + 8)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", frameRows + 7)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val frame = w.rowsBetween(-(frameRows - 1), 0)
     val sig = w.rowsBetween(-8, 0)
@@ -4308,7 +4011,7 @@ object MarketBars {
       aggregate(lst, lit(0.0), (s, x) => s * (lit(1.0) - a) + x * a)
     def emaDen(lst: Column, a: Column) =
       aggregate(lst, lit(0.0), (s, _) => s * (lit(1.0) - a) + a)
-    aug
+    bars
       .withColumn("cs", collect_list(col("close")).over(frame))
       .withColumn("m6",
         floor((emaNum(col("cs"), aF) / emaDen(col("cs"), aF) -
@@ -4316,7 +4019,6 @@ object MarketBars {
           lit(0.5)).cast("long"))
       .withColumn("ms",
         collect_list(col("m6").cast(DoubleType) / lit(1e6)).over(sig))
-      .filter(col("__emit"))
       .select(col("series"), col("bar_ts"), col("close"),
         (col("m6").cast(DoubleType) / lit(1e6)).as("macd"),
         round(emaNum(col("ms"), aG) / emaDen(col("ms"), aG), 6)
@@ -4342,7 +4044,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4391,14 +4093,14 @@ object MarketBars {
     * form in one shared double op order and round 6dp.
     *
     * Scale: two chained [[ScalableWindow.withPrevValues]] passes —
-    * the close lag, then the return lag over the FILTERED relation —
-    * (series, day) tasks; then a map-side-combined aggregate;
+    * the close lag, then the return lag over the FILTERED relation;
+    * then a map-side-combined aggregate;
     * |series| rows out. */
   def durbinWatson(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4406,7 +4108,7 @@ object MarketBars {
       .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
     ScalableWindow.withPrevValues(rets, Seq("series"), Seq("bar_ts"),
-        "bar_ts", Seq(("r8", "pr8")))
+        Seq(("r8", "pr8")))
       .groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
         sum(col("r8").cast(dec) * col("r8").cast(dec)).as("den"),
@@ -4440,7 +4142,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4554,15 +4256,14 @@ object MarketBars {
     * variance) emit null.
     *
     * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * and the row index through [[ScalableWindow.withSeqIndex]]
-    * ((series, day) tasks; the total rides the keys×days map), one
-    * map-side-combined aggregate carrying both segments' conditional
+    * and the row index and total through [[ScalableWindow.withSeqIndex]],
+    * one map-side-combined aggregate carrying both segments' conditional
     * sums; |series| rows out. */
   def chowTest(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val rets0 = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4570,7 +4271,7 @@ object MarketBars {
       .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
     val withR = ScalableWindow.withSeqIndex(rets0, Seq("series"),
-        Seq("bar_ts"), "bar_ts", "t", Some("n_all"))
+        Seq("bar_ts"), "t", Some("n_all"))
       .withColumn("seg1", col("t") <= (col("n_all") / 2).cast("long"))
     def segSums(p: Column, tag: String) = Seq(
       sum(when(p, 1L).otherwise(0L)).as(s"n$tag"),
@@ -4623,88 +4324,67 @@ object MarketBars {
     *
     * Determinism: returns are exact 1e-8 longs; the demeaned partial
     * sum clears its denominator as S'_t = n·P_t − t·Σr (exact
-    * integers off the day-split prefix, the q144 rule) and the
+    * integers off the running prefix, the q144 rule) and the
     * demeaned factors as n·x − Σr; each per-row term then converts
     * at ≤1e12 magnitude (the q200 decimal→double fence), rounds 12dp
     * in natural units, and folds in DECIMAL(38,12); η forms once per
     * series in one shared double op order, rounded 6dp.
     *
-    * Scale: the lag chain and the γ_l lags ride the day-map escapes
-    * ([[ScalableWindow.withPrevValues]] / [[ScalableWindow.dayScoped]]
-    * carry = maxLag); the prefix splits at day boundaries; output
-    * |series| rows. */
+    * Scale: the return lag rides [[ScalableWindow.withPrevValues]];
+    * the prefix sums and the γ_l lags share one per-series window and
+    * one 1-row-per-series aggregate; output |series| rows. */
   def kpss(bars: DataFrame, maxLag: Int = 4): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1 (got $maxLag)")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
     val rets0 = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
       .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
-      .localCheckpoint(eager = false) // prefix pass + lag pass + totals
+      .localCheckpoint(eager = false) // totals leg + window leg
     val tot = rets0.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), sum(col("r8").cast(dec)).as("s"))
-    // day-split exact prefix (q144 rule): P_t = prior-day cumulative
-    // offsets + within-day running sum; t likewise
-    val idxW = Window.partitionBy(col("series")).orderBy(col("__day"))
-    val x = rets0.withColumn("__day", to_date(col("bar_ts")))
-    val dayMap = x.groupBy(col("series"), col("__day"))
-      .agg(count(lit(1)).as("__n"), sum(col("r8").cast(dec)).as("__s"))
-      .withColumn("__coff", sum(col("__n")).over(idxW) - col("__n"))
-      .withColumn("__soff", sum(col("__s")).over(idxW) - col("__s"))
-      .select(col("series"), col("__day"), col("__coff"), col("__soff"))
-    val wDay = Window.partitionBy(col("series"), col("__day"))
-      .orderBy(col("bar_ts"))
-    val runDay = wDay.rowsBetween(Window.unboundedPreceding, 0)
+    val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
+    val lagCols = (1 to maxLag).map(l => lag(col("r8"), l).over(w).as(s"y_$l"))
+    val x = rets0
+      .select(Seq(col("series"), col("r8"),
+        row_number().over(w).as("t"),
+        sum(col("r8").cast(dec)).over(w.rowsBetween(Window.unboundedPreceding, 0))
+          .as("p")) ++ lagCols: _*)
+      .join(broadcast(tot), "series")
     // per-row demeaned partial sum in NATURAL units: S'_t = n·P_t − t·S.
     // n, t, P, S each convert to double at ≤ ~1e12 (inside the q200
     // decimal→double fence) and the products/difference stay exact
     // integers below 2^53 — the full decimal difference would convert
     // at ~1e15, inside the 1-ulp cross-engine hazard zone
-    val ssd = x.join(broadcast(dayMap), Seq("series", "__day"))
-      .withColumn("t", col("__coff") + row_number().over(wDay))
-      .withColumn("p", col("__soff") + sum(col("r8").cast(dec)).over(runDay))
-      .join(broadcast(tot), "series")
-      .withColumn("spn",
-        (dbl(col("n")) * dbl(col("p")) - dbl(col("t")) * dbl(col("s"))) /
-          (dbl(col("n")) * lit(1e8)))
-      .groupBy(col("series"))
-      .agg(sum(round(col("spn") * col("spn"), 12).cast(dec12)).as("ss2"))
+    val spn = (dbl(col("n")) * dbl(col("p")) - dbl(col("t")) * dbl(col("s"))) /
+      (dbl(col("n")) * lit(1e8))
     // Bartlett autocovariances on the same demeaned natural units:
-    // γ_l terms (n·x − S)(n·y − S)/(n·1e8)² ride ONE dayScoped pass
-    val aug = ScalableWindow.dayScoped(rets0, Seq("series"),
-      Seq("bar_ts"), "bar_ts", maxLag)
-    val wk = Window.partitionBy(col("series"), col("__day_idx"))
-      .orderBy(col("bar_ts"))
-    val lagCols = (1 to maxLag).map(l => lag(col("r8"), l).over(wk).as(s"y_$l"))
-    val lagged = aug
-      .select(Seq(col("series"), col("r8"), col("__emit")) ++ lagCols: _*)
-      .filter(col("__emit"))
-      .join(broadcast(tot), "series")
+    // γ_l terms (n·x − S)(n·y − S)/(n·1e8)²
     def gterm(y: Column) =
       round(dbl(col("n") * col("r8") - col("s")) *
         dbl(col("n") * y - col("s")) /
         (dbl(col("n")) * lit(1e8) * dbl(col("n")) * lit(1e8)), 12)
-    val gAggs =
-      sum(gterm(col("r8")).cast(dec12)).as("g_0") +:
+    val aggs =
+      sum(round(spn * spn, 12).cast(dec12)).as("ss2") +:
+        sum(gterm(col("r8")).cast(dec12)).as("g_0") +:
         (1 to maxLag).map { l =>
           sum(when(col(s"y_$l").isNotNull, gterm(col(s"y_$l")))
             .otherwise(lit(0).cast(dec12)).cast(dec12)).as(s"g_$l")
         }
-    val g = lagged.groupBy(col("series"), col("n")).agg(gAggs.head, gAggs.tail: _*)
+    val g = x.groupBy(col("series"), col("n")).agg(aggs.head, aggs.tail: _*)
     val lp1 = (maxLag + 1).toDouble
     // LEFT-fold from g_0 so the addition order matches the twin's
     // left-associative SQL `g0 + w1*g1 + w2*g2 + ...` exactly
     val lrv = (1 to maxLag).foldLeft(dbl(col("g_0"))) { (acc, l) =>
       acc + lit(2.0 * (lp1 - l) / lp1) * dbl(col(s"g_$l"))
     } / dbl(col("n"))
-    g.join(ssd, "series")
-      .select(col("series"), col("n").as("n_rets"),
+    g.select(col("series"), col("n").as("n_rets"),
         when(lrv > 0,
           round(dbl(col("ss2")) / (dbl(col("n")) * dbl(col("n"))) / lrv, 6))
           .as("kpss_eta"))
@@ -4879,7 +4559,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -4975,7 +4655,7 @@ object MarketBars {
     *
     * Scale: one (series, day)-keyed window pass + one
     * map-side-combined rollup on the same key — day-keyed tasks by
-    * construction, no escape needed. */
+    * construction. */
   def semivariance(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
@@ -5072,7 +4752,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -5138,24 +4818,21 @@ object MarketBars {
     * division, d rounds 12dp in price² units into DECIMAL folds; DM
     * finishes in one shared double op order, 6dp.
     *
-    * Scale: ONE day-scoped window pass (carry 5 — the MA window
-    * reach) computes both forecasts; one map-side-combined aggregate;
+    * Scale: ONE per-series window pass computes both forecasts; one map-side-combined aggregate;
     * \|series\| rows out. */
   def dmTest(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val aug = ScalableWindow.dayScoped(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", 5)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val wMa = w.rowsBetween(-5, -1)
     val c6 = floor(col("close") * lit(1e6) + lit(0.5)).cast("long")
-    val x = aug
+    val x = bars
       .withColumn("c6", c6)
       .withColumn("pc6", lag(col("c6"), 1).over(w))
       .withColumn("s5", sum(col("c6")).over(wMa))
       .withColumn("n5", count(col("c6")).over(wMa))
-      .filter(col("__emit") && col("pc6").isNotNull && col("n5") === 5)
+      .filter(col("pc6").isNotNull && col("n5") === 5)
     val e1 = dbl(col("c6") - col("pc6")) / lit(1e6)
     val e2 = dbl(lit(5L) * col("c6") - col("s5")) / lit(5e6)
     val agg = x
@@ -5194,8 +4871,8 @@ object MarketBars {
     * as DECIMAL and the running level is a prefix over the
     * keys×days map — all-integer until one /1e6.
     *
-    * Scale: the Δ chain rides [[ScalableWindow.withPrevValues]]
-    * ((series, day) tasks); the prefix runs over the AGGREGATE-sized
+    * Scale: the Δ chain rides [[ScalableWindow.withPrevValues]];
+    * the prefix runs over the AGGREGATE-sized
     * keys×days relation, never the bar history; \|series\|·\|days\|
     * rows out. */
   def obv(bars: DataFrame): DataFrame = {
@@ -5204,7 +4881,7 @@ object MarketBars {
     val d6 = floor(col("close") * lit(1e6) + lit(0.5)).cast("long") -
       floor(col("__pc") * lit(1e6) + lit(0.5)).cast("long")
     val flows = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "__pc")))
+        Seq("bar_ts"), Seq(("close", "__pc")))
       .filter(col("__pc").isNotNull)
       .withColumn("sv",
         (when(d6 > 0, lit(1L)).when(d6 < 0, lit(-1L)).otherwise(lit(0L))) *
@@ -5543,24 +5220,22 @@ object MarketBars {
     * cell term rounds 12dp into a DECIMAL fold (the q343 MI rule);
     * TE rounds 6dp.
     *
-    * Scale: the q341 posture verbatim — ONE checkpointed day-scoped
-    * sign relation feeds both join legs; the pair join is
+    * Scale: the q341 posture verbatim — ONE checkpointed sign
+    * relation feeds both join legs; the pair join is
     * bar_ts-keyed; cells are \|series\|²·8-bounded. */
   def transferEntropy(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 3)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val rr = aug
+    val rr = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
       .withColumn("rl8", lag(col("r8"), 1).over(w))
-      .filter(col("__emit") && col("r8").isNotNull &&
+      .filter(col("r8").isNotNull &&
         col("rl8").isNotNull)
       .select(col("series"), col("bar_ts"),
         when(col("r8") > 0, 1).otherwise(0).as("s"),
@@ -5615,8 +5290,8 @@ object MarketBars {
     * fold as DECIMAL(38,0) integer products (the q341 machinery);
     * Pearson finishes in one shared double op order, 6dp.
     *
-    * Scale: each scale's chain is day-scoped (carry 2) over bars that
-    * only SHRINK with the step; ONE checkpointed union feeds both
+    * Scale: each scale's chain is one per-series window over bars
+    * that only SHRINK with the step; ONE checkpointed union feeds both
     * pair-join legs keyed (scale, bar_ts) with \|series\| rows per
     * key; output is \|series\|²·\|scales\| rows. */
   def eppsCurve(
@@ -5631,17 +5306,15 @@ object MarketBars {
     val legs = scalesMin.map { m =>
       val cb = resample(barsCk, m * 60L * 1000000L)
         .filter(col("close") > 0)
-      val aug = ScalableWindow.dayScoped(cb, Seq("series"),
-        Seq("bar_ts"), "bar_ts", 2)
-      val w = Window.partitionBy(col("series"), col("__day_idx"))
+      val w = Window.partitionBy(col("series"))
         .orderBy(col("bar_ts"))
-      aug
+      cb
         .withColumn("pc", lag(col("close"), 1).over(w))
         .withColumn("r8",
           when(col("pc") > 0,
             floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
               .cast("long")))
-        .filter(col("__emit") && col("r8").isNotNull)
+        .filter(col("r8").isNotNull)
         .select(lit(m).as("scale_min"), col("series"), col("bar_ts"),
           col("r8"))
     }
@@ -5686,24 +5359,22 @@ object MarketBars {
     * shared double op order each, 6dp. Null-variance pairs drop from
     * the folds (documented: treated as contributing 0 to Σc²).
     *
-    * Scale: ONE checkpointed day-scoped return relation feeds both
+    * Scale: ONE checkpointed return relation feeds both
     * pair legs (the q341 posture); the summary is a 1-row fold over
     * \|series\|² pair rows. */
   def corrStructure(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
-    val aug = ScalableWindow.dayScoped(bars.filter(col("close") > 0),
-      Seq("series"), Seq("bar_ts"), "bar_ts", 2)
-    val w = Window.partitionBy(col("series"), col("__day_idx"))
+    val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val rr = aug
+    val rr = bars.filter(col("close") > 0)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("pc") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
             .cast("long")))
-      .filter(col("__emit") && col("r8").isNotNull)
+      .filter(col("r8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"))
       .localCheckpoint(eager = false) // both pair legs + the N probe
     val a = rr.select(col("series").as("series_a"), col("bar_ts"),
@@ -5818,7 +5489,7 @@ object MarketBars {
     *
     * Scale: everything runs in ONE (series, day) window partition —
     * within-day triples never cross days, so the partition is
-    * day-bounded by construction (no escape needed); map-side
+    * day-bounded by construction; map-side
     * rollup; |series|·|days| rows out. */
   def medRv(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
@@ -5882,7 +5553,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val chain = ScalableWindow.withPrevValues(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", Seq(("close", "pc")))
+        Seq("bar_ts"), Seq(("close", "pc")))
       .filter(col("pc").isNotNull && col("pc") > 0 && col("close") > 0)
       .select(col("series"),
         abs(floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
@@ -6006,8 +5677,8 @@ object MarketBars {
     * doubles (safe rounding class).
     *
     * Scale: ONE fused [[ScalableWindow.withSeqPrev]] pass provides
-    * both the global bar index (phase) and the lagged close — no
-    * second escape; the explode is |periods|×; everything after is a
+    * both the global bar index (phase) and the lagged close; the
+    * explode is |periods|×; everything after is a
     * map-side-combined (series, period) aggregate; |series|·|periods|
     * rows out. */
   def periodogram(bars: DataFrame, periods: Seq[Int] = Seq(6, 24)): DataFrame = {
@@ -6017,7 +5688,7 @@ object MarketBars {
     val dec6 = DecimalType(38, 6)
     val dec = DecimalType(38, 0)
     val chain = ScalableWindow.withSeqPrev(bars, Seq("series"),
-        Seq("bar_ts"), "bar_ts", "__grn", Seq(("close", "pc")))
+        Seq("bar_ts"), "__grn", Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
           floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))

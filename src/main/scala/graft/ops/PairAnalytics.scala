@@ -18,11 +18,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *   - per-leg reshape with negated spread/z for leg 2 + unionByName
   *     (`:156-180`)
   *
-  * Scale notes: the reference partitions the window by `pair_name`
-  * alone — one partition per pair, a skew hazard at 100 TB (SURVEY §4).
-  * We keep those semantics for parity but parameterize the partition
-  * keys so callers can window by (pair, trading_date) when frames don't
-  * span days, restoring parallelism. The join is a shuffle-on-bar_ts
+  * Scale notes: the window partitions by `pair_name` alone, as the
+  * reference does — one window task per pair. The join is a shuffle-on-bar_ts
   * equi-join; with bars already bucketed per series the two legs
   * partition identically, and AQE converts to broadcast when one leg
   * is small.
@@ -81,8 +78,7 @@ object PairAnalytics {
     *
     * Scale: the pair relation is one bar-ts-aligned join; both
     * regression passes are map-side-combined 1-row aggregates; the
-    * residual lag routes through [[ScalableWindow.withPrevValues]] —
-    * (pair, day) tasks, never a pair's whole history. */
+    * residual lag routes through [[ScalableWindow.withPrevValues]]. */
   def cointegration(pair: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
@@ -109,7 +105,7 @@ object PairAnalytics {
           .withColumn("r6",
             floor((col("close1") - col("alpha") - col("beta") *
               col("close2")) * lit(1e6) + lit(0.5)).cast("long")),
-        Seq("pair_name"), Seq("bar_ts"), "bar_ts", Seq(("r6", "rl")))
+        Seq("pair_name"), Seq("bar_ts"), Seq(("r6", "rl")))
       .filter(col("rl").isNotNull)
       .withColumn("dr", col("r6") - col("rl"))
     resid.groupBy(col("pair_name"), col("beta"), col("alpha"))
@@ -146,15 +142,15 @@ object PairAnalytics {
     * (−1 < φ < 0 ⇒ 0 < 1+φ < 1); anything else emits null.
     *
     * Scale: the spread lag routes through
-    * [[ScalableWindow.withPrevValues]] ((pair, day) tasks) + one
-    * map-side-combined 1-row-per-pair aggregate. */
+    * [[ScalableWindow.withPrevValues]] + one map-side-combined
+    * 1-row-per-pair aggregate. */
   def halfLife(pair: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     ScalableWindow.withPrevValues(
         pair.withColumn("s8",
           floor(col("spread") * lit(1e8) + lit(0.5)).cast("long")),
-        Seq("pair_name"), Seq("bar_ts"), "bar_ts", Seq(("s8", "sl")))
+        Seq("pair_name"), Seq("bar_ts"), Seq(("s8", "sl")))
       .filter(col("sl").isNotNull)
       .withColumn("ds", col("s8") - col("sl"))
       .groupBy(col("pair_name"))
@@ -189,15 +185,15 @@ object PairAnalytics {
     * Non-stationary fits and the exact white-noise point φ = 0 null
     * the OU outputs.
     *
-    * Scale: the lag rides [[ScalableWindow.withPrevValues]] ((pair,
-    * day) tasks) + one map-side-combined 1-row-per-pair aggregate. */
+    * Scale: the lag rides [[ScalableWindow.withPrevValues]] + one
+    * map-side-combined 1-row-per-pair aggregate. */
   def ouFit(pair: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     val d = ScalableWindow.withPrevValues(
         pair.withColumn("s8",
           floor(col("spread") * lit(1e8) + lit(0.5)).cast("long")),
-        Seq("pair_name"), Seq("bar_ts"), "bar_ts", Seq(("s8", "sl")))
+        Seq("pair_name"), Seq("bar_ts"), Seq(("s8", "sl")))
       .filter(col("sl").isNotNull)
       .withColumn("ds", col("s8") - col("sl"))
     val m = d.groupBy(col("pair_name"))
@@ -283,10 +279,8 @@ object PairAnalytics {
     * degenerate (zero variance).
     *
     * Scale posture: one window pass computes all five sums (a single
-    * Window operator — the q76 stacking rule), day-scoped through
-    * [[ScalableWindow.dayScoped]] — (pair, day) task granularity with
-    * the carry-in, bit-identical to the bare-pair window (DECIMAL
-    * frame sums are order-insensitive). */
+    * Window operator — the q76 stacking rule) over one per-pair
+    * window. */
   def rollingCorr(pair: DataFrame, nBars: Int): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     // Products are formed in DOUBLE (one deterministic multiply per
@@ -294,22 +288,18 @@ object PairAnalytics {
     // overflow the 38-digit width in the oracle engine (the q34 rule).
     val x = col("close1")
     val y = col("close2")
-    val aug = ScalableWindow.dayScoped(pair, Seq("pair_name"),
-      Seq("bar_ts"), "bar_ts", nBars - 1)
-    val w = Window.partitionBy(col("pair_name"), col("__day_idx"))
+    val w = Window.partitionBy(col("pair_name"))
       .orderBy(col("bar_ts"))
       .rowsBetween(-(nBars - 1), Window.currentRow)
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     def dsum(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(28, 6))).over(w)
-    val withSums = aug.select(
+    val withSums = pair.select(
       col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
       count(lit(1)).over(w).as("n_win"),
       dsum(x).as("sx"), dsum(y).as("sy"),
       dsum(x * y).as("sxy"),
-      dsum(x * x).as("sxx"), dsum(y * y).as("syy"),
-      col("__emit"))
-      .filter(col("__emit"))
+      dsum(x * x).as("sxx"), dsum(y * y).as("syy"))
     val n = col("n_win")
     val varX = dbl(n * col("sxx") - col("sx") * col("sx"))
     val varY = dbl(n * col("syy") - col("sy") * col("sy"))
@@ -328,28 +318,23 @@ object PairAnalytics {
     * form in DOUBLE, sum in DECIMAL so partial order can't perturb),
     * same warm-up gate (null until the frame fills or var(x) = 0).
     *
-    * Scale posture identical to [[rollingCorr]]: one day-scoped
-    * window pass ([[ScalableWindow.dayScoped]], (pair, day) tasks),
-    * bit-identical to the bare-pair window. */
+    * Scale posture identical to [[rollingCorr]]: one per-pair window
+    * pass. */
   def rollingBeta(pair: DataFrame, nBars: Int): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val x = col("close1")
     val y = col("close2")
-    val aug = ScalableWindow.dayScoped(pair, Seq("pair_name"),
-      Seq("bar_ts"), "bar_ts", nBars - 1)
-    val w = Window.partitionBy(col("pair_name"), col("__day_idx"))
+    val w = Window.partitionBy(col("pair_name"))
       .orderBy(col("bar_ts"))
       .rowsBetween(-(nBars - 1), Window.currentRow)
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     def dsum(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(28, 6))).over(w)
-    val withSums = aug.select(
+    val withSums = pair.select(
       col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
       count(lit(1)).over(w).as("n_win"),
       dsum(x).as("sx"), dsum(y).as("sy"),
-      dsum(x * y).as("sxy"), dsum(x * x).as("sxx"),
-      col("__emit"))
-      .filter(col("__emit"))
+      dsum(x * y).as("sxy"), dsum(x * x).as("sxx"))
     val n = col("n_win")
     val varX = dbl(n * col("sxx") - col("sx") * col("sx"))
     val beta = dbl(n * col("sxy") - col("sx") * col("sy")) / varX
@@ -371,15 +356,10 @@ object PairAnalytics {
     * (k, y) pairs map-side, and one |pairs|·(2·maxLag+1)-group
     * aggregate accumulates the co-moment sums in DECIMAL (the q34
     * rule). r then forms in DOUBLE from the exact sums with the
-    * [[graft.queries.CoreQueries.olsFit]] expression shape. The
-    * shifted series window looks BOTH ways, so it rides the
-    * symmetric [[ScalableWindow.dayScopedAround]] scope — (pair, day)
-    * tasks with maxLag rows carried in from each side. */
+    * [[graft.queries.CoreQueries.olsFit]] expression shape. */
   def ccf(pair: DataFrame, maxLag: Int): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val aug = ScalableWindow.dayScopedAround(pair, Seq("pair_name"),
-      Seq("bar_ts"), "bar_ts", backRows = maxLag, fwdRows = maxLag)
-    val w = Window.partitionBy(col("pair_name"), col("__day_idx"))
+    val w = Window.partitionBy(col("pair_name"))
       .orderBy(col("bar_ts"))
     val ks = (-maxLag to maxLag).toSeq
     // window exprs are not allowed inside a generator: materialize the
@@ -388,9 +368,8 @@ object PairAnalytics {
       (if (k >= 0) lead(col("close2"), k).over(w)
        else lag(col("close2"), -k).over(w)).as(s"y_${k + maxLag}")
     }
-    val shifted = aug.select(
-      Seq(col("pair_name"), col("close1")) ++ shiftCols :+ col("__emit"): _*)
-      .filter(col("__emit"))
+    val shifted = pair.select(
+      Seq(col("pair_name"), col("close1")) ++ shiftCols: _*)
     val stacked = ks.map(k =>
       struct(lit(k).as("k"), col(s"y_${k + maxLag}").as("y")))
     def dsum(c: org.apache.spark.sql.Column) = sum(c.cast(DecimalType(28, 6)))
@@ -415,10 +394,8 @@ object PairAnalytics {
         round(num / (sqrt(vx) * sqrt(vy)), 6)).as("r_ccf"))
   }
 
-  /** Full flagship chain for one pair over a bar frame. The rolling
-    * stats run day-scoped ([[ScalableWindow.rollingZScoreByDay]]) —
-    * bit-identical to [[rollingZScore]] (PropertySpec) but with
-    * (pair, day) task granularity instead of one task per pair. */
+  /** Full flagship chain for one pair over a bar frame: spread,
+    * [[rollingZScore]], leg reshape. */
   def pairZScore(
       bars: DataFrame,
       sym1: String,
@@ -426,8 +403,7 @@ object PairAnalytics {
       windowRows: Int = DefaultWindowRows,
       minWindow: Int = DefaultMinWindow): DataFrame =
     legReshape(
-      ScalableWindow.rollingZScoreByDay(
-        pairSpread(bars, sym1, sym2), windowRows, minWindow),
+      rollingZScore(pairSpread(bars, sym1, sym2), windowRows, minWindow),
       sym1, sym2)
 
   /** Mean-reversion backtest of the flagship z-score signal: enter the
@@ -444,26 +420,8 @@ object PairAnalytics {
     * emits), P&L differences form on 6dp-rounded spreads, and per-bar
     * P&L terms round 8dp before the DECIMAL sum.
     *
-    * Scale: fully day-scoped — the rolling stats ride
-    * [[ScalableWindow.dayScoped]] (the q06 precedent; identical frame
-    * contents and fold order, so avg/stddev are bit-identical). The
-    * signal→position tail is FUSED (round 14): instead of a LOCF
-    * window pass followed by a second dayScoped(carry=2) pass for the
-    * lags, ONE combined (pair, day)-partitioned pass computes the
-    * day-split LOCF and both lag depths — the carried (non-emitting)
-    * tail rows enter the target day's partition with a PER-ROW
-    * fallback `coalesce(Ex_rn(own day), carry(own day))`, where
-    * Ex_j = the own-day last signal EXCLUDING the final j rows.
-    * Why Ex_rn and not the plain prior-day carry: a carried row's
-    * true LOCF may be an own-day signal sitting between the day's
-    * earlier rows and its tail (prior-day carry alone would
-    * look AHEAD to a later tail signal — measured counterexample in
-    * the r11 audit); Ex_rn restores exactly the prefix the combined
-    * partition can't see. In-JVM interleaved A/B (median of 5, three
-    * sessions): fused 0.89–0.92× the two-pass form at sf0.1, results
-    * bit-identical at sf0.01 AND sf0.1. One fewer full-data exchange,
-    * one fewer day-map aggregate, one fewer checkpoint; no
-    * unpartitioned window anywhere — (pair, day) tasks throughout. */
+    * Scale: the rolling stats are [[rollingZScore]]; the LOCF of the
+    * signal and both position lags share one second per-pair window. */
   def pairsBacktest(
       bars: DataFrame,
       sym1: String,
@@ -473,90 +431,22 @@ object PairAnalytics {
       windowRows: Int = DefaultWindowRows,
       minWindow: Int = DefaultMinWindow): DataFrame = {
     def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
-    val aug = ScalableWindow.dayScoped(pairSpread(bars, sym1, sym2),
-      Seq("pair_name"), Seq("bar_ts"), "bar_ts", windowRows - 1)
-    val wRoll = Window.partitionBy(col("pair_name"), col("__day_idx"))
-      .orderBy(col("bar_ts")).rowsBetween(-(windowRows - 1), 0)
-    val z = aug
-      .withColumn("m", avg(col("spread")).over(wRoll))
-      .withColumn("sd", stddev_samp(col("spread")).over(wRoll))
-      .withColumn("nw", count(lit(1)).over(wRoll))
-      .filter(col("__emit"))
-      .withColumn("z_r",
-        round(when(col("nw") >= minWindow && col("sd").isNotNull &&
-          col("sd") =!= 0, (col("spread") - col("m")) / col("sd")), 4))
-      .withColumn("spread_r", round(col("spread"), 6))
-    val sig = z.withColumn("signal",
+    val w = Window.partitionBy(col("pair_name")).orderBy(col("bar_ts"))
+    val sig = rollingZScore(pairSpread(bars, sym1, sym2), windowRows, minWindow)
+      .withColumn("z_r", round(col("z_score"), 4))
+      .select(col("pair_name"), col("bar_ts"),
+        round(col("spread"), 6).as("spread_r"),
         when(col("z_r") <= -entryZ, 1)
           .when(col("z_r") >= entryZ, -1)
-          .when(abs(col("z_r")) < exitZ, 0))
-      .select(col("pair_name"), col("bar_ts"), col("spread_r"),
-        col("signal"))
-    // fused LOCF + lag tail (see scaladoc): rank rows within each
-    // (pair, day) from the end, fold the per-day carry columns once,
-    // then ONE combined (pair, day_idx) window pass derives the
-    // day-split inclusive LOCF (q78 rule) AND both lag depths
-    val x = sig.withColumn("__day", to_date(col("bar_ts")))
-      .localCheckpoint(eager = false)
-    val byDayDesc = Window.partitionBy(col("pair_name"), col("__day"))
-      .orderBy(col("bar_ts").desc)
-    val ranked = x.withColumn("__rn", row_number().over(byDayDesc))
-      .localCheckpoint(eager = false)
-    val dayAgg = ranked.groupBy(col("pair_name"), col("__day")).agg(
-      count(lit(1)).as("__n"),
-      max_by(col("signal"),
-        when(col("signal").isNotNull, col("bar_ts"))).as("__dlast"),
-      max_by(when(col("__rn") > 1, col("signal")),
-        when(col("__rn") > 1 && col("signal").isNotNull, col("bar_ts")))
-        .as("__ex1"),
-      max_by(when(col("__rn") > 2, col("signal")),
-        when(col("__rn") > 2 && col("signal").isNotNull, col("bar_ts")))
-        .as("__ex2"))
-    val idxW = Window.partitionBy(col("pair_name")).orderBy(col("__day"))
-    val prevW = idxW.rowsBetween(Window.unboundedPreceding, -1)
-    val dayIdx = dayAgg
-      .withColumn("__day_idx", row_number().over(idxW))
-      .withColumn("__cum", sum(col("__n")).over(idxW))
-      .withColumn("__carry",
-        last(col("__dlast"), ignoreNulls = true).over(prevW))
-      .localCheckpoint(eager = false)
-    val emit = ranked
-      .join(broadcast(dayIdx.select(col("pair_name"), col("__day"),
-        col("__day_idx"), col("__carry"))), Seq("pair_name", "__day"))
-      .withColumn("__fb", col("__carry"))
-      .withColumn("__emit", lit(true))
-      .select(col("pair_name"), col("bar_ts"), col("spread_r"),
-        col("signal"), col("__day_idx"), col("__fb"), col("__emit"))
-    val destDays = dayIdx.select(col("pair_name"),
-      col("__day_idx").as("__dst_idx"),
-      (col("__cum") - col("__n")).as("__cum_prev"))
-    val carried = ranked.filter(col("__rn") <= 2)
-      .join(broadcast(dayIdx.select(col("pair_name"), col("__day"),
-        col("__day_idx"), col("__cum"), col("__carry"),
-        col("__ex1"), col("__ex2"))), Seq("pair_name", "__day"))
-      .join(broadcast(destDays), Seq("pair_name"))
-      .where(col("__dst_idx") > col("__day_idx") &&
-        col("__cum_prev") - col("__cum") + col("__rn") <= 2)
-      .withColumn("__fb", coalesce(
-        when(col("__rn") === 1, col("__ex1")).otherwise(col("__ex2")),
-        col("__carry")))
-      .withColumn("__emit", lit(false))
-      .select(col("pair_name"), col("bar_ts"), col("spread_r"),
-        col("signal"), col("__dst_idx").as("__day_idx"), col("__fb"),
-        col("__emit"))
-    val w2 = Window.partitionBy(col("pair_name"), col("__day_idx"))
-      .orderBy(col("bar_ts"))
-    val runW = w2.rowsBetween(Window.unboundedPreceding, 0)
-    val pos = emit.unionByName(carried)
-      .withColumn("__l", coalesce(
-        last(col("signal"), ignoreNulls = true).over(runW), col("__fb")))
-      .withColumn("__pl", lag(col("__l"), 1).over(w2))
-      .withColumn("__psp", lag(col("spread_r"), 1).over(w2))
-      .withColumn("__ppl", lag(col("__l"), 2).over(w2))
-      .filter(col("__emit"))
-      .withColumn("pos", coalesce(col("__pl"), lit(0)))
-      .withColumn("prev_pos", coalesce(col("__ppl"), lit(0)))
-      .withColumn("dsp", col("spread_r") - col("__psp"))
+          .when(abs(col("z_r")) < exitZ, 0).as("signal"))
+    // the position set by bar t's signal is the LOCF of the signal,
+    // held over bar t+1
+    val pos = sig
+      .withColumn("__l", last(col("signal"), ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("pos", coalesce(lag(col("__l"), 1).over(w), lit(0)))
+      .withColumn("prev_pos", coalesce(lag(col("__l"), 2).over(w), lit(0)))
+      .withColumn("dsp", col("spread_r") - lag(col("spread_r"), 1).over(w))
       .withColumn("pnl",
         when(col("dsp").isNotNull, round(col("pos") * col("dsp"), 8)))
     pos.groupBy(col("pair_name"))

@@ -146,8 +146,7 @@ object StatOps {
     * at 6 (null when the top k+1 values are all equal).
     *
     * Scale: the per-group rank window is the hot-key class (growing
-    * group count amortizes it; the q39 aggregate-then-TakeOrdered
-    * escape applies if one group dominates). */
+    * group count amortizes it). */
   def hillTail(
       df: DataFrame,
       groupCol: String,
@@ -253,7 +252,7 @@ object StatOps {
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
-    // margin prefix counts via the two-pass escape (round 8): the
+    // margin prefix counts via ScalableRank.cumSum (round 8): the
     // margins are distinct-value-sized — bounded for the documented
     // DISCRETE contract, but a continuous 6dp-scaled column makes the
     // spectrum ~corpus-sized and a plain Window.orderBy would
@@ -309,9 +308,8 @@ object StatOps {
       .groupBy(col("v"))
       .agg(sum(when(col("ia"), 1L).otherwise(0L)).as("ca"),
         sum(when(!col("ia"), 1L).otherwise(0L)).as("cb"))
-    // prefix of cb over the value spectrum via the two-pass escape
-    // (round 8) — same rationale as [[spearmanMidrank]]'s midranks:
-    // exact at any spectrum cardinality, no single-task sort
+    // prefix of cb over the value spectrum via ScalableRank.cumSum
+    // (round 8) — same rationale as [[spearmanMidrank]]'s midranks
     val t = col("ca") + col("cb")
     val agg = ScalableRank.cumSum(dist, Seq.empty, Seq(col("v")),
         col("cb").cast(DecimalType(38, 0)), "__cumb")
@@ -394,8 +392,8 @@ object StatOps {
     *
     * Scale: two corpus-sized aggregates (cells, then margins ride the
     * cells relation); the margin prefix runs through the
-    * [[ScalableRank]] two-pass escape so a continuous value column
-    * can't single-task it; everything after lives on |groups| rows.
+    * exact DECIMAL [[ScalableRank.cumSum]]; everything after lives on
+    * |groups| rows.
     * Determinism: midranks/rank-sums are exact integers; the k
     * per-group double terms round 12dp and fold as DECIMAL(28,12);
     * H, C form in one shared double op order and round 6dp. */
@@ -408,8 +406,8 @@ object StatOps {
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
     val margins = cells.groupBy(col("v")).agg(sum(col("c")).as("nv"))
-    // doubled midrank (integer) + tie cube per distinct value; the
-    // prefix is the two-pass escape, never a single-task sort
+    // doubled midrank (integer) + tie cube per distinct value off the
+    // exact running prefix
     val mid = ScalableRank.cumSum(margins, Seq.empty, Seq(col("v")),
         col("nv").cast(DecimalType(38, 0)), "cum")
       .select(col("v"),
@@ -493,8 +491,8 @@ object StatOps {
     * tests).
     *
     * The group median is EXACT from the per-group value spectrum: the
-    * prefix runs through [[ScalableRank.cumSum]] KEYED BY GROUP (the
-    * two-pass escape's partitioned form), the lo/hi middle ranks pick
+    * prefix runs through [[ScalableRank.cumSum]] KEYED BY GROUP, the
+    * lo/hi middle ranks pick
     * the two central values, and the deviations double
     * (z2 = |2x − (lo + hi)|) so an even-count median never leaves
     * integer arithmetic. Per-group sums fold DECIMAL-exact; the k

@@ -1414,9 +1414,8 @@ object CoreQueries {
     // ABC / Pareto classification of parts by cumulative revenue
     // share: A carries the first 80%, B to 95%, C the tail — the
     // inventory-policy rollup. The |part|-sized aggregate's running
-    // DECIMAL sum goes through ScalableRank.cumSum (two-pass exact
-    // offsets — |part| grows with data, so no single-task sort), and
-    // the class fences compare one identical double quotient
+    // DECIMAL sum goes through ScalableRank.cumSum, and the class
+    // fences compare one identical double quotient
     "q239_abc_pareto" -> ((s, dir) => {
       val rev = Tables.lineitem(s, dir)
         .groupBy(col("l_partkey"))
@@ -1424,8 +1423,8 @@ object CoreQueries {
           .cast(DecimalType(28, 6))).as("rd"))
       val cum = graft.ops.ScalableRank.cumSum(rev, Seq.empty,
         Seq(col("rd").desc, col("l_partkey")), col("rd"), "cum")
-      // grand total off the two-pass OUTPUT (reads the checkpoint —
-      // identical exact-decimal sum, no second lineitem aggregation)
+      // grand total off the cumSum OUTPUT (identical exact-decimal
+      // sum, no second lineitem aggregation)
       val tot = cum.agg(sum(col("rd")).as("td"))
       cum.crossJoin(broadcast(tot))
         .withColumn("cum_share",
@@ -1541,9 +1540,8 @@ object CoreQueries {
 
     // Customer lifetime-value deciles: exact decimal LTV per customer,
     // ntile(10) over the (ltv desc, custkey) total order (identical
-    // bucket arithmetic in both engines) via ScalableRank — |customer|
-    // grows with data, so the bucket index comes from the two-pass
-    // global row number, never a single-task sort — per-decile rollup
+    // bucket arithmetic in both engines) via ScalableRank's global
+    // row number — per-decile rollup
     "q256_ltv_deciles" -> ((s, dir) => {
       val ltv = Tables.orders(s, dir)
         .groupBy(col("o_custkey"))
@@ -1551,8 +1549,8 @@ object CoreQueries {
           sum(col("o_totalprice").cast(DecimalType(28, 6))).as("ltv"))
       val ranked = graft.ops.ScalableRank.ntile(ltv, Seq.empty,
         Seq(col("ltv").desc, col("o_custkey")), 10, "decile")
-      // grand total off the two-pass OUTPUT (reads the checkpoint —
-      // identical exact-decimal sum, no second orders aggregation)
+      // grand total off the ntile OUTPUT (identical exact-decimal
+      // sum, no second orders aggregation)
       val tot = ranked.agg(sum(col("ltv")).as("t"))
       ranked
         .crossJoin(broadcast(tot))
@@ -1954,7 +1952,7 @@ object CoreQueries {
     // Kruskal–Wallis rank ANOVA (StatOps.kruskalWallis): did the
     // three return-flag populations draw the same discount
     // distribution? — the k-group generalization of q298, computed
-    // off the value spectrum with the two-pass prefix escape
+    // off the value spectrum with an exact running prefix
     "q311_kruskal_wallis" -> ((s, dir) => {
       StatOps.kruskalWallis(Tables.lineitem(s, dir),
         round(col("l_discount") * 100, 0), col("l_returnflag"))

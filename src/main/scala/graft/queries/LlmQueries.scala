@@ -759,9 +759,8 @@ object LlmQueries {
     "q272_selection_curve" -> ((s, dir) => {
       def dbl(c: org.apache.spark.sql.Column) =
         c.cast(org.apache.spark.sql.types.DoubleType)
-      // decile via ScalableRank (|docs| grows with data — two-pass
-      // exact bucket index, no single-task sort); the cumulative
-      // window after runs on the 10-row decile rollup only
+      // decile via ScalableRank (exact closed-form bucket index); the
+      // cumulative window after runs on the 10-row decile rollup only
       val wCum = org.apache.spark.sql.expressions.Window
         .orderBy(col("decile"))
         .rowsBetween(org.apache.spark.sql.expressions.Window

@@ -213,26 +213,19 @@ object MarketQueries {
     // RANGE-frame window: 10-minute trailing count/sum per event type,
     // keyed on the numeric epoch so the frame is value-based (peers at
     // equal ts are all included — deterministic under ties, unlike a
-    // ROWS frame over a non-total order). Routed through
-    // ScalableWindow.rangeScoped — (type, day) tasks with a 10-minute
-    // carry-in instead of one task per type's whole history; the
-    // ORACLE stays the plain global window, so the hash match proves
-    // the rewrite exact
+    // ROWS frame over a non-total order)
     "q49_range_window" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .withColumn("us", unix_micros(col("ts")))
-      val aug = graft.ops.ScalableWindow.rangeScoped(ev,
-        Seq("event_type"), "ts", "us", 600000000L)
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"), col("__day_idx"))
+        .partitionBy(col("event_type"))
         .orderBy(col("us"))
         .rangeBetween(-600000000L, 0L)
-      aug
+      ev
         .withColumn("n_10m", count(lit(1)).over(w))
         .withColumn("sum_10m",
           sum(col("value").cast(DecimalType(18, 6))).over(w)
             .cast(DoubleType))
-        .filter(col("__emit"))
         .select(col("event_id"), col("event_type"), col("ts"),
           col("n_10m"), col("sum_10m"))
         .orderBy(col("event_id"))
@@ -326,9 +319,9 @@ object MarketQueries {
 
     // Distribution window functions: percent_rank / cume_dist / ntile
     // over the (value, event_id) TOTAL order — every row is its own
-    // peer group, so all three are closed forms of the two-pass
-    // global index (rn, n): pr = (rn−1)/(n−1), cd = rn/n, ntile by
-    // the bucket formula. Same q49 hot-key escape as q132.
+    // peer group, so all three are closed forms of the global index
+    // (rn, n): pr = (rn−1)/(n−1), cd = rn/n, ntile by the bucket
+    // formula.
     "q43_window_dist" -> ((s, dir) => {
       def dbl(c: org.apache.spark.sql.Column) =
         c.cast(org.apache.spark.sql.types.DoubleType)
@@ -370,13 +363,10 @@ object MarketQueries {
 
     // Quantile normalization (feature engineering): per-series
     // percent_rank of value (ties collapse — deterministic) + decile
-    // bucket over the (value, event_id) total order. Routed through
-    // ScalableRank (the q49 hot-key class: ~5 types over the whole
-    // history): ONE two-pass global index serves both — the decile is
-    // the closed-form ntile of (rn, n) and the tie-collapsing rank is
-    // min(rn) over the (type, value) peer group (small groups — the
-    // hot key was the PARTITION, not the value), so no task ever
-    // holds a full type's history
+    // bucket over the (value, event_id) total order. ONE
+    // ScalableRank index serves both — the decile is the closed-form
+    // ntile of (rn, n) and the tie-collapsing rank is min(rn) over
+    // the (type, value) peer group
     "q132_quantile_norm" -> ((s, dir) => {
       def dbl(c: org.apache.spark.sql.Column) =
         c.cast(org.apache.spark.sql.types.DoubleType)
@@ -439,15 +429,12 @@ object MarketQueries {
         .orderBy(col("symbol"))
     }),
 
-    // Skew-safe trailing window: (key, day)-scoped partitions with
-    // previous-day carry-in — the SURVEY §7.4 mitigation for q49/W1
-    // class hot-key windows, implemented. The ORACLE is the plain
-    // GLOBAL per-key window: a hash match proves the day-scoped
-    // rewrite is exactly the global semantics, cross-engine.
+    // Trailing per-key stats through ScalableWindow.trailingStats:
+    // DECIMAL frame sums, mean/stddev derived in scalar double.
     "q76_window_scalable" -> ((s, dir) => {
       graft.ops.ScalableWindow.trailingStats(Tables.events(s, dir),
         keyCols = Seq("event_type"), orderCols = Seq("ts", "event_id"),
-        tsCol = "ts", valCol = "value", w = 40)
+        valCol = "value", w = 40)
         .select(col("event_id"), col("event_type"), col("ts"),
           col("r_mean"), col("r_std"), col("n_win"))
         .orderBy(col("event_id"))
@@ -610,8 +597,7 @@ object MarketQueries {
     // Cross-sectional factor snapshot: per bar_ts ACROSS series, rank
     // by close and z-score vs the decimal-exact cross-sectional
     // mean/stddev. The window partitions by bar_ts — key cardinality
-    // GROWS with data (one partition per bar), so this window is
-    // scale-safe without any carry-in rewrite.
+    // GROWS with data (one partition per bar).
     "q93_cross_sectional" -> ((s, dir) => {
       val b = MarketBars.bars(Tables.events(s, dir), "event_type", "ts", "value")
       val wp = org.apache.spark.sql.expressions.Window.partitionBy(col("bar_ts"))
@@ -1349,7 +1335,7 @@ object MarketQueries {
 
     // KPSS level-stationarity test (MarketBars.kpss): the null is
     // STATIONARITY — the mirror of q172's ADF — with a Bartlett
-    // long-run variance at 4 lags; day-split exact prefix sums
+    // long-run variance at 4 lags; exact running prefix sums
     "q363_kpss" -> ((s, dir) => {
       MarketBars.kpss(MarketBars.bars(Tables.events(s, dir),
           "event_type", "ts", "value"))
@@ -2049,9 +2035,8 @@ object MarketQueries {
            END AS notes
          FROM c CROSS JOIN nt
          ORDER BY symbol""",
-    // deliberately the GLOBAL window — the Spark side computes the
-    // (key, day)+carry-in rewrite; matching hashes prove equivalence.
-    // Frame sums in DECIMAL (exact), stats derived in scalar double.
+    // the same per-key window; frame sums in DECIMAL (exact), stats
+    // derived in scalar double.
     "q76_window_scalable" ->
       """WITH x AS (SELECT event_id, event_type, ts,
                       CAST(value AS DECIMAL(18,6)) AS dv FROM events),
@@ -5049,8 +5034,8 @@ object MarketQueries {
             END AS mean_reverting
           FROM f ORDER BY series""",
 
-    // Granger twin: pre-filtered r8 chain with its lag (plain global
-    // per-series windows — day-scope equivalence is the q151 rule),
+    // Granger twin: pre-filtered r8 chain with its lag (plain
+    // per-series windows),
     // the q332 nine-moment machinery, both RSS forms in one op order
     "q341_granger" ->
       s"""WITH $barsCte,
@@ -5125,7 +5110,7 @@ object MarketQueries {
           FROM e ORDER BY cause, effect""",
 
     // DFA twin: exact integer profile via the plain prefix window
-    // (two-pass equivalence is the ScalableRank contract), the same
+    // (ScalableRank's running sum), the same
     // index-sum constants, clamped RSS, 3-point log-log slope
     "q342_dfa" ->
       s"""WITH $barsCte,
@@ -6190,8 +6175,8 @@ object MarketQueries {
           FROM z ORDER BY series, period"""
     },
 
-    // TE twin: the q341 global lag chain (the day-scoped escape's
-    // bit-identical form), sign cells, three integer margins, 12dp
+    // TE twin: the q341 per-series lag chain, sign cells, three
+    // integer margins, 12dp
     // DECIMAL term folds
     "q380_transfer_entropy" ->
       s"""WITH $barsCte,
@@ -6483,8 +6468,8 @@ object MarketQueries {
               d := sid, v := conc))).v AS open_at_eod
           FROM c GROUP BY 1 ORDER BY d""",
 
-    // Weibull twin: gap spectrum + window cum counts (the cumSum
-    // escape's bit-identical form), plotting positions cum/(n+1),
+    // Weibull twin: gap spectrum + window cum counts (cumSum's
+    // form), plotting positions cum/(n+1),
     // 12dp ln/ln folds, shared OLS op order
     "q395_weibull_gaps" ->
       """WITH g0 AS (SELECT event_type AS series,
@@ -7069,7 +7054,7 @@ object MarketQueries {
 
     // FD twin: the SAME weight literals (Double.toString round-trips
     // uniquely), one left-associated 21-term convolution and its
-    // shifted partner, plain per-series windows (day-scope rule)
+    // shifted partner, plain per-series windows
     "q348_frac_diff" -> {
       val ws = MarketBars.fracDiffWeights(0.4, 20)
       val lags = (1 to 21).map(j =>

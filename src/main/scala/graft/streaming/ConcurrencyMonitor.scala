@@ -28,7 +28,7 @@ import graft.ops.ScalableRank
   * a production deployment seals days older than the watermark into
   * their final (day, peak, eod) rows and keeps points only for open
   * days; here the store keeps the points (spec-scale) and snapshot()
-  * runs the same two-pass cumSum escape the batch op uses. */
+  * runs the same cumSum sweep the batch op uses. */
 object ConcurrencyMonitor {
 
   /** Closed-session interval store (append-only). */
@@ -43,7 +43,7 @@ object ConcurrencyMonitor {
     /** The batch q398 sweep over the accumulated closed sessions:
       * per-user session index (the batch `sid` numbering — sessions
       * in start order), ±1 sweep, global running count through the
-      * cumSum two-pass escape, day rollup. */
+      * cumSum, day rollup. */
     def snapshot(): DataFrame = {
       val dec = DecimalType(38, 0)
       val w = org.apache.spark.sql.expressions.Window

@@ -9,7 +9,7 @@ import OrderedFold.utcDay
 /** Stateful streaming return-term builder — the live twin of the batch
   * bipower-variation chain in `ops/MarketBars.bipowerJump` (q181).
   *
-  * The batch op is two day-scoped lag chains (close→return,
+  * The batch op is two within-day lag chains (close→return,
   * return→previous-return) feeding 12dp-rounded DECIMAL term sums.
   * Both chains are literally sequential, so the stream runs them as
   * state and emits, per surviving bar, the 8dp return `r` plus the

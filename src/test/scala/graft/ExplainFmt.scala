@@ -1,10 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** plans/r14 dump: explain("formatted") per named query to files. */
+/** plans/ dump: explain("formatted") per named query to files.
+  *
+  *   sbt "Test/runMain graft.ExplainFmt <sfDir> <outDir> <suffix> [--executed] q144_cusum ..."
+  *
+  * With `--executed` each query is collected first, so the file holds
+  * the final adaptive plan as it ran. */
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
-    val names = args.drop(3).toSeq
+    val executed = args.lift(3).contains("--executed")
+    val names = args.drop(if (executed) 4 else 3).toSeq
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -16,6 +22,7 @@ object ExplainFmt {
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
+        if (executed) df.collect()
         val plan = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         val txt = df.queryExecution.explainString(plan)
         java.nio.file.Files.writeString(

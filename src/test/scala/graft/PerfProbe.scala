@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * summed task time / executor CPU time / shuffle bytes. Tells whether
   * a bench-scale query is compute-bound (taskTime ≈ cpuTime ≈ wall ×
   * cores) or overhead-bound (wall ≫ taskTime / cores: job barriers,
-  * planning, codegen, scheduling). Test-scope diagnostic only.
+  * planning, codegen, scheduling). Every pass writes the full result
+  * to the `noop` sink, so no output column is pruned away (a `count()`
+  * would let the optimizer drop windows whose values it never reads).
+  * Test-scope diagnostic only.
   *
   *   sbt "Test/runMain graft.PerfProbe q381_epps,q153_hurst"
   */
@@ -65,13 +68,15 @@ object PerfProbe {
       val Array(a, b) = vs.split("\\|", 2)
       (k, a, b)
     }
+    def run(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
     val picked = SparkEntry.queries.filter { case (n, _) => only(n) }
     picked.foreach { case (name, fn) =>
       // warm-up (JIT + footer caches), as Bench does — once per variant
       ab.foreach { case (k, a, _) => spark.conf.set(k, a) }
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
       ab.foreach { case (k, _, b) => spark.conf.set(k, b) }
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
       val passes = if (ab.isDefined) 10 else 2
       (1 to passes).foreach { pass =>
         val variant = ab.map { case (k, a, b) =>
@@ -84,7 +89,7 @@ object PerfProbe {
         stageAgg.clear()
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
+          run(fn(spark, sfDir))
           val wall = (System.nanoTime() - t0) / 1e9
           Thread.sleep(200) // let straggler events land
           println(f"[probe] $name%-28s pass=$pass%2d v=$variant%-12s wall=$wall%6.2fs " +

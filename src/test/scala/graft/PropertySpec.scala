@@ -652,25 +652,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("day-scoped carry-in window equals the global per-key window bit-for-bit") {
-    // 2 keys x 6 days x 40 rows/day, deterministic values; w = 30 so
-    // frames regularly span one day boundary (dense case: the carry
-    // never reaches past the adjacent day)
-    val rows = for {
-      k <- Seq("A", "B"); d <- 1 to 6; i <- 1 to 40
-    } yield (k,
-      Timestamp.valueOf(f"2024-01-0$d 00:$i%02d:00"),
-      ((k.hashCode.abs + d * 37 + i * 17) % 1000).toDouble,
-      (d * 100 + i).toLong)
-    val df = rows.toDF("pair_name", "bar_ts", "spread", "rid")
-    val global = graft.ops.PairAnalytics.rollingZScore(df, 30, 10)
-    val scoped = graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10)
-    assert(scoped.count() === global.count())
-    // exact set equality — doubles must be bit-identical, not approximate
-    assert(scoped.except(global).count() === 0)
-    assert(global.except(scoped).count() === 0)
-  }
-
   test("day-scoped window stays exact on SPARSE days (frame spans many days)") {
     // 7 rows/day << w-1 = 29: every frame reaches 4+ days back, and
     // days hold uneven counts (7,8,7,8,...) so the reach rule must use
@@ -682,19 +663,13 @@ class PropertySpec extends AnyFunSuite {
       Timestamp.valueOf(f"2024-01-0$d 00:$i%02d:00"),
       ((k.hashCode.abs + d * 37 + i * 17) % 1000).toDouble,
       (d * 100 + i).toLong)
-    val df = rows.toDF("pair_name", "bar_ts", "spread", "rid")
-    val global = graft.ops.PairAnalytics.rollingZScore(df, 30, 10)
-    val scoped = graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10)
-    assert(scoped.count() === global.count())
-    assert(scoped.except(global).count() === 0)
-    assert(global.except(scoped).count() === 0)
-    // trailingStats over the same sparse shape: compare against the
-    // plain global-window formulation (the q76 oracle shape)
+    // trailingStats over the sparse shape: compare against the plain
+    // global-window formulation (the q76 oracle shape)
     val ev = rows.map { case (k, t, v, r) => (r, t, k, v) }
       .toDF("event_id", "ts", "event_type", "value")
     val sw = graft.ops.ScalableWindow.trailingStats(ev,
       keyCols = Seq("event_type"), orderCols = Seq("ts", "event_id"),
-      tsCol = "ts", valCol = "value", w = 30)
+      valCol = "value", w = 30)
       .select("event_id", "event_type", "ts", "r_mean", "r_std", "n_win")
     val gw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
@@ -732,7 +707,7 @@ class PropertySpec extends AnyFunSuite {
         .withColumn("pc", lag(col("close"), 1).over(w))
         .withColumn("po", lag(col("open"), 1).over(w))
       val scoped = graft.ops.ScalableWindow.withPrevValues(df,
-        Seq("series"), Seq("bar_ts"), "bar_ts",
+        Seq("series"), Seq("bar_ts"),
         Seq(("close", "pc"), ("open", "po")))
       assert(scoped.count() === global.count())
       assert(scoped.except(global).count() === 0)
@@ -757,7 +732,7 @@ class PropertySpec extends AnyFunSuite {
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("n_all", count(lit(1)).over(wAll))
     val scoped = graft.ops.ScalableWindow.withSeqIndex(df,
-      Seq("series"), Seq("ts", "id"), "ts", "rn", Some("n_all"))
+      Seq("series"), Seq("ts", "id"), "rn", Some("n_all"))
       .withColumn("rn", col("rn").cast("long"))
       .select(global.columns.map(col).toSeq: _*)
     assert(scoped.count() === global.count())
@@ -779,43 +754,15 @@ class PropertySpec extends AnyFunSuite {
     val df = rows.toDF("series", "ts", "id", "v")
     val composed = graft.ops.ScalableWindow.withPrevValues(
         graft.ops.ScalableWindow.withSeqIndex(df,
-          Seq("series"), Seq("ts", "id"), "ts", "rn", Some("n_all")),
-        Seq("series"), Seq("ts", "id"), "ts", Seq(("v", "pv")))
+          Seq("series"), Seq("ts", "id"), "rn", Some("n_all")),
+        Seq("series"), Seq("ts", "id"), Seq(("v", "pv")))
     val fused = graft.ops.ScalableWindow.withSeqPrev(df,
-      Seq("series"), Seq("ts", "id"), "ts", "rn",
+      Seq("series"), Seq("ts", "id"), "rn",
       Seq(("v", "pv")), Some("n_all"))
       .select(composed.columns.map(col).toSeq: _*)
     assert(fused.count() === composed.count())
     assert(fused.except(composed).count() === 0)
     assert(composed.except(fused).count() === 0)
-  }
-
-  test("dayScopedLead equals the global per-key lead frames (sparse days)") {
-    import org.apache.spark.sql.expressions.Window
-    // 3-4 rows/day with horizon 8: every lead array spans 2+ later
-    // days, so the forward carry's reach rule is fully exercised
-    val rows = for {
-      k <- Seq("A", "B"); d <- 1 to 9; i <- 1 to (3 + d % 2)
-    } yield (k,
-      Timestamp.valueOf(f"2024-01-0$d 00:$i%02d:00"),
-      ((k.hashCode.abs + d * 37 + i * 17) % 1000).toDouble)
-    val df = rows.toDF("series", "bar_ts", "v")
-    val h = 8
-    val gw = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
-    val global = df.select(col("series"), col("bar_ts"),
-      array((1 to h).map(j => lead(col("v"), j).over(gw)): _*).as("leads"))
-    val aug = graft.ops.ScalableWindow.dayScopedLead(df,
-      Seq("series"), Seq("bar_ts"), "bar_ts", h)
-    val sw = Window.partitionBy(col("series"), col("__day_idx"))
-      .orderBy(col("bar_ts"))
-    val scoped = aug
-      .select(col("series"), col("bar_ts"),
-        array((1 to h).map(j => lead(col("v"), j).over(sw)): _*).as("leads"),
-        col("__emit"))
-      .filter(col("__emit")).drop("__emit")
-    assert(scoped.count() === global.count())
-    assert(scoped.except(global).count() === 0)
-    assert(global.except(scoped).count() === 0)
   }
 
   test("day-scoped ccf and pairsBacktest equal their global-window forms on gappy days") {
@@ -991,30 +938,8 @@ class PropertySpec extends AnyFunSuite {
       assert(a.except(b).count() === 0)
       assert(b.except(a).count() === 0)
     }
-    // (1) rangeScoped vs global RANGE window (q49 shape, 10-min reach)
     val ev = rows.map { case (k, t, v, r) => (r, t, k, v) }
       .toDF("event_id", "ts", "event_type", "value")
-      .withColumn("us", unix_micros(col("ts")))
-    val gw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("us"))
-      .rangeBetween(-600000000L, 0L)
-    val globalRange = ev.select(col("event_id"),
-      count(lit(1)).over(gw).as("n_10m"),
-      sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-        .over(gw).cast("double").as("sum_10m"))
-    val aug = graft.ops.ScalableWindow.rangeScoped(ev,
-      Seq("event_type"), "ts", "us", 600000000L)
-    val sw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type"), col("__day_idx")).orderBy(col("us"))
-      .rangeBetween(-600000000L, 0L)
-    val scopedRange = aug
-      .withColumn("n_10m", count(lit(1)).over(sw))
-      .withColumn("sum_10m",
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .over(sw).cast("double"))
-      .filter(col("__emit"))
-      .select(col("event_id"), col("n_10m"), col("sum_10m"))
-    same(scopedRange, globalRange)
     // (2) day-split drawdown vs the plain global prefix-max form
     val globalPeakW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
@@ -1056,5 +981,112 @@ class PropertySpec extends AnyFunSuite {
         (0 until 4).exists(b => ((h >> (b * 16)) & 0xffff) == ((h2 >> (b * 16)) & 0xffff))
       assert(bandsEqual, s"h=$h flips=$flips")
     }
+  }
+
+  test("sequential folds equal gapFillLocf, staleRuns, streakStats and cusum across days") {
+    import scala.math.BigDecimal.RoundingMode.HALF_UP
+    import org.apache.spark.sql.Row
+    def ts(d: Int, hm: String) = Timestamp.valueOf(s"2024-03-0$d $hm:00")
+    // A: a stale run and an up streak both cross a day boundary, and
+    // the level shift on day 4 puts the CUSUM argmax at the end of
+    // day 3; B: a one-row series; C: a stale run across a missing day
+    val bars = (
+      Seq("10.00,10.00,10.25,10.50,10.50,10.50", "10.50,10.50,10.25,10.00,10.00,10.25",
+        "10.50,10.75,11.00,11.25,11.50,11.75", "15.00,15.25,15.00,15.00,15.25,15.50")
+        .zipWithIndex.flatMap { case (day, d) =>
+          day.split(",").zipWithIndex.map { case (c, i) =>
+            ("A", ts(d + 1, f"10:${i * 5}%02d"), c.toDouble) } } ++
+      Seq(("B", ts(2, "10:00"), 5.0)) ++
+      Seq((1, "10:00", 7.0), (1, "10:05", 7.0), (1, "10:10", 7.0), (3, "10:00", 7.0),
+        (3, "10:05", 8.0)).map { case (d, hm, c) => ("C", ts(d, hm), c) })
+    val bySeries = bars.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (k, rs) => k -> rs.sortBy(_._2.getTime) }
+    val barsDf = bars.toDF("series", "bar_ts", "close")
+    def runs[T](xs: Seq[T]): Seq[(T, Int)] =
+      xs.foldLeft(List.empty[(T, Int)]) {
+        case ((v, n) :: rest, x) if v == x => (v, n + 1) :: rest
+        case (acc, x) => (x, 1) :: acc
+      }.reverse
+
+    // staleRuns: islands of equal closes
+    val staleWant = bySeries.map { case (k, rs) =>
+      val lens = runs(rs.map(_._3)).map(_._2.toLong)
+      (k, lens.size.toLong, lens.sum, lens.max, lens.count(_ >= 3).toLong,
+        math.floor(lens.sum.toDouble / lens.size.toDouble * 1e6 + 0.5) / 1e6)
+    }
+    val staleGot = MarketBars.staleRuns(barsDf, 3).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).sortBy(_._1)
+    assert(staleGot === staleWant)
+    assert(staleGot.head._4 === 5) // A's 10.50 run spans days 1-2
+
+    // streakStats: islands of equal Δclose direction
+    val streakWant = bySeries.flatMap { case (k, rs) =>
+      val dirs = rs.map(_._3).sliding(2).collect { case Seq(p, c) =>
+        val d6 = math.floor((c - p) * 1e6 + 0.5).toLong
+        if (d6 > 0) "up" else if (d6 < 0) "down" else "flat"
+      }.toSeq
+      runs(dirs).groupBy(_._1).toSeq.map { case (dir, rr) =>
+        val lens = rr.map(_._2.toLong)
+        (k, dir, lens.size.toLong, lens.max, lens.sum,
+          math.floor(lens.sum.toDouble / lens.size.toDouble * 100.0 + 0.5) / 100.0)
+      }
+    }.sortBy(t => (t._1, t._2))
+    val streakGot = MarketBars.streakStats(barsDf).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).sortBy(t => (t._1, t._2))
+    assert(streakGot === streakWant)
+    // A's up streak runs from the end of day 2 into day 4
+    assert(streakGot.exists(t => t._1 == "A" && t._2 == "up" && t._4 == 9))
+
+    // cusum: argmax of |n·P_i − i·S| over exact integers, earliest tie
+    val cusumWant = bySeries.map { case (k, rs) =>
+      val x6 = rs.map(r => math.floor(r._3 * 1e6 + 0.5).toLong)
+      val n = x6.size.toLong
+      val s = BigInt(x6.sum)
+      val cands = x6.scanLeft(0L)(_ + _).tail.zipWithIndex.map { case (p, i) =>
+        ((BigInt(n) * p - BigInt(i + 1) * s).abs, i) }
+      val (absc, i) = cands.maxBy { case (a, j) => (a, -j) }
+      (k, n, rs(i)._2, (i + 1).toLong,
+        math.floor(absc.toDouble / n.toDouble / 1e6 * 1e6 + 0.5) / 1e6)
+    }
+    val cusumGot = MarketBars.cusum(barsDf).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getTimestamp(2), r.getLong(3),
+        r.getDouble(4))).sortBy(_._1)
+    assert(cusumGot === cusumWant)
+    assert(cusumGot.head._3.toLocalDateTime.getDayOfMonth === 3)
+
+    // gapFillLocf: X's LOCF gap spans all of days 2 and 3; Y has one row
+    val events = Seq(
+      ("X", Timestamp.valueOf("2024-03-01 23:58:10"), 1.5),
+      ("X", Timestamp.valueOf("2024-03-01 23:59:20"), 2.0),
+      ("X", Timestamp.valueOf("2024-03-01 23:59:40"), 2.25),
+      ("X", Timestamp.valueOf("2024-03-04 00:01:05"), 3.0),
+      ("X", Timestamp.valueOf("2024-03-04 00:03:00"), 4.0),
+      ("Y", Timestamp.valueOf("2024-03-02 12:00:30"), 9.0))
+    val minute = 60000L
+    val locfWant = events.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (k, es) =>
+      val perMin = es.groupBy(e => e._2.getTime / minute * minute).map {
+        case (m, ms) => m -> (ms.size.toLong,
+          ms.map(e => BigDecimal(e._3).setScale(6)).sum.toDouble / ms.size.toDouble)
+      }
+      val (lo, hi) = (perMin.keys.min, perMin.keys.max)
+      (lo to hi by minute).scanLeft((0L, 0L, Option.empty[Double], false)) {
+        case ((_, _, last, _), m) => perMin.get(m) match {
+          case Some((c, v)) => (m, c, Some(v), false)
+          case None => (m, 0L, last, true)
+        }
+      }.tail.map { case (m, c, v, filled) =>
+        (k, new Timestamp(m), c, v.map(BigDecimal(_).setScale(4, HALF_UP).toDouble), filled)
+      }
+    }
+    val locfGot = graft.ops.EventAnalytics.gapFillLocf(
+        events.toDF("event_type", "ts", "value"))
+      .collect().toSeq
+      .map((r: Row) => (r.getString(0), r.getTimestamp(1), r.getLong(2),
+        Option(r.get(3)).map(_.asInstanceOf[Double]), r.getBoolean(4)))
+      .sortBy(t => (t._1, t._2.getTime))
+    assert(locfGot === locfWant)
+    assert(locfGot.count(t => t._1 == "X" && t._5 && t._4.contains(2.125)) > 2 * 1440)
   }
 }

@@ -168,7 +168,7 @@ class Round14Spec extends AnyFunSuite {
         when(col("window_size") >= 10 && col("rolling_std").isNotNull &&
           col("rolling_std") =!= 0.0,
           (col("spread") - col("rolling_mean")) / col("rolling_std")))
-    assertSame(graft.ops.ScalableWindow.rollingZScoreByDay(df, 30, 10),
+    assertSame(graft.ops.PairAnalytics.rollingZScore(df, 30, 10),
       zWant, "pair_name", "bar_ts")
 
     val series = df.withColumn("series", col("pair_name"))
@@ -186,14 +186,14 @@ class Round14Spec extends AnyFunSuite {
         round(sqrt(greatest((s2 - s1 * s1 / n) / (n - 1), lit(0.0))), 6)))
       .drop("__s1", "__s2")
     assertSame(graft.ops.ScalableWindow.trailingStats(series, Seq("series"),
-      Seq("bar_ts"), "bar_ts", "spread", 20), tWant, "series", "bar_ts")
+      Seq("bar_ts"), "spread", 20), tWant, "series", "bar_ts")
 
     val spWant = df
       .withColumn("ntot", count(lit(1)).over(Window.partitionBy(col("pair_name"))))
       .withColumn("rn", row_number().over(byPair).cast("long"))
       .withColumn("prev", lag(col("spread"), 1).over(byPair))
     assertSame(graft.ops.ScalableWindow.withSeqPrev(df, Seq("pair_name"),
-      Seq("bar_ts"), "bar_ts", "rn", Seq("spread" -> "prev"), Some("ntot")),
+      Seq("bar_ts"), "rn", Seq("spread" -> "prev"), Some("ntot")),
       spWant, "pair_name", "bar_ts")
 
     val bySeries = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
@@ -201,8 +201,7 @@ class Round14Spec extends AnyFunSuite {
       .withColumn("pc", lag(col("spread"), 1).over(bySeries))
       .filter(col("pc").isNotNull)
     assertSame(graft.ops.ScalableWindow.laggedScope(series, Seq("series"),
-        Seq("bar_ts"), "bar_ts", "spread", "pc", 5, valid = col("pc").isNotNull)
-      .filter(col("__emit")).drop("__emit", "__day_idx"),
+        Seq("bar_ts"), "spread", "pc", col("pc").isNotNull),
       lgWant, "series", "bar_ts")
   }
 

@@ -113,20 +113,17 @@ class Round8Spec extends AnyFunSuite {
     val want = gRets
       .withColumn("nk", count(lit(1)).over(gFrame))
       .withColumn("rk", sum(col("r8")).over(gFrame))
-    val aug = graft.ops.ScalableWindow.laggedScope(bars, Seq("series"),
-      Seq("bar_ts"), "bar_ts", "close", "prev_c", k - 1,
-      valid = col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-      slim = _.select(col("series"), col("bar_ts"),
+    val rets = graft.ops.ScalableWindow.laggedScope(bars, Seq("series"),
+        Seq("bar_ts"), "close", "prev_c",
+        col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
+      .select(col("series"), col("bar_ts"),
         floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"),
-        col("__day_idx"), col("__rev")))
-    val wk = Window.partitionBy(col("series"), col("__day_idx"))
+          .cast("long").as("r8"))
+    val wk = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts")).rowsBetween(-(k - 1), 0)
-    val got = aug
+    val got = rets
       .withColumn("nk", count(lit(1)).over(wk))
       .withColumn("rk", sum(col("r8")).over(wk))
-      .filter(col("__emit"))
-      .drop("__emit", "__day_idx")
     same(got, want)
   }
 

@@ -303,19 +303,18 @@ class ScaleSpec extends AnyFunSuite {
       ("B", java.sql.Timestamp.valueOf("2024-01-02 14:30:00"), 20.0)
     ).toDF("series", "bar_ts", "close")
     val base = Seq(("A", 10.0), ("B", 20.0)).toDF("series", "mu0")
-    // the prefix-sum identity S_i = P_i − min(0, min P_j) now SPLITS
-    // at day boundaries (running sum = prior-day offset + within-day
-    // prefix; running min = min(prior days' prefix-min, within-day
-    // min)): no corpus-level window may partition by the bare series
-    // key — only the keys×days day-map offsets do (ordered by __day,
-    // never by bar_ts)
+    // the prefix-sum identity S_i = P_i − min(0, min P_j): the running
+    // sum and the running min over it share ONE per-series shuffle and
+    // sort, and the alarm rollup on the same key adds no exchange
     val plan = graft.ops.MarketBars.pageCusum(bars, base, slack = 0.5, h = 5.0)
       .queryExecution.executedPlan.toString
     assert("windowspecdefinition\\(series#\\d+, bar_ts#\\d+".r
-      .findFirstIn(plan).isEmpty,
-      s"per-series global window found (skew hazard):\n${plan.take(3000)}")
-    assert(plan.contains("__day"),
-      s"day-split prefix machinery expected:\n${plan.take(3000)}")
+      .findFirstIn(plan).nonEmpty,
+      s"per-series running window expected:\n${plan.take(3000)}")
+    assert("Exchange hashpartitioning\\(series#".r.findAllIn(plan).size === 1,
+      s"one per-series shuffle expected:\n${plan.take(3000)}")
+    assert("Sort \\[".r.findAllIn(plan).size === 1,
+      s"one sort expected:\n${plan.take(3000)}")
   }
 
   test("q171 heaps-law plan: id-math buckets, no corpus row_number") {
@@ -350,16 +349,21 @@ class ScaleSpec extends AnyFunSuite {
       s"a Window runs on the raw event stream:\n${plan.take(3000)}")
   }
 
-  test("q190 backtest plan: fully day-scoped, no single-partition window left") {
-    // round 10 removed the unpartitioned Window.orderBy(bar_ts): every
-    // corpus-touching window partitions by the pair
+  test("q190 backtest plan: one sort feeds every window, no checkpoint or union left") {
+    // the rolling stats, the signal LOCF and the position lags are
+    // windows over the one pair in one order: a single sort serves
+    // them all. (The pair key is a literal, so the optimizer drops it
+    // from the partition spec; one pair is one window task either way.)
     val bars = graft.ops.MarketBars.bars(Tables.events(spark, sf),
       "event_type", "ts", "value")
     val plan = graft.ops.PairAnalytics.pairsBacktest(bars, "click", "view")
       .queryExecution.executedPlan.toString
-    assert("windowspecdefinition\\(bar_ts#\\d+ ASC".r
-      .findFirstIn(plan).isEmpty,
-      s"unpartitioned window found:\n${plan.take(3000)}")
+    assert("Sort \\[bar_ts#\\d+ ASC".r.findAllIn(plan).size === 1,
+      s"one bar_ts sort expected:\n${plan.take(6000)}")
+    assert("\\bWindow \\[".r.findAllIn(plan).size >= 3,
+      s"rolling, LOCF and lag windows expected:\n${plan.take(6000)}")
+    assert(!plan.contains("ExistingRDD") && !plan.contains("Union"),
+      s"no checkpoint or union expected:\n${plan.take(6000)}")
   }
 
   test("q191 returned-revenue plan: pushed flag filter, broadcast nation, TakeOrdered cut") {
@@ -566,7 +570,7 @@ class ScaleSpec extends AnyFunSuite {
         ((d * 37 + i * 17) % 1000).toDouble, (d * 100 + i).toLong)
     val ev = rows.toDF("event_type", "ts", "value", "event_id")
     val sw = graft.ops.ScalableWindow.trailingStats(ev,
-      Seq("event_type"), Seq("ts", "event_id"), "ts", "value", w = 40)
+      Seq("event_type"), Seq("ts", "event_id"), "value", w = 40)
       .select("event_id", "r_mean", "r_std", "n_win")
     val gw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))

@@ -15,6 +15,17 @@
 # smaller factors hid (round 5: a zero close breaking a log() guard, a
 # window-combine ulp divergence) — every query batch should get all
 # three factors by default, not by discipline.
+#
+# Refactors that must not change any result: run the sweep on the
+# parent commit too (SWEEP_OUT=<dir> tools/sweep.sh in its checkout)
+# and compare the two dump trees factor by factor,
+#
+#   python3 tools/diff_dumps.py <parent_out>/sf0.1 <change_out>/sf0.1
+#
+# — same column names and types, EXCEPT ALL empty both ways, one capped
+# process per query, non-zero exit on any difference. It also covers
+# the sf0.1 queries whose DuckDB twin is too large to evaluate within
+# the memory cap.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
