@@ -9,8 +9,15 @@ object Dist {
     * scan produced fewer splits than cores (a small file arrives as
     * ONE split, serializing everything downstream on one core). At
     * real scale the scan already has >= cores splits and this is a
-    * no-op; the check reads only the plan's partitioning, it runs no
-    * job. */
+    * no-op; the check reads only the plan's size statistics, it runs
+    * no job.
+    *
+    * Precondition: `df` is a parquet FILE SCAN (every caller passes
+    * `Tables.documents` or `Tables.orders` straight through
+    * `Tables.rebalance`). Only a file scan's `sizeInBytes` is its real
+    * byte count; a checkpoint-backed (`LogicalRDD`) or join-derived
+    * input reports the default or an inflated estimate, and would
+    * never be spread. */
   def rebalance(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // Decide from the optimized plan's size statistics, not from

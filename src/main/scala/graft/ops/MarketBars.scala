@@ -13,15 +13,17 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType
   * Structured-Streaming extension performs incrementally
   * (graft.streaming.BarBuilder).
   *
-  * Scale notes: one `groupBy(series, bucket)` → a single hash
-  * aggregation with map-side partial aggregation; no window functions,
-  * no per-series single-partition skew. Open/close come from
-  * `min`/`max` over `struct(ts, value)` in the same pass (no
-  * self-join, no sort) — NOT `min_by`/`max_by`, whose tie-break on
-  * duplicate timestamps is nondeterministic across partial-aggregation
-  * orders; the struct form totally orders ties by value, making batch
-  * bars, streaming bars (graft.streaming.BarBuilder uses the same
-  * struct trick), and the DuckDB oracle agree bit-for-bit.
+  * Scale notes: one `groupBy(series, bucket)` → one aggregation with
+  * map-side partial aggregation; no window functions, no per-series
+  * single-partition skew. Open/close come from [[firstBy]]/[[lastBy]]
+  * (`min`/`max` over `struct(ts, value)`) in the same pass, no
+  * self-join; a struct aggregate buffer is not hash-aggregatable, so
+  * Spark plans the pass as a `SortAggregate` (a sort on each side of
+  * the exchange). NOT `min_by`/`max_by`, whose tie-break on duplicate
+  * timestamps is nondeterministic across partial-aggregation orders;
+  * the struct form totally orders ties by value, making batch bars,
+  * streaming bars (graft.streaming.BarBuilder calls the same
+  * helpers), and the DuckDB oracle agree bit-for-bit.
   */
 object MarketBars {
 
@@ -50,10 +52,10 @@ object MarketBars {
         col(seriesCol).as("series"),
         timeBucket(col(tsCol), stepMicros).as("bar_ts"))
       .agg(
-        min(struct(col(tsCol).as("t"), col(valueCol).as("v"))).getField("v").as("open"),
+        firstBy(col(tsCol), col(valueCol)).as("open"),
         max(col(valueCol)).as("high"),
         min(col(valueCol)).as("low"),
-        max(struct(col(tsCol).as("t"), col(valueCol).as("v"))).getField("v").as("close"),
+        lastBy(col(tsCol), col(valueCol)).as("close"),
         count(lit(1)).as("n_ticks"),
         // exact decimal accumulation → stable double, independent of
         // partial-aggregation order (double-sum order varies at scale)
@@ -92,20 +94,18 @@ object MarketBars {
     * the bar-hierarchy rollup that lets every coarser granularity
     * derive from the bar store instead of rescanning raw ticks.
     * Same one-shuffle OHLCV shape as [[bars]]; open/close pick by
-    * min/max struct over the (unique within a bucket) fine bar_ts, so
-    * the pick is deterministic; volumes/counts re-sum exactly
-    * (decimal in, decimal rollup). */
+    * [[firstBy]]/[[lastBy]] over the (unique within a bucket) fine
+    * bar_ts, so the pick is deterministic; volumes/counts re-sum
+    * exactly (decimal in, decimal rollup). */
   def resample(bars: DataFrame, stepMicros: Long): DataFrame =
     bars.groupBy(
         col("series"),
         timeBucket(col("bar_ts"), stepMicros).as("bar_ts"))
       .agg(
-        min(struct(col("bar_ts").as("t"), col("open").as("v")))
-          .getField("v").as("open"),
+        firstBy(col("bar_ts"), col("open")).as("open"),
         max(col("high")).as("high"),
         min(col("low")).as("low"),
-        max(struct(col("bar_ts").as("t"), col("close").as("v")))
-          .getField("v").as("close"),
+        lastBy(col("bar_ts"), col("close")).as("close"),
         sum(col("n_ticks")).as("n_ticks"),
         sum(col("volume").cast(DecimalType(18, 6))).cast(DoubleType)
           .as("volume"))
@@ -327,8 +327,7 @@ object MarketBars {
         "close", "prev_c",
         col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
       .select(col("series"), col("bar_ts"),
-        floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"))
+        logRet8(col("close"), col("prev_c")).as("r8"))
       .withColumn("nk", count(lit(1)).over(wk))
       .withColumn("rk", sum(col("r8")).over(wk))
       .groupBy(col("series"))
@@ -456,9 +455,9 @@ object MarketBars {
     * drawdown — the four headline numbers of a strategy/asset report,
     * in ONE window pass + ONE aggregate.
     *
-    * Daily close = the day's last bar close via max(struct(bar_ts,
-    * close)) (the bars-CTE tie rule, not max_by). Determinism: daily
-    * ln returns become exact scaled longs (q90 rule), mean/variance
+    * Daily close = [[dayClose]] (the day's last bar; the bars-CTE tie
+    * rule, not max_by). Determinism: daily ln returns become exact
+    * scaled longs ([[logRet8]], the q90 rule), mean/variance
     * form from DECIMAL-exact sums in one shared double op order;
     * drawdown = close/running-max − 1 floors at 6dp BEFORE the min,
     * so the aggregate folds exact values. Zero-variance series emit
@@ -473,15 +472,11 @@ object MarketBars {
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
     val ppy = lit(periodsPerYear)
-    bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    dayClose(bars)
       .withColumn("prev_c", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-          floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("prev_c"))))
       .withColumn("runmax", max(col("close")).over(wrm))
       .withColumn("dd", when(col("runmax") > 0,
         floor((col("close") / col("runmax") - lit(1.0)) * lit(1e6) + lit(0.5)) /
@@ -641,11 +636,9 @@ object MarketBars {
     val w = Window.partitionBy(col("series")).orderBy(col("d"))
     val daily = bars
       .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(min(struct(col("bar_ts"), col("open")))
-          .getField("open").as("o"),
+      .agg(firstBy(col("bar_ts"), col("open")).as("o"),
         max(col("high")).as("h"), min(col("low")).as("l"),
-        max(struct(col("bar_ts"), col("close")))
-          .getField("close").as("c"))
+        lastBy(col("bar_ts"), col("close")).as("c"))
       .withColumn("pc", lag(col("c"), 1).over(w))
       .filter(col("pc").isNotNull && col("pc") > 0 && col("o") > 0 &&
         col("h") > 0 && col("l") > 0 && col("c") > 0)
@@ -710,16 +703,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
-    val w = Window.partitionBy(col("series"))
-      .orderBy(col("bar_ts"))
-    val rr = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rr = barR8(bars)
     // index + profile prefix-sum in ONE window pass (withRowIndex
     // then cumSum would sort twice)
     val prof = ScalableRank.withIndexAndCumSum(rr, Seq("series"),
@@ -802,16 +786,7 @@ object MarketBars {
   def returnMi(bars: DataFrame, buckets: Int = 5): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val w = Window.partitionBy(col("series"))
-      .orderBy(col("bar_ts"))
-    val rr = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rr = barR8(bars)
     val binned = ScalableRank.ntile(rr, Seq("series"),
         Seq(col("r8"), col("bar_ts")), buckets, "qb")
       .select(col("series"), col("bar_ts"), col("qb"))
@@ -875,8 +850,9 @@ object MarketBars {
     * evidence) and the time-series companion to q172's
     * cointegration.
     *
-    * Determinism: the return chain is the q250-style pre-filtered r8
-    * with its lag off one per-series window; the nine regression
+    * Determinism: the return chain is [[barR8]] (close > 0
+    * pre-filtered, the q250 rule) with the rl8 lag off one per-series
+    * window over its rows; the nine regression
     * moments fold as DECIMAL(38,0) integer
     * products (the q332 machinery); both RSS forms and F run in one
     * shared double op order and round 6dp. Degenerate pairs (n < 4,
@@ -891,14 +867,9 @@ object MarketBars {
     val dec = DecimalType(38, 0)
     val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val rr = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+    val rr = barR8(bars)
       .withColumn("rl8", lag(col("r8"), 1).over(w))
-      .filter(col("r8").isNotNull && col("rl8").isNotNull)
+      .filter(col("rl8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"), col("rl8"))
       .localCheckpoint(eager = false) // effect leg + cause leg
     val y = rr.select(col("series").as("effect"), col("bar_ts"),
@@ -996,7 +967,6 @@ object MarketBars {
           round(col("x") * col("x"), 12).cast(dec12))).as("pxx"),
         sum(round(col("xp") * col("xp"), 12).cast(dec12)).as("pyy"))
     val n = dbl(col("n_obs"))
-    val mean = dbl(col("sx")) / n
     val variance = (dbl(col("sxx")) - dbl(col("sx")) * dbl(col("sx")) / n) /
       (n - 1)
     val npd = dbl(col("np"))
@@ -1033,16 +1003,7 @@ object MarketBars {
     val wD = Window.partitionBy(col("series")).orderBy(col("d"))
     val wCum = wD.rowsBetween(Window.unboundedPreceding, 0)
     val wAll = Window.partitionBy(col("series"))
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
-      .withColumn("pc", lag(col("close"), 1).over(wD))
-      .withColumn("r8",
-        when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val daily = dailyR8(bars)
     val u = daily
       .withColumn("q", (col("r8").cast(dec) * col("r8").cast(dec)))
       .withColumn("ck", sum(col("q")).over(wCum))
@@ -1083,16 +1044,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val wD = Window.partitionBy(col("series")).orderBy(col("d"))
-    val daily = requireDayHorizon(bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
-      .withColumn("pc", lag(col("close"), 1).over(wD))
-      .withColumn("r8",
-        when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val daily = requireDayHorizon(dailyR8(bars)
       .withColumn("t", row_number().over(wD).cast("long"))
       .withColumn("l1", lead(col("r8"), 1).over(wD))
       .withColumn("l2", lead(col("r8"), 2).over(wD)),
@@ -1199,15 +1151,7 @@ object MarketBars {
   def gumbelBlockMaxima(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val w = Window.partitionBy(col("series"))
-      .orderBy(col("bar_ts"))
-    val blocks = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val blocks = barR8(bars)
       .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
       .agg(max(abs(col("r8"))).as("m"))
     val agg = blocks.groupBy(col("series"))
@@ -1250,19 +1194,9 @@ object MarketBars {
   def lilliefors(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val wD = Window.partitionBy(col("series")).orderBy(col("d"))
     val wR = Window.partitionBy(col("series"))
       .orderBy(col("r8"), col("d"))
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
-      .withColumn("pc", lag(col("close"), 1).over(wD))
-      .withColumn("r8",
-        when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val daily = dailyR8(bars)
     val stats = daily.groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -1311,10 +1245,10 @@ object MarketBars {
     * the heavy tails that push q144's mean-CUSUM around, and a formal
     * p-value where q146's Page-CUSUM is a sequential monitor.
     *
-    * Determinism: daily closes scale to exact 1e6 longs (bars-CTE
-    * argmax tie rule); ranks are DOUBLED midranks (exact integers
-    * under ties) so U_t = Σm2 − t(n+1) is all-integer; the argmax
-    * tie-breaks to the EARLIEST day via lexicographic
+    * Determinism: [[dayClose]] closes scale to exact 1e6 longs
+    * (bars-CTE argmax tie rule); ranks are DOUBLED midranks (exact
+    * integers under ties) so U_t = Σm2 − t(n+1) is all-integer; the
+    * argmax tie-breaks to the EARLIEST day via lexicographic
     * max(struct(|U|, −t)); only p rounds (6dp, one op order).
     *
     * Scale: one (series, day) rollup; the rank and prefix windows run
@@ -1326,10 +1260,7 @@ object MarketBars {
     val wTie = Window.partitionBy(col("series"), col("v"))
     val wT = Window.partitionBy(col("series")).orderBy(col("d"))
     val wCum = wT.rowsBetween(Window.unboundedPreceding, 0)
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    val daily = dayClose(bars)
       .select(col("series"), col("d"),
         floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("v"))
     val u = daily
@@ -1568,12 +1499,10 @@ object MarketBars {
         count(lit(1)).as("n_ticks"),
         min(col("ts")).as("start_ts"),
         max(col("ts")).as("end_ts"),
-        min(struct(col("rn").as("r"), col("v").as("v")))
-          .getField("v").as("open"),
+        firstBy(col("rn"), col("v")).as("open"),
         max(col("v")).as("high"),
         min(col("v")).as("low"),
-        max(struct(col("rn").as("r"), col("v").as("v")))
-          .getField("v").as("close"))
+        lastBy(col("rn"), col("v")).as("close"))
   }
 
   /** Hurst exponent per series by the aggregated-variance method: the
@@ -1604,8 +1533,7 @@ object MarketBars {
         Seq("bar_ts"), Seq(("close", "prev_c")))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
       .select(col("series"), col("bar_ts"),
-        floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"))
+        logRet8(col("close"), col("prev_c")).as("r8"))
     val rets = ScalableWindow.withSeqIndex(rets0, Seq("series"),
         Seq("bar_ts"), "__grn")
       .withColumn("rn", col("__grn") - 1)
@@ -1981,7 +1909,7 @@ object MarketBars {
       .withColumn("d", to_date(col("bar_ts")))
       .withColumn("prev_c", lag(col("close"), 1).over(dayW))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
-      .withColumn("r", round(log(col("close") / col("prev_c")), 8))
+      .withColumn("r", logRet8dp(col("close"), col("prev_c")))
     val terms = rets
       .withColumn("r_prev", lag(col("r"), 1).over(dayW))
     def dsum(c: Column) = sum(round(c, 12).cast(DecimalType(28, 12)))
@@ -2037,7 +1965,7 @@ object MarketBars {
       .withColumn("prev_c", lag(col("close"), 1).over(dayW))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 &&
         col("close") > 0)
-      .withColumn("r", round(log(col("close") / col("prev_c")), 8))
+      .withColumn("r", logRet8dp(col("close"), col("prev_c")))
       .withColumn("r1", lag(col("r"), 1).over(dayW))
       .withColumn("r2", lag(col("r"), 2).over(dayW))
     val tqTerm = when(col("r2").isNotNull &&
@@ -2080,8 +2008,8 @@ object MarketBars {
     * returns round 8dp before their DECIMAL folds; both Sharpes form
     * in one shared double op order, 6dp.
     *
-    * Scale: day-keyed RV aggregate + the tearsheet-class daily chain
-    * (calendar-bounded windows); |series| rows out. */
+    * Scale: day-keyed RV aggregate + [[dailyR8]] (calendar-bounded
+    * windows); |series| rows out. */
   def volManaged(bars: DataFrame, cap: Double = 2.0): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
@@ -2094,23 +2022,14 @@ object MarketBars {
       .withColumn("d", to_date(col("bar_ts")))
       .withColumn("pc", lag(col("close"), 1).over(dayW))
       .withColumn("r",
-        when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
+        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .groupBy(col("series"), col("d"))
       .agg(sum(round(col("r") * col("r"), 12).cast(dec12)).as("srv"))
       .select(col("series"), col("d"),
         round(col("srv"), 8).cast(DoubleType).as("rv"))
     // daily close-to-close returns (the q364 daily chain)
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val daily = dailyR8(bars)
     val joined = daily.join(rv, Seq("series", "d"))
       .withColumn("rv_prev", lag(col("rv"), 1).over(w))
       .filter(col("rv_prev").isNotNull && col("rv_prev") > 0)
@@ -2164,7 +2083,7 @@ object MarketBars {
           col("series").isin(seriesA, seriesB)),
         Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r",
-        when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
+        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .select(col("series"), col("bar_ts"), col("r"))
     val a = rets.filter(col("series") === seriesA)
@@ -2214,12 +2133,11 @@ object MarketBars {
     * Scale: the lag rides [[ScalableWindow.withPrevValues]]; one
     * map-side-combined (series, bucket) rollup; |series| rows out. */
   def turnOfMonth(bars: DataFrame): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
         Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
       .withColumn("r",
-        when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
+        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .withColumn("is_turn",
         dayofmonth(col("bar_ts")) <= 2 ||
@@ -2255,7 +2173,7 @@ object MarketBars {
     * backtest shape.
     *
     * Scale: daily closes collapse the bar relation to |series|·|days|
-    * rows FIRST (argmax-by-struct, one hash aggregate); every window
+    * rows FIRST ([[dayClose]], one aggregate); every window
     * after that runs on the collapsed relation — the per-day rank key
     * grows with data, and the per-series day chain is |days| rows per
     * partition (q49 small-key class on an already-tiny input). Returns
@@ -2263,12 +2181,7 @@ object MarketBars {
     * rounded terms then divide in DOUBLE (q111's covariance rule). */
   def xsMomentum(bars: DataFrame, nSide: Int = 2): DataFrame = {
     require(nSide >= 1, s"nSide must be >= 1 (got $nSide)")
-    def dbl(c: Column) = c.cast(DoubleType)
-    val daily = bars
-      .withColumn("d", to_date(col("bar_ts")))
-      .groupBy(col("series"), col("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close"))
+    val daily = dayClose(bars)
     val serW = Window.partitionBy(col("series")).orderBy(col("d"))
     val withRet = daily
       .withColumn("prev_close", lag(col("close"), 1).over(serW))
@@ -2315,13 +2228,12 @@ object MarketBars {
     * series for the tail mean. */
   def varEs(bars: DataFrame, alpha: Double = 0.05): DataFrame = {
     require(alpha > 0 && alpha < 0.5, s"alpha in (0, 0.5) (got $alpha)")
-    def dbl(c: Column) = c.cast(DoubleType)
     val rets = ScalableWindow.withPrevValues(bars, Seq("series"),
         Seq("bar_ts"), Seq(("close", "prev_c")))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 &&
         col("close") > 0)
       .select(col("series"),
-        round(log(col("close") / col("prev_c")), 8).as("r"))
+        logRet8dp(col("close"), col("prev_c")).as("r"))
     val q = rets.groupBy(col("series"))
       .agg(count(lit(1)).as("n_rets"),
         round(expr(s"percentile(r, $alpha)"), 6).as("var_q"))
@@ -2360,7 +2272,7 @@ object MarketBars {
         col("close") > 0)
       .select(col("series"),
         (dayofweek(col("bar_ts")) - 1).as("dow"),
-        round(log(col("close") / col("prev_c")), 8).as("r"))
+        logRet8dp(col("close"), col("prev_c")).as("r"))
     val byG = rets.groupBy(col("series"), col("dow"))
       .agg(count(lit(1)).as("ng"),
         sum(col("r").cast(DecimalType(28, 12))).as("sg"),
@@ -2547,12 +2459,11 @@ object MarketBars {
       absCut: Double = 0.02,
       maxOffset: Int = 5): DataFrame = {
     require(maxOffset >= 1, s"maxOffset must be >= 1 (got $maxOffset)")
-    def dbl(c: Column) = c.cast(DoubleType)
     val rets = ScalableWindow.withSeqPrev(bars, Seq("series"),
         Seq("bar_ts"), "idx", Seq(("close", "prev_c")))
       .withColumn("r8",
         when(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-          round(log(col("close") / col("prev_c")), 8)))
+          logRet8dp(col("close"), col("prev_c"))))
       .select(col("series"), col("bar_ts"), col("idx"), col("r8"))
     val markers = rets
       .filter(col("series") === markerSeries && abs(col("r8")) >= absCut)
@@ -2685,22 +2596,18 @@ object MarketBars {
     * a single flash-crash day drags least-squares but moves the
     * slope median by at most one rank.
     *
-    * Bars collapse to daily closes FIRST (the q182 argmax-by-struct
-    * idiom), so the pair set is |days|² per series — bounded by the
-    * CALENDAR horizon, not by corpus size: more data at 100 TB means
-    * more series and denser bars, not more days, and the day collapse
-    * happens map-side-combined before any pairing. Slopes snap to
+    * Bars collapse to daily closes FIRST ([[dayClose]], the q182
+    * argmax-by-struct idiom), so the pair set is |days|² per series —
+    * bounded by the CALENDAR horizon, not by corpus size: more data
+    * at 100 TB means more series and denser bars, not more days, and
+    * the day collapse happens map-side-combined before any pairing. Slopes snap to
     * exact 6dp scaled longs; the median comes off the slope SPECTRUM
     * via the [[ScalableRank]] keyed prefix (never a per-series sort
     * of raw pairs), lo/hi middle ranks interpolate as
     * (vlo + vhi)/2e6 — exact integer math until the final division. */
   def theilSen(bars: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = requireDayHorizon(bars
-      .withColumn("d", to_date(col("bar_ts")))
-      .groupBy(col("series"), col("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close")),
+    val daily = requireDayHorizon(dayClose(bars),
       "theilSen", "subsample the pair set (the standard large-n variant)")
     val a = daily.select(col("series"), col("d").as("da"),
       col("close").as("ca"))
@@ -2745,18 +2652,14 @@ object MarketBars {
     * one shared double op order rounded 6dp.
     *
     * Scale: the [[theilSen]] posture verbatim — bars collapse to
-    * |days| closes per series FIRST (map-side-combined argmax), so
+    * |days| closes per series FIRST ([[dayClose]]), so
     * the pair join is bounded by the CALENDAR horizon squared, not by
     * corpus size; the tie census is one more |series|·|days|-sized
     * aggregate off the same checkpointed relation. */
   def mannKendall(bars: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
-    val daily = requireDayHorizon(bars
-      .withColumn("d", to_date(col("bar_ts")))
-      .groupBy(col("series"), col("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close")),
+    val daily = requireDayHorizon(dayClose(bars),
       "mannKendall", "derive S from the rank histogram instead of raw pairs")
     val a = daily.select(col("series"), col("d").as("da"),
       col("close").as("ca"))
@@ -2824,10 +2727,10 @@ object MarketBars {
       .withColumn("pk", lag(col("close"), k).over(w))
       .withColumn("r1",
         when(col("p1") > 0 && col("close") > 0,
-          round(log(col("close") / col("p1")), 8)))
+          logRet8dp(col("close"), col("p1"))))
       .withColumn("rk",
         when(col("pk") > 0 && col("close") > 0,
-          round(log(col("close") / col("pk")), 8)))
+          logRet8dp(col("close"), col("pk"))))
     val agg = r.groupBy(col("series"), col("d"))
       .agg(
         sum(when(col("r1").isNotNull, 1L).otherwise(0L)).as("n"),
@@ -2864,17 +2767,13 @@ object MarketBars {
     * engines multiply identical doubles), ρ/κ/half-life form in one
     * shared double op order rounded 6dp; κ only for 0 < ρ < 1.
     *
-    * Scale: the q182 posture — bars collapse map-side-combined to
+    * Scale: the q182 posture — bars collapse ([[dayClose]]) to
     * |series|·|days| daily closes before the lag; one growing-key
     * aggregate after. */
   def ar1MeanReversion(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     def dsum(e: Column) = sum(e.cast(DecimalType(28, 6)))
-    val daily = bars
-      .withColumn("d", to_date(col("bar_ts")))
-      .groupBy(col("series"), col("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close"))
+    val daily = dayClose(bars)
     val ws = Window.partitionBy(col("series")).orderBy(col("d"))
     val p = daily
       .withColumn("px", lag(col("close"), 1).over(ws))
@@ -2914,7 +2813,8 @@ object MarketBars {
     * as DECIMAL so partial-aggregation order cannot perturb the mean
     * or the co-moment.
     *
-    * Scale: bars collapse to daily closes FIRST (q182); the return
+    * Scale: bars collapse to daily closes FIRST ([[dayClose]], q182);
+    * the return
     * chain runs per series over |days| rows; the rank windows
     * partition by DAY — a key whose cardinality grows with data (the
     * q93 rule), each day holding |series| rows. */
@@ -2922,17 +2822,13 @@ object MarketBars {
     val dec12 = DecimalType(38, 12)
     val decL = DecimalType(38, 0)
     def dbl(c: Column) = c.cast(DoubleType)
-    val daily = bars
-      .withColumn("d", to_date(col("bar_ts")))
-      .groupBy(col("series"), col("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close"))
+    val daily = dayClose(bars)
     val ws = Window.partitionBy(col("series")).orderBy(col("d"))
     val rets = daily
       .withColumn("pc", lag(col("close"), 1).over(ws))
       .filter(col("pc") > 0 && col("close") > 0)
       .select(col("series"), col("d"),
-        round(log(col("close") / col("pc")), 8).as("r"))
+        logRet8dp(col("close"), col("pc")).as("r"))
       .withColumn("fr", lead(col("r"), 1).over(ws))
       .filter(col("fr").isNotNull)
       .localCheckpoint(eager = false) // both rank windows read it
@@ -3296,12 +3192,7 @@ object MarketBars {
     // the q139 rule: the validity filter drops rows, so frame
     // positions count on the FILTERED relation; one checkpointed
     // return relation feeds every horizon's frame
-    val withR = ScalableWindow.laggedScope(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "close", "pc",
-        col("pc").isNotNull && col("pc") > 0)
-      .select(col("series"), col("bar_ts"),
-        floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false)
     val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
@@ -3453,7 +3344,7 @@ object MarketBars {
         Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
       .withColumn("r", when(col("pc") > 0,
-        round(log(col("close") / col("pc")), 8)))
+        logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .withColumn("rn", col("__brn") - 1)
       .withColumn("n_all", col("__btot") - 1)
@@ -3518,7 +3409,7 @@ object MarketBars {
         Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
       .withColumn("r", when(col("pc") > 0,
-        round(log(col("close") / col("pc")), 8)))
+        logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .withColumn("rn", col("__brn") - 1)
       .withColumn("n_all", col("__btot") - 1)
@@ -3567,19 +3458,12 @@ object MarketBars {
     * Determinism: exact 1e-8 return longs, decimal (n, Σr, Σr²), the
     * q139 double op order, 8dp round at emission.
     *
-    * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * then a map-side-combined (series, hour)
+    * Scale: the [[barR8]] chain then a map-side-combined (series, hour)
     * rollup — 24·|series| rows out. */
   def hourlyVolProfile(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    barR8(bars)
       .groupBy(col("series"), hour(col("bar_ts")).as("hod"))
       .agg(count(lit(1)).as("n"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -3601,20 +3485,13 @@ object MarketBars {
     * exceedance compare is |r8| > k·σ8 on one identical double, and
     * the run lengths are integer islands.
     *
-    * Scale: the lag routes through [[ScalableWindow.withPrevValues]],
-    * the island ids through one per-series window; σ broadcasts back;
+    * Scale: the returns are [[barR8]], the island ids one per-series
+    * window; σ broadcasts back;
     * |series| rows out. */
   def tailClustering(bars: DataFrame, k: Double = 3.0): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false) // sigma leg + island leg
     val sigma = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n_rets"),
@@ -3772,15 +3649,8 @@ object MarketBars {
     * joined back broadcast (|series| rows); the exceedance rollup is
     * map-side-combined. */
   def meanExcess(bars: DataFrame, q: Double = 0.95): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
+    val rets = barR8(bars)
       .withColumn("x", abs(col("r8")).cast(DoubleType) / lit(1e8))
       .localCheckpoint(eager = false)
     val cuts = rets.groupBy(col("series"))
@@ -3816,14 +3686,7 @@ object MarketBars {
   def upDownBeta(bars: DataFrame, marketSeries: String): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rets = barR8(bars)
       .localCheckpoint(eager = false)
     val mkt = rets.filter(col("series") === marketSeries)
       .select(col("bar_ts"), col("r8").as("m8"))
@@ -3947,12 +3810,7 @@ object MarketBars {
     val dec = DecimalType(38, 0)
     // the q139/q250 rule (laggedScope): frames count filtered rows;
     // one checkpointed return relation feeds every horizon's frame
-    val withR = ScalableWindow.laggedScope(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), "close", "pc",
-        col("pc").isNotNull && col("pc") > 0)
-      .select(col("series"), col("bar_ts"),
-        floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-          .cast("long").as("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false)
     val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
@@ -4038,19 +3896,13 @@ object MarketBars {
     * shared double op order (JB from the UNROUNDED S and K) and round
     * 6dp at emission.
     *
-    * Scale: one per-series lag sort feeds two map-side-combined
-    * aggregates with a |series|-row broadcast between them. */
+    * Scale: one per-series lag sort ([[barR8]]) feeds two
+    * map-side-combined aggregates with a |series|-row broadcast
+    * between them. */
   def jarqueBera(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false)
     val stats = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
@@ -4092,21 +3944,14 @@ object MarketBars {
     * long passes 2^63 on jumpy series — the q248 lesson); DW and ρ̂
     * form in one shared double op order and round 6dp.
     *
-    * Scale: two chained [[ScalableWindow.withPrevValues]] passes —
-    * the close lag, then the return lag over the FILTERED relation;
+    * Scale: two chained lag passes — [[barR8]], then the return lag
+    * ([[ScalableWindow.withPrevValues]]) over its FILTERED rows;
     * then a map-side-combined aggregate;
     * |series| rows out. */
   def durbinWatson(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rets = barR8(bars)
     ScalableWindow.withPrevValues(rets, Seq("series"), Seq("bar_ts"),
         Seq(("r8", "pr8")))
       .groupBy(col("series"))
@@ -4135,20 +3980,14 @@ object MarketBars {
     * form in one shared double op order (α and R² from the UNROUNDED
     * beta) and round at emission.
     *
-    * Scale: one per-series lag sort, one bar_ts-keyed aggregate for
+    * Scale: one per-series lag sort ([[barR8]]), one bar_ts-keyed
+    * aggregate for
     * the market leg (grows with TIME, so it hash-joins back — no
     * broadcast hint), one map-side-combined per-series aggregate. */
   def marketBeta(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false)
     val mkt = withR.groupBy(col("bar_ts"))
       .agg(sum(col("r8")).as("msum"), count(lit(1)).as("mcnt"))
@@ -4183,8 +4022,8 @@ object MarketBars {
     * threshold zero (Σ gains / Σ |losses| — an exact integer ratio)
     * — the loss-side companion to [[tearsheet]]'s symmetric Sharpe.
     *
-    * Determinism: the q140 tearsheet chain verbatim (daily max-struct
-    * collapse, 1e-8 return snap, floor-form 1e-6 drawdown); gains and
+    * Determinism: the q140 tearsheet chain verbatim ([[dayClose]],
+    * 1e-8 [[logRet8]] snap, floor-form 1e-6 drawdown); gains and
     * losses fold in pure long arithmetic, the downside second moment
     * folds DECIMAL-exact, every emitted ratio forms in one shared
     * double op order rounded 6dp.
@@ -4202,15 +4041,11 @@ object MarketBars {
     val ppy = lit(periodsPerYear)
     val mu = dbl(col("s1")) / dbl(col("n_rets"))
     val dvar = dbl(col("dq")) / dbl(col("n_rets"))
-    bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    dayClose(bars)
       .withColumn("prev_c", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-          floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("prev_c"))))
       .withColumn("runmax", max(col("close")).over(wrm))
       .withColumn("dd", when(col("runmax") > 0,
         floor((col("close") / col("runmax") - lit(1.0)) * lit(1e6) + lit(0.5)) /
@@ -4255,21 +4090,14 @@ object MarketBars {
     * sums); F rounds 6dp. Degenerate segments (n < 5 or zero index
     * variance) emit null.
     *
-    * Scale: the lag routes through [[ScalableWindow.withPrevValues]]
-    * and the row index and total through [[ScalableWindow.withSeqIndex]],
+    * Scale: the returns are [[barR8]] and the row index and total
+    * come from [[ScalableWindow.withSeqIndex]],
     * one map-side-combined aggregate carrying both segments' conditional
     * sums; |series| rows out. */
   def chowTest(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val rets0 = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rets0 = barR8(bars)
     val withR = ScalableWindow.withSeqIndex(rets0, Seq("series"),
         Seq("bar_ts"), "t", Some("n_all"))
       .withColumn("seg1", col("t") <= (col("n_all") / 2).cast("long"))
@@ -4330,7 +4158,7 @@ object MarketBars {
     * in natural units, and folds in DECIMAL(38,12); η forms once per
     * series in one shared double op order, rounded 6dp.
     *
-    * Scale: the return lag rides [[ScalableWindow.withPrevValues]];
+    * Scale: the returns are [[barR8]];
     * the prefix sums and the γ_l lags share one per-series window and
     * one 1-row-per-series aggregate; output |series| rows. */
   def kpss(bars: DataFrame, maxLag: Int = 4): DataFrame = {
@@ -4338,14 +4166,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
-    val rets0 = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rets0 = barR8(bars)
       .localCheckpoint(eager = false) // totals leg + window leg
     val tot = rets0.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), sum(col("r8").cast(dec)).as("s"))
@@ -4412,17 +4233,12 @@ object MarketBars {
   def famaMacBeth(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val dec12 = DecimalType(38, 12)
     val w = Window.partitionBy(col("series")).orderBy(col("d"))
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close"))).getField("close")
-        .as("close"))
+    val daily = dayClose(bars)
       .withColumn("pc", lag(col("close"), 1).over(w))
       .withColumn("r6",
         when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e6) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("pc"), scale = 1e6)))
       .withColumn("x6", lag(col("r6"), 1).over(w))
       .filter(col("r6").isNotNull && col("x6").isNotNull)
     // engine-proof finish (the q365 rule): every per-day λ and its
@@ -4551,21 +4367,13 @@ object MarketBars {
     * terms round 12dp and fold in DECIMAL(38,12), the mean/TE/IR
     * chain forms once per series in a shared double op order.
     *
-    * Scale: the lag rides [[ScalableWindow.withPrevValues]]; the
-    * market leg is a bar_ts-keyed aggregate hash-joined back (grows
+    * Scale: the returns are [[barR8]]; the market leg is a bar_ts-keyed aggregate hash-joined back (grows
     * with time — no broadcast hint); one map-side-combined per-series
     * rollup; |series| rows out. */
   def infoRatio(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
-    val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false)
     val mkt = withR.groupBy(col("bar_ts"))
       .agg(sum(col("r8")).as("msum"), count(lit(1)).as("mcnt"))
@@ -4593,8 +4401,8 @@ object MarketBars {
     * DEPTH AND DURATION, where q306's Calmar sees only the single
     * deepest point.
     *
-    * Determinism: the q140/q306 daily chain verbatim (max-by-struct
-    * daily collapse, floor-form 1e-6 drawdowns off the running max);
+    * Determinism: the q140/q306 daily chain verbatim ([[dayClose]],
+    * floor-form 1e-6 drawdowns off the running max);
     * dd² terms round 12dp and fold in DECIMAL(38,12); UI/Martin form
     * once per series, rounded 6dp.
     *
@@ -4609,15 +4417,11 @@ object MarketBars {
     val dec12 = DecimalType(38, 12)
     val w = Window.partitionBy(col("series")).orderBy(col("d"))
     val wrm = w.rowsBetween(Window.unboundedPreceding, 0)
-    bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    dayClose(bars)
       .withColumn("prev_c", lag(col("close"), 1).over(w))
       .withColumn("r8",
         when(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0,
-          floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("prev_c"))))
       .withColumn("runmax", max(col("close")).over(wrm))
       .withColumn("dd", when(col("runmax") > 0,
         floor((col("close") / col("runmax") - lit(1.0)) * lit(1e6) +
@@ -4657,7 +4461,6 @@ object MarketBars {
     * map-side-combined rollup on the same key — day-keyed tasks by
     * construction. */
   def semivariance(bars: DataFrame): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val dayW = Window.partitionBy(col("series"), col("d"))
       .orderBy(col("bar_ts"))
@@ -4666,7 +4469,7 @@ object MarketBars {
       .withColumn("d", to_date(col("bar_ts")))
       .withColumn("pc", lag(col("close"), 1).over(dayW))
       .withColumn("r",
-        when(col("pc") > 0, round(log(col("close") / col("pc")), 8)))
+        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
       .filter(col("r").isNotNull)
       .groupBy(col("series"), col("d"))
       .agg(count(lit(1)).as("n_rets"),
@@ -4698,13 +4501,9 @@ object MarketBars {
     * quantile broadcast back; |series| rows out. */
   def cdar(bars: DataFrame, alpha: Double = 0.10): DataFrame = {
     require(alpha > 0 && alpha < 0.5, s"alpha in (0, 0.5) (got $alpha)")
-    def dbl(c: Column) = c.cast(DoubleType)
     val w = Window.partitionBy(col("series")).orderBy(col("d"))
     val wrm = w.rowsBetween(Window.unboundedPreceding, 0)
-    val dd = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    val dd = dayClose(bars)
       .withColumn("runmax", max(col("close")).over(wrm))
       .withColumn("dd", when(col("runmax") > 0,
         floor((col("close") / col("runmax") - lit(1.0)) * lit(1e6) +
@@ -4751,14 +4550,7 @@ object MarketBars {
   def cornishFisher(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val withR = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
-        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val withR = barR8(bars)
       .localCheckpoint(eager = false) // moment pass + z pass
     val stats = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
@@ -4876,7 +4668,6 @@ object MarketBars {
     * keys×days relation, never the bar history; \|series\|·\|days\|
     * rows out. */
   def obv(bars: DataFrame): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val d6 = floor(col("close") * lit(1e6) + lit(0.5)).cast("long") -
       floor(col("__pc") * lit(1e6) + lit(0.5)).cast("long")
@@ -4897,24 +4688,61 @@ object MarketBars {
         ExactRound.ratioRound(col("obv6"), lit(1000000L), 6).as("obv"))
   }
 
-  /** Shared (series, d, r8) daily log-return chain: day-collapsed
-    * closes (argmax-by-bar_ts tie rule), lag over the DAILY rows,
-    * 1e8-scaled-long returns — the q346 Lilliefors chain factored for
-    * the round-10 order-statistic family ([[hillTail]],
-    * [[andersonDarling]], [[w1Drift]], [[tailDependence]]).
+  /** The return and day-close convention every chain in this object
+    * shares with its DuckDB twin. A log return is ln(close / prev),
+    * either as an exact long floor(x·1e8 + 0.5) ([[logRet8]], the q90
+    * rule; ln is bit-identical in both engines, the q92 precedent) or
+    * rounded to 8dp ([[logRet8dp]]). A bucket's first/last value is
+    * min/max over struct(ts, v) ([[firstBy]], [[lastBy]]): a ts tie
+    * goes to the smaller v for firstBy and the larger v for lastBy in
+    * every partial-aggregation order — NOT `min_by`/`max_by`, whose
+    * tie pick is not deterministic. `scale` is 1e8 except where an op
+    * documents its own (famaMacBeth's 1e6). */
+  private[graft] def logRet8(close: Column, prev: Column, scale: Double = 1e8): Column =
+    floor(log(close / prev) * lit(scale) + lit(0.5)).cast("long")
+
+  private[graft] def logRet8dp(close: Column, prev: Column): Column =
+    round(log(close / prev), 8)
+
+  private[graft] def firstBy(ts: Column, v: Column): Column =
+    min(struct(ts.as("t"), v.as("v"))).getField("v")
+
+  private[graft] def lastBy(ts: Column, v: Column): Column =
+    max(struct(ts.as("t"), v.as("v"))).getField("v")
+
+  /** (series, d, close): each day's close is its latest bar's close. */
+  private[graft] def dayClose(bars: DataFrame): DataFrame =
+    bars.groupBy(col("series"), to_date(col("bar_ts")).as("d"))
+      .agg(lastBy(col("bar_ts"), col("close")).as("close"))
+
+  /** (series, bar_ts, r8) bar returns: closes ≤ 0 drop FIRST, the lag
+    * runs over the surviving bars, and each series' first surviving
+    * bar emits no row. Lagging over all bars and then guarding both
+    * closes (the varianceRatio/hurst/periodogram chains) is a
+    * different function whenever a close ≤ 0 sits between two
+    * positive ones — those chains keep their own lag. */
+  private[graft] def barR8(bars: DataFrame): DataFrame =
+    ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
+        Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
+      .filter(col("pc").isNotNull)
+      .select(col("series"), col("bar_ts"),
+        logRet8(col("close"), col("pc")).as("r8"))
+
+  /** (series, d, r8) daily returns: [[dayClose]], a lag over ALL the
+    * daily rows, then both closes guarded > 0 — the Lilliefors chain,
+    * shared by the Inclán–Tiao, sample-entropy, vol-managed,
+    * signal-turnover, [[csDispersion]] and order-statistic
+    * ([[hillTail]], [[andersonDarling]], [[w1Drift]],
+    * [[tailDependence]]) ops.
     * Per-series windows here run over CALENDAR-bounded daily rows
     * (the q306 daily-chain class), never the raw bar history. */
-  private def dailyR8(bars: DataFrame): DataFrame = {
+  private[graft] def dailyR8(bars: DataFrame): DataFrame = {
     val wD = Window.partitionBy(col("series")).orderBy(col("d"))
-    bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    dayClose(bars)
       .withColumn("pc", lag(col("close"), 1).over(wD))
       .withColumn("r8",
         when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("pc"))))
       .filter(col("r8").isNotNull)
       .select(col("series"), col("d"), col("r8"))
   }
@@ -4936,17 +4764,14 @@ object MarketBars {
     * (deterministic in both engines, the documented tie rule where
     * the literature randomizes); the single double finish rounds 6dp.
     *
-    * Scale: day collapse FIRST (map-side argmax), the pair join is
+    * Scale: day collapse FIRST ([[dayClose]]), the pair join is
     * d-keyed with \|series\| rows per key, and the rank/lag windows
     * run per pair over CALENDAR-bounded daily rows — the q317 class,
     * never bar-history-sized tasks. */
   def chatterjee(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
+    val daily = dayClose(bars)
       .select(col("series"), col("d"),
         floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("v"))
       .localCheckpoint(eager = false) // both pair legs
@@ -5035,7 +4860,7 @@ object MarketBars {
     * q346's Lilliefors KS (which weights the distribution center;
     * fat return tails fire AD first).
     *
-    * Determinism: the q346 chain verbatim (exact-long r8, integer
+    * Determinism: [[dailyR8]], the q346 chain (exact-long r8, integer
     * moments, the A–S 7.1.26 erf polynomial in explicit multiply
     * chains); Φ clamps to [1e−15, 1−1e−15] before ln (extreme z
     * underflows the polynomial to exactly 0/1); per-row terms round
@@ -5228,15 +5053,9 @@ object MarketBars {
     val dec12 = DecimalType(38, 12)
     val w = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
-    val rr = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+    val rr = barR8(bars)
       .withColumn("rl8", lag(col("r8"), 1).over(w))
-      .filter(col("r8").isNotNull &&
-        col("rl8").isNotNull)
+      .filter(col("rl8").isNotNull)
       .select(col("series"), col("bar_ts"),
         when(col("r8") > 0, 1).otherwise(0).as("s"),
         when(col("rl8") > 0, 1).otherwise(0).as("sp"))
@@ -5285,8 +5104,9 @@ object MarketBars {
     * [[resample]] and the oracle's direct coarse aggregation agree
     * bit-for-bit.
     *
-    * Determinism: per-scale r8 chains are exact longs (close > 0
-    * pre-filtered before the lag, the q250 rule); all five co-moments
+    * Determinism: each scale's returns are [[barR8]] of its resampled
+    * bars (close > 0 pre-filtered before the lag, the q250 rule); all
+    * five co-moments
     * fold as DECIMAL(38,0) integer products (the q341 machinery);
     * Pearson finishes in one shared double op order, 6dp.
     *
@@ -5304,17 +5124,7 @@ object MarketBars {
     // not |scales| passes
     val barsCk = bars.localCheckpoint(eager = false)
     val legs = scalesMin.map { m =>
-      val cb = resample(barsCk, m * 60L * 1000000L)
-        .filter(col("close") > 0)
-      val w = Window.partitionBy(col("series"))
-        .orderBy(col("bar_ts"))
-      cb
-        .withColumn("pc", lag(col("close"), 1).over(w))
-        .withColumn("r8",
-          when(col("pc") > 0,
-            floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-              .cast("long")))
-        .filter(col("r8").isNotNull)
+      barR8(resample(barsCk, m * 60L * 1000000L))
         .select(lit(m).as("scale_min"), col("series"), col("bar_ts"),
           col("r8"))
     }
@@ -5366,16 +5176,7 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
-    val w = Window.partitionBy(col("series"))
-      .orderBy(col("bar_ts"))
-    val rr = bars.filter(col("close") > 0)
-      .withColumn("pc", lag(col("close"), 1).over(w))
-      .withColumn("r8",
-        when(col("pc") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
-      .filter(col("r8").isNotNull)
-      .select(col("series"), col("bar_ts"), col("r8"))
+    val rr = barR8(bars)
       .localCheckpoint(eager = false) // both pair legs + the N probe
     val a = rr.select(col("series").as("series_a"), col("bar_ts"),
       col("r8").as("ra"))
@@ -5502,8 +5303,7 @@ object MarketBars {
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 &&
         col("close") > 0)
       .withColumn("a8",
-        abs(floor(log(col("close") / col("prev_c")) * lit(1e8) +
-          lit(0.5)).cast("long")))
+        abs(logRet8(col("close"), col("prev_c"))))
     val triples = rets
       .withColumn("p8", lag(col("a8"), 1).over(dayW))
       .withColumn("q8", lag(col("a8"), 2).over(dayW))
@@ -5556,8 +5356,7 @@ object MarketBars {
         Seq("bar_ts"), Seq(("close", "pc")))
       .filter(col("pc").isNotNull && col("pc") > 0 && col("close") > 0)
       .select(col("series"),
-        abs(floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-          .cast("long")).as("a8"),
+        abs(logRet8(col("close"), col("pc"))).as("a8"),
         floor(col("volume") * lit(1e6) + lit(0.5)).cast("long").as("v6"))
       .withColumn("q16", col("a8").cast(dec) * col("a8").cast(dec))
     val agg = chain.groupBy(col("series"))
@@ -5611,11 +5410,9 @@ object MarketBars {
     val w = Window.partitionBy(col("series")).orderBy(col("d"))
     val daily = bars
       .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(min(struct(col("bar_ts"), col("open")))
-          .getField("open").as("o"),
+      .agg(firstBy(col("bar_ts"), col("open")).as("o"),
         max(col("high")).as("h"), min(col("low")).as("l"),
-        max(struct(col("bar_ts"), col("close")))
-          .getField("close").as("c"))
+        lastBy(col("bar_ts"), col("close")).as("c"))
       .withColumn("pc", lag(col("c"), 1).over(w))
       .filter(col("pc").isNotNull && col("pc") > 0 && col("o") > 0 &&
         col("c") > 0)
@@ -5691,8 +5488,7 @@ object MarketBars {
         Seq("bar_ts"), "__grn", Seq(("close", "pc")))
       .withColumn("r8",
         when(col("pc").isNotNull && col("pc") > 0 && col("close") > 0,
-          floor(log(col("close") / col("pc")) * lit(1e8) + lit(0.5))
-            .cast("long")))
+          logRet8(col("close"), col("pc"))))
       .withColumn("t", col("__grn") - 1)
       .filter(col("r8").isNotNull)
     val exploded = chain
@@ -5738,8 +5534,8 @@ object MarketBars {
     * q320's rank IC: a high-IC signal that reshuffles daily is
     * untradable).
     *
-    * Determinism: daily ln returns are exact 1e-8 longs (tearsheet
-    * rule); both days' returns re-rank WITHIN today's cross-section
+    * Determinism: daily ln returns are [[dailyR8]]'s exact 1e-8
+    * longs; both days' returns re-rank WITHIN today's cross-section
     * via row_number with a series tie-break, so the two rank vectors
     * are permutations of the same 1..n and the no-ties Spearman
     * 1 − 6Σd²/(n(n²−1)) is an exact integer rational finished by
@@ -5753,15 +5549,7 @@ object MarketBars {
   def signalTurnover(bars: DataFrame): DataFrame = {
     val ws = Window.partitionBy(col("series")).orderBy(col("d"))
     val dec = DecimalType(38, 0)
-    val daily = bars
-      .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
-      .agg(max(struct(col("bar_ts"), col("close")))
-        .getField("close").as("close"))
-      .withColumn("prev_c", lag(col("close"), 1).over(ws))
-      .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
-      .withColumn("r8",
-        floor(log(col("close") / col("prev_c")) * lit(1e8) + lit(0.5))
-          .cast("long"))
+    val daily = dailyR8(bars)
       .withColumn("pr8", lag(col("r8"), 1).over(ws))
       .filter(col("pr8").isNotNull)
     val n = col("n_series").cast(dec)
@@ -5803,10 +5591,8 @@ object MarketBars {
     b.withColumn("pc", lag(col("close"), 1).over(w))
       .groupBy(col("series"), col("d"))
       .agg(count(lit(1)).as("n_bars"),
-        max(struct(col("bar_ts"), col("close")))
-          .getField("close").as("cl"),
-        min(struct(col("bar_ts"), col("close")))
-          .getField("close").as("cf"),
+        lastBy(col("bar_ts"), col("close")).as("cl"),
+        firstBy(col("bar_ts"), col("close")).as("cf"),
         sum(round(abs(col("close") - col("pc")), 12).cast(dec12))
           .as("vol"))
       .select(col("series"), col("d"), col("n_bars"),
@@ -5880,7 +5666,7 @@ object MarketBars {
     val daily = bars
       .withColumn("prev_c", lag(col("close"), 1).over(w))
       .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
-      .withColumn("r", round(log(col("close") / col("prev_c")), 8))
+      .withColumn("r", logRet8dp(col("close"), col("prev_c")))
       .groupBy(col("series"), to_date(col("bar_ts")).as("d"))
       .agg(sum((col("r") * col("r")).cast(dec28)).as("v"))
       .withColumn("rv", round(sqrt(dbl(col("v"))), 12))

@@ -586,7 +586,7 @@ object MarketQueries {
       b.withColumn("prev_c", lag(col("close"), 1).over(w))
         .filter(col("prev_c").isNotNull && col("prev_c") > 0 && col("close") > 0)
         .select(col("series"), to_date(col("bar_ts")).as("d"),
-          round(log(col("close") / col("prev_c")), 8).as("r"))
+          MarketBars.logRet8dp(col("close"), col("prev_c")).as("r"))
         .groupBy(col("series"), col("d"))
         .agg(count(lit(1)).as("n_rets"),
           round(sqrt(sum((col("r") * col("r")).cast(DecimalType(28, 12)))

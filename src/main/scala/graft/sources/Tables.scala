@@ -22,7 +22,8 @@ object Tables {
     * split, serializing everything downstream on one core — exactly
     * what happened to the tokenize/minhash stages). At real scale the
     * scan already has >= cores splits and this is a no-op; the check
-    * reads only the plan's partitioning, it runs no job. */
+    * reads only the plan's size statistics, it runs no job. `df` must
+    * be a parquet file scan ([[graft.ops.Dist.rebalance]]). */
   def rebalance(df: DataFrame): DataFrame = graft.ops.Dist.rebalance(df)
 
   /** JDBC table scan (S2 — `audit_pipeline.py:92-99`). Catalyst pushes

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.ops.MarketBars.{firstBy, lastBy}
+
 /** Structured-Streaming extension of the reference's batch pipeline
   * (SURVEY §2.10): the reference re-fetches a 60-day lookback nightly
   * and overwrites (`project/ingest_data.py:36,101`,
@@ -21,7 +23,8 @@ object BarBuilder {
 
   /** Tick stream → 5-minute OHLCV bars.
     *
-    * open/close use min/max over `struct(ts, value)` — order-insensitive
+    * open/close use `MarketBars.firstBy`/`lastBy` (min/max over
+    * `struct(ts, value)`, the batch bars' rule) — order-insensitive
     * aggregates that Structured Streaming can maintain incrementally
     * (ties on ts resolve to the min/max value, deterministically).
     * Late ticks beyond `watermark` are dropped; duplicate ticks (same
@@ -43,10 +46,10 @@ object BarBuilder {
         col(seriesCol).as("series"),
         window(col(tsCol), windowLen).as("w"))
       .agg(
-        min(struct(col(tsCol).as("t"), col(valueCol).as("v"))).getField("v").as("open"),
+        firstBy(col(tsCol), col(valueCol)).as("open"),
         max(col(valueCol)).as("high"),
         min(col(valueCol)).as("low"),
-        max(struct(col(tsCol).as("t"), col(valueCol).as("v"))).getField("v").as("close"),
+        lastBy(col(tsCol), col(valueCol)).as("close"),
         count(lit(1)).as("n_ticks"),
         sum(col(valueCol).cast(DecimalType(18, 6))).cast(DoubleType).as("volume"))
       .select(col("series"), col("w.start").as("bar_ts"),
@@ -79,8 +82,7 @@ object BarBuilder {
         col(seriesCol).as("series"),
         window(col(tsCol), barLen).as("w"))
       .agg(
-        max(struct(col(tsCol).as("t"), col(valueCol).as("v")))
-          .getField("v").as("close"),
+        lastBy(col(tsCol), col(valueCol)).as("close"),
         count(lit(1)).as("n_ticks"))
     bars5
       .groupBy(col("series"), window(window_time(col("w")), "1 day").as("dw"))

@@ -127,6 +127,76 @@ class Round8Spec extends AnyFunSuite {
     same(got, want)
   }
 
+  test("return helpers: barR8 skips a zero close, lag-then-guard drops it and the next bar, dayClose takes the latest bar") {
+    import java.sql.Timestamp
+    import graft.ops.MarketBars
+    def ts(s: String) = Timestamp.valueOf(s)
+    // A: a zero close mid-series, and day 2's last two bars listed out
+    // of time order; B: a one-bar series
+    val rows = Seq(
+      ("A", ts("2024-03-04 10:00:00"), 100.0),
+      ("A", ts("2024-03-04 10:05:00"), 0.0),
+      ("A", ts("2024-03-04 10:10:00"), 102.0),
+      ("A", ts("2024-03-04 10:15:00"), 101.0),
+      ("A", ts("2024-03-05 10:05:00"), 104.5),
+      ("A", ts("2024-03-05 10:00:00"), 103.0),
+      ("B", ts("2024-03-04 10:00:00"), 50.0))
+    val bars = rows.toDF("series", "bar_ts", "close")
+      .withColumn("volume", lit(1.0))
+    // driver-side reference: Spark's log is StrictMath.log
+    def r8(c: Double, p: Double) =
+      math.floor(StrictMath.log(c / p) * 1e8 + 0.5).toLong
+    val bySeries = rows.groupBy(_._1).map { case (k, rs) =>
+      k -> rs.sortBy(_._2.getTime) }
+
+    // barR8: closes <= 0 drop first, each survivor chains to the
+    // previous survivor, a one-bar series emits nothing
+    val wantBar = bySeries.toSeq.flatMap { case (k, rs) =>
+      val pos = rs.filter(_._3 > 0)
+      pos.zip(pos.drop(1)).map { case (p, c) => (k, c._2, r8(c._3, p._3)) }
+    }.toSet
+    val gotBar = MarketBars.barR8(bars)
+      .as[(String, Timestamp, Long)].collect().toSet
+    assert(gotBar === wantBar)
+    assert(gotBar.contains(("A", ts("2024-03-04 10:10:00"), r8(102.0, 100.0))))
+    assert(gotBar.count(_._1 == "A") === 4)
+
+    // lag over ALL bars, then both closes guarded: the zero-close bar
+    // and the bar after it both go (volumeVolatility's chain)
+    val wantGuarded = bySeries.map { case (k, rs) =>
+      k -> rs.zip(rs.drop(1)).count { case (p, c) => p._3 > 0 && c._3 > 0 }.toLong
+    }.filter(_._2 > 0)
+    val gotGuarded = MarketBars.volumeVolatility(bars)
+      .select(col("series"), col("n_rets")).as[(String, Long)].collect().toMap
+    assert(gotGuarded === wantGuarded)
+    assert(gotGuarded("A") === 3L)
+
+    // dayClose: each day's latest bar by bar_ts, whatever the row order
+    val wantClose = bySeries.toSeq.flatMap { case (k, rs) =>
+      rs.groupBy(_._2.toLocalDateTime.toLocalDate.toString).map {
+        case (d, day) => (k, d, day.maxBy(_._2.getTime)._3) }
+    }.toSet
+    val gotClose = MarketBars.dayClose(bars)
+      .select(col("series"), col("d").cast("string"), col("close"))
+      .as[(String, String, Double)].collect().toSet
+    assert(gotClose === wantClose)
+    assert(gotClose.contains(("A", "2024-03-05", 104.5)))
+    assert(MarketBars.dailyR8(bars)
+      .select(col("series"), col("d").cast("string"), col("r8"))
+      .as[(String, String, Long)].collect().toSet ===
+      Set(("A", "2024-03-05", r8(104.5, 101.0))))
+
+    // a bar_ts tie: lastBy takes the larger value, firstBy the smaller
+    val tie = Seq(("C", ts("2024-03-04 10:00:00"), 21.0),
+        ("C", ts("2024-03-04 10:00:00"), 20.0))
+      .toDF("series", "bar_ts", "close")
+      .groupBy(col("series"))
+      .agg(MarketBars.lastBy(col("bar_ts"), col("close")).as("l"),
+        MarketBars.firstBy(col("bar_ts"), col("close")).as("f"))
+      .select(col("l"), col("f")).as[(Double, Double)].collect()
+    assert(tie.toSeq === Seq((21.0, 20.0)))
+  }
+
   test("StatOps spectrum routing stays exact on a HIGH-cardinality value column") {
     import graft.ops.StatOps
     // ~1600 distinct x values over 2000 rows — the "continuous column
