@@ -5,18 +5,27 @@ object Bench {
     * runnable main so a probe measures the program the bench runs. */
   val DefaultCpus = "4"
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
-    // optional arg: comma-separated query-name filter (iteration aid;
-    // the driver passes no args and benches everything)
-    val only: Option[Set[String]] = args.headOption.map(_.split(',').toSet)
+  /** The `local[cpus]` session every runnable main and the test suite
+    * build: `cpus` cores (`SPARK_GRAFT_CPUS`, else [[DefaultCpus]]) and
+    * as many shuffle partitions, UTC session time, no UI, WARN logs. */
+  def localSession(
+      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional arg: comma-separated query-name filter (iteration aid;
+    // the driver passes no args and benches everything)
+    val only: Option[Set[String]] = args.headOption.map(_.split(',').toSet)
+    val spark = localSession()
     // Untimed warm-up pass: JIT-compile the codegen'd stages and prime
     // the parquet footer caches, then measure. Run-to-run variance on a
     // cold JVM was 2-4x on the heavier queries.

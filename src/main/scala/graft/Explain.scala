@@ -1,21 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: print the executed plan of selected queries (all
   * when none named). Usage:
-  * `sbt "runMain graft.Explain <sfDir> [query ...]"` — grep the output
-  * for Scan/Exchange/Window/ReadSchema/PushedFilters to audit shuffle
-  * count, pushdown, and codegen coverage per query. */
+  * `sbt "runMain graft.Explain <sfDir> [query ...]"` (`SPARK_GRAFT_CPUS`
+  * cores, default 4) — grep the output for Scan/Exchange/Window/
+  * ReadSchema/PushedFilters to audit shuffle count, pushdown, and
+  * codegen coverage per query. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"=== $n ===")

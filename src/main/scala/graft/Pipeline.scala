@@ -57,12 +57,9 @@ object Pipeline {
       .select(col("pair_name"), col("timestamp").as("bar_ts"),
         col("close").cast("double").as("close2"))
 
-    // fact-fact shuffle join: behind `spark.graft.skewGuard` the key
-    // skew is measured and a hot (pair, ts) — one halted symbol's
-    // duplicate-timestamp ticks — is salted flat; off (default) this
-    // is the plain equi-join, plan-identical to the original
-    val paired = graft.ops.Dist.guardedJoin(
-        leg1, leg2, Seq("pair_name", "bar_ts"))
+    // fact-fact equi-join on (pair, ts), the reference's pair align
+    // (transform_data.py:121-141); AQE's skew-join split takes a hot key
+    val paired = leg1.join(leg2, Seq("pair_name", "bar_ts"))
       .select(col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
         (log(col("close1")) - log(col("close2"))).as("spread"))
 

@@ -254,7 +254,6 @@ object CorpusOps {
       k: Int = 25,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     docs
       .select(col(idCol), explode(TextOps.tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -673,7 +672,6 @@ object CorpusOps {
       srcCol: String = "source",
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val base = TextOps.gopherRules(docs)
       .groupBy(col(srcCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -1498,7 +1496,6 @@ object CorpusOps {
       textCol: String = "text",
       idCol: String = "doc_id",
       topK: Int = 20): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dt = docs
       .select(col(idCol).as("doc_id"),
@@ -1530,7 +1527,6 @@ object CorpusOps {
       docs: DataFrame,
       textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     docs
       .select(col(sourceCol).as("source"),
         explode(TextOps.tokens(col(textCol))).as("term"))
@@ -1922,7 +1918,6 @@ object CorpusOps {
       textCol: String = "text",
       idCol: String = "doc_id",
       window: Int = 50): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     val wOcc = Window.partitionBy(col("doc_id"), col("term"))
       .orderBy(col("pos"))
     val wDoc = Window.partitionBy(col("doc_id"))
@@ -2056,7 +2051,6 @@ object CorpusOps {
       docs: DataFrame,
       textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val agg = docs
       .select(col(sourceCol).as("source"),
@@ -2068,7 +2062,6 @@ object CorpusOps {
         count(lit(1)).as("v_types"),
         sum((col("tf") * col("tf")).cast(dec)).as("m2"),
         sum((col("tf") * (col("tf") - 1)).cast(dec)).as("rep"))
-    val nd = dbl(col("n_tokens"))
     agg.select(col("source"), col("n_tokens"), col("v_types"),
       when(col("n_tokens") > 0,
         ExactRound.ratioRound(
@@ -2355,7 +2348,6 @@ object CorpusOps {
       docs: DataFrame,
       textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     val vocab = docs
       .select(col(sourceCol).as("source"),
         explode(TextOps.tokens(col(textCol))).as("term"))

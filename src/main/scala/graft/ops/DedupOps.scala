@@ -692,7 +692,6 @@ object DedupOps {
       maxHamming: Int = 3,
       jacThreshold: Double = 0.3): DataFrame = {
     graft.functions.MinHashDoc.register(df.sparkSession, A, B, CrossHash.P)
-    def dbl(c: org.apache.spark.sql.Column) = c.cast("double")
     val pairs = simhashNearDups(df, textCol, idCol, maxHamming)
     val hsets = df.filter(size(TextOps.tokens(col(textCol))) >= 3)
       .select(col(idCol).as("hd"),

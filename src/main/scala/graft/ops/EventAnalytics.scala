@@ -700,7 +700,6 @@ object EventAnalytics {
       fromType: String = "signup",
       toType: String = "purchase",
       gapMinutes: Int = 30): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val gapUs = gapMinutes * 60L * 1000000L
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -743,7 +742,6 @@ object EventAnalytics {
     * buckets); the reference-of-day anchor is a 1-row broadcast,
     * never a driver collect. */
   def rfm(events: DataFrame): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val anchor = events.agg(max(to_date(col("ts"))).as("ref_d"))
     val perUser = events
       .groupBy(col("user_id"))
@@ -797,7 +795,6 @@ object EventAnalytics {
     * [[ScalableRank.withRowIndex]] (row index and total count in one
     * window pass); the final fold is 1 row. */
   def engagementGini(events: DataFrame): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val perUser = events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("c"))
@@ -970,7 +967,6 @@ object EventAnalytics {
     * exactly (BigDecimal HALF_UP at 12dp) so the result is
     * bit-identical to the equivalent in-plan iteration. */
   def markovStationary(events: DataFrame, iters: Int = 15): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val counts = events
@@ -1044,7 +1040,6 @@ object EventAnalytics {
       typeA: String,
       typeB: String,
       b: Int = 64): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val dec6 = DecimalType(18, 6)
     val cells = events
       .filter(col("event_type").isin(typeA, typeB))

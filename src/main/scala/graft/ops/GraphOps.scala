@@ -200,10 +200,9 @@ object GraphOps {
     * Scale posture: state is one (node, rank) relation; each
     * iteration is one edges ⋈ ranks join on src (edges dominate) plus
     * one dst-keyed partial-aggregated shuffle of contribution rows.
-    * The mode AUTO-SELECTS from the node count (override with
-    * `broadcastRanks`): up to `broadcastMaxNodes` the per-iteration
-    * rank and contribution relations ship as broadcasts, so edges
-    * NEVER move — right whenever the node set fits an executor. Past
+    * The mode follows the node count: up to `broadcastMaxNodes` the
+    * per-iteration rank and contribution relations ship as
+    * broadcasts, so edges NEVER move — right whenever the node set fits an executor. Past
     * that, the joins become shuffle joins, and the edge relation is
     * hash-partitioned by src ONCE before its checkpoint (the node
     * relation by id) — `localCheckpoint` preserves outputPartitioning,
@@ -219,9 +218,8 @@ object GraphOps {
       dstCol: String = "dst",
       iters: Int = 5,
       damping: Double = 0.85,
-      broadcastRanks: Option[Boolean] = None,
       broadcastMaxNodes: Long = 50000000L): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    import org.apache.spark.sql.types.DoubleType
     require(iters >= 1 && damping > 0 && damping < 1)
     val base = 1.0 - damping
     val e = edgesIn
@@ -239,7 +237,7 @@ object GraphOps {
     // count and re-broadcast a 1-row n relation in all iters+1
     // crossJoins (6 broadcast-build jobs for one driver-known long)
     val nNodes = nodesRaw.count()
-    val useBroadcast = broadcastRanks.getOrElse(nNodes <= broadcastMaxNodes)
+    val useBroadcast = nNodes <= broadcastMaxNodes
     val nodes =
       if (useBroadcast) nodesRaw
       else nodesRaw.repartition(col("id")).localCheckpoint(eager = false)
@@ -248,7 +246,6 @@ object GraphOps {
     val eDeg =
       (if (useBroadcast) eDegRaw else eDegRaw.repartition(col("src")))
         .localCheckpoint(eager = false)
-    def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(28, 12))
     def bc(df: DataFrame) = if (useBroadcast) broadcast(df) else df
     // iteration state: the rank's EXACT 12-dp value as its unscaled
     // LONG (rank <= 1, so r12 <= 10^12) — the same exact relation the
@@ -342,8 +339,6 @@ object GraphOps {
     * 3T/wedges forms in one double divide rounded 6dp. */
   def triangleCount(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    def dbl(c: org.apache.spark.sql.Column) =
-      c.cast(org.apache.spark.sql.types.DoubleType)
     val e = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))

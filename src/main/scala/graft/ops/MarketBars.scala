@@ -2021,9 +2021,8 @@ object MarketBars {
       .filter(col("close") > 0)
       .withColumn("d", to_date(col("bar_ts")))
       .withColumn("pc", lag(col("close"), 1).over(dayW))
-      .withColumn("r",
-        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .groupBy(col("series"), col("d"))
       .agg(sum(round(col("r") * col("r"), 12).cast(dec12)).as("srv"))
       .select(col("series"), col("d"),
@@ -2082,9 +2081,8 @@ object MarketBars {
         bars.filter(col("close") > 0 &&
           col("series").isin(seriesA, seriesB)),
         Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r",
-        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .select(col("series"), col("bar_ts"), col("r"))
     val a = rets.filter(col("series") === seriesA)
       .select(col("bar_ts"), col("r").as("x"))
@@ -2136,9 +2134,8 @@ object MarketBars {
     val dec12 = DecimalType(38, 12)
     val rets = ScalableWindow.withPrevValues(bars.filter(col("close") > 0),
         Seq("series"), Seq("bar_ts"), Seq(("close", "pc")))
-      .withColumn("r",
-        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .withColumn("is_turn",
         dayofmonth(col("bar_ts")) <= 2 ||
           dayofmonth(col("bar_ts")) >=
@@ -3343,9 +3340,8 @@ object MarketBars {
     val withR = ScalableWindow.withSeqPrev(bars.filter(col("close") > 0),
         Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
-      .withColumn("r", when(col("pc") > 0,
-        logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .withColumn("rn", col("__brn") - 1)
       .withColumn("n_all", col("__btot") - 1)
       .select(col("series"), col("bar_ts"), col("r"), col("rn"),
@@ -3408,9 +3404,8 @@ object MarketBars {
     val withR = ScalableWindow.withSeqPrev(bars.filter(col("close") > 0),
         Seq("series"), Seq("bar_ts"), "__brn",
         Seq(("close", "pc")), Some("__btot"))
-      .withColumn("r", when(col("pc") > 0,
-        logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .withColumn("rn", col("__brn") - 1)
       .withColumn("n_all", col("__btot") - 1)
       .select(col("series"), col("bar_ts"), col("r"), col("rn"),
@@ -4468,9 +4463,8 @@ object MarketBars {
       .filter(col("close") > 0)
       .withColumn("d", to_date(col("bar_ts")))
       .withColumn("pc", lag(col("close"), 1).over(dayW))
-      .withColumn("r",
-        when(col("pc") > 0, logRet8dp(col("close"), col("pc"))))
-      .filter(col("r").isNotNull)
+      .filter(col("pc").isNotNull)
+      .withColumn("r", logRet8dp(col("close"), col("pc")))
       .groupBy(col("series"), col("d"))
       .agg(count(lit(1)).as("n_rets"),
         sum(round(col("r") * col("r"), 12).cast(dec12)).as("srv"),

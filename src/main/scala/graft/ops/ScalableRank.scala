@@ -5,15 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Per-key rank / ntile / percent_rank / running sum as plain
+/** Per-key row index / ntile / running sum as plain
   * `Window.partitionBy(keys)` windows behind one output contract: the
   * row index and group total are LONG, a running sum is
   * DECIMAL(38, s) with null values counting as 0. Empty `keyCols`
   * means one global window (a single task sorts the whole input).
   *
-  * `ntile` is a closed-form bucket formula over (rn, n);
-  * `percent_rank` is (rank−1)/(n−1) with rank = min rn over the tie
-  * group.
+  * `ntile` is a closed-form bucket formula over (rn, n).
   */
 object ScalableRank {
 
@@ -95,38 +93,6 @@ object ScalableRank {
     withRowIndex(df0, keyCols, orderCols, "__grn", "__gn")
       .withColumn(out, ntileExpr(col("__grn"), col("__gn"), buckets))
       .drop("__grn", "__gn")
-
-  /** `row_number() OVER (PARTITION BY keys ORDER BY order)` (LONG). */
-  def rowNumber(
-      df0: DataFrame,
-      keyCols: Seq[String],
-      orderCols: Seq[Column],
-      out: String): DataFrame =
-    withRowIndex(df0, keyCols, orderCols, out, "__gn").drop("__gn")
-
-  /** `percent_rank() OVER (PARTITION BY keys ORDER BY valueCols)`
-    * with SQL tie semantics (peers share the rank of their first
-    * row): row_number under (valueCols ++ tieCols), then
-    * rank = min(rn) over the (keys, valueCols) tie group and
-    * percent_rank = (rank−1)/(n−1). `tieCols` must break all value
-    * ties. */
-  def percentRank(
-      df0: DataFrame,
-      keyCols: Seq[String],
-      valueCols: Seq[Column],
-      tieCols: Seq[Column],
-      out: String): DataFrame = {
-    val aug = withRowIndex(df0, keyCols, valueCols ++ tieCols, "__grn", "__gn")
-    val peers = Window.partitionBy((keyCols.map(col) ++ valueCols): _*)
-    aug
-      .withColumn("__rk", min(col("__grn")).over(peers))
-      .withColumn(out,
-        when(col("__gn") > 1,
-          (col("__rk") - 1).cast(DoubleType) /
-            (col("__gn") - 1).cast(DoubleType))
-          .otherwise(lit(0.0)))
-      .drop("__grn", "__gn", "__rk")
-  }
 
   /** Exact running sum `sum(val) OVER (PARTITION BY keys ORDER BY
     * order ROWS UNBOUNDED PRECEDING..CURRENT)`. `valCol` must be

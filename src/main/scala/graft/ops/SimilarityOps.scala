@@ -240,7 +240,6 @@ object SimilarityOps {
     val base = labels.groupBy(col("__lab").as("label"))
       .agg(count(lit(1)).as("n_vecs"))
     val tot = labels.agg(count(lit(1)).as("n_total"))
-    val purity = dbl(col("n_same")) / dbl(col("n_edges"))
     val baseRate = dbl(col("n_vecs")) / dbl(col("n_total"))
     perLabel.join(base, "label").crossJoin(broadcast(tot))
       .select(col("label"), col("n_vecs"), col("n_edges"),
@@ -1097,7 +1096,6 @@ object SimilarityOps {
       posLabel: Int = 1,
       bins: Int = 10): DataFrame = {
     require(bins >= 1, s"bins must be >= 1 (got $bins)")
-    def dbl(c: Column) = c.cast(DoubleType)
     val st = scores.agg(min(col(scoreCol)).as("lo"), max(col(scoreCol)).as("hi"))
     scores.crossJoin(broadcast(st))
       .withColumn("w", (col("hi") - col("lo")) / lit(bins.toDouble))
@@ -1448,7 +1446,6 @@ object SimilarityOps {
       vecCol: String = "embedding",
       iters: Int = 50): DataFrame = {
     val spark = emb.sparkSession
-    def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
     def dsum(c: org.apache.spark.sql.Column) =
       sum(round(c, 12).cast(DecimalType(28, 12)))
     val n = emb.count()

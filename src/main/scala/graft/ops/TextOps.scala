@@ -442,7 +442,6 @@ object TextOps {
       textCol: String = "text",
       idCol: String = "doc_id",
       symbolAt: Double = 0.05): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     docs
       .withColumn("n_chars", length(col(textCol)).cast("long"))
       .withColumn("n_sym",
@@ -489,7 +488,6 @@ object TextOps {
       langCol: String = "lang",
       textCol: String = "text",
       subwordLen: Int = 4): DataFrame = {
-    def dbl(c: Column) = c.cast(DoubleType)
     val words = filter(split(lower(col(textCol)), "[^a-z0-9]+"),
       w => length(w) > 0)
     val sub = aggregate(words, lit(0L),

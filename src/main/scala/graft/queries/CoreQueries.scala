@@ -1084,7 +1084,6 @@ object CoreQueries {
         .filter(col("n_both") >= 3)
       val partCnt = li.groupBy(col("pk")).agg(count(lit(1)).as("c"))
       val tot = li.agg(count_distinct(col("ok")).as("n_orders"))
-      def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       pairs
         .join(partCnt.select(col("pk").as("pa"), col("c").as("ca")), "pa")
         .join(partCnt.select(col("pk").as("pb"), col("c").as("cb")), "pb")
@@ -1829,16 +1828,13 @@ object CoreQueries {
     // than 90 days after their order date, split per returnflag (the
     // schema's shipmode stand-in) into urgent (priority 1-2) vs other
     // orders — the two-fact equi-join + conditional-count shape; both
-    // facts shuffle on orderkey, no dim involved; the shuffle rides
-    // Dist.guardedJoin so `spark.graft.skewGuard=true` salts a
-    // measured hot orderkey flat (off by default: plain join)
+    // facts shuffle on orderkey, no dim involved
     "q293_late_priority" -> ((s, dir) => {
       val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      graft.ops.Dist.guardedJoin(
-          Tables.lineitem(s, dir),
-          Tables.orders(s, dir)
-            .select(col("o_orderkey").as("l_orderkey"),
-              col("o_orderdate"), col("o_orderpriority")),
+      Tables.lineitem(s, dir)
+        .join(Tables.orders(s, dir)
+          .select(col("o_orderkey").as("l_orderkey"),
+            col("o_orderdate"), col("o_orderpriority")),
           Seq("l_orderkey"))
         .filter(datediff(to_date(col("l_shipdate")),
           to_date(col("o_orderdate"))) > 90)
@@ -1877,10 +1873,9 @@ object CoreQueries {
     // decorrelated into one per-order distinct-count aggregate joined
     // back to the late lines; supplier dim joins under AQE
     "q295_blame_supplier" -> ((s, dir) => {
-      val li = graft.ops.Dist.guardedJoin(
-          Tables.lineitem(s, dir),
-          Tables.orders(s, dir)
-            .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate")),
+      val li = Tables.lineitem(s, dir)
+        .join(Tables.orders(s, dir)
+          .select(col("o_orderkey").as("l_orderkey"), col("o_orderdate")),
           Seq("l_orderkey"))
         .withColumn("late",
           datediff(to_date(col("l_shipdate")),

@@ -757,8 +757,6 @@ object LlmQueries {
     // the cumulative share — "keep the top X%, get Y% of the tokens",
     // the curation-planning curve feeding q203's allocator
     "q272_selection_curve" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DoubleType)
       // decile via ScalableRank (exact closed-form bucket index); the
       // cumulative window after runs on the 10-row decile rollup only
       val wCum = org.apache.spark.sql.expressions.Window
@@ -789,8 +787,6 @@ object LlmQueries {
     // full-doc digests miss), per-source share — one prefix-keyed
     // shuffle, all-integer until the share
     "q269_prefix_dup" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DoubleType)
       val d = Tables.rebalance(Tables.documents(s, dir))
         .select(col("source"), col("doc_id"),
           concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 8))
@@ -810,8 +806,6 @@ object LlmQueries {
     // whose mass sits in a few huge docs biases every per-doc stat —
     // the q185 sorted-weighted Gini on exact integers
     "q266_length_gini" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DoubleType)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
         .orderBy(col("n_chars"), col("doc_id"))

@@ -323,8 +323,6 @@ object MarketQueries {
     // (rn, n): pr = (rn−1)/(n−1), cd = rn/n, ntile by the bucket
     // formula.
     "q43_window_dist" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DoubleType)
       graft.ops.ScalableRank.withRowIndex(
           Tables.events(s, dir)
             .select(col("event_id"), col("event_type"), col("value")),
@@ -368,8 +366,6 @@ object MarketQueries {
     // ntile of (rn, n) and the tie-collapsing rank is min(rn) over
     // the (type, value) peer group
     "q132_quantile_norm" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast(org.apache.spark.sql.types.DoubleType)
       val peers = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type"), col("value"))
       graft.ops.ScalableRank.withRowIndex(
@@ -1091,7 +1087,6 @@ object MarketQueries {
     // the q235 dispersion formula moved from term counts to arrival
     // counts; exact-integer arguments, one double division
     "q265_arrival_dispersion" -> ((s, dir) => {
-      def dbl(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       Tables.events(s, dir)
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("h"))

@@ -1,22 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** plans/ dump: explain("formatted") per named query to files.
   *
   *   sbt "Test/runMain graft.ExplainFmt <sfDir> <outDir> <suffix> [--executed] q144_cusum ..."
   *
   * With `--executed` each query is collected first, so the file holds
-  * the final adaptive plan as it ran. */
+  * the final adaptive plan as it ran. The session is
+  * [[Bench.localSession]] (`SPARK_GRAFT_CPUS` cores, default 4). */
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val executed = args.lift(3).contains("--executed")
     val names = args.drop(if (executed) 4 else 3).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query execution breakdown: wall time vs jobs / stages / tasks /
   * summed task time / executor CPU time / shuffle bytes. Tells whether
@@ -19,15 +18,9 @@ import org.apache.spark.sql.SparkSession
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.DefaultCpus)
     val only = args.headOption.map(_.split(',').toSet)
       .getOrElse(sys.error("pass a comma-separated query list"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger

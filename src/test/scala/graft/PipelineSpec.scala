@@ -8,17 +8,9 @@ import graft.ops.MarketBars
 import graft.sources.Tables
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // pinned to the default 4 cores whatever SPARK_GRAFT_CPUS says: the
+  // plan and partition locks assume local[4]
+  lazy val spark: SparkSession = Bench.localSession(Bench.DefaultCpus)
   val sf = "/root/testdata/sf0.001"
 }
 

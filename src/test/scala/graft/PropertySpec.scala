@@ -609,17 +609,6 @@ class PropertySpec extends AnyFunSuite {
     assert(got.toSeq === Seq(Some(11.0), None))
   }
 
-  test("saltedJoin rejects right/full outer join types") {
-    val l = Seq((1, "a")).toDF("k", "lv")
-    val r = Seq((1, "b")).toDF("k", "rv")
-    intercept[IllegalArgumentException] {
-      graft.ops.Dist.saltedJoin(l, r, Seq("k"), 4, "right")
-    }
-    intercept[IllegalArgumentException] {
-      graft.ops.Dist.saltedJoin(l, r, Seq("k"), 4, "full_outer")
-    }
-  }
-
   test("connected components equals union-find on random graphs") {
     def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map[Long, Long]()

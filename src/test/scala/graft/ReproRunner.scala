@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic twin of [[Bench]]: runs the named queries with the same
   * warm-up + 3 timed passes, but PRINTS the stack trace of any pass
   * that throws instead of swallowing it into a `failures` entry.
@@ -12,15 +10,9 @@ import org.apache.spark.sql.SparkSession
 object ReproRunner {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Bench.DefaultCpus)
     val only = args.headOption.map(_.split(',').toSet)
       .getOrElse(sys.error("pass a comma-separated query list"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     val picked = SparkEntry.queries.filter { case (n, _) => only(n) }
     (0 to 3).foreach { pass =>
       picked.foreach { case (name, fn) =>

@@ -286,7 +286,6 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("turnOfMonth: authored boundary/interior returns pin the spread") {
-    val day0 = java.time.LocalDate.of(2024, 1, 1)
     // closes on Jan 1,2,15,16,30,31: returns land on 2(turn),
     // 15/16(other), 30/31(turn); last_day(Jan)=31 so 30,31 are turn
     val days = Seq(1, 2, 15, 16, 30, 31)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{DedupOps, ExactRound, MultimodalOps}
@@ -9,12 +8,7 @@ import graft.ops.{DedupOps, ExactRound, MultimodalOps}
   * image near-dup pipeline (q393) and the ExactRound engine-proof
   * rounding helpers. */
 class Round11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  import SparkTestSession.spark
 
   test("syntheticCells: md5 byte fixture (id 0 cell 0 = 0x3e = 62) and the +16 tweak") {
     val cells = MultimodalOps.syntheticCells(0L, tweaked = false)

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.ScalableRank
 
 /** Round-8 additions: the ScalableRank ops must equal the plain
-  * `row_number`/`ntile`/`percent_rank`/running-sum windows bit-for-bit
+  * `row_number`/`ntile`/running-sum windows bit-for-bit
   * on arbitrary data, with hot keys and dense ties.
   */
 class Round8Spec extends AnyFunSuite {
@@ -36,17 +36,19 @@ class Round8Spec extends AnyFunSuite {
     assert(b.except(a).count() === 0)
   }
 
-  test("ScalableRank.rowNumber equals global row_number at any partition count") {
+  test("ScalableRank.withRowIndex equals global row_number at any partition count") {
     val df = randDf()
     val w = Window.partitionBy(col("key")).orderBy(col("v"), col("id"))
     val want = df.withColumn("rn", row_number().over(w).cast("long"))
-    same(ScalableRank.rowNumber(df, Seq("key"), Seq(col("v"), col("id")), "rn"),
-      want)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("key"))))
+    same(ScalableRank.withRowIndex(df, Seq("key"), Seq(col("v"), col("id")),
+      "rn", "n"), want)
     // unpartitioned (global order) form, desc ordering
     val wg = Window.orderBy(col("amt").desc, col("id"))
     val wantG = df.withColumn("rn", row_number().over(wg).cast("long"))
-    same(ScalableRank.rowNumber(df, Seq.empty,
-      Seq(col("amt").desc, col("id")), "rn"), wantG)
+      .withColumn("n", lit(df.count()))
+    same(ScalableRank.withRowIndex(df, Seq.empty,
+      Seq(col("amt").desc, col("id")), "rn", "n"), wantG)
   }
 
   test("ScalableRank.ntile equals global ntile for ragged bucket sizes") {
@@ -70,20 +72,6 @@ class Round8Spec extends AnyFunSuite {
       ntile(10).over(Window.orderBy(col("v"), col("id"))))
     same(ScalableRank.ntile(tiny, Seq.empty,
       Seq(col("v"), col("id")), 10, "t"), wantT)
-  }
-
-  test("ScalableRank.percentRank equals global percent_rank under dense ties") {
-    val df = randDf()
-    // per-key percent_rank over v ALONE (ties collapse) — the q132 shape
-    val wk = Window.partitionBy(col("key")).orderBy(col("v"))
-    val want = df.withColumn("pr", percent_rank().over(wk))
-    same(ScalableRank.percentRank(df, Seq("key"), Seq(col("v")),
-      Seq(col("id")), "pr"), want)
-    // single-row groups emit 0.0
-    val one = Seq(("a", 5L, 1L, 1L)).toDF("key", "v", "amt", "id")
-    assert(ScalableRank.percentRank(one, Seq("key"), Seq(col("v")),
-      Seq(col("id")), "pr")
-      .select("pr").as[Double].head() === 0.0)
   }
 
   test("laggedScope equals the two-layer global form on sparse, gappy data") {

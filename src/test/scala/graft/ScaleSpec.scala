@@ -3,28 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dist, MarketBars}
+import graft.ops.MarketBars
 import graft.sources.{AlpacaSource, Sinks, Tables}
 
-/** Scale-mechanics behaviors: salted joins preserve semantics, bucketed
-  * tables join without a shuffle, raw inspection reports payload shape.
+/** Scale-mechanics behaviors: bucketed tables join without a shuffle,
+  * raw inspection reports payload shape.
   */
 class ScaleSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  test("salted join equals plain join (inner + left) on skewed data") {
-    import spark.implicits._
-    // hot key: 80% of rows share key 1
-    val left = (1 to 1000).map(i => (if (i <= 800) 1 else i, s"l$i")).toDF("k", "lv")
-    val right = (1 to 50).map(i => (i, s"r$i")).toDF("k", "rv")
-    for (jt <- Seq("inner", "left")) {
-      val plain = left.join(right, Seq("k"), jt)
-      val salted = Dist.saltedJoin(left, right, Seq("k"), saltBuckets = 8, joinType = jt)
-      assert(salted.count() === plain.count(), jt)
-      assert(salted.except(plain).count() === 0, jt)
-      assert(plain.except(salted).count() === 0, jt)
-    }
-  }
 
   test("bucketed tables join with zero shuffle exchanges") {
     // a previous JVM's managed-table dirs survive in spark-warehouse
@@ -446,8 +432,8 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("pageRank shuffle mode: one contribution Exchange per iteration, edges never move") {
-    // broadcastRanks=Some(false) simulates the >broadcastMaxNodes
-    // regime: edges and nodes are hash-partitioned once before their
+    // broadcastMaxNodes = 0 puts the 4-node graph past the broadcast
+    // limit, the at-scale regime: edges and nodes are hash-partitioned once before their
     // checkpoints, so each iteration's src-join and id-join reuse the
     // stored layout — the ONLY per-iteration exchange is the dst-keyed
     // contribution shuffle.
@@ -466,7 +452,7 @@ class ScaleSpec extends AnyFunSuite {
     val shuffled =
       try {
         val s = graft.ops.GraphOps.pageRank(
-          edges, iters = 2, broadcastRanks = Some(false))
+          edges, iters = 2, broadcastMaxNodes = 0L)
         s.collect() // materialize under the pinned confs
         s
       } finally {
@@ -492,8 +478,9 @@ class ScaleSpec extends AnyFunSuite {
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L), (2L, 4L)
     ).toDF("src", "dst")
+    // broadcastMaxNodes = 0 sends the 4-node graph down the shuffle mode
     def ranked(iters: Int, bc: Boolean) = graft.ops.GraphOps.pageRank(
-      edges, iters = iters, broadcastRanks = Some(bc))
+      edges, iters = iters, broadcastMaxNodes = if (bc) Long.MaxValue else 0L)
     def depth(p: LogicalPlan): Int = 1 + (p.children.map(depth) :+ 0).max
     val long = ranked(40, bc = true)
     val d40 = depth(long.queryExecution.analyzed)
@@ -659,116 +646,6 @@ class ScaleSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!p400.contains("CartesianProduct"),
       s"q400: corpus cartesian appeared:\n${p400.take(2000)}")
-  }
-
-  test("autoSaltedJoin: measures skew, salts above threshold, plain below") {
-    import spark.implicits._
-    val skewed = (1 to 1000).map(i => (if (i <= 800) 1 else i, s"l$i"))
-      .toDF("k", "lv")
-    val uniform = (1 to 1000).map(i => (i % 100, s"l$i")).toDF("k", "lv")
-    val right = (1 to 50).map(i => (i, s"r$i")).toDF("k", "rv")
-    // local[4]: the hot key holds 800/1000 rows = 3.2 average
-    // partitions; the uniform frame tops out at 10/250 = 0.04
-    assert(Dist.skewFactor(skewed, Seq("k")) > 2.0)
-    assert(Dist.skewFactor(uniform, Seq("k")) <= 2.0)
-    for (df <- Seq(skewed, uniform); jt <- Seq("inner", "left")) {
-      val plain = df.join(right, Seq("k"), jt)
-      val auto = Dist.autoSaltedJoin(df, right, Seq("k"), jt,
-        skewThreshold = 2.0)
-      assert(auto.count() === plain.count(), jt)
-      assert(auto.except(plain).count() === 0, jt)
-      assert(plain.except(auto).count() === 0, jt)
-    }
-  }
-
-  test("skew guard engages inside the REAL pipeline join (conf-gated)") {
-    // Pipeline.pairZScores' fact-fact leg join rides Dist.guardedJoin:
-    // off (default) the plan is the plain equi-join — no salt column
-    // anywhere; on, with a measured-hot (pair, ts) key (one halted
-    // symbol's duplicate-timestamp ticks), the salted path must
-    // actually engage IN THE PRODUCT PLAN, and the result must be
-    // identical either way
-    import spark.implicits._
-    val ts0 = java.sql.Timestamp.valueOf("2024-01-02 14:30:00")
-    // 400 identical hot MSFT ticks at ts0 (identical close keeps the
-    // downstream tie-order-sensitive window deterministic) + a normal
-    // tail on both symbols
-    val hot = Seq.fill(400)(("MSFT", ts0, 10.0))
-    val tail = (1 to 20).flatMap { i =>
-      val t = java.sql.Timestamp.valueOf(f"2024-01-02 14:${31 + i}%02d:00")
-      Seq(("MSFT", t, 10.0 + i), ("AAPL", t, 20.0 + i))
-    }
-    val bars = (hot ++ Seq(("AAPL", ts0, 20.0)) ++ tail)
-      .toDF("symbol", "timestamp", "close")
-    val pairs = Seq(("MSFT", "AAPL"))
-    // the engagement contract here is Dist's decision trace (written
-    // at plan-construction time, when the guard measures the key),
-    // plus value equality of the full pipeline
-    val off = Pipeline.pairZScores(bars, pairs)
-    assert(spark.conf.getOption(Dist.SkewGuardDecisionKey).isEmpty,
-      "guard OFF must not measure or record anything")
-    spark.conf.set(Dist.SkewGuardKey, "true")
-    spark.conf.set(Dist.SkewGuardThresholdKey, "2.0")
-    try {
-      val on = Pipeline.pairZScores(bars, pairs)
-      val decision = spark.conf.get(Dist.SkewGuardDecisionKey, "")
-      assert(decision.startsWith("salted:"),
-        s"skew guard did not engage on the hot key (decision=$decision)")
-      val cols = off.columns.sorted.toIndexedSeq
-      val a = off.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect()
-      val b = on.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect()
-      assert(a.toSeq === b.toSeq, "salted pipeline result diverged")
-      // a uniform fixture measures BELOW threshold: guard on, but the
-      // plain join must run (no salt overhead on healthy data)
-      Pipeline.pairZScores(bars.filter(col("timestamp") =!= ts0), pairs)
-      val uniDecision = spark.conf.get(Dist.SkewGuardDecisionKey, "")
-      assert(uniDecision.startsWith("plain:"),
-        s"guard salted a uniform key — threshold not respected ($uniDecision)")
-    } finally {
-      spark.conf.unset(Dist.SkewGuardKey)
-      spark.conf.unset(Dist.SkewGuardThresholdKey)
-      spark.conf.unset(Dist.SkewGuardDecisionKey)
-    }
-  }
-
-  test("skew guard engages inside the REAL q293 two-fact join (plan lock)") {
-    // q293's lineitem⋈orders shuffle rides Dist.guardedJoin; unlike the
-    // pipeline (checkpoint-truncated lineage) this plan stays fully
-    // visible, so lock the PLAN: off → no salt column anywhere; on,
-    // over a fixture where one mega-order owns most lines → the
-    // salted join must appear in the product query's own plan, and
-    // the query result must be identical either way
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("skewfix").toString
-    val hot = (1 to 600).map(i => (1L, s"2024-0${1 + i % 4}-15", "R"))
-    val cold = (2 to 40).map(k => (k.toLong, "2024-02-10", if (k % 2 == 0) "A" else "N"))
-    (hot ++ cold).toDF("l_orderkey", "l_shipdate", "l_returnflag")
-      .write.parquet(s"$dir/lineitem.parquet")
-    (1 to 40).map(k => (k.toLong, "2023-10-01",
-        if (k % 3 == 0) "1-URGENT" else "5-LOW"))
-      .toDF("o_orderkey", "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val q = SparkEntry.queries("q293_late_priority")
-    def plan(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.toString
-    val off = q(spark, dir)
-    assert(!plan(off).contains("__salt"),
-      "default conf must keep the plain (unsalted) q293 plan")
-    spark.conf.set(Dist.SkewGuardKey, "true")
-    spark.conf.set(Dist.SkewGuardThresholdKey, "2.0")
-    try {
-      val on = q(spark, dir)
-      assert(plan(on).contains("__salt"),
-        s"skew guard did not salt q293's hot orderkey:\n${plan(on).take(2000)}")
-      val cols = off.columns.sorted.toIndexedSeq
-      val a = off.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect()
-      val b = on.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect()
-      assert(a.toSeq === b.toSeq, "salted q293 result diverged")
-    } finally {
-      spark.conf.unset(Dist.SkewGuardKey)
-      spark.conf.unset(Dist.SkewGuardThresholdKey)
-      spark.conf.unset(Dist.SkewGuardDecisionKey)
-    }
   }
 
   test("writeSized: file count follows the size target") {

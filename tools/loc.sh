@@ -28,6 +28,6 @@ done
 printf '%8d  %s\n' "$(code_lines src/main)" "src/main (code lines)"
 printf '%8d  %s\n' "$(grep -r -c localCheckpoint src/main | awk -F: '{s += $NF} END {print s}')" \
   "src/main lines with localCheckpoint"
-keys=$(grep -r -h -o -E 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' src/main | sort -u)
+keys=$(grep -r -h -o -E 'spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]' src/main | sort -u || true)
 printf '%8d  %s\n' "$(printf '%s\n' "$keys" | grep -c . || true)" "distinct spark.graft.* keys in src/main:"
-printf '%s\n' "$keys" | sed 's/^/          /'
+if [ -n "$keys" ]; then printf '%s\n' "$keys" | sed 's/^/          /'; fi
