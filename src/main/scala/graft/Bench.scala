@@ -2,23 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Local cores when `SPARK_GRAFT_CPUS` is unset — shared by every
-    * runnable main so a probe measures the program the bench runs. */
+    * runnable main (through [[localSession]]) so a probe measures the
+    * program the bench runs. */
   val DefaultCpus = "4"
-
-  /** The `local[cpus]` session every runnable main and the test suite
-    * build: `cpus` cores (`SPARK_GRAFT_CPUS`, else [[DefaultCpus]]) and
-    * as many shuffle partitions, UTC session time, no UI, WARN logs. */
-  def localSession(
-      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -91,5 +77,20 @@ object Bench {
     println(s"""{"total_min":$total,"total_median":$totalMedian,""" +
       s""""n":${names.size},"failures":$failList,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The `local[cpus]` session every runnable main and the test suite
+    * build: `cpus` cores (`SPARK_GRAFT_CPUS`, else [[DefaultCpus]]) and
+    * as many shuffle partitions, UTC session time, no UI, WARN logs. */
+  def localSession(
+      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }
