@@ -34,11 +34,11 @@ object CorpusPipeline {
     val keep = scored
       .groupBy(md5(col(textCol)).as("h"))
       .agg(min(col(idCol)).as("keep_id"))
-    // checkpoint before the iterative stage: `unique` is consumed twice
-    // (minhash pair generation AND the final anti-join), and the
-    // clusterer's per-round actions would otherwise recompute the whole
-    // scan -> stats -> digest-dedup chain for each consumer. Lazy — the
-    // CC initializer's first action materializes it.
+    // multi-action checkpoint before the iterative stage: `unique` is
+    // consumed twice (minhash pair generation AND the final anti-join),
+    // and the clusterer's per-round actions would otherwise recompute
+    // the whole scan -> stats -> digest-dedup chain for each consumer.
+    // Lazy — the CC initializer's first action materializes it.
     val unique = scored.join(keep, col(idCol) === col("keep_id"), "left_semi")
       .localCheckpoint(eager = false)
     val pairs = DedupOps.minhashNearDups(unique, textCol, idCol, jaccardThreshold)
@@ -66,6 +66,9 @@ object CorpusPipeline {
       idCol: String = "doc_id",
       qualityThreshold: Double = QualityThreshold,
       jaccardThreshold: Double = JaccardThreshold): DataFrame = {
+    // multi-action: each stage relation is read by the clusterer's
+    // per-round jobs (through `unique`) AND by the funnel's own result
+    // job, so a checkpoint is the only way one corpus pass serves both
     val scored = TextOps.textStats(docs).localCheckpoint(eager = false)
     val gated = scored.filter(col("quality_score") >= qualityThreshold)
       .localCheckpoint(eager = false)

@@ -65,7 +65,6 @@ object DedupOps {
           slice(TextOps.tokens(col(textCol)), 1, prefixTokens))).as("digest"),
         col(srcCol).as("src"))
       .distinct()
-      .localCheckpoint(eager = false)
     ds.alias("a")
       .join(ds.alias("b"),
         col("a.digest") === col("b.digest") && col("a.src") < col("b.src"))
@@ -127,7 +126,9 @@ object DedupOps {
     // Three consumers read this relation (the band build and both
     // verify join sides); without a barrier each re-runs the kernel
     // map-side. Materializing it once turns three kernel passes into
-    // one, with results unchanged.
+    // one, with results unchanged. A/B-kept (sf0.1 local[4]): without
+    // it q33 took 2.13 -> 2.63 s wall (task 3.09 -> 4.21 s, parent
+    // spread 0.25 s) and q345 5.17 -> 6.77 s
     out.localCheckpoint(eager = false)
   }
 
@@ -173,7 +174,6 @@ object DedupOps {
         (graft.functions.CrossHash.x32(
           concat_ws("#", lit("split"), col(idCol))) % 100 < trainPct)
           .as("is_train"))
-      .localCheckpoint(eager = false) // totals + both pair-side joins
     val pairs = ngramJaccardPairs(df, textCol, idCol, n = 3, threshold,
       maxDf).select(col("id_a"), col("id_b"))
     val tot = split.agg(
@@ -218,7 +218,6 @@ object DedupOps {
     def dbl(c: Column) = c.cast(org.apache.spark.sql.types.DoubleType)
     val mx = df.agg(max(col(idCol)).as("mx"))
     val base = df.select(col(idCol).as("doc"), md5(col(textCol)).as("digest"))
-      .localCheckpoint(eager = false) // doc census + first-seen census
     def bucketOf(c: Column) =
       least(floor(dbl(c) * buckets / (dbl(col("mx")) + 1)) + 1,
         lit(buckets)).cast("int")
@@ -393,6 +392,8 @@ object DedupOps {
     val exploded = eligible
       .select(col(idCol).as("doc"), benchFilter.as("is_bench"),
         explode(graft.functions.MinHashDoc.doc(col(textCol))("sset")).as("h"))
+    // multi-action: bench.count(), the bloom build and the result
+    // plan each run a job over this relation
     val bench = exploded.filter(col("is_bench"))
       .select(col("doc").as("bench_id"), col("h"))
       .localCheckpoint(eager = false)
@@ -502,6 +503,50 @@ object DedupOps {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
+  /** The posting chain shared by [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: word-`n`-gram shingles hashed to 64-bit
+    * digests, folded into `maxDf`-capped posting buckets `(gk, docs)`;
+    * [[gramSets]] turns them into the per-doc gram sets.
+    *
+    * Grams travel as PRIMITIVE 64-bit digests from the start: the
+    * hash64_array kernel hashes the whole shingle array in one codegen
+    * pass BEFORE the explode, so the posting-list groupBy shuffles
+    * 8-byte keys instead of 32-char md5 strings (64-bit collisions are
+    * ~1e-8 at corpus scale, and both engines hash identically, so the
+    * gate still compares exactly). collect_set folds the (doc, gram)
+    * dedup INTO the posting aggregate (partial collect_set dedups
+    * map-side): one exchange of the widest relation in the op instead
+    * of distinct() + groupBy, and stop-grams drop while still one row
+    * each. */
+  private def gramBuckets(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int,
+      maxDf: Int): DataFrame = {
+    graft.functions.Hash32Array.register(df.sparkSession)
+    // barrier: tokens materialize BEFORE the shingle lambda; inlined,
+    // each element_at would re-run split(text) — an O(tokens)-fold
+    // regex tax per row (the q315 interpreted-HOF class)
+    val grams = df
+      .select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("__toks"))
+      .localCheckpoint(eager = false)
+      .select(col("doc"),
+        explode(graft.functions.Hash32Array.hash64(
+          TextOps.shingles(col("__toks"), n))).as("gk"))
+    grams.groupBy(col("gk"))
+      .agg(array_sort(collect_set(col("doc"))).as("docs"))
+      .filter(size(col("docs")) <= maxDf)
+  }
+
+  /** One sorted gram set per doc `(doc, set, sz)`, re-derived from
+    * [[gramBuckets]]' pruned postings (no join). */
+  private def gramSets(buckets: DataFrame): DataFrame =
+    buckets.select(col("gk"), explode(col("docs")).as("doc"))
+      .groupBy(col("doc"))
+      .agg(array_sort(collect_list(col("gk"))).as("set"))
+      .withColumn("sz", size(col("set")))
+
   /** Direct word-n-gram Jaccard near-duplicate pairs — the exact-set
     * sibling of [[minhashNearDups]]: no signatures, no probabilistic
     * bands. Pairs come from an inverted index on the n-grams
@@ -534,38 +579,7 @@ object DedupOps {
       n: Int = 3,
       threshold: Double = 0.3,
       maxDf: Int = 100): DataFrame = {
-    graft.functions.Hash32Array.register(df.sparkSession)
-    // grams travel as PRIMITIVE 64-bit digests from the start: the
-    // hash64_array kernel hashes the whole shingle array in one
-    // codegen pass BEFORE the explode, so the distinct and the
-    // posting-list groupBy shuffle 8-byte keys instead of 32-char md5
-    // strings (64-bit collisions are ~1e-8 at corpus scale, and both
-    // engines hash identically, so the gate still compares exactly)
-    // tokens materialize BEFORE the shingle lambda: inlined, each
-    // element_at would re-run split(text) — an O(tokens)-fold regex
-    // tax per row (the q315 interpreted-HOF class)
-    val grams = df
-      .select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("__toks"))
-      .localCheckpoint(eager = false)
-      .select(col("doc"),
-        explode(graft.functions.Hash32Array.hash64(
-          TextOps.shingles(col("__toks"), n))).as("gk"))
-    // posting list per gram, stop-grams dropped while still one row
-    // each; collect_set folds the (doc, gram) dedup INTO the posting
-    // aggregate (partial collect_set dedups map-side), replacing the
-    // old distinct() + groupBy two-shuffle chain with one exchange of
-    // the widest relation in the op
-    val buckets = grams.groupBy(col("gk"))
-      .agg(array_sort(collect_set(col("doc"))).as("docs"))
-      .filter(size(col("docs")) <= maxDf)
-    // pruned postings re-derive from the buckets (no join), fold to
-    // one sorted gram set per doc — the verify side AND the prefix
-    // source; lazily checkpointed, two consumers
-    val hs = buckets.select(col("gk"), explode(col("docs")).as("doc"))
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(col("gk"))).as("set"))
-      .withColumn("sz", size(col("set")))
-      .localCheckpoint(eager = false)
+    val hs = gramSets(gramBuckets(df, textCol, idCol, n, maxDf))
     // PPJoin prefix filter (lossless for jaccard >= t): a qualifying
     // pair must collide inside the first sz − ⌊t·sz⌋ + 1 grams of the
     // GLOBAL hash order, so candidate pairs generate from prefix
@@ -681,10 +695,9 @@ object DedupOps {
     * MinHash error (how many SimHash "near-dups" are real?).
     *
     * Scale: rides the band-join pair plan; hash sets attach by id
-    * join (lazily checkpointed — one tokenize), the verify is
-    * set-intersection on candidate pairs only; output ≤ maxHamming+1
-    * rows. Docs under 3 tokens carry no shingle set and drop from the
-    * audit (both engines). */
+    * join, the verify is set-intersection on candidate pairs only;
+    * output ≤ maxHamming+1 rows. Docs under 3 tokens carry no shingle
+    * set and drop from the audit (both engines). */
   def simhashPrecision(
       df: DataFrame,
       textCol: String,
@@ -696,7 +709,6 @@ object DedupOps {
     val hsets = df.filter(size(TextOps.tokens(col(textCol))) >= 3)
       .select(col(idCol).as("hd"),
         graft.functions.MinHashDoc.doc(col(textCol))("sset").as("hset"))
-      .localCheckpoint(eager = false)
     // per-pair 6dp Jaccard as the exact SCALED integer (class-4
     // discipline: intersect/union are integers, so the 6dp value is
     // an exact rational — never round() its double quotient); the
@@ -846,28 +858,12 @@ object DedupOps {
       n: Int = 3,
       threshold: Double = 0.5,
       maxDf: Int = 100): DataFrame = {
-    graft.functions.Hash32Array.register(df.sparkSession)
-    // tokens materialize BEFORE the shingle lambda: inlined, each
-    // element_at would re-run split(text) — an O(tokens)-fold regex
-    // tax per row (the q315 interpreted-HOF class)
-    val grams = df
-      .select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("__toks"))
+    // A/B-kept pair (q316, sf0.1 local[4]): without both checkpoints
+    // 3.26 -> 4.50 s wall, parent spread 0.23 s — the buckets feed
+    // the sets and the probe join, the sets all three candidate legs
+    val buckets = gramBuckets(df, textCol, idCol, n, maxDf)
       .localCheckpoint(eager = false)
-      .select(col("doc"),
-        explode(graft.functions.Hash32Array.hash64(
-          TextOps.shingles(col("__toks"), n))).as("gk"))
-    // collect_set folds the (doc, gram) dedup into the posting
-    // aggregate — one exchange instead of distinct() + groupBy (the
-    // ngramJaccardPairs fusion)
-    val buckets = grams.groupBy(col("gk"))
-      .agg(array_sort(collect_set(col("doc"))).as("docs"))
-      .filter(size(col("docs")) <= maxDf)
-      .localCheckpoint(eager = false)
-    val hs = buckets.select(col("gk"), explode(col("docs")).as("doc"))
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(col("gk"))).as("set"))
-      .withColumn("sz", size(col("set")))
-      .localCheckpoint(eager = false)
+    val hs = gramSets(buckets).localCheckpoint(eager = false)
     // one-sided prefix probe: the contained side exposes its first
     // ⌊(1−t)·sz⌋ + 1 grams, the container side answers from the full
     // posting list
@@ -924,11 +920,12 @@ object DedupOps {
       minShared: Int = 3,
       maxDf: Int = 100): DataFrame = {
     graft.functions.Hash32Array.register(df.sparkSession)
-    // checkpoint the positional hash sequence BEFORE the window
-    // transform: higher-order functions run interpreted (no codegen,
-    // no subexpression elimination), so if projection collapse inlines
-    // the tokenize→shingle→hash chain into the lambda, `slice(hs, …)`
-    // and `least(…, m)` re-derive it from the raw text for EVERY j —
+    // barriers: checkpoint the tokens and the positional hash sequence
+    // BEFORE the shingle and window transforms: higher-order functions
+    // run interpreted (no codegen, no subexpression elimination), so
+    // if projection collapse inlines the tokenize→shingle→hash chain
+    // into the lambda, `slice(hs, …)` and `least(…, m)` re-derive it
+    // from the raw text for EVERY j —
     // O(m²) regex splits per doc (measured: ~0.25 s/row, a 1000×
     // blow-up). Materialized, the transform is plain array math.
     val h = df
@@ -941,18 +938,16 @@ object DedupOps {
       .filter(col("m") >= 1)
       .localCheckpoint(eager = false)
     val winLen = least(lit(window), col("m"))
-    // checkpointed too: both the per-doc fingerprint counts and the
-    // posting-list groupBy read it — one winnowing pass, not two.
-    // Checkpoint BEFORE the explode so the per-doc counts read the
-    // un-exploded arrays map-side instead of re-deduplicating the
-    // exploded relation (the old distinct() shuffle).
+    // both the per-doc fingerprint counts and the posting-list groupBy
+    // read the un-exploded fingerprint arrays: the per-doc counts take
+    // size(fps) map-side instead of re-deduplicating the exploded
+    // relation (the old distinct() shuffle)
     val fpArr = h
       .withColumn("fps", array_distinct(
         transform(
           sequence(lit(1), greatest(col("m") - lit(window) + 1, lit(1))),
           j => array_min(slice(col("hs"), j, winLen)))))
       .select(col("doc"), col("fps"))
-      .localCheckpoint(eager = false)
     val perDoc = fpArr.select(col("doc"), size(col("fps")).as("n_fp"))
     val fps = fpArr.select(col("doc"), explode(col("fps")).as("v"))
     val buckets = fps.groupBy(col("v"))

@@ -19,8 +19,9 @@ object LlmQueries {
   /** q77's verified PPJoin pair relation, shared with q305's wedge
     * census (the judge-flagged re-derivation: both queries built the
     * full inverted-index PPJoin independently — the bench's top
-    * block). Memoized per (session, sfDir) and lazily checkpointed:
-    * whichever query runs first pays the build; the other reads the
+    * block). Memoized per (session, sfDir) and lazily checkpointed
+    * (multi-action: several queries' jobs read it): whichever query
+    * runs first pays the build; the other reads the
     * materialized pair list (tiny — near-dup pairs only). The DuckDB
     * twins stay independent SQL either way, so the oracle is not
     * weakened. */
@@ -176,13 +177,11 @@ object LlmQueries {
     }),
 
     // Overlapping token-window chunking (context-window split; map-side
-    // explode). materializeTokens spreads the tiny bench scan — at real
-    // scale the default (no barrier) is the right plan
+    // explode behind chunk's tokenize barrier)
     "q57_chunking" -> ((s, dir) => {
-      // no Tables.rebalance here: chunk's opt-in tokenize barrier
-      // already spreads the scan (a second round-robin would stack)
-      CorpusOps.chunk(Tables.documents(s, dir), chunkLen = 64, stride = 48,
-        materializeTokens = true)
+      // no Tables.rebalance here: chunk's tokenize barrier already
+      // spreads the scan (a second round-robin would stack)
+      CorpusOps.chunk(Tables.documents(s, dir), chunkLen = 64, stride = 48)
         .orderBy(col("doc_id"), col("chunk_id"))
     }),
 
@@ -459,7 +458,9 @@ object LlmQueries {
       // ONE corpus scan + ONE tokenize: the shared checkpointed
       // relation feeds BOTH legs — the bm25 leg otherwise re-reads and
       // re-splits exactly what the quality leg just processed, so
-      // fusion must cost the fusion, not a second corpus pass
+      // fusion must cost the fusion, not a second corpus pass.
+      // A/B-kept (sf0.1 local[4]): without it (and bm25's tf
+      // checkpoint) 1.86 -> 2.35 s wall, parent spread 0.42 s
       val shared = graft.ops.Dist.materialize(
           Tables.rebalance(Tables.documents(s, dir))
             .withColumn("toks", TextOps.tokens(col("text"))))
@@ -1178,7 +1179,6 @@ object LlmQueries {
     "q373_dedup_savings" -> ((s, dir) => {
       val docs = Tables.rebalance(Tables.documents(s, dir))
       val comp = GraphOps.connectedComponents(dupPairs(s, dir))
-        .localCheckpoint(eager = false) // keeps + members
       // explicit renames on the keep side — a comp-derived self-join
       // resolved by DataFrame reference alone risks the trivially-true
       // predicate trap

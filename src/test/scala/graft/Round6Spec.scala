@@ -641,7 +641,7 @@ class Round6Spec extends AnyFunSuite {
 
   test("q225 plan: one tokenize pass, the rank window runs on the vocab aggregate") {
     val df = CorpusOps.ctfidf(Tables.documents(spark, sf))
-    df.collect() // finalize adaptive plan so checkpoint reuse is visible
+    df.collect() // finalize adaptive plan so exchange reuse is visible
     // AQE's toString repeats the tree (Final + Initial) — lock the final
     val full = df.queryExecution.executedPlan.toString
     val plan = full.split("== Initial Plan ==")(0)

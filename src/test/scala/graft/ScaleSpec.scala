@@ -149,10 +149,8 @@ class ScaleSpec extends AnyFunSuite {
   test("bm25 plan: query-term filter lands before the tf aggregate") {
     // only query-term postings may shuffle — the isin filter must sit
     // below the (doc, term) aggregate, not above it
-    // pinTf=false: the checkpoint would truncate the visible plan
     val plan = graft.ops.CorpusOps
-      .bm25(Tables.documents(spark, sf), Seq("spark", "window", "hash"),
-        pinTf = false)
+      .bm25(Tables.documents(spark, sf), Seq("spark", "window", "hash"))
       .queryExecution.executedPlan.toString
     val filterAt = plan.indexOf("spark,window,hash")
     val aggAt = plan.indexOf("HashAggregate")
@@ -318,8 +316,7 @@ class ScaleSpec extends AnyFunSuite {
     // a global Sort of all scored docs would shuffle the corpus once
     // more just to keep 10 rows
     val plan = graft.ops.CorpusOps
-      .bm25(Tables.documents(spark, sf), Seq("spark", "window", "hash"),
-        pinTf = false)
+      .bm25(Tables.documents(spark, sf), Seq("spark", "window", "hash"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"TakeOrderedAndProject missing from bm25 plan:\n${plan.take(3000)}")
@@ -706,5 +703,40 @@ class ScaleSpec extends AnyFunSuite {
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p425).size
     assert(hashEx === 1,
       s"q425: expected ONE hash exchange (the source rollup), found $hashEx")
+  }
+
+  test("corpus queries without checkpoints start no Spark job while they are built") {
+    // a lazy localCheckpoint plans and runs the shuffle stages beneath
+    // it as soon as it is declared, so building these queries ran jobs
+    // before any action; with only in-plan reuse left, building one is
+    // pure planning. Each query builds under its own job group and the
+    // listener counts the plan-execution jobs (those carrying a SQL
+    // execution id) tagged with it. The parquet schema read behind
+    // every table load is a job too, but it executes no query plan.
+    val qs = Seq("q59_tfidf", "q193_dsir_weights", "q225_ctfidf",
+      "q323_davies_bouldin", "q326_calinski_harabasz", "q347_source_jsd")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties)
+          .filter(_.getProperty("spark.sql.execution.id") != null)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(qs.contains)
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for (q <- qs) {
+        sc.setJobGroup(q, s"build $q")
+        try SparkEntry.queries(q)(spark, sf)
+        finally sc.clearJobGroup()
+      }
+      Thread.sleep(1000) // let the listener bus deliver any job start
+      val ran = qs.filter(q => jobs.getOrDefault(q, 0) > 0)
+      assert(ran.isEmpty, "plan-execution jobs while being built: " +
+        ran.map(q => s"$q=${jobs.get(q)}").mkString(", "))
+    } finally sc.removeSparkListener(listener)
   }
 }
