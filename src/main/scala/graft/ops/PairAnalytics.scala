@@ -86,6 +86,11 @@ object PairAnalytics {
         col("close1"), col("close2"),
         floor(col("close1") * lit(1e6) + lit(0.5)).cast("long").as("y6"),
         floor(col("close2") * lit(1e6) + lit(0.5)).cast("long").as("x6"))
+      // unpartitioned window: pairSpread emits pair_name as a literal,
+      // and without this barrier the optimizer folds it out of the
+      // residual lag window's partition spec, leaving a single-partition
+      // window (PropertySpec q172-q174: 0 -> 114 "No Partition Defined
+      // for Window" warnings with it deleted)
       .localCheckpoint(eager = false)
     val m = snapped.groupBy(col("pair_name"))
       .agg(count(lit(1)).as("n"),

@@ -107,7 +107,6 @@ object QualityReport {
       .groupBy(col(symbolCol).as("symbol"), d.as("trading_date"))
       .agg(count(lit(1)).as("actual_bars"),
         min(col(tsCol)).as("sym_first_ts"), max(col(tsCol)).as("sym_last_ts"))
-      .localCheckpoint(eager = false)
     val latestDay = grouped.agg(max(col("trading_date")).as("trading_date"))
     val latest = grouped.join(broadcast(latestDay), "trading_date")
     // ceil_div(detect_minutes, bar_minutes) — validate_data.py:35-36,129

@@ -714,7 +714,6 @@ object MarketQueries {
     "q146_page_cusum" -> ((s, dir) => {
       val b = MarketBars.bars(Tables.events(s, dir),
           "event_type", "ts", "value")
-        .localCheckpoint(eager = false)
       val withD = b.withColumn("d", to_date(col("bar_ts")))
       val d0 = withD.groupBy(col("series")).agg(min(col("d")).as("d0"))
       val base = withD.join(d0, "series").filter(col("d") === col("d0"))

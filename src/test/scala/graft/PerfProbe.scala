@@ -11,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * planning, codegen, scheduling). Every pass writes the full result
   * to the `noop` sink, so no output column is pruned away (a `count()`
   * would let the optimizer drop windows whose values it never reads).
-  * Test-scope diagnostic only.
+  * A pass that throws, warm-up included, prints its stack trace and
+  * the probe goes on with the next pass. Test-scope diagnostic only.
   *
   *   sbt "Test/runMain graft.PerfProbe q381_epps,q153_hurst"
   */
@@ -63,13 +64,17 @@ object PerfProbe {
     }
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    def threw(name: String, pass: String, e: Throwable): Unit = {
+      println(s"[probe] $name pass=$pass THREW ${e.getClass.getName}: ${e.getMessage}")
+      e.printStackTrace()
+    }
     val picked = SparkEntry.queries.filter { case (n, _) => only(n) }
     picked.foreach { case (name, fn) =>
       // warm-up (JIT + footer caches), as Bench does — once per variant
       ab.foreach { case (k, a, _) => spark.conf.set(k, a) }
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
+      try run(fn(spark, sfDir)) catch { case e: Throwable => threw(name, "warm-up", e) }
       ab.foreach { case (k, _, b) => spark.conf.set(k, b) }
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
+      try run(fn(spark, sfDir)) catch { case e: Throwable => threw(name, "warm-up", e) }
       val passes = if (ab.isDefined) 10 else 2
       (1 to passes).foreach { pass =>
         val variant = ab.map { case (k, a, b) =>
@@ -97,10 +102,7 @@ object PerfProbe {
                   f"tasks=$n%4d  $k")
             }
           }
-        } catch {
-          case e: Throwable =>
-            println(s"[probe] $name pass=$pass THREW ${e.getMessage}")
-        }
+        } catch { case e: Throwable => threw(name, pass.toString, e) }
       }
     }
     spark.stop()

@@ -705,7 +705,7 @@ class ScaleSpec extends AnyFunSuite {
       s"q425: expected ONE hash exchange (the source rollup), found $hashEx")
   }
 
-  test("corpus queries without checkpoints start no Spark job while they are built") {
+  test("queries without checkpoints start no Spark job while they are built") {
     // a lazy localCheckpoint plans and runs the shuffle stages beneath
     // it as soon as it is declared, so building these queries ran jobs
     // before any action; with only in-plan reuse left, building one is
@@ -714,7 +714,18 @@ class ScaleSpec extends AnyFunSuite {
     // execution id) tagged with it. The parquet schema read behind
     // every table load is a job too, but it executes no query plan.
     val qs = Seq("q59_tfidf", "q193_dsir_weights", "q225_ctfidf",
-      "q323_davies_bouldin", "q326_calinski_harabasz", "q347_source_jsd")
+      "q323_davies_bouldin", "q326_calinski_harabasz", "q347_source_jsd") ++
+      // market, event and stats queries
+      Seq(
+        "q71_dynamic_validator", "q80_funnel", "q146_page_cusum",
+        "q149_cuped_lift", "q178_stickiness", "q200_risk_decomp",
+        "q241_vol_cone", "q254_tail_clustering", "q259_lead_lag_matrix",
+        "q270_var_backtest", "q279_psi_drift", "q288_updown_beta",
+        "q292_mean_excess", "q299_jarque_bera", "q314_brown_forsythe",
+        "q320_rank_ic", "q327_friedman", "q343_return_mi", "q360_cdar",
+        "q367_vol_managed", "q374_chatterjee", "q376_tail_dep",
+        "q380_transfer_entropy", "q418_growth_accounting",
+        "q419_seq_interference", "q420_audience_overlap")
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
