@@ -15,10 +15,11 @@ import graft.sources.{AlpacaSource, Sinks}
   * with one structural improvement: the per-pair Python loop
   * (`project/transform_data.py:187-192`) serialized three independent
   * Spark DAGs; here all pairs live in ONE plan and Catalyst sees the
-  * whole workload at once. The pair join is a single leg1×leg2 join
-  * driven by a broadcast pair spec (each leg scans the payload); both
-  * symbol legs come out of one projection over the z-scores, so the
-  * join and the window run once. One [[run]] evaluates that plan
+  * whole workload at once. The payload is scanned once: the bars join
+  * one broadcast leg spec, the two legs are aligned per (pair, bar_ts)
+  * in the same exchange the per-pair window reads, and both symbol legs
+  * come out of one projection over the z-scores, so the scan, the
+  * shuffle and the window run once. One [[run]] evaluates that plan
   * once: the sink's empty guard and its write share it.
   */
 object Pipeline {
@@ -37,9 +38,19 @@ object Pipeline {
     AlpacaSource.filterMarketHoursKeepUtc(
       AlpacaSource.cleanBars(AlpacaSource.readRaw(spark, rawPath)))
 
-  /** All pairs in one plan: broadcast the pair spec against each leg,
-    * join leg1×leg2 on (pair, timestamp), window per pair, then emit
-    * both symbol legs per z-score row ([[PairAnalytics.legReshape]]). */
+  /** All pairs in one plan: join the bars once against a broadcast leg
+    * spec (one row per symbol, pair and leg), align the two legs per
+    * (pair, bar_ts) in the exchange the per-pair window reads, then emit
+    * both symbol legs per z-score row ([[PairAnalytics.legReshape]]).
+    *
+    * The align is the reference's leg1 x leg2 inner join on (pair, ts)
+    * (transform_data.py:121-141) with its exact multiplicity: each
+    * (pair, bar_ts) group collects its leg-1 and leg-2 closes and
+    * explodes both lists, so n1 bars on one leg and n2 on the other give
+    * n1 x n2 rows and a timestamp missing on either leg gives none. A
+    * close is collected inside a struct, so a null close still pairs.
+    * The scan, the spec broadcast and the shuffle each run once; sym1
+    * and sym2 ride along from the spec to the leg reshape. */
   def pairZScores(
       bars: DataFrame,
       pairs: Seq[(String, String)] = DefaultPairs,
@@ -47,29 +58,38 @@ object Pipeline {
       minWindow: Int = PairAnalytics.DefaultMinWindow): DataFrame = {
     val spark = bars.sparkSession
     import spark.implicits._
-    val spec = pairs.toDF("sym1", "sym2")
+    val legSpec = pairs.flatMap { case (s1, s2) => Seq((s1, s1, s2, 1), (s2, s1, s2, 2)) }
+      .toDF("leg_symbol", "sym1", "sym2", "leg")
       .withColumn("pair_name", concat_ws("-", col("sym1"), col("sym2")))
+    def closes(leg: Int) =
+      collect_list(when(col("leg") === leg, struct(col("close")))).as(s"closes$leg")
+    val keys = Seq(col("pair_name"), col("sym1"), col("sym2"), col("bar_ts"))
 
-    val leg1 = bars.join(broadcast(spec), col("symbol") === col("sym1"))
-      .select(col("pair_name"), col("timestamp").as("bar_ts"),
-        col("close").cast("double").as("close1"))
-    val leg2 = bars.join(broadcast(spec.select("sym2", "pair_name")), col("symbol") === col("sym2"))
-      .select(col("pair_name"), col("timestamp").as("bar_ts"),
-        col("close").cast("double").as("close2"))
-
-    // fact-fact equi-join on (pair, ts), the reference's pair align
-    // (transform_data.py:121-141); AQE's skew-join split takes a hot key
-    val paired = leg1.join(leg2, Seq("pair_name", "bar_ts"))
-      .select(col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
-        (log(col("close1")) - log(col("close2"))).as("spread"))
+    // the hash exchange on pair_name serves both the align and the window
+    val aligned = bars.join(broadcast(legSpec), col("symbol") === col("leg_symbol"))
+      .where(col("timestamp").isNotNull) // a null stamp joins no other leg
+      .select(col("pair_name"), col("sym1"), col("sym2"), col("leg"),
+        col("timestamp").as("bar_ts"), col("close").cast("double").as("close"))
+      .repartition(col("pair_name"))
+      .groupBy(keys: _*)
+      .agg(closes(1), closes(2))
+    val paired = aligned
+      .select(keys :+ col("closes2") :+ explode(col("closes1")).as("c1"): _*)
+      .select(keys :+ col("c1.close").as("close1") :+ explode(col("closes2")).as("c2"): _*)
+      .select(keys ++ Seq(col("close1"), col("c2.close").as("close2"),
+        (log(col("close1")) - log(col("close2"))).as("spread")): _*)
 
     // the reference's per-pair trailing window
     val z = PairAnalytics.rollingZScore(paired, windowRows, minWindow)
+    // a pair listed k times: the spec repeats each leg k times, so the
+    // window sees k x k rows per bar, and each z-score row repeats k
+    // times more, as a join of the z-scores with the listed pairs does
+    val listed =
+      if (pairs.distinct.size == pairs.size) z
+      else z.join(broadcast(legSpec.where(col("leg") === 1).select("pair_name")), "pair_name")
     // leg reshape with the sign flip (transform_data.py:156-180), for
     // every pair at once
-    val symSpec = spec.select(col("pair_name"), col("sym1"), col("sym2"))
-    PairAnalytics.legReshape(z.join(broadcast(symSpec), Seq("pair_name")),
-      col("sym1"), col("sym2"))
+    PairAnalytics.legReshape(listed, col("sym1"), col("sym2"))
   }
 
   /** Full run: returns (rows written, run summary row); the row count
@@ -112,13 +132,17 @@ object Pipeline {
     // one run timestamp, fixed on the driver: every DQ row and the
     // returned summary carry the same value, however often they are read
     val runTs = lit(java.sql.Timestamp.from(java.time.Instant.now()))
-    // the DQ reads the landed lake back (it validates what landed) once:
-    // latest day, detail and summary all derive from these counts
-    val counts = QualityReport.symbolDayCounts(spark.read.parquet(outPath), "symbol", "bar_ts")
+    // the DQ reads the landed lake back (it validates what landed) once,
+    // with the schema it was just written with, so no footer is read to
+    // infer it: latest day, detail and summary all derive from these counts
+    val counts = QualityReport.symbolDayCounts(
+        spark.read.schema(result.schema).parquet(outPath), "symbol", "bar_ts")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val latestDay = counts.agg(max(col("trading_date")).cast("string")).head().getString(0)
-      if (fullCloseDates.contains(latestDay)) {
+      // the latest day is read only by the holiday check, which cannot
+      // fire without declared full-close dates
+      lazy val latestDay = counts.agg(max(col("trading_date")).cast("string")).head().getString(0)
+      if (fullCloseDates.nonEmpty && fullCloseDates.contains(latestDay)) {
         import spark.implicits._
         val summary = Seq((runId, 0L, 0L, 0L, 0L, 0L, "OK",
           s"Holiday full close (skipped validation): $latestDay"))

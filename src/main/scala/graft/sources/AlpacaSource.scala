@@ -61,16 +61,24 @@ object AlpacaSource {
     * prices to DECIMAL(15,4) / volume to int, parse timestamps, and
     * drop rows with null close or unparseable timestamp — exactly
     * `clean_data` (`project/transform_data.py:46-69`, null-drop
-    * subset semantics at `:65`: null open/high/low/volume survive). */
+    * subset semantics at `:65`: null open/high/low/volume survive).
+    *
+    * Each bar's timestamp is parsed once, inside the array before the
+    * explode: the na.drop here and the RTH filter downstream read the
+    * parsed column. Parsed after the explode, the optimizer inlines the
+    * parse into every predicate of the combined filter that reads it
+    * (7 parses per bar with [[filterMarketHoursKeepUtc]]). */
   def cleanBars(raw: DataFrame): DataFrame =
-    raw.select(col("symbol"), explode(col("bars")).as("bar"))
-      .select(
-        col("symbol"),
+    raw.select(col("symbol"), explode(transform(col("bars"), b =>
         // try_to_timestamp: Spark 4 ANSI mode makes to_timestamp THROW
         // on unparseable input; the reference (Spark 3.4, non-ANSI)
         // nulls it so the na.drop below removes the row — try_ keeps
         // that semantics.
-        try_to_timestamp(col("bar.timestamp"), lit(TsFormat)).as("timestamp_utc"),
+        b.withField("timestamp_utc", try_to_timestamp(b.getField("timestamp"), lit(TsFormat)))))
+        .as("bar"))
+      .select(
+        col("symbol"),
+        col("bar.timestamp_utc").as("timestamp_utc"),
         col("bar.open").cast(DecimalType(15, 4)).as("open"),
         col("bar.high").cast(DecimalType(15, 4)).as("high"),
         col("bar.low").cast(DecimalType(15, 4)).as("low"),

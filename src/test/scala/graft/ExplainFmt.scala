@@ -5,7 +5,16 @@ package graft
   *
   * With `--executed` each query is collected first, so the file holds
   * the final adaptive plan as it ran. The session is
-  * [[Bench.localSession]] (`SPARK_GRAFT_CPUS` cores, default 4). */
+  * [[Bench.localSession]] (`SPARK_GRAFT_CPUS` cores, default 4).
+  *
+  * `pipeline:<raw dir>` in place of a query name dumps
+  * `Pipeline.pairZScores(Pipeline.prepare(spark, <raw dir>), <pairs>)`
+  * as `pair_zscores_<suffix>.txt`, with the pairs chosen as in
+  * [[PerfProbe]]. The working directory is stripped from paths, so
+  * `plans/pipeline/` is re-recorded from the checkout root, with sbt's
+  * `-Xmx4g` (a broadcast stage's size statistic follows the heap), by
+  *
+  *   sbt "Test/runMain graft.ExplainFmt - plans/pipeline after --executed pipeline:.perfbench/data/alpaca/seed1/data" */
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
@@ -14,14 +23,20 @@ object ExplainFmt {
     val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
+    val cwd = new java.io.File(".").getCanonicalPath + "/"
     names.foreach { n =>
       try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val (name, df) =
+          if (n.startsWith("pipeline:")) {
+            val raw = n.stripPrefix("pipeline:")
+            "pair_zscores" -> Pipeline.pairZScores(Pipeline.prepare(spark, raw),
+              PerfProbe.pipelinePairs(raw))
+          } else n -> SparkEntry.queries(n)(spark, sfDir)
         if (executed) df.collect()
         val plan = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        val txt = df.queryExecution.explainString(plan)
+        val txt = df.queryExecution.explainString(plan).replace(cwd, "")
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         println(s"[explain] wrote $n")
       } catch { case e: Throwable => println(s"[explain] $n failed: $e") }
     }

@@ -180,6 +180,18 @@ class ParitySpec extends AnyFunSuite {
     assert(all.select("run_id").distinct().count() === 2)
   }
 
+  test("declared full-close dates without the latest day: the run validates and persists its DQ") {
+    val out = Files.createTempDirectory("pipeline_not_holiday").toString + "/result"
+    val runId = "test-run-not-holiday"
+    val (_, summary) = Pipeline.run(spark, fixtureDir, out, Seq(("MSFT", "AAPL")),
+      strict = false, fullCloseDates = Set("2025-11-27"), runId = runId)
+    assert(summary.head.getAs[String]("overall_status") === "FAIL") // planted gaps
+    def persisted(table: String) = spark.read.parquet(s"${out}_dq/$table")
+      .filter(col("run_id") === runId).count()
+    assert(persisted("intraday_quality_report") > 0)
+    assert(persisted("intraday_quality_run_summary") === 1)
+  }
+
   test("one run timestamp per run: DQ detail, persisted and returned summary agree") {
     val out = Files.createTempDirectory("pipeline_ts").toString + "/result"
     val runId = "test-run-ts"
@@ -237,6 +249,54 @@ class ParitySpec extends AnyFunSuite {
     intercept[Sinks.EmptyResultException] {
       Sinks.overwriteParquet(written.filter(lit(false)), out + "_empty")
     }
+  }
+
+  test("pair layer keeps the two-leg join's rows: duplicates, null close, one-leg stamps, (A, A), repeated pairs") {
+    import spark.implicits._
+    // reference: the pair layer as a two-leg join — each leg joins the
+    // pair spec, the legs join on (pair, ts), the z-scores join the spec
+    // again for the leg symbols
+    def twoLegJoin(bars: org.apache.spark.sql.DataFrame, pairs: Seq[(String, String)],
+        windowRows: Int, minWindow: Int) = {
+      val spec = pairs.toDF("sym1", "sym2")
+        .withColumn("pair_name", concat_ws("-", col("sym1"), col("sym2")))
+      val leg1 = bars.join(broadcast(spec), col("symbol") === col("sym1"))
+        .select(col("pair_name"), col("timestamp").as("bar_ts"),
+          col("close").cast("double").as("close1"))
+      val leg2 = bars.join(broadcast(spec.select("sym2", "pair_name")), col("symbol") === col("sym2"))
+        .select(col("pair_name"), col("timestamp").as("bar_ts"),
+          col("close").cast("double").as("close2"))
+      val paired = leg1.join(leg2, Seq("pair_name", "bar_ts"))
+        .select(col("pair_name"), col("bar_ts"), col("close1"), col("close2"),
+          (log(col("close1")) - log(col("close2"))).as("spread"))
+      val z = graft.ops.PairAnalytics.rollingZScore(paired, windowRows, minWindow)
+      graft.ops.PairAnalytics.legReshape(
+        z.join(broadcast(spec.select(col("pair_name"), col("sym1"), col("sym2"))), Seq("pair_name")),
+        col("sym1"), col("sym2"))
+    }
+    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2025-11-03 14:$m%02d:00")
+    val base = for {
+      (sym, px) <- Seq(("A", 10.0), ("B", 20.0), ("C", 30.0))
+      m <- 0 until 10
+      if !(sym == "B" && m == 5) // A and C only
+    } yield (sym, ts(m), if (sym == "B" && m == 2) None else Some(px + (m * 7 + px.toInt) % 5))
+    val bars = (base ++ Seq(
+        ("A", ts(3), base.find(b => b._1 == "A" && b._2 == ts(3)).get._3), // duplicated bar
+        ("B", ts(10), Some(21.0)), // B only
+        ("C", ts(11), Some(31.0)), // C only
+        ("A", null, Some(10.0)), ("B", null, Some(20.0))) // null stamps pair nothing
+      ).toDF("symbol", "timestamp", "close")
+    // B's 14:02 close is null; a symbol in three pairs, a pair (A, A),
+    // a pair listed twice
+    val pairs = Seq(("A", "B"), ("A", "C"), ("A", "A"), ("C", "B"), ("A", "B"))
+    val got = Pipeline.pairZScores(bars, pairs, windowRows = 4, minWindow = 2)
+    val want = twoLegJoin(bars, pairs, windowRows = 4, minWindow = 2)
+    assert(got.schema.map(f => (f.name, f.dataType)) === want.schema.map(f => (f.name, f.dataType)))
+    val n = want.count()
+    assert(n > 0 && want.filter(col("z_score").isNotNull).count() > 0)
+    assert(got.count() === n)
+    assert(got.exceptAll(want).isEmpty, got.exceptAll(want).collect().take(5).mkString("\n"))
+    assert(want.exceptAll(got).isEmpty, want.exceptAll(got).collect().take(5).mkString("\n"))
   }
 
   test("corrupt payload files surface in inspectRaw instead of silently nulling") {

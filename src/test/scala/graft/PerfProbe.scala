@@ -15,11 +15,21 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * the probe goes on with the next pass. Test-scope diagnostic only.
   *
   *   sbt "Test/runMain graft.PerfProbe q381_epps,q153_hurst"
+  *
+  * `pipeline:<raw dir>` in the list times one `Pipeline.run(strict =
+  * false)` per pass over an Alpaca payload directory, each pass into a
+  * fresh temporary directory (deleted after the pass, outside the
+  * timing), with the same columns. The pairs are those of the
+  * `ledger.json` next to the directory when there is one (perfbench's
+  * input layout, `.perfbench/data/alpaca/seed<n>/data`), else
+  * `Pipeline.DefaultPairs`:
+  *
+  *   sbt "Test/runMain graft.PerfProbe pipeline:.perfbench/data/alpaca/seed1/data"
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = args.headOption.map(_.split(',').toSet)
+    val only = args.headOption.map(_.split(',').toSeq.distinct)
       .getOrElse(sys.error("pass a comma-separated query list"))
     val spark = Bench.localSession()
     val jobs = new AtomicInteger
@@ -68,13 +78,26 @@ object PerfProbe {
       println(s"[probe] $name pass=$pass THREW ${e.getClass.getName}: ${e.getMessage}")
       e.printStackTrace()
     }
-    val picked = SparkEntry.queries.filter { case (n, _) => only(n) }
-    picked.foreach { case (name, fn) =>
+    // one pass of each probed target: a query written to `noop`, or a
+    // pipeline run into a fresh path that is deleted after the pass
+    val picked: Seq[(String, () => Unit, () => Unit)] = only.map {
+      case p if p.startsWith("pipeline:") =>
+        val raw = p.stripPrefix("pipeline:")
+        val pairs = pipelinePairs(raw)
+        val dir = java.nio.file.Files.createTempDirectory("probe_pipeline").toFile
+        ("pipeline", () => { Pipeline.run(spark, raw, s"$dir/lake", pairs, strict = false); () },
+          () => org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit)
+      case n =>
+        val fn = SparkEntry.queries.getOrElse(n, sys.error(s"unknown query $n"))
+        (n, () => run(fn(spark, sfDir)), () => ())
+    }
+    picked.foreach { case (name, op, clean) =>
+      def once(): Unit = try op() finally clean()
       // warm-up (JIT + footer caches), as Bench does — once per variant
       ab.foreach { case (k, a, _) => spark.conf.set(k, a) }
-      try run(fn(spark, sfDir)) catch { case e: Throwable => threw(name, "warm-up", e) }
+      try once() catch { case e: Throwable => threw(name, "warm-up", e) }
       ab.foreach { case (k, _, b) => spark.conf.set(k, b) }
-      try run(fn(spark, sfDir)) catch { case e: Throwable => threw(name, "warm-up", e) }
+      try once() catch { case e: Throwable => threw(name, "warm-up", e) }
       val passes = if (ab.isDefined) 10 else 2
       (1 to passes).foreach { pass =>
         val variant = ab.map { case (k, a, b) =>
@@ -87,7 +110,7 @@ object PerfProbe {
         stageAgg.clear()
         val t0 = System.nanoTime()
         try {
-          run(fn(spark, sfDir))
+          op()
           val wall = (System.nanoTime() - t0) / 1e9
           Thread.sleep(200) // let straggler events land
           println(f"[probe] $name%-28s pass=$pass%2d v=$variant%-12s wall=$wall%6.2fs " +
@@ -103,8 +126,20 @@ object PerfProbe {
             }
           }
         } catch { case e: Throwable => threw(name, pass.toString, e) }
+        finally clean()
       }
     }
     spark.stop()
+  }
+
+  /** The pairs of perfbench's `ledger.json` next to an Alpaca payload
+    * directory (`[["S00", "S01"], ...]`), else `Pipeline.DefaultPairs`. */
+  private[graft] def pipelinePairs(raw: String): Seq[(String, String)] = {
+    val ledger = java.nio.file.Paths.get(raw).toAbsolutePath.getParent.resolve("ledger.json")
+    if (!java.nio.file.Files.exists(ledger)) Pipeline.DefaultPairs
+    else {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(ledger.toFile).get("pairs")
+      (0 until node.size).map(i => (node.get(i).get(0).asText, node.get(i).get(1).asText))
+    }
   }
 }

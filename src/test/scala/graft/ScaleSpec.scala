@@ -261,6 +261,35 @@ class ScaleSpec extends AnyFunSuite {
       s"${windows.size} windows\n${z.queryExecution.executedPlan}")
   }
 
+  test("pipeline pair layer reads the payload once: one JSON scan, broadcast, window and timestamp parse") {
+    // the executed (post-AQE) plan of the clean -> RTH -> pair z-score
+    // path: the bars join one leg spec and the legs align in the window's
+    // exchange, and each bar's timestamp is parsed once, before the
+    // explode, instead of once per predicate that reads it
+    import org.apache.spark.sql.catalyst.expressions.GetTimestamp
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val raw = AlpacaFixtures.write(java.nio.file.Files.createTempDirectory("alpaca_plan")).toString
+    val z = Pipeline.pairZScores(Pipeline.prepare(spark, raw), Seq(("MSFT", "AAPL")))
+    assert(z.collect().nonEmpty)
+    val plan = z.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.toString == "JSON" => s
+    }
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+    val windows = helper.collect(plan) { case w: WindowExec => w }
+    val parses = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case g: GetTimestamp => g }))
+    withClue(plan.toString) {
+      assert(scans.size === 1)
+      assert(broadcasts.size === 1)
+      assert(windows.size === 1)
+      assert(parses.size === 1)
+    }
+  }
+
   test("q158 tick-bars plan: per-series row index, never a global sort") {
     // information bars need one sequential step (the per-series row
     // index); it must stay a partition-local window sort — a global
