@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -113,8 +116,10 @@ object Pipeline {
     * `run_id` + `run_ts_utc` — as parquet under `<outPath>_dq/`, the
     * lake analog of the reference's `intraday_quality_report` /
     * `intraday_quality_run_summary` inserts keyed by
-    * (run_id, trading_date, symbol). History accumulates across runs;
-    * readers filter by run_id. */
+    * (run_id, trading_date, symbol). The counts' grouping makes those
+    * keys unique, so both tables append without a dedup pass, as two
+    * concurrent jobs; either append failing fails the run. History
+    * accumulates across runs; readers filter by run_id. */
   def run(
       spark: SparkSession,
       rawPath: String,
@@ -154,13 +159,20 @@ object Pipeline {
       val detail = QualityReport.classify(counts)
         .withColumn("run_id", lit(runId))
         .withColumn("run_ts_utc", runTs)
-      Sinks.appendDeduped(detail, s"${outPath}_dq/intraday_quality_report",
-        keyCols = Seq("run_id", "trading_date", "symbol"), partitionBy = Nil)
       val summary = QualityReport.runSummary(detail)
         .withColumn("run_id", lit(runId))
         .withColumn("run_ts_utc", runTs)
-      Sinks.appendDeduped(summary, s"${outPath}_dq/intraday_quality_run_summary",
-        keyCols = Seq("run_id"), partitionBy = Nil)
+      // keys unique by construction (one detail row per counted
+      // (trading_date, symbol), one summary row): no dedup shuffle. The
+      // summary appends from a new thread, which inherits this one's
+      // session and job properties, while the detail appends here
+      def append(df: DataFrame, table: String): Unit =
+        df.write.mode(SaveMode.Append).parquet(s"${outPath}_dq/$table")
+      val summaryAppend = Future(append(summary, "intraday_quality_run_summary"))(
+        ExecutionContext.fromExecutor(new Thread(_).start()))
+      try append(detail, "intraday_quality_report")
+      finally Await.ready(summaryAppend, Duration.Inf)
+      Await.result(summaryAppend, Duration.Inf)
       if (strict) {
         val s = summary.head()
         if (s.getAs[String]("overall_status") == "FAIL")

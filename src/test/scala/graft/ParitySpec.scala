@@ -192,6 +192,20 @@ class ParitySpec extends AnyFunSuite {
     assert(persisted("intraday_quality_run_summary") === 1)
   }
 
+  test("a failed DQ summary append fails the run; the detail still lands") {
+    val out = Files.createTempDirectory("pipeline_dq_fail").toString + "/result"
+    val runId = "test-run-summary-fails"
+    // a plain file where the summary table's directory belongs: its
+    // append cannot create the table, whichever thread runs it
+    val blocker = new java.io.File(s"${out}_dq/intraday_quality_run_summary")
+    assert(blocker.getParentFile.mkdirs() && blocker.createNewFile())
+    intercept[Exception] {
+      Pipeline.run(spark, fixtureDir, out, Seq(("MSFT", "AAPL")), strict = false, runId = runId)
+    }
+    assert(spark.read.parquet(s"${out}_dq/intraday_quality_report")
+      .filter(col("run_id") === runId).count() > 0)
+  }
+
   test("one run timestamp per run: DQ detail, persisted and returned summary agree") {
     val out = Files.createTempDirectory("pipeline_ts").toString + "/result"
     val runId = "test-run-ts"
