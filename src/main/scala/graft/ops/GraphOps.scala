@@ -300,13 +300,13 @@ object GraphOps {
             12) * lit(1e12) + lit(0.5))
             .cast(org.apache.spark.sql.types.LongType).as("r12"))
       // shuffle mode only: each iteration is planned for its
-      // checkpoint anyway, so the string costs nothing extra. In
+      // checkpoint anyway, so keeping the plan costs nothing extra. In
       // broadcast mode the un-checkpointed chain would force a full
       // re-planning of the ever-deeper nested plan per iteration just
       // for a diagnostic nobody reads in that mode (the ScaleSpec lock
       // reads the shuffle-mode plan).
       if (!useBroadcast)
-        lastIterPlan = rNext.queryExecution.executedPlan.toString
+        lastIterPlan = rNext.queryExecution.executedPlan
       r = carry(rNext, iter)
     }
     // HALF_UP to 8 dp on the unscaled longs (round at -4), one double
@@ -315,11 +315,11 @@ object GraphOps {
       (round(col("r12"), -4).cast(DoubleType) / lit(1e12)).as("rank"))
   }
 
-  /** Test hook: executedPlan of the most recent [[pageRank]] iteration
-    * (checkpoints hide iteration plans from the returned frame — each
-    * round's plan is compiled for the checkpoint anyway, so capturing
-    * its string costs nothing extra). */
-  @volatile private[graft] var lastIterPlan: String = ""
+  /** Test hook: executedPlan of the most recent shuffle-mode
+    * [[pageRank]] iteration (checkpoints hide iteration plans from the
+    * returned frame — each round's plan is compiled for the checkpoint
+    * anyway, so keeping it costs nothing extra). */
+  @volatile private[graft] var lastIterPlan: org.apache.spark.sql.execution.SparkPlan = null
 
   /** Exact triangle census + global clustering coefficient via the
     * degree-ordered wedge algorithm (the MapReduce-classic "count each

@@ -25,12 +25,6 @@ object Sinks {
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
     }
 
-  /** Row-oriented JSON sink (S7 — the reference writes one raw JSON
-    * payload per symbol, `project/ingest_data.py:104-106`; the
-    * distributed analog is line-delimited JSON part files). */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
   /** Size-targeted parquet writer — the small-files guard: pick the
     * file count from the optimizer's size estimate so each output
     * file lands near `targetBytes` AFTER parquet compression

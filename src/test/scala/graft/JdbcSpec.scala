@@ -82,9 +82,9 @@ class JdbcSpec extends AnyFunSuite {
   test("jdbc scan pushes comparison predicates into the generated SQL") {
     Sinks.overwriteJdbc(sample, url, "bars_push")
     val filtered = Tables.jdbc(spark, url, "bars_push").filter(col("bar_id") > 1)
-    val scan = filtered.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters") && scan.contains("GreaterThan(bar_id,1)"),
-      s"expected pushed filter in plan:\n$scan")
+    val scans = PlanFacts.of(filtered).scans("jdbc")
+    assert(scans.exists(_.pushedFilters.contains("GreaterThan(bar_id,1)")),
+      s"expected pushed filter in plan: $scans")
     assert(filtered.count() === 2)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +12,12 @@ object SparkTestSession {
   // plan and partition locks assume local[4]
   lazy val spark: SparkSession = Bench.localSession(Bench.DefaultCpus)
   val sf = "/root/testdata/sf0.001"
+
+  /** The partitioning-invariance check: both frames hold the same rows. */
+  def same(a: DataFrame, b: DataFrame): Unit = {
+    import org.scalatest.Assertions._
+    assert(a.except(b).count() === 0 && b.except(a).count() === 0)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {

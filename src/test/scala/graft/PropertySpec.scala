@@ -201,9 +201,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("decimal-accumulated ops are partitioning-invariant (pagerank, roll spread, bm25)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val li = graft.sources.Tables.lineitem(spark, sf)
     val edges = li.select(col("l_suppkey").cast("long").as("src"),
       (col("l_partkey").cast("long") + 1000000L).as("dst"))
@@ -222,9 +219,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("round-5 operators are partitioning-invariant (transitions, ccf, seasonal, hhi, ols, moments, pmi, amihud, candles)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val ev = graft.sources.Tables.events(spark, sf)
     val li = graft.sources.Tables.lineitem(spark, sf)
     val docs = graft.sources.Tables.documents(spark, sf)
@@ -259,9 +253,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q133-q136 operators are partitioning-invariant (rsi, stale runs, chi2 keyness)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val ev = graft.sources.Tables.events(spark, sf)
     val docs = graft.sources.Tables.documents(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
@@ -275,9 +266,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q138-q140 operators are partitioning-invariant (scd2, variance ratio, tearsheet)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val ev = graft.sources.Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -292,9 +280,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q141-q146 operators are partitioning-invariant (bigram nll, ks/rank-sum drift, gini, cusum, page-cusum)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     same(graft.ops.CorpusOps.bigramNll(docs.repartition(3)),
@@ -318,9 +303,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q151-q157 operators are partitioning-invariant (acf, tick flow, hurst, triple barrier, bpe pairs, dup hist, lang confusion)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
@@ -342,9 +324,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q158-q160 operators are partitioning-invariant (tick bars, kyle lambda, ngram novelty)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     same(MarketBars.tickBars(ev.repartition(3),
@@ -370,9 +349,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q161-q165 operators are partitioning-invariant (obv, intraday profile, garman-klass, embed outlier, cross-source dup)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
@@ -396,9 +372,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q166-q168 operators are partitioning-invariant (vocab coverage, vpin, underwater)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     same(graft.ops.CorpusOps.vocabCoverage(docs.repartition(3), vocabSize = 100),
@@ -427,9 +400,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q169-q171 operators are partitioning-invariant (corwin-schultz, sketch error, heaps law)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
@@ -456,9 +426,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q172-q174 operators are partitioning-invariant (coint, bigram entropy, snapshot diff)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     def coint(n: Int) = {
@@ -477,9 +444,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q175-q176 operators are partitioning-invariant (dataset card, conversion latency)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val docs = graft.sources.Tables.documents(spark, sf)
     val ev = graft.sources.Tables.events(spark, sf)
     same(graft.ops.CorpusOps.datasetCard(docs.repartition(3)),
@@ -500,9 +464,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q177-q178 operators are partitioning-invariant (runs test, stickiness)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val ev = graft.sources.Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -535,9 +496,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q179-q180 operators are partitioning-invariant (volume profile, session stats)") {
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    }
     val ev = graft.sources.Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")

@@ -145,8 +145,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("round-6 ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -280,8 +278,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-D ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -350,8 +346,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-E ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -411,8 +405,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-F ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -461,8 +453,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-G ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -508,8 +498,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-H ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -581,8 +569,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-J ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")
@@ -595,71 +581,55 @@ class Round6Spec extends AnyFunSuite {
   test("q249 plan: pair join runs on the distinct vocab relation, no window") {
     val df = CorpusOps.vocabOverlap(Tables.documents(spark, sf))
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert("Window \\[".r.findAllIn(plan).isEmpty,
-      s"vocab overlap must not window:\n${plan.take(3000)}")
-    assert(!plan.contains("CartesianProduct"),
-      s"pair join must be term-keyed, not cartesian:\n${plan.take(3000)}")
-    assert("Generate explode".r.findAllIn(plan).size <= 1,
-      s"corpus re-tokenized per side:\n${plan.take(4000)}")
+    val facts = PlanFacts.of(df)
+    assert(facts.windows.isEmpty, s"vocab overlap must not window: ${facts.windows}")
+    assert(facts.joins("CartesianProduct") === 0,
+      s"pair join must be term-keyed, not cartesian: ${facts.joins}")
+    assert(facts.generates.count(_ == "explode") <= 1,
+      s"corpus re-tokenized per side: ${facts.generates}")
   }
 
   test("q228 plan: EXISTS runs as a semi join (orders never duplicate)") {
-    val plan = SparkEntry.queries("q228_late_orders")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"),
-      s"the EXISTS must be a semi join:\n${plan.take(3000)}")
+    val joins = PlanFacts.of(SparkEntry.queries("q228_late_orders")(spark, sf)).joins
+    assert(joins.exists(_.joinType == "LeftSemi"), s"the EXISTS must be a semi join: $joins")
   }
 
   test("q234 plan: readability is map-only (no exchange at all)") {
-    val plan = graft.ops.TextOps.readability(Tables.documents(spark, sf))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"readability must not shuffle:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(graft.ops.TextOps.readability(Tables.documents(spark, sf)))
+    assert(facts.exchanges("hash") === 0, s"readability must not shuffle: ${facts.exchanges}")
   }
 
   test("q217 plan: every predicate reaches the lineitem scan") {
-    val plan = SparkEntry.queries("q217_discount_revenue")(spark, sf)
-      .queryExecution.executedPlan.toString
-    // PushedFilters is truncated in toString — assert the data filters
-    // sit directly on the scan (regex over the Filter-on-FileScan node)
-    assert(plan.contains("PushedFilters: [IsNotNull(l_shipdate)"),
-      s"shipdate not in the pushdown set:\n${plan.take(3000)}")
-    for (f <- Seq("l_discount#\\d+ >= 0\\.05", "l_discount#\\d+ <= 0\\.07",
-        "l_quantity#\\d+ < 24\\.0"))
-      assert(f.r.findFirstIn(plan).isDefined,
-        s"$f not at the scan:\n${plan.take(3000)}")
+    val pushed = PlanFacts.of(SparkEntry.queries("q217_discount_revenue")(spark, sf))
+      .scans("parquet").flatMap(_.pushedFilters)
+    // the scan's pushed filters, un-truncated: the shipdate range and
+    // the three data predicates all reach the parquet reader
+    for (f <- Seq("IsNotNull(l_shipdate)", "GreaterThanOrEqual(l_discount,0.05)",
+        "LessThanOrEqual(l_discount,0.07)", "LessThan(l_quantity,24.0)"))
+      assert(pushed.contains(f), s"$f not pushed to the scan: $pushed")
   }
 
   test("q214 plan: pre-aggregated HAVING cut, top-20 via TakeOrdered") {
-    val plan = SparkEntry.queries("q214_large_orders")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"top-20 must be TakeOrdered, not a global sort:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(SparkEntry.queries("q214_large_orders")(spark, sf))
+    assert(facts.takeOrdered > 0, s"top-20 must be TakeOrdered, not a global sort: ${facts.sorts}")
   }
 
   test("q225 plan: one tokenize pass, the rank window runs on the vocab aggregate") {
     val df = CorpusOps.ctfidf(Tables.documents(spark, sf))
     df.collect() // finalize adaptive plan so exchange reuse is visible
-    // AQE's toString repeats the tree (Final + Initial) — lock the final
-    val full = df.queryExecution.executedPlan.toString
-    val plan = full.split("== Initial Plan ==")(0)
-    assert("Generate explode".r.findAllIn(plan).size <= 1,
-      s"corpus re-tokenized per leg:\n${plan.take(4000)}")
-    assert("Window \\[".r.findAllIn(plan).size === 1,
-      s"only the per-source rank may window:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(df)
+    assert(facts.generates.count(_ == "explode") <= 1,
+      s"corpus re-tokenized per leg: ${facts.generates}")
+    assert(facts.windows.size === 1, s"only the per-source rank may window: ${facts.windows}")
   }
 
   test("q226 plan: no window, no cartesian, map-side posexplode") {
-    val plan = SimilarityOps.isotropy(Tables.embeddings(spark, sf))
-      .queryExecution.executedPlan.toString
-    assert("Window \\[".r.findAllIn(plan).isEmpty,
-      s"isotropy must not window:\n${plan.take(3000)}")
-    assert(!plan.contains("CartesianProduct"),
-      s"the Gram identity needs no pairwise product:\n${plan.take(3000)}")
-    assert(plan.contains("Generate posexplode"),
-      s"expected a map-side posexplode:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(SimilarityOps.isotropy(Tables.embeddings(spark, sf)))
+    assert(facts.windows.isEmpty, s"isotropy must not window: ${facts.windows}")
+    assert(facts.joins("CartesianProduct") === 0,
+      s"the Gram identity needs no pairwise product: ${facts.joins}")
+    assert(facts.generates.contains("posexplode"),
+      s"expected a map-side posexplode: ${facts.generates}")
   }
 
   // ---- batch K: association / inequality / randomness statistics ----
@@ -773,8 +743,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-N ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     same(graft.ops.EventAnalytics.expFitPpcc(ev.repartition(3)),
       graft.ops.EventAnalytics.expFitPpcc(ev.repartition(17)))
@@ -786,25 +754,19 @@ class Round6Spec extends AnyFunSuite {
   test("q284 plan: dims broadcast, no cartesian, no window") {
     val df = SparkEntry.queries("q284_min_cost_supplier")(spark, sf)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"part/dim joins must broadcast:\n${plan.take(3000)}")
-    assert(!plan.contains("CartesianProduct"),
-      s"Q2 shape must stay equi-joined:\n${plan.take(3000)}")
-    assert("Window \\[".r.findAllIn(plan).isEmpty,
-      s"correlated min must be groupBy + join, not a window:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(df)
+    assert(facts.joins("BroadcastHashJoin") > 0, s"part/dim joins must broadcast: ${facts.joins}")
+    assert(facts.joins("CartesianProduct") === 0, s"Q2 shape must stay equi-joined: ${facts.joins}")
+    assert(facts.windows.isEmpty,
+      s"correlated min must be groupBy + join, not a window: ${facts.windows}")
   }
 
   test("q286 plan: keySkew is two aggregates, no window, no join") {
     val df = SparkEntry.queries("q286_key_skew")(spark, sf)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert("Window \\[".r.findAllIn(plan).isEmpty,
-      s"skew audit must not window:\n${plan.take(3000)}")
-    assert(!plan.contains("Join"),
-      s"skew audit must not join:\n${plan.take(3000)}")
+    val facts = PlanFacts.of(df)
+    assert(facts.windows.isEmpty, s"skew audit must not window: ${facts.windows}")
+    assert(facts.joins.isEmpty, s"skew audit must not join: ${facts.joins}")
   }
 
   // ---- batch M: weights / skew / tail / beta / fertility ----
@@ -867,8 +829,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-M ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val emb = Tables.embeddings(spark, sf)
     same(CorpusOps.classWeights(emb.repartition(3)),
       CorpusOps.classWeights(emb.repartition(17)))
@@ -966,8 +926,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-L ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val cut = col("ts") < to_timestamp(lit("2024-01-15 00:00:00"))
     same(graft.ops.EventAnalytics.psiDrift(ev.repartition(3), cut),
@@ -990,8 +948,6 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("batch-K ops are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val ev = Tables.events(spark, sf)
     val bars3 = MarketBars.bars(ev.repartition(3), "event_type", "ts", "value")
     val bars17 = MarketBars.bars(ev.repartition(17), "event_type", "ts", "value")

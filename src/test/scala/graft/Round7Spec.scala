@@ -247,8 +247,6 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("round-7 stats are partitioning-invariant") {
-    def same(a: DataFrame, b: DataFrame): Unit =
-      assert(a.except(b).count() === 0 && b.except(a).count() === 0)
     val li = Tables.lineitem(spark, sf)
     same(
       StatOps.spearmanMidrank(li.repartition(3),
